@@ -43,7 +43,7 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config(graft.io.Tables.NANOS_AS_LONG, "true")
-      // UTC pin matches Verify/StreamProbe/ScaleUp: with TIMESTAMP_NTZ
+      // UTC pin matches Verify/ShowPlan/ScaleUp: with TIMESTAMP_NTZ
       // events testdata the cast to TIMESTAMP is session-tz dependent, so
       // an unpinned bench would time (and bucket) different semantics per
       // host timezone.

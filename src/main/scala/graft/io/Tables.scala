@@ -134,7 +134,7 @@ object Tables {
     *
     * The nanosAsLong flag is SESSION-WIDE (it changes how every
     * nanosecond-timestamp parquet in the session is read) — so the engine's
-    * drivers (Verify/Bench/Profile) and the test harness set it once at
+    * drivers (Verify/Bench/ShowPlan) and the test harness set it once at
     * SparkSession construction; the set here is a defensive no-op in those
     * paths and exists only so ad-hoc sessions can call this directly.
     * (Set unconditionally: nanosAsLong is a registered SQLConf, so

@@ -329,9 +329,9 @@ object Dedup {
     * fixed 2^16 on the small branch, ~2^32 block-triple keys on the
     * block branch (sub-quadratic candidate growth; see SIM_BLOCKS
     * note and Q19GateSpec, which forces all three gate paths). */
-  /** The gate decision itself, exposed with its reason string so the
-    * evidence harness (DedupScaleProbe) reports the branch the REAL
-    * plan takes rather than re-deriving the rule. */
+  /** The gate decision itself, exposed with its reason string so
+    * Q19GateSpec asserts the branch the REAL plan takes rather than
+    * re-deriving the rule. */
   private[queries] def q19BandedChoice(sig: DataFrame,
       bandLimit: Long = SimBandLimit,
       censusPerDoc: Long = SimCensusPerDocLimit): (DataFrame, String) = {
@@ -1271,17 +1271,9 @@ object Dedup {
       .orderBy(col("split_a"), col("split_b"))
   }
 
-  /** q127's pair pipeline over a single-column (`name`) relation —
-    * extracted so the spec can drive it against exhaustive in-JVM
-    * ground truth and PlanSpec can pin the physical shape. Emits
-    * (name_a, name_b, dist) for every distinct unordered pair of
-    * distinct names at levenshtein distance exactly 1 (two DISTINCT
-    * strings are never at distance 0, and `name_a < name_b` already
-    * forces distinctness whatever the input's multiplicity). */
-  /** q127's candidate-key relation (name, vk) — exposed separately so
-    * the growth-evidence probe can census the candidate join the same
-    * way q19's census does. */
-  private[queries] def editDist1Keys(names: DataFrame): DataFrame = {
+  /** q127's candidate-key relation (name, vk): each name keyed by
+    * itself and by every single-character deletion. */
+  private def editDist1Keys(names: DataFrame): DataFrame = {
     // pos 0 keeps the name itself; pos i ∈ 1..len deletes char i. One
     // substr/concat formula covers both ends (substr(1, -1) = "" and
     // substr(len+1, ·) = ""), staying inside whole-stage codegen — no
@@ -1298,6 +1290,13 @@ object Dedup {
       .distinct()
   }
 
+  /** q127's pair pipeline over a single-column (`name`) relation —
+    * extracted so the spec can drive it against exhaustive in-JVM
+    * ground truth and PlanSpec can pin the physical shape. Emits
+    * (name_a, name_b, dist) for every distinct unordered pair of
+    * distinct names at levenshtein distance exactly 1 (two DISTINCT
+    * strings are never at distance 0, and `name_a < name_b` already
+    * forces distinctness whatever the input's multiplicity). */
   private[queries] def editDist1Pairs(names: DataFrame): DataFrame = {
     val keyed = editDist1Keys(names)
     keyed.as("a")
@@ -1312,22 +1311,13 @@ object Dedup {
       .distinct()
   }
 
-  /** q118's full candidate-join + verify pipeline, pre-localization —
-    * exposed so PlanSpec can pin the executed shape (steady-state index
-    * scan, hash-only exchanges, codegen intersect-count verify).
-    * `broadcastLimit` is the injectable doc-count gate for the
-    * broadcast-vs-shuffle array attach (default 2²⁰ docs) — the
-    * pageRank(localLimit) discipline, so Q118GateSpec can FORCE the
-    * at-scale shuffle branch on a fixture instead of leaving it dead
-    * code under test. */
   /** q118's candidate-pair relation over the prefix index: equi-join on
     * prefix shingle hash with the PPJoin length + positional filters —
     * a true pair's overlap o >= ceil(t(na+nb)/(1+t)) and beyond the
     * first shared element only min(na-rk_a, nb-rk_b) shared elements
     * can remain; both bounds hold at the globally-smallest shared
-    * element. Extracted so DedupScaleProbe can count candidates
-    * (the growth-evidence harness) on exactly the executed relation. */
-  private[queries] def q118Candidates(pref: DataFrame): DataFrame = {
+    * element. */
+  private def q118Candidates(pref: DataFrame): DataFrame = {
     val t = NGRAM_JACCARD_MIN
     pref.as("a")
       .join(pref.as("b"),
@@ -1341,6 +1331,14 @@ object Dedup {
       .distinct()
   }
 
+  /** q118's full candidate-join + verify pipeline, pre-localization —
+    * exposed so PlanSpec can pin the executed shape (steady-state index
+    * scan, hash-only exchanges, codegen intersect-count verify).
+    * `broadcastLimit` is the injectable doc-count gate for the
+    * broadcast-vs-shuffle array attach (default 2²⁰ docs) — the
+    * pageRank(localLimit) discipline, so Q118GateSpec can FORCE the
+    * at-scale shuffle branch on a fixture instead of leaving it dead
+    * code under test. */
   private[queries] def q118PairsPlan(spark: SparkSession, dir: String,
       broadcastLimit: Long = 1L << 20): DataFrame = {
     val t = NGRAM_JACCARD_MIN
@@ -1410,7 +1408,7 @@ object Dedup {
     * pure derivations of the corpus — built once per corpus across
     * processes, parquet after. The oracle re-derives both inline in
     * SQL, so the gate value-checks the derivation itself. */
-  private[graft] def q118Index(spark: SparkSession, dir: String): String =
+  private def q118Index(spark: SparkSession, dir: String): String =
     graft.exec.ArtifactStore.ensure(spark, "ppjoin_index",
       graft.exec.ArtifactStore.sourceKey(spark, dir, "documents")) { p =>
       val t = NGRAM_JACCARD_MIN
@@ -1448,7 +1446,7 @@ object Dedup {
   /** q78's deterministic corpus/batch split: (corpus = md5-decile < 8,
     * batch = decile >= 8) of `documents` — the q72 construction, so both
     * engines derive identical inputs. */
-  private[graft] def q78Split(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def q78Split(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val b0 = table(spark, dir, "documents")
       .select(col("doc_id"), col("text"),
         pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 6),

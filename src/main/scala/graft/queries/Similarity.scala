@@ -4698,46 +4698,30 @@ object Similarity {
           SELECT vec_id, CAST(sum(bitval) AS BIGINT) AS signature
           FROM bits GROUP BY vec_id)"""
 
-  /** q65's fixed hyperplanes: LSH_BITS planes of ±1 components over the
-    * 64-dim embedding space, component (b, d) = +1 iff the top nibble of
-    * md5("b_d") < 8 — an unbiased deterministic coin both engines can
-    * reproduce (the oracle receives the planes as literals generated from
-    * this same definition). ±1 components (vs gaussians) preserve the
-    * sign-agreement LSH property and keep the dot products exact-friendly. */
   // lazy + literal-typed constants: referenced from the `defs` initializer
   // above (plain vals declared after it would still be 0/null during
   // <clinit>; `final val` literals are compile-time constants)
   private final val LSH_BITS = 8
   private final val EMBED_DIM = 64
 
-  /** The plane construction at ANY width (the in-code contract says
-    * deployments widen LSH_BITS ~ log₂(N) as a corpus-sizing decision;
-    * AnnScaleProbe measures bucket occupancy at widened widths on scale
-    * replicas so that claim carries numbers — PERF.md round-15). Bits
-    * beyond 63 would overflow the BIGINT signature; 63 planes already
-    * key 9.2×10¹⁸ buckets. */
-  private[queries] def hyperplanesFor(bits: Int): Array[Array[Double]] = {
-    require(bits >= 1 && bits <= 63, s"LSH bits must be in [1,63], got $bits")
-    Array.tabulate(bits) { b =>
+  /** q65's fixed hyperplanes: LSH_BITS planes of ±1 components over the
+    * 64-dim embedding space, component (b, d) = +1 iff the top nibble of
+    * md5("b_d") < 8 — an unbiased deterministic coin both engines can
+    * reproduce (the oracle receives the planes as literals generated from
+    * this same definition). ±1 components (vs gaussians) preserve the
+    * sign-agreement LSH property and keep the dot products exact-friendly.
+    * Plane b does not depend on LSH_BITS, so a deployment that widens the
+    * signature ~log₂(N) for a bigger corpus only splits buckets, never
+    * merges them (measured bucket occupancy at widened widths: PERF.md
+    * round 15, "Widened-LSH census"). */
+  private[queries] lazy val hyperplanes: Array[Array[Double]] =
+    Array.tabulate(LSH_BITS) { b =>
       val md = java.security.MessageDigest.getInstance("MD5")
       Array.tabulate(EMBED_DIM) { d =>
         val h = md.digest(s"${b}_${d}".getBytes("UTF-8"))
         if (((h(0) >> 4) & 0xf) < 8) 1.0 else -1.0
       }
     }
-  }
-
-  /** [[signatureCol]] at a parameterized width — same per-bit sign rule,
-    * so the width-8 prefix of a wider signature IS the registered
-    * signature (widening only splits buckets, never merges). */
-  private[queries] def signatureColBits(bits: Int): org.apache.spark.sql.Column =
-    hyperplanesFor(bits).zipWithIndex.map { case (signs, b) =>
-      when(round(dot(col("v"), typedLit(signs.toSeq)), 6) >= 0,
-        lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  private[queries] lazy val hyperplanes: Array[Array[Double]] =
-    hyperplanesFor(LSH_BITS)
 
   private def hyperplaneSqlUnion: String =
     hyperplanes.zipWithIndex.map { case (signs, b) =>

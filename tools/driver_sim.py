@@ -3,7 +3,8 @@
 
 Usage: python3 tools/driver_sim.py [sfDir] [outDir] [--skip-verify] [names...]
 
-1. runs graft.Verify (sbt runMain) at sfDir -> outDir/<name> parquet + oracle_sql.json
+1. runs graft.Verify (sbt runMain) at sfDir -> outDir/<name> parquet + oracle_sql.json;
+   given names, Verify dumps only those queries
 2. for each query: creates DuckDB views over sfDir tables, runs the oracle SQL,
    loads the Spark result, sorts columns by name + rows, compares values.
 """
@@ -51,8 +52,10 @@ def main():
 
     if "--skip-verify" not in flags:
         r = subprocess.run(
-            ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
-            cwd="/root/repo", capture_output=True, text=True, timeout=3600)
+            ["sbt", "-batch",
+             " ".join(["runMain graft.Verify", sf_dir, out_dir, *sorted(only)])],
+            cwd=Path(__file__).resolve().parent.parent,
+            capture_output=True, text=True, timeout=3600)
         tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
         if r.returncode != 0:
             print(f"[driver_sim] Verify FAILED:\n{tail}")
