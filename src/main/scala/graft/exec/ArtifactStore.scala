@@ -298,9 +298,15 @@ object ArtifactStore {
       throw new IllegalArgumentException(
         s"memoScalar holds a ${a.length}-element array (max $MemoScalarMaxElems): " +
           "that is data, not a decision scalar")
-    case i: Iterable[_] if i.size > MemoScalarMaxElems =>
+    case _: Iterator[_] =>
       throw new IllegalArgumentException(
-        s"memoScalar holds a ${i.size}-element collection (max $MemoScalarMaxElems): " +
+        "memoScalar must not hold an Iterator — it is single-pass data, not a decision scalar")
+    // counts at most one past the cap, so a lazy (even infinite)
+    // collection is rejected without being forced
+    case i: Iterable[_] if (if (i.knownSize >= 0) i.knownSize
+        else i.iterator.take(MemoScalarMaxElems + 1).size) > MemoScalarMaxElems =>
+      throw new IllegalArgumentException(
+        s"memoScalar holds a collection of more than $MemoScalarMaxElems elements: " +
           "that is data, not a decision scalar")
     case p: Product if depth == 0 =>
       // one level into wrappers (a codebook case class holding its

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.functions.VectorFns._
 import graft.io.Tables.table
@@ -545,7 +546,6 @@ object Similarity {
     graft.exec.ArtifactStore.ensure(spark, "ivfpq_resid_index",
       graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
         + s"-m$PQ_M-k$PQ_KSUB-s$PQ_SUB-v1") { p =>
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val n = normed(spark, dir)
       val cents = boundedCents(n)
       val resid = residuals(n, cents).persist(MEMORY_AND_DISK)
@@ -2055,27 +2055,16 @@ object Similarity {
         FROM qsr q LEFT JOIN hits h ON q.q_id = h.q_id
         ORDER BY q.q_id"""),
       run = (spark, dir) => {
-        import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         // exact ground truth comes from the durable ann_gt_ivf artifact
         // (one build per corpus identity across processes; a 320-row
         // parquet read afterwards); the IVF side still recomputes — it
         // is the thing under evaluation
         val n = normed(spark, dir).persist(MEMORY_AND_DISK)
-        val cents = storedCents(spark, dir)
-        val ivf = ivfSearch(n, cents, nprobe = 1)
-          .select(col("q_id"), col("neighbor"))
+        val ivf = ivfSearch(n, storedCents(spark, dir), nprobe = 1)
         val probes = ivfEvalProbes(n)
-        val exact = ivfGroundTruth(spark, dir)
-        val hits = ivf.join(exact, Seq("q_id", "neighbor"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-        val result = Q.localized(
-          probes.select(col("q_id")).join(hits, Seq("q_id"), "left")
-            .select(col("q_id"),
-              coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-              round(coalesce(col("n_hit"), lit(0L)) / (TOPK * 1.0), 4)
-                .as("recall_at_k")))
+        val result = recallRows(ivf, ivfGroundTruth(spark, dir), probes)
         n.unpersist(blocking = false)
-        result.orderBy(col("q_id"))
+        result
       }),
 
     // ------------------------------------------------------------------
@@ -2525,21 +2514,9 @@ object Similarity {
                round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
         FROM qsr2 q LEFT JOIN hits2 h ON q.q_id = h.q_id
         ORDER BY q.q_id"""),
-      run = (spark, dir) => {
-        val rr = ivfPqRerank(spark, dir, electedRerankR(spark, dir))
-          .select(col("q_id"), col("neighbor"))
-        val exact = pqGroundTruth(spark, dir)
-        val probes = pqProbes(normed(spark, dir))
-        val hits = rr.join(exact, Seq("q_id", "neighbor"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-        Q.localized(
-          probes.select(col("q_id")).join(hits, Seq("q_id"), "left")
-            .select(col("q_id"),
-              coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-              round(coalesce(col("n_hit"), lit(0L)) / (TOPK * 1.0), 4)
-                .as("recall_at_k")))
-          .orderBy(col("q_id"))
-      }),
+      run = (spark, dir) =>
+        recallRows(ivfPqRerank(spark, dir, electedRerankR(spark, dir)),
+          pqGroundTruth(spark, dir), pqProbes(normed(spark, dir)))),
 
     // ------------------------------------------------------------------
     // q156: RERANK DEPTH CURVE + ELECTION — q131's measure→decide
@@ -2709,17 +2686,7 @@ object Similarity {
         val cb = storedPqCodebook(spark, dir)
         val probes = pqProbes(n)
         val adc = pqAdcServePacked(ivfPqIndex(spark, dir), probes, cb)
-          .select(col("q_id"), col("neighbor"))
-        val exact = pqGroundTruth(spark, dir)
-        val hits = adc.join(exact, Seq("q_id", "neighbor"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-        Q.localized(
-          probes.select(col("q_id")).join(hits, Seq("q_id"), "left")
-            .select(col("q_id"),
-              coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-              round(coalesce(col("n_hit"), lit(0L)) / (TOPK * 1.0), 4)
-                .as("recall_at_k")))
-          .orderBy(col("q_id"))
+        recallRows(adc, pqGroundTruth(spark, dir), probes)
       }),
 
     // ------------------------------------------------------------------
@@ -2939,19 +2906,9 @@ object Similarity {
               * lit(1000000.0) + lit(0.5)).cast("long").as("sq_mu"))
           .withColumn("rank", row_number().over(wSq).cast("long"))
           .filter(col("rank") <= TOPK)
-          .select(col("q_id"), col("neighbor"))
         // exact ground truth: the durable ann_gt_sq8 artifact (probes +
         // corpus drawn from the same zero-vector-excluded SQ8 relation)
-        val exact = sq8GroundTruth(spark, dir)
-        val hits = sqTop.join(exact, Seq("q_id", "neighbor"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-        val result = Q.localized(
-          probes.select(col("q_id")).join(hits, Seq("q_id"), "left")
-            .select(col("q_id"),
-              coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-              round(coalesce(col("n_hit"), lit(0L)) / (TOPK * 1.0), 4)
-                .as("recall_at_k")))
-        result.orderBy(col("q_id"))
+        recallRows(sqTop, sq8GroundTruth(spark, dir), probes)
       }),
 
     // ------------------------------------------------------------------
@@ -3089,21 +3046,11 @@ object Similarity {
           transform(PqExprs.pqEncode(bcCb, col("v")),
             s => s.getField("code")).as("codes"))
         val probes = pqProbes(n)
-        val adc = pqAdcServe(coded, probes, cb)
-          .select(col("q_id"), col("neighbor"))
         // exact ground truth: the durable ann_gt_pq artifact (the same
         // probes evaluate the random-codebook q137, so the training
         // payoff is a like-for-like delta off ONE stored ground truth)
-        val exact = pqGroundTruth(spark, dir)
-        val hits = adc.join(exact, Seq("q_id", "neighbor"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-        val result = Q.localized(
-          probes.select(col("q_id")).join(hits, Seq("q_id"), "left")
-            .select(col("q_id"),
-              coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-              round(coalesce(col("n_hit"), lit(0L)) / (TOPK * 1.0), 4)
-                .as("recall_at_k")))
-        result.orderBy(col("q_id"))
+        recallRows(pqAdcServe(coded, probes, cb), pqGroundTruth(spark, dir),
+          probes)
       }),
 
     // ------------------------------------------------------------------
@@ -3268,21 +3215,9 @@ object Similarity {
                round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
         FROM qsr3 q LEFT JOIN hits3 h ON q.q_id = h.q_id
         ORDER BY q.q_id"""),
-      run = (spark, dir) => {
-        val res = ivfPqResidServe(spark, dir, electedNprobe(spark, dir))
-          .select(col("q_id"), col("neighbor"))
-        val exact = pqGroundTruth(spark, dir)
-        val probes = pqProbes(normed(spark, dir))
-        val hits = res.join(exact, Seq("q_id", "neighbor"))
-          .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-        Q.localized(
-          probes.select(col("q_id")).join(hits, Seq("q_id"), "left")
-            .select(col("q_id"),
-              coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-              round(coalesce(col("n_hit"), lit(0L)) / (TOPK * 1.0), 4)
-                .as("recall_at_k")))
-          .orderBy(col("q_id"))
-      }),
+      run = (spark, dir) =>
+        recallRows(ivfPqResidServe(spark, dir, electedNprobe(spark, dir)),
+          pqGroundTruth(spark, dir), pqProbes(normed(spark, dir)))),
 
     // ------------------------------------------------------------------
     // q162: TRAINED NPROBE CURVE + ELECTION — the measure→decide arc
@@ -4077,274 +4012,289 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
           col("nrm").as("qn")))
 
-  /** q131's pipeline as a callable: sweep nprobe ∈ [[NPROBES]] of the
-    * bounded-codebook IVF against exact ground truth over the fixed
-    * probe set, one curve row per nprobe with integer-bp recall and the
-    * serving election (smallest nprobe clearing [[RECALL_TARGET_BP]],
-    * else the deepest). Candidates are scored once with their cell's
-    * per-query rank; the curve points reuse that relation via a 4-row
-    * broadcast theta-join — no per-point corpus rescans.
-    *
-    * DURABLE across processes since round 16: the 4-row curve is itself
-    * an [[graft.exec.ArtifactStore]] entry (source-identity staleness
-    * key — the round-15 TrieMap's two disclosed defects, dir-string
-    * keying and non-atomic first-compute, both go away ACROSS processes:
-    * the store keys on file identity and serializes same-key builders
-    * via its publish protocol; a same-process regeneration still needs
-    * the store's [[graft.exec.ArtifactStore.invalidateSourceKeys]] hook,
-    * per its immutable-corpus-per-process contract). The ground-truth
-    * half resolves FIRST (its own artifact) so nested `ensure` calls
-    * never recurse into the store's memo map. */
-  private[queries] def nprobeCurve(spark: SparkSession, dir: String): DataFrame = {
-    val gt = ivfGroundTruth(spark, dir)
-    // every input constant that re-keys the ground truth also re-keys
-    // this dependent curve (k/n/mod — the r16 ADVICE gap: changing
-    // QUERY_N or TOPK rebuilt GT but served a stale curve)
-    val path = graft.exec.ArtifactStore.ensure(spark, "ann_nprobe_curve",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP" +
-        s"-k$TOPK-n$QUERY_N-m$QUERY_MOD-v1") { p =>
-      nprobeCurveImpl(spark, dir, gt).write.mode("overwrite").parquet(p)
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-      .select(col("nprobe"), col("n_probes"), col("sum_hits"),
-        col("min_hits"), col("recall_bp"), col("total_candidates"),
-        col("meets_target"), col("chosen"))
-      .orderBy(col("nprobe"))
+  // ---------------------------------------------------------------------
+  // Recall measurement and dial election — the one path behind the six
+  // recall rows (q130/q137/q141/q143/q154/q161) and the six curves
+  // (q131/q138/q156/q162/q163/q165). A recall row hands [[recallRows]]
+  // one served top-k; a curve sweeps one [[Dial]] and hands
+  // [[recallCurve]] the served top-k of every dial point, tagged with
+  // that point. Both count hits with the one kernel ([[probeHits]])
+  // against a durable exact ground truth. A curve is then elected on the
+  // driver ([[electCurve]] — it is ≤4 rows) and published DURABLY
+  // ([[durableCurve]]): one [[graft.exec.ArtifactStore]] entry per
+  // corpus source identity plus a key carrying every constant the curve
+  // depends on (dial grid, target, the ground truth's k/n, and any
+  // upstream election grid or trained-quantizer identity), so it builds
+  // once across every process sharing the store, and a same-process
+  // regeneration needs [[graft.exec.ArtifactStore.invalidateSourceKeys]]
+  // per the store's immutable-corpus-per-process contract. Its elected
+  // dial is a memoized scalar read of that artifact ([[electedDial]]).
+  // Every curve PRE-RESOLVES each nested artifact (ground truth,
+  // upstream elections, indexes) before its own `ensure`: a cold-store
+  // builder must not trigger an absent-key ensure, or nested
+  // computeIfAbsent on the store's memo map hits the outer call's
+  // ReservationNode and throws "Recursive update". The oracles stay
+  // artifact-free: each re-derives its curve and election inline.
+
+  /** A serving dial a curve sweeps: the curve's key column, its grid in
+    * declared order (ascending wherever there is a target) and the
+    * recall target its election uses — none means the highest recall
+    * wins. */
+  private[queries] final case class Dial[D](name: String, grid: Seq[D],
+      targetBp: Option[Long] = Some(RECALL_TARGET_BP))(
+      implicit val enc: Encoder[D]) {
+    def gridDf(spark: SparkSession): DataFrame =
+      spark.createDataset(grid).toDF(name)
   }
 
-  /** The serving depth q131's curve elects (smallest nprobe clearing the
-    * recall target, else the deepest) — one 4-row artifact read. */
-  private[queries] def electedNprobe(spark: SparkSession, dir: String): Int =
-    graft.exec.ArtifactStore.memoScalar(spark, s"electedNprobe|$dir") {
-      nprobeCurve(spark, dir).filter(col("chosen") === 1L)
-        .select(col("nprobe")).collect().head.getLong(0).toInt
-    }
+  private[queries] val NprobeDial = Dial("nprobe", NPROBES)(Encoders.scalaLong)
+  private[queries] val WidthDial =
+    Dial("ksub", PQ_WIDTHS.map(_.toLong))(Encoders.scalaLong)
+  private[queries] val RerankDial = Dial("r", RERANK_RS)(Encoders.scalaLong)
+  // raw is declared first: it wins a recall tie, being the cheaper serve
+  // (no per-(probe, cell) qdotc term)
+  private[queries] val GeometryDial =
+    Dial("geom", Seq("raw", "resid"), targetBp = None)(Encoders.STRING)
 
-  /** q138's recall-vs-width curve as a DURABLE artifact — the
-    * [[nprobeCurve]] discipline on the compression axis: the 3-row
-    * curve (one row per PQ_WIDTHS point, recall in basis points,
-    * narrowest-clearing-the-target election) builds once per corpus
-    * source identity and both q138 (the curve) and q155 (the serve at
-    * the elected width) read it afterwards. Ground truth pre-resolves
-    * through its own artifact so nested `ensure` calls never recurse. */
-  private[queries] def pqWidthCurve(spark: SparkSession, dir: String): DataFrame = {
-    val gt = pqGroundTruth(spark, dir)
-    val path = graft.exec.ArtifactStore.ensure(spark, "pq_width_curve",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-w${PQ_WIDTHS.mkString("_")}-t$RECALL_TARGET_BP" +
-        s"-k$TOPK-n$QUERY_N-v1") { p =>
-      widthCurveImpl(spark, dir, gt).write.mode("overwrite").parquet(p)
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-      .select(col("ksub"), col("n_probes"), col("sum_hits"),
-        col("min_hits"), col("recall_bp"), col("meets_target"),
-        col("chosen"))
-      .orderBy(col("ksub"))
+  /** The per-probe hits kernel: how many of each probe's served
+    * neighbors are in its exact ground truth, zero-filled so that a
+    * probe with no hits still counts — (dial, q_id, n_hit) with one row
+    * per (dial point, probe), or (q_id, n_hit) without a dial. */
+  private def probeHits(served: DataFrame, groundTruth: DataFrame,
+      probes: DataFrame, dial: Option[Dial[_]] = None): DataFrame = {
+    val keys = dial.map(_.name).toSeq :+ "q_id"
+    val hits = served.select((keys :+ "neighbor").map(col): _*)
+      .join(groundTruth, Seq("q_id", "neighbor"))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("n_hit"))
+    val ids = probes.select(col("q_id"))
+    dial.fold(ids)(_.gridDf(probes.sparkSession).crossJoin(ids))
+      .join(hits, keys, "left")
+      .select(keys.map(col) :+ coalesce(col("n_hit"), lit(0L)).as("n_hit"): _*)
   }
 
-  /** The codebook width q138's curve elects (narrowest clearing the
-    * recall target, else the widest) — one 3-row artifact read. */
-  private[queries] def electedWidth(spark: SparkSession, dir: String): Int =
-    graft.exec.ArtifactStore.memoScalar(spark, s"electedWidth|$dir") {
-      pqWidthCurve(spark, dir).filter(col("chosen") === 1L)
-        .select(col("ksub")).collect().head.getLong(0).toInt
-    }
+  /** A recall row's result: per-probe hits of one served top-k and its
+    * recall@[[TOPK]]. */
+  private def recallRows(served: DataFrame, groundTruth: DataFrame,
+      probes: DataFrame): DataFrame =
+    Q.localized(probeHits(served, groundTruth, probes)
+        .withColumn("recall_at_k", round(col("n_hit") / (TOPK * 1.0), 4)))
+      .orderBy(col("q_id"))
 
-  /** q156's recall-vs-R curve as a DURABLE artifact — the [[nprobeCurve]]
-    * discipline on the THIRD serving dial (shortlist depth): one
-    * elected-depth packed-ADC serve over-fetches to max([[RERANK_RS]]),
-    * ONE exact-cosine pass scores that maximal shortlist (probes ×
-    * max(R) rows — never corpus-sized), and each curve point is a
-    * rank-window restriction of it, so no per-R corpus rescans. Elects
-    * the smallest R clearing [[RECALL_TARGET_BP]] (else the deepest).
-    * The key carries every constant that re-keys its ground truth
-    * (k/n) plus the dial grid, target and the nprobe grid the
-    * underlying elected-depth serve depends on. */
-  private[queries] def rerankDepthCurve(spark: SparkSession, dir: String): DataFrame = {
-    // pre-resolve EVERY nested artifact before entering ensure (the
-    // store's documented discipline: a cold-store builder must not
-    // trigger an absent-key ensure — nested computeIfAbsent on the
-    // shared memo map can hit the outer call's ReservationNode and
-    // throw "Recursive update"). After these three lines the builder's
-    // inner resolves are present-key memo reads.
-    val gt = pqGroundTruth(spark, dir)
-    val np = electedNprobe(spark, dir)
-    ivfPqIndex(spark, dir)
-    pqQuantizerRoot(spark, dir)
-    val path = graft.exec.ArtifactStore.ensure(spark, "rerank_depth_curve",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-r${RERANK_RS.mkString("_")}-t$RECALL_TARGET_BP"
-        + s"-k$TOPK-n$QUERY_N-p${NPROBES.mkString("_")}-v1") { p =>
-      rerankDepthCurveImpl(spark, dir, gt,
-        ivfPqServe(spark, dir, np, topk = RERANK_RS.max.toInt)
-          .select(col("q_id"), col("rank").as("adc_rank"), col("neighbor")))
-        .write.mode("overwrite").parquet(p)
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-      .select(col("r"), col("n_probes"), col("sum_hits"), col("min_hits"),
-        col("recall_bp"), col("meets_target"), col("chosen"))
-      .orderBy(col("r"))
-  }
-
-  /** The shortlist depth q156's curve elects (smallest R clearing the
-    * recall target, else the deepest) — one 4-row artifact read. */
-  private[queries] def electedRerankR(spark: SparkSession, dir: String): Int =
-    graft.exec.ArtifactStore.memoScalar(spark, s"electedRerankR|$dir") {
-      rerankDepthCurve(spark, dir).filter(col("chosen") === 1L)
-        .select(col("r")).collect().head.getLong(0).toInt
-    }
-
-  /** q162's curve as a DURABLE artifact — the [[nprobeCurve]] discipline
-    * applied to the TRAINED coarse quantizer (round 18; through r17 the
-    * trained family served at a hard-coded nprobe = 2 while the
-    * md5-quantizer family had the full curve→elect→serve arc): sweep
-    * nprobe ∈ [[NPROBES]] of the exact in-cell search over TRAINED
-    * cells for the full-corpus md5 probe sample, recall against the
-    * SAME durable exact ground truth that prices the whole PQ family
-    * (ann_gt_pq — the probe construction is pqProbes', so one stored GT
-    * serves raw, re-ranked, residual AND trained rows), elect the
-    * smallest depth clearing [[RECALL_TARGET_BP]] (else the deepest).
-    * The key carries the CONTENT identity of the trained centers (the
-    * q158 discipline: the fixed path rebuilds in place, so any retrain
-    * re-keys this curve). */
-  private[queries] def trainedNprobeCurve(spark: SparkSession, dir: String): DataFrame = {
-    ensureTrainedCoarse(spark, dir)
-    val gt = pqGroundTruth(spark, dir)
-    val path = graft.exec.ArtifactStore.ensure(spark, "trained_nprobe_curve",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP"
-        + s"-k$TOPK-n$QUERY_N"
-        + s"-cc${graft.exec.ArtifactStore.contentKey(spark, TrainedCentroidsPath)}"
-        + "-v1") { p =>
-      trainedNprobeCurveImpl(spark, dir, gt)
-        .write.mode("overwrite").parquet(p)
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-      .select(col("nprobe"), col("n_probes"), col("sum_hits"),
-        col("min_hits"), col("recall_bp"), col("total_candidates"),
-        col("meets_target"), col("chosen"))
-      .orderBy(col("nprobe"))
-  }
-
-  /** The serving depth q162's curve elects for the TRAINED quantizers —
-    * one 4-row artifact read. */
-  private[queries] def electedTrainedNprobe(spark: SparkSession, dir: String): Int =
-    graft.exec.ArtifactStore.memoScalar(spark, s"electedTrainedNprobe|$dir") {
-      trainedNprobeCurve(spark, dir).filter(col("chosen") === 1L)
-        .select(col("nprobe")).collect().head.getLong(0).toInt
-    }
-
-  /** q163's curve as a DURABLE artifact — the [[rerankDepthCurve]]
-    * discipline over the TRAINED serve: ONE trained packed serve at the
-    * q162-elected depth over-fetches to max([[RERANK_RS]]) carrying its
-    * ADC rank, one exact pass scores it, every curve point is a
-    * rank-window restriction; elects the smallest R clearing the
-    * target. Key carries BOTH trained quantizers' content identity
-    * (codes and cells both feed the shortlist). */
-  private[queries] def trainedRerankCurve(spark: SparkSession, dir: String): DataFrame = {
-    // pre-resolve every nested artifact (nested-ensure discipline)
-    ensureTrainedQuantizers(spark, dir)
-    val gt = pqGroundTruth(spark, dir)
-    val np = electedTrainedNprobe(spark, dir)
-    ivfPqTrainedIndex(spark, dir)
-    val path = graft.exec.ArtifactStore.ensure(spark, "trained_rerank_curve",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-r${RERANK_RS.mkString("_")}-t$RECALL_TARGET_BP"
-        + s"-k$TOPK-n$QUERY_N-p${NPROBES.mkString("_")}"
-        + s"-q${trainedQuantizerIdentity(spark)}-v1") { p =>
-      rerankDepthCurveImpl(spark, dir, gt,
-        trainedPackedServe(spark, dir, np, topk = RERANK_RS.max.toInt)
-          .select(col("q_id"), col("rank").as("adc_rank"), col("neighbor")))
-        .write.mode("overwrite").parquet(p)
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-      .select(col("r"), col("n_probes"), col("sum_hits"), col("min_hits"),
-        col("recall_bp"), col("meets_target"), col("chosen"))
-      .orderBy(col("r"))
-  }
-
-  /** The shortlist depth q163's curve elects for the TRAINED serve —
-    * one 4-row artifact read. */
-  private[queries] def electedTrainedRerankR(spark: SparkSession, dir: String): Int =
-    graft.exec.ArtifactStore.memoScalar(spark, s"electedTrainedRerankR|$dir") {
-      trainedRerankCurve(spark, dir).filter(col("chosen") === 1L)
-        .select(col("r")).collect().head.getLong(0).toInt
-    }
-
-  /** q165's curve as a DURABLE artifact — the election the raw-vs-
-    * residual measurement (q161) always implied but never fired: one
-    * row per encoding geometry (raw full-width codes vs residual
-    * codes, both at the q131-elected depth over identical 24-byte
-    * index layouts), recall@[[TOPK]] against the shared exact ground
-    * truth, `chosen` = the higher recall with ties to raw (the cheaper
-    * serve — no per-(probe, cell) qdotc term). On clustered real
-    * embeddings residual wins (FAISS's default); on this isotropic
-    * synthetic corpus raw does — the point is the trade is MEASURED
-    * per corpus, not assumed. q157's production serve branches on it
-    * (the fourth dial). */
-  private[queries] def geometryCurve(spark: SparkSession, dir: String): DataFrame = {
-    // pre-resolve every nested artifact (nested-ensure discipline)
-    val gt = pqGroundTruth(spark, dir)
-    val np = electedNprobe(spark, dir)
-    ivfPqIndex(spark, dir)
-    pqQuantizerRoot(spark, dir)
-    ivfPqResidArtifact(spark, dir)
-    val path = graft.exec.ArtifactStore.ensure(spark, "ann_geometry_curve",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP"
-        + s"-k$TOPK-n$QUERY_N-m$PQ_M-ks$PQ_KSUB-v1") { p =>
-      geometryCurveImpl(spark, dir, gt, np)
-        .write.mode("overwrite").parquet(p)
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-      .select(col("geom"), col("n_probes"), col("sum_hits"),
-        col("min_hits"), col("recall_bp"), col("chosen"))
-      .orderBy(col("geom"))
-  }
-
-  /** The encoding geometry q165's curve elects — one 2-row artifact
-    * read ("raw" or "resid"). */
-  private[queries] def electedGeometry(spark: SparkSession, dir: String): String =
-    graft.exec.ArtifactStore.memoScalar(spark, s"electedGeometry|$dir") {
-      geometryCurve(spark, dir).filter(col("chosen") === 1L)
-        .select(col("geom")).collect().head.getString(0)
-    }
-
-  private def geometryCurveImpl(spark: SparkSession, dir: String,
-      groundTruth: DataFrame, np: Int): DataFrame = {
-    import spark.implicits._
-    val probes = pqProbes(normed(spark, dir))
-    def perQ(geom: String, served: DataFrame): DataFrame = {
-      val hits = served.select(col("q_id"), col("neighbor"))
-        .join(groundTruth, Seq("q_id", "neighbor"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-      probes.select(col("q_id")).join(hits, Seq("q_id"), "left")
-        .select(lit(geom).as("geom"), col("q_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-    }
-    val curve = perQ("raw", ivfPqServe(spark, dir, np))
-      .unionByName(perQ("resid", ivfPqResidServe(spark, dir, np)))
-      .groupBy(col("geom")).agg(
+  /** The curve aggregate: per dial point, the probe count, total and
+    * worst per-probe hits, recall in integer basis points
+    * (floor(sum_hits·10⁴ / (probes·k)) — no cross-engine double-rounding
+    * seam) and, where the dial has a target, whether the point meets
+    * it. */
+  private def recallCurve(dial: Dial[_], served: DataFrame,
+      groundTruth: DataFrame, probes: DataFrame): DataFrame = {
+    val curve = probeHits(served, groundTruth, probes, Some(dial))
+      .groupBy(col(dial.name)).agg(
         count(lit(1)).cast("long").as("n_probes"),
         sum(col("n_hit")).cast("long").as("sum_hits"),
         min(col("n_hit")).cast("long").as("min_hits"))
       .withColumn("recall_bp",
         floor(col("sum_hits") * 10000.0 / (col("n_probes") * lit(TOPK)))
           .cast("long"))
-    // election over the 2-row curve — result-sized (the widthCurveImpl
-    // discipline); ties go to raw
-    val rows = curve.collect()
-    def bp(g: String): Long =
-      rows.find(_.getString(0) == g).get.getAs[Long]("recall_bp")
-    val chosenG = if (bp("resid") > bp("raw")) "resid" else "raw"
-    rows.toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4),
-        if (r.getString(0) == chosenG) 1L else 0L))
-      .toDF("geom", "n_probes", "sum_hits", "min_hits", "recall_bp",
-        "chosen")
-      .orderBy(col("geom"))
+    dial.targetBp.fold(curve)(t =>
+      curve.withColumn("meets_target", (col("recall_bp") >= t).cast("long")))
   }
+
+  /** The election, over a curve's recall_bp in declared dial order: with
+    * a target, the first (smallest) point meeting it, else the last
+    * (largest); without one, the highest recall, ties to the first
+    * declared point. One flag per point, exactly one of them 1. */
+  private[queries] def chosenFlags(targetBp: Option[Long],
+      recallBp: Seq[Long]): Seq[Long] = {
+    val pick = targetBp match {
+      case Some(t) =>
+        val i = recallBp.indexWhere(_ >= t)
+        if (i >= 0) i else recallBp.size - 1
+      case None => recallBp.indexOf(recallBp.max)
+    }
+    recallBp.indices.map(i => if (i == pick) 1L else 0L)
+  }
+
+  /** Collects a curve (one row per dial point — result-sized), elects on
+    * the driver and returns it as a local relation in declared dial
+    * order with its `chosen` flag appended. */
+  private[queries] def electCurve(dial: Dial[_], curve: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val rows = curve.collect()
+      .sortBy(r => dial.grid.indexOf(r.get(r.fieldIndex(dial.name))))
+    val flags = chosenFlags(dial.targetBp, rows.map(_.getAs[Long]("recall_bp")))
+    curve.sparkSession.createDataFrame(
+      rows.zip(flags).map { case (r, f) => Row.fromSeq(r.toSeq :+ f) }
+        .toSeq.asJava,
+      curve.schema.add("chosen", LongType))
+  }
+
+  /** The artifact half of every curve: publishes the elected curve
+    * `build` returns under (family, corpus source identity + `key`) and
+    * reads it back in dial order. */
+  private def durableCurve(spark: SparkSession, dir: String, family: String,
+      key: String, dial: Dial[_], extra: Seq[String] = Nil)
+      (build: => DataFrame): DataFrame = {
+    val path = graft.exec.ArtifactStore.ensure(spark, family,
+      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings") + key) { p =>
+      build.write.mode("overwrite").parquet(p)
+    }
+    val cols = Seq(dial.name, "n_probes", "sum_hits", "min_hits",
+      "recall_bp") ++ extra ++ dial.targetBp.map(_ => "meets_target") :+ "chosen"
+    graft.exec.ArtifactStore.readPublished(spark, path)
+      .select(cols.map(col): _*)
+      .orderBy(col(dial.name))
+  }
+
+  /** The dial a durable curve elects — a memoized read of its one
+    * `chosen` row. */
+  private def electedDial[D](spark: SparkSession, tag: String, dial: Dial[D])
+      (curve: => DataFrame): D =
+    graft.exec.ArtifactStore.memoScalar(spark, tag) {
+      curve.filter(col("chosen") === 1L).select(col(dial.name))
+        .as[D](dial.enc).head()
+    }
+
+  /** q131: nprobe ∈ [[NPROBES]] of the md5-prefix IVF over the modulus
+    * probe sample (ann_gt_ivf); keyed by grid, target and k/n/mod. */
+  private[queries] def nprobeCurve(spark: SparkSession, dir: String): DataFrame = {
+    val gt = ivfGroundTruth(spark, dir)
+    durableCurve(spark, dir, "ann_nprobe_curve",
+      s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP" +
+        s"-k$TOPK-n$QUERY_N-m$QUERY_MOD-v1",
+      NprobeDial, Seq("total_candidates")) {
+      val n = normed(spark, dir).persist(MEMORY_AND_DISK)
+      val curve = nprobeSweep(n, boundedCents(n), ivfEvalProbes(n), gt)
+      n.unpersist(blocking = false)
+      curve
+    }
+  }
+
+  private[queries] def electedNprobe(spark: SparkSession, dir: String): Int =
+    electedDial(spark, s"electedNprobe|$dir", NprobeDial)(
+      nprobeCurve(spark, dir)).toInt
+
+  /** q138: codebook width ksub ∈ [[PQ_WIDTHS]] of the full-scan ADC
+    * (ann_gt_pq); keyed by grid, target and k/n. */
+  private[queries] def pqWidthCurve(spark: SparkSession, dir: String): DataFrame = {
+    val gt = pqGroundTruth(spark, dir)
+    durableCurve(spark, dir, "pq_width_curve",
+      s"-w${PQ_WIDTHS.mkString("_")}-t$RECALL_TARGET_BP-k$TOPK-n$QUERY_N-v1",
+      WidthDial) {
+      val n = normed(spark, dir).persist(MEMORY_AND_DISK)
+      val cbFull = pqCodebook(n)
+      val probes = pqProbes(n)
+      // width-w sub-centroids are the first w rows of the full codebook
+      val served = PQ_WIDTHS.map { wk =>
+        val cbW = PqCodebook(PQ_M, wk, PQ_SUB, cbFull.cents.take(wk))
+        val bcW = spark.sparkContext.broadcast(cbW)
+        val coded = n.select(col("vec_id"), col("nrm"),
+          transform(PqExprs.pqEncode(bcW, col("v")),
+            s => s.getField("code")).as("codes"))
+        pqAdcServe(coded, probes, cbW)
+          .select(lit(wk.toLong).as("ksub"), col("q_id"), col("neighbor"))
+      }.reduce(_ unionByName _)
+      val curve = electCurve(WidthDial, recallCurve(WidthDial, served, gt, probes))
+      n.unpersist(blocking = false)
+      curve
+    }
+  }
+
+  private[queries] def electedWidth(spark: SparkSession, dir: String): Int =
+    electedDial(spark, s"electedWidth|$dir", WidthDial)(
+      pqWidthCurve(spark, dir)).toInt
+
+  /** q156: shortlist depth R ∈ [[RERANK_RS]] of the q131-elected-depth
+    * packed-ADC serve plus exact re-rank (ann_gt_pq); keyed by grid,
+    * target, k/n and the nprobe grid. */
+  private[queries] def rerankDepthCurve(spark: SparkSession, dir: String): DataFrame = {
+    val gt = pqGroundTruth(spark, dir)
+    val np = electedNprobe(spark, dir)
+    ivfPqIndex(spark, dir)
+    pqQuantizerRoot(spark, dir)
+    durableCurve(spark, dir, "rerank_depth_curve",
+      s"-r${RERANK_RS.mkString("_")}-t$RECALL_TARGET_BP" +
+        s"-k$TOPK-n$QUERY_N-p${NPROBES.mkString("_")}-v1", RerankDial) {
+      rerankSweep(spark, dir, gt,
+        ivfPqServe(spark, dir, np, topk = RERANK_RS.max.toInt))
+    }
+  }
+
+  private[queries] def electedRerankR(spark: SparkSession, dir: String): Int =
+    electedDial(spark, s"electedRerankR|$dir", RerankDial)(
+      rerankDepthCurve(spark, dir)).toInt
+
+  /** q162: nprobe ∈ [[NPROBES]] over the TRAINED coarse cells for the
+    * full-corpus md5 probe sample (ann_gt_pq — the trained serve's own
+    * probe universe); keyed by grid, target, k/n and the trained
+    * centers' content identity (an in-place retrain re-keys it). */
+  private[queries] def trainedNprobeCurve(spark: SparkSession, dir: String): DataFrame = {
+    ensureTrainedCoarse(spark, dir)
+    val gt = pqGroundTruth(spark, dir)
+    durableCurve(spark, dir, "trained_nprobe_curve",
+      s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP-k$TOPK-n$QUERY_N" +
+        s"-cc${graft.exec.ArtifactStore.contentKey(spark, TrainedCentroidsPath)}" +
+        "-v1", NprobeDial, Seq("total_candidates")) {
+      val n = normed(spark, dir).persist(MEMORY_AND_DISK)
+      val curve = nprobeSweep(n, trainedCents(spark), pqProbes(n), gt)
+      n.unpersist(blocking = false)
+      curve
+    }
+  }
+
+  private[queries] def electedTrainedNprobe(spark: SparkSession, dir: String): Int =
+    electedDial(spark, s"electedTrainedNprobe|$dir", NprobeDial)(
+      trainedNprobeCurve(spark, dir)).toInt
+
+  /** q163: shortlist depth R ∈ [[RERANK_RS]] of the q162-elected-depth
+    * TRAINED packed serve plus exact re-rank (ann_gt_pq); keyed by
+    * grid, target, k/n, the nprobe grid and both trained quantizers'
+    * content identity. */
+  private[queries] def trainedRerankCurve(spark: SparkSession, dir: String): DataFrame = {
+    ensureTrainedQuantizers(spark, dir)
+    val gt = pqGroundTruth(spark, dir)
+    val np = electedTrainedNprobe(spark, dir)
+    ivfPqTrainedIndex(spark, dir)
+    durableCurve(spark, dir, "trained_rerank_curve",
+      s"-r${RERANK_RS.mkString("_")}-t$RECALL_TARGET_BP" +
+        s"-k$TOPK-n$QUERY_N-p${NPROBES.mkString("_")}" +
+        s"-q${trainedQuantizerIdentity(spark)}-v1", RerankDial) {
+      rerankSweep(spark, dir, gt,
+        trainedPackedServe(spark, dir, np, topk = RERANK_RS.max.toInt))
+    }
+  }
+
+  private[queries] def electedTrainedRerankR(spark: SparkSession, dir: String): Int =
+    electedDial(spark, s"electedTrainedRerankR|$dir", RerankDial)(
+      trainedRerankCurve(spark, dir)).toInt
+
+  /** q165: encoding geometry (raw vs residual codes, both at the
+    * q131-elected depth over identical 24-byte index layouts,
+    * ann_gt_pq), higher recall wins with ties to raw; keyed by the
+    * nprobe grid, target, k/n and the PQ shape. On clustered real
+    * embeddings residual wins (FAISS's default); on this isotropic
+    * synthetic corpus raw does — the trade is measured per corpus.
+    * q157's production serve branches on it. */
+  private[queries] def geometryCurve(spark: SparkSession, dir: String): DataFrame = {
+    val gt = pqGroundTruth(spark, dir)
+    val np = electedNprobe(spark, dir)
+    ivfPqIndex(spark, dir)
+    pqQuantizerRoot(spark, dir)
+    ivfPqResidArtifact(spark, dir)
+    durableCurve(spark, dir, "ann_geometry_curve",
+      s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP" +
+        s"-k$TOPK-n$QUERY_N-m$PQ_M-ks$PQ_KSUB-v1", GeometryDial) {
+      val served = ivfPqServe(spark, dir, np)
+        .select(lit("raw").as("geom"), col("q_id"), col("neighbor"))
+        .unionByName(ivfPqResidServe(spark, dir, np)
+          .select(lit("resid").as("geom"), col("q_id"), col("neighbor")))
+      electCurve(GeometryDial,
+        recallCurve(GeometryDial, served, gt, pqProbes(normed(spark, dir))))
+    }
+  }
+
+  private[queries] def electedGeometry(spark: SparkSession, dir: String): String =
+    electedDial(spark, s"electedGeometry|$dir", GeometryDial)(
+      geometryCurve(spark, dir))
 
   /** q157's production serve with the geometry branch INJECTABLE (the
     * repo's standing size-gate rule applied to an election: the spec
@@ -4369,189 +4319,17 @@ object Similarity {
       ivfPqRerank(spark, dir, electedRerankR(spark, dir),
         ksub = electedWidth(spark, dir))
 
-  /** q162's curve body: [[nprobeCurveImpl]]'s shape over the TRAINED
-    * centers with the full-corpus md5 probe sample (the trained serve's
-    * own probe universe, so the election matches what q164 serves). */
-  private def trainedNprobeCurveImpl(spark: SparkSession, dir: String,
+  /** The coarse-quantizer sweep behind q131 and q162, over `cents` for
+    * `probes`: candidates from each probe's [[NPROBE_MAX]] nearest cells
+    * are scored once with their cell's per-query rank, and each nprobe
+    * point restricts that one relation through a 4-row broadcast
+    * theta-join — no per-point corpus rescans. Cell ranks are micro-unit
+    * scores with c_id tie-break, cosines 4dp with neighbor tie-break (the
+    * q36 rules). The elected curve also carries each point's candidate
+    * count. */
+  private def nprobeSweep(n: DataFrame, cents: DataFrame, probes: DataFrame,
       groundTruth: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val n = normed(spark, dir).persist(MEMORY_AND_DISK)
-    val cents = trainedCents(spark)
     val assigned = assignCells(n, cents)
-    val probes = pqProbes(n)
-    val wCell = Window.partitionBy(col("q_id"))
-      .orderBy(col("cscore").desc, col("c_id").asc)
-    val qcells = probes.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("qn"), col("c_id"),
-        graft.similarity.VectorSearch.scoreMu(
-          cosine(col("qv"), col("cv"), col("qn"), col("cn"))).as("cscore"))
-      .withColumn("crank", row_number().over(wCell).cast("long"))
-      .filter(col("crank") <= NPROBE_MAX)
-      .select(col("q_id"), col("qv"), col("qn"), col("c_id").as("qcell"),
-        col("crank"))
-    val cand = assigned.join(broadcast(qcells), col("c_id") === col("qcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("crank"), col("vec_id").as("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-          .as("cosine"))
-    val exact = groundTruth
-    val ps = NPROBES.toDF("nprobe")
-    val candP = cand.join(broadcast(ps), col("crank") <= col("nprobe"))
-    val wIvf = Window.partitionBy(col("nprobe"), col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    val ivfTop = candP.withColumn("rk", row_number().over(wIvf))
-      .filter(col("rk") <= TOPK)
-      .select(col("nprobe"), col("q_id"), col("neighbor"))
-    val hits = ivfTop.join(exact, Seq("q_id", "neighbor"))
-      .groupBy(col("nprobe"), col("q_id")).agg(count(lit(1)).as("n_hit"))
-    val grid = probes.select(col("q_id")).crossJoin(ps)
-    val perQ = grid.join(hits, Seq("nprobe", "q_id"), "left")
-      .select(col("nprobe"), col("q_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-    val candCount = candP.groupBy(col("nprobe"))
-      .agg(count(lit(1)).as("total_candidates"))
-    val curve = perQ.groupBy(col("nprobe"))
-      .agg(count(lit(1)).as("n_probes"), sum(col("n_hit")).as("sum_hits"),
-        min(col("n_hit")).as("min_hits"))
-      .join(candCount, Seq("nprobe"), "left")
-      .withColumn("total_candidates",
-        coalesce(col("total_candidates"), lit(0L)))
-      .withColumn("recall_bp",
-        floor((col("sum_hits") * lit(10000.0)) / (col("n_probes") * lit(TOPK)))
-          .cast("long"))
-      .withColumn("meets_target",
-        (col("recall_bp") >= RECALL_TARGET_BP).cast("long"))
-    val election = curve.agg(
-      max(col("meets_target")).as("any_meets"),
-      min(when(col("meets_target") === 1L, col("nprobe"))).as("min_meet"),
-      max(col("nprobe")).as("max_p"))
-    val result = Q.localized(curve.crossJoin(broadcast(election))
-      .withColumn("chosen",
-        when((col("any_meets") === 1L && col("nprobe") === col("min_meet")) ||
-          (col("any_meets") === 0L && col("nprobe") === col("max_p")), 1L)
-          .otherwise(0L))
-      .select(col("nprobe"), col("n_probes"), col("sum_hits"),
-        col("min_hits"), col("recall_bp"), col("total_candidates"),
-        col("meets_target"), col("chosen"))
-      .orderBy(col("nprobe")))
-    n.unpersist(blocking = false)
-    result
-  }
-
-  /** Shared R-curve body (q156 over the md5-quantizer serve, q163 over
-    * the trained serve): the caller hands the MAXIMAL rank-carrying
-    * shortlist (q_id, adc_rank, neighbor — an elected-depth serve
-    * over-fetched to max([[RERANK_RS]])), with every nested artifact
-    * pre-resolved (nested-ensure discipline); every curve point below
-    * is a filter over one exact-scored relation — one serve, one
-    * vector fetch, one window, |RERANK_RS| restrictions. */
-  private def rerankDepthCurveImpl(spark: SparkSession, dir: String,
-      groundTruth: DataFrame, shortlist: DataFrame): DataFrame = {
-    import spark.implicits._
-    val n = normed(spark, dir)
-    val probes = pqProbes(n)
-    val scored = n
-      .join(broadcast(shortlist), col("vec_id") === col("neighbor"))
-      .join(broadcast(probes), Seq("q_id"))
-      .select(col("q_id"), col("adc_rank"), col("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-          .as("cosine"))
-    val rs = RERANK_RS.toDF("r")
-    val wR = Window.partitionBy(col("r"), col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    val topR = scored.join(broadcast(rs), col("adc_rank") <= col("r"))
-      .withColumn("rk", row_number().over(wR))
-      .filter(col("rk") <= TOPK)
-      .select(col("r"), col("q_id"), col("neighbor"))
-    val hits = topR.join(groundTruth, Seq("q_id", "neighbor"))
-      .groupBy(col("r"), col("q_id")).agg(count(lit(1)).as("n_hit"))
-    val perQ = rs.crossJoin(probes.select(col("q_id")))
-      .join(hits, Seq("r", "q_id"), "left")
-      .select(col("r"), col("q_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-    val curve = perQ.groupBy(col("r")).agg(
-        count(lit(1)).cast("long").as("n_probes"),
-        sum(col("n_hit")).cast("long").as("sum_hits"),
-        min(col("n_hit")).cast("long").as("min_hits"))
-      .withColumn("recall_bp",
-        floor(col("sum_hits") * 10000.0 / (col("n_probes") * lit(TOPK)))
-          .cast("long"))
-      .withColumn("meets_target",
-        when(col("recall_bp") >= RECALL_TARGET_BP, 1L).otherwise(0L))
-    // election over the |RERANK_RS|-row curve — result-sized, the
-    // widthCurveImpl discipline
-    val rows = curve.orderBy(col("r")).collect()
-    val met = rows.filter(_.getAs[Long]("meets_target") == 1L)
-    val chosenR =
-      if (met.nonEmpty) met.map(_.getAs[Long]("r")).min
-      else rows.map(_.getAs[Long]("r")).max
-    rows.toSeq.map(row => (row.getLong(0), row.getLong(1), row.getLong(2),
-        row.getLong(3), row.getLong(4), row.getLong(5),
-        if (row.getLong(0) == chosenR) 1L else 0L))
-      .toDF("r", "n_probes", "sum_hits", "min_hits", "recall_bp",
-        "meets_target", "chosen")
-      .orderBy(col("r"))
-  }
-
-  private def widthCurveImpl(spark: SparkSession, dir: String,
-      groundTruth: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val n = normed(spark, dir).persist(MEMORY_AND_DISK)
-    val cbFull = pqCodebook(n)
-    val probes = pqProbes(n)
-    val exact = groundTruth
-    val curves = PQ_WIDTHS.map { wk =>
-      val cbW = PqCodebook(PQ_M, wk, PQ_SUB, cbFull.cents.take(wk))
-      val bcW = spark.sparkContext.broadcast(cbW)
-      val coded = n.select(col("vec_id"), col("nrm"),
-        transform(PqExprs.pqEncode(bcW, col("v")),
-          s => s.getField("code")).as("codes"))
-      pqAdcServe(coded, probes, cbW)
-        .select(lit(wk.toLong).as("ksub"), col("q_id"), col("neighbor"))
-    }.reduce(_ unionByName _)
-    val hits = curves.join(exact, Seq("q_id", "neighbor"))
-      .groupBy(col("ksub"), col("q_id"))
-      .agg(count(lit(1)).as("n_hit"))
-    val perq = PQ_WIDTHS.map(_.toLong).toDF("ksub")
-      .crossJoin(probes.select(col("q_id")))
-      .join(hits, Seq("ksub", "q_id"), "left")
-      .select(col("ksub"), col("q_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-    val curve = perq.groupBy(col("ksub")).agg(
-        count(lit(1)).cast("long").as("n_probes"),
-        sum(col("n_hit")).cast("long").as("sum_hits"),
-        min(col("n_hit")).cast("long").as("min_hits"))
-      .withColumn("recall_bp",
-        floor(col("sum_hits") * 10000.0 / (col("n_probes") * lit(TOPK)))
-          .cast("long"))
-      .withColumn("meets_target",
-        when(col("recall_bp") >= RECALL_TARGET_BP, 1L).otherwise(0L))
-    // election over the |PQ_WIDTHS|-row curve — result-sized, the
-    // Q.localized discipline
-    val rs = curve.orderBy(col("ksub")).collect()
-    val met = rs.filter(_.getAs[Long]("meets_target") == 1L)
-    val chosenW =
-      if (met.nonEmpty) met.map(_.getAs[Long]("ksub")).min
-      else rs.map(_.getAs[Long]("ksub")).max
-    val out = rs.toSeq.map(r => (r.getLong(0), r.getLong(1),
-        r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-        if (r.getLong(0) == chosenW) 1L else 0L))
-      .toDF("ksub", "n_probes", "sum_hits", "min_hits", "recall_bp",
-        "meets_target", "chosen")
-    n.unpersist(blocking = false)
-    out.orderBy(col("ksub"))
-  }
-
-  private def nprobeCurveImpl(spark: SparkSession, dir: String,
-      groundTruth: DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val n = normed(spark, dir).persist(MEMORY_AND_DISK)
-    val cents = boundedCents(n)
-    val assigned = assignCells(n, cents)
-    val probes = ivfEvalProbes(n)
     // per-query cell ranking to depth NPROBE_MAX (a window over the
     // QUERY_N × k expansion — probe-set-sized, never corpus-sized)
     val wCell = Window.partitionBy(col("q_id"))
@@ -4569,50 +4347,48 @@ object Similarity {
       .select(col("q_id"), col("crank"), col("vec_id").as("neighbor"),
         round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
           .as("cosine"))
-    // exact ground truth: the durable ann_gt_ivf artifact (same probes —
-    // ivfEvalProbes IS the artifact's probe construction)
-    val exact = groundTruth
-    val ps = NPROBES.toDF("nprobe")
-    val candP = cand.join(broadcast(ps), col("crank") <= col("nprobe"))
+    val candP = cand.join(broadcast(NprobeDial.gridDf(n.sparkSession)),
+      col("crank") <= col("nprobe"))
     val wIvf = Window.partitionBy(col("nprobe"), col("q_id"))
       .orderBy(col("cosine").desc, col("neighbor").asc)
     val ivfTop = candP.withColumn("rk", row_number().over(wIvf))
       .filter(col("rk") <= TOPK)
       .select(col("nprobe"), col("q_id"), col("neighbor"))
-    val hits = ivfTop.join(exact, Seq("q_id", "neighbor"))
-      .groupBy(col("nprobe"), col("q_id")).agg(count(lit(1)).as("n_hit"))
-    val grid = probes.select(col("q_id")).crossJoin(ps)
-    val perQ = grid.join(hits, Seq("nprobe", "q_id"), "left")
-      .select(col("nprobe"), col("q_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
     val candCount = candP.groupBy(col("nprobe"))
       .agg(count(lit(1)).as("total_candidates"))
-    val curve = perQ.groupBy(col("nprobe"))
-      .agg(count(lit(1)).as("n_probes"), sum(col("n_hit")).as("sum_hits"),
-        min(col("n_hit")).as("min_hits"))
-      .join(candCount, Seq("nprobe"), "left")
-      .withColumn("total_candidates",
-        coalesce(col("total_candidates"), lit(0L)))
-      .withColumn("recall_bp",
-        floor((col("sum_hits") * lit(10000.0)) / (col("n_probes") * lit(TOPK)))
-          .cast("long"))
-      .withColumn("meets_target",
-        (col("recall_bp") >= RECALL_TARGET_BP).cast("long"))
-    val election = curve.agg(
-      max(col("meets_target")).as("any_meets"),
-      min(when(col("meets_target") === 1L, col("nprobe"))).as("min_meet"),
-      max(col("nprobe")).as("max_p"))
-    val result = Q.localized(curve.crossJoin(broadcast(election))
-      .withColumn("chosen",
-        when((col("any_meets") === 1L && col("nprobe") === col("min_meet")) ||
-          (col("any_meets") === 0L && col("nprobe") === col("max_p")), 1L)
-          .otherwise(0L))
-      .select(col("nprobe"), col("n_probes"), col("sum_hits"),
-        col("min_hits"), col("recall_bp"), col("total_candidates"),
-        col("meets_target"), col("chosen"))
-      .orderBy(col("nprobe")))
-    n.unpersist(blocking = false)
-    result
+    electCurve(NprobeDial,
+      recallCurve(NprobeDial, ivfTop, groundTruth, probes)
+        .join(candCount, Seq("nprobe"), "left")
+        .withColumn("total_candidates",
+          coalesce(col("total_candidates"), lit(0L))))
+  }
+
+  /** The shortlist-depth sweep behind q156 and q163: `serve` is an
+    * elected-depth serve over-fetched to max([[RERANK_RS]]), carrying
+    * its ADC rank; one exact pass scores that maximal shortlist
+    * (probes × max(R) rows — never corpus-sized) and each R point is a
+    * rank-window restriction of it — one serve, one vector fetch, one
+    * window. */
+  private def rerankSweep(spark: SparkSession, dir: String,
+      groundTruth: DataFrame, serve: DataFrame): DataFrame = {
+    val shortlist = serve
+      .select(col("q_id"), col("rank").as("adc_rank"), col("neighbor"))
+    val n = normed(spark, dir)
+    val probes = pqProbes(n)
+    val scored = n
+      .join(broadcast(shortlist), col("vec_id") === col("neighbor"))
+      .join(broadcast(probes), Seq("q_id"))
+      .select(col("q_id"), col("adc_rank"), col("neighbor"),
+        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
+          .as("cosine"))
+    val wR = Window.partitionBy(col("r"), col("q_id"))
+      .orderBy(col("cosine").desc, col("neighbor").asc)
+    val topR = scored
+      .join(broadcast(RerankDial.gridDf(spark)), col("adc_rank") <= col("r"))
+      .withColumn("rk", row_number().over(wR))
+      .filter(col("rk") <= TOPK)
+      .select(col("r"), col("q_id"), col("neighbor"))
+    electCurve(RerankDial, recallCurve(RerankDial, topR, groundTruth, probes))
   }
 
   /** q100's pipeline as a callable (the SemDeDup construction): assign

@@ -589,7 +589,7 @@ object StreamingQueries {
       run = (spark, dir) => {
         import spark.implicits._
         // transformWithState requires the RocksDB state store provider;
-        // scope it to this query and restore (the TwsFunnel discipline)
+        // scope it to this query and restore it afterwards
         val provKey = "spark.sql.streaming.stateStore.providerClass"
         val prevProv = spark.conf.getOption(provKey)
         spark.conf.set(provKey,

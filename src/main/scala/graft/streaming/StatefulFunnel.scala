@@ -46,11 +46,9 @@ object StatefulFunnel {
     out.iterator
   }
 
-  /** The stage machine itself, independent of any state API — shared by
-    * the v1 ([[advance]], flatMapGroupsWithState) and v2
-    * (graft.streaming.TwsFunnel, transformWithState) wirings so the two
-    * cannot drift. */
-  private[streaming] def foldEvents(userId: Long, s0: FunnelState,
+  /** The stage machine itself, independent of any state API — the
+    * body [[advance]] wires into flatMapGroupsWithState. */
+  private def foldEvents(userId: Long, s0: FunnelState,
       events: Seq[Event]): (FunnelState, Seq[StageCompletion]) = {
     var s = s0
     val out = Seq.newBuilder[StageCompletion]
@@ -85,7 +83,7 @@ object StatefulFunnel {
   }
 
   /** The last completed stage's event time, or -1 when none. */
-  private[streaming] def lastStageUs(s: FunnelState): Long =
+  private def lastStageUs(s: FunnelState): Long =
     math.max(s.signupUs, math.max(s.clickUs, s.purchaseUs))
 
   /** [[advance]] plus state eviction: on EventTimeTimeout, drop the user's

@@ -24,7 +24,7 @@ import graft.functions.SpaceSavingAgg
   * with a per-bucket update sequence (OutputMode.Update) — a consumer
   * keeps the max-seq row set per bucket, exactly how [[StreamingHeavyHittersSpec]]
   * reads the memory sink. Requires the RocksDB state store provider
-  * (the transformWithState contract, as [[TwsFunnel]]).
+  * (the transformWithState contract).
   */
 object StreamingHeavyHitters {
 

@@ -1,27 +1,14 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL-surface registration for the engine's custom expressions, so
   * `spark.sql("SELECT graft_dot(a, b) ...")` works alongside the Column
-  * API (SURVEY §7.3: custom expression > UDF; this is the final rung —
-  * the extension-injection mechanism for cluster deployments).
-  *
-  * Two entry points:
-  *  - cluster config: `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
-  *  - runtime: `GraftFunctions.register(spark)` on an existing session
+  * API (SURVEY §7.3: custom expression > UDF). The single entry point
+  * is [[GraftFunctions.register]] on an existing session.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.dotProductDescriptor)
-    ext.injectFunction(GraftFunctions.intersectCountDescriptor)
-    ext.injectFunction(GraftFunctions.bloomMightContainDescriptor)
-  }
-}
-
 object GraftFunctions {
 
   val dotProductDescriptor

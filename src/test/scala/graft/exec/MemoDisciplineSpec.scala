@@ -44,6 +44,12 @@ class MemoDisciplineSpec extends AnyFunSuite with Matchers
       ArtifactStore.memoScalar(spark, tag("wrap17"))(Wrap(Array.range(0, 17)))
     an[IllegalArgumentException] should be thrownBy
       ArtifactStore.memoScalar(spark, tag("df"))(spark.range(3).toDF())
+    // a lazy infinite collection is rejected without being forced
+    an[IllegalArgumentException] should be thrownBy
+      ArtifactStore.memoScalar(spark, tag("lazy"))(LazyList.from(0))
+    // an iterator is single-pass data whatever its length
+    an[IllegalArgumentException] should be thrownBy
+      ArtifactStore.memoScalar(spark, tag("iter17"))(Iterator.range(0, 17))
   }
 
   test("query paths take ensure-artifact reads through the store: bare " +
