@@ -257,8 +257,8 @@ object ArtifactStore {
 
   // Published-artifact relations and election scalars live in the
   // weak-keyed per-session [[SessionMemo]] (shared with Tables — r18
-  // advice: one implementation, no identityHashCode keys, no strong
-  // pinning of stopped sessions).
+  // advice: one implementation, no identityHashCode keys; a stopped
+  // session is still pinned by its memoized relations, see SessionMemo).
   //
   // Metadata memo only: spark.read.parquet re-lists the directory and
   // re-infers the footer schema on EVERY call (a small driver-side job

@@ -5,14 +5,18 @@ import org.apache.spark.sql.SparkSession
 /** Per-session memo maps keyed WEAKLY on the SparkSession object itself.
   *
   * Object identity is exactly the scope a resolved logical plan (or a
-  * scalar collected through one) is valid for — and a weak key means a
-  * stopped session's memos become collectable instead of being pinned
-  * for the process lifetime. This replaces the round-18
+  * scalar collected through one) is valid for. The weak key does NOT
+  * make a stopped session's memos collectable: a memoized DataFrame
+  * strongly references its SparkSession, so the value keeps its own
+  * key reachable and the entry is never cleared. Only a session whose
+  * entries are all plain scalars is reclaimed; one that memoized any
+  * DataFrame (every published or fixed artifact read, every base-table
+  * read) stays pinned for the process lifetime — an open leak. This
+  * replaces the round-18
   * `Integer.toHexString(System.identityHashCode(spark))` string keys,
-  * which (a) could collide between a live session and a dead one whose
+  * which could collide between a live session and a dead one whose
   * address was reused — serving a DataFrame resolved against a stopped
-  * session — and (b) lived in strongly-referenced maps that accumulated
-  * entries across every test-suite session (r18 advice, both items).
+  * session (r18 advice).
   *
   * One implementation serves ArtifactStore (published/fixed artifact
   * relations, election scalars) and Tables (base-table relations);

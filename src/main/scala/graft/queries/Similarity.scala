@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -8,6 +9,7 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.functions.VectorFns._
 import graft.io.Tables.table
+import graft.similarity.VectorSearch
 
 import org.apache.spark.sql.graft.{PqCodebook, PqExprs, PqLuts}
 
@@ -134,8 +136,15 @@ object Similarity {
     * [[boundedCents]] with the size already derived (q133 needs the
     * k- and √k-prefixes of the SAME ranking). */
   private[queries] def centsPrefix(n: DataFrame, k: Int): DataFrame =
-    n.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
+    md5Prefix(n, k)
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
+
+  /** The first `k` rows of `rel` in md5(vec_id) order, ties to vec_id —
+    * the engine-independent fixed-count sample every md5-prefix
+    * construction draws (oracle twin: `ORDER BY md5(CAST(vec_id AS
+    * VARCHAR)), vec_id LIMIT k`). */
+  private def md5Prefix(rel: DataFrame, k: Int): DataFrame =
+    rel.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
 
   /** SQL twin of [[boundedCents]] (consumes normedCte's `n`, emits
     * `cents(c_id, cv, cn)`): row_number over the same md5 order, kept
@@ -158,11 +167,11 @@ object Similarity {
     * 1-based md5-order rank (the oracle's row_number). The collect is
     * KSUB rows — model-sized, the q54-codebook discipline; ordered
     * because TakeOrderedAndProject returns md5-rank order (the
-    * twoLevelAssignCol contract). */
-  private[queries] def pqCodebook(n: DataFrame): PqCodebook = {
-    val rows = n
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(PQ_KSUB).select(col("v")).collect()
+    * twoLevelAssignCol contract). `vecCol` names the quantized vector
+    * column (the residual index's codebook samples `rv`). */
+  private[queries] def pqCodebook(n: DataFrame,
+      vecCol: String = "v"): PqCodebook = {
+    val rows = md5Prefix(n, PQ_KSUB).select(col(vecCol)).collect()
     PqCodebook(PQ_M, PQ_KSUB, PQ_SUB, rows.map(_.getSeq[Double](0).toArray))
   }
 
@@ -225,26 +234,14 @@ object Similarity {
   /** q135's probe set: the q20 fixed-count md5-order sample as
     * (q_id, qv, qn) — constant broadcast/LUT size at any corpus. */
   private[queries] def pqProbes(n: DataFrame): DataFrame =
-    n.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(QUERY_N)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    md5Prefix(n, QUERY_N).select(col("vec_id").as("q_id"), col("v").as("qv"),
+      col("nrm").as("qn"))
 
-  /** q135's serve: collect the bounded probe set (QUERY_N rows — each
-    * probe's LUT is built driver-side with the same left-to-right
-    * product-sums the oracle's per-(j, c) list_sum computes), broadcast
-    * the (q_id, qn) pairs + LUTs, score every (candidate, probe) with
-    * the native ADC expression over the candidate's CODES, per-probe
-    * top-k. `coded` carries (vec_id, nrm, codes) — inline-encoded in
-    * the registered query (the gate is stateless), or read from q134's
-    * materialized output in a deployment (AnnScaleProbe's pq metric
-    * measures that shape: the scan touches code words + norms only,
-    * never the vectors). */
   /** Collect the bounded probe set (QUERY_N rows) and broadcast each
     * probe's m×ksub LUT, built driver-side with the same left-to-right
     * product-sums the oracle's per-(j, c) list_sum computes. */
   private[queries] def pqLutBroadcast(probes: DataFrame, cb: PqCodebook)
-      : org.apache.spark.broadcast.Broadcast[PqLuts] = {
+      : Broadcast[PqLuts] = {
     val spark = probes.sparkSession
     val pRows = probes.collect()
     // stride/geometry from the codebook itself — q138 serves PREFIX
@@ -254,35 +251,119 @@ object Similarity {
         PqExprs.buildLut(cb, r.getSeq[Double](1).toArray)).toMap))
   }
 
-  private[queries] def pqAdcServe(coded: DataFrame, probes: DataFrame,
-      cb: PqCodebook): DataFrame = {
-    val bcLut = pqLutBroadcast(probes, cb)
-    val qsLite = probes.select(col("q_id"), col("qn"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_mu").desc, col("neighbor").asc)
-    coded
-      .crossJoin(broadcast(qsLite))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("num",
-        PqExprs.pqAdcNum(bcLut, col("q_id"), col("codes")))
-      .withColumn("adc_mu",
-        floor(col("num") / (col("qn") * col("nrm")) * lit(1000000.0)
-          + lit(0.5)).cast("long"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("adc_mu"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("adc_mu"))
+  /** A served top-k: [[VectorSearch.topKPerProbe]] over `scored`
+    * (q_id, neighbor, `score`), emitted as (q_id, rank, neighbor,
+    * `score`) in (q_id, rank) order. */
+  private def servedTopK(scored: DataFrame, score: String,
+      k: Int = TOPK): DataFrame =
+    VectorSearch.topKPerProbe(scored, score, k)
+      .select(col("q_id"), col("rank"), col("neighbor"), col(score))
       .orderBy(col("q_id"), col("rank"))
+
+  /** The exact 4dp cosine of a (v, nrm) × (qv, qn) pair — q20's score. */
+  private def cosine4: Column =
+    round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4).as("cosine")
+
+  /** Candidate pairs (vec_id, v, nrm) × (q_id, qv, qn), self excluded,
+    * as (q_id, neighbor, cosine) — what an exact serve ranks. */
+  private def exactScored(cand: DataFrame): DataFrame =
+    cand.filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor"), cosine4)
+
+  /** The ADC score-and-rank kernel every PQ serve shares: over candidate
+    * pairs (q_id, vec_id, qn, nrm), self excluded, the approximate inner
+    * product `num` snaps to micro-units (adc_mu =
+    * [[VectorSearch.scoreMu]](num / (qn·nrm))) and the top-`topk` per
+    * probe are served. Summation order inside `num` is the oracle's
+    * left-to-right list_sum, so both engines rank bitwise-identically;
+    * only (q_id, neighbor, adc_mu) triples reach the ranking exchange. */
+  private def adcTopK(cand: DataFrame, num: Column, topk: Int): DataFrame =
+    servedTopK(cand
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("num", num)
+      .withColumn("adc_mu",
+        VectorSearch.scoreMu(col("num") / (col("qn") * col("nrm"))))
+      .select(col("q_id"), col("vec_id").as("neighbor"), col("adc_mu")),
+      "adc_mu", topk)
+
+  /** Full-scan ADC: every row of `rel` against every probe (the bounded
+    * (q_id, qn) pairs and their LUTs broadcast), top-[[TOPK]]. */
+  private def fullScanAdc(rel: DataFrame, probes: DataFrame, cb: PqCodebook)
+      (num: Broadcast[PqLuts] => Column): DataFrame = {
+    val bcLut = pqLutBroadcast(probes, cb)
+    adcTopK(rel.crossJoin(broadcast(probes.select(col("q_id"), col("qn")))),
+      num(bcLut), TOPK)
   }
+
+  /** Full-scan ADC over an unpacked code relation `coded` (vec_id, nrm,
+    * codes) — q142's inline-encoded serve and q138's width sweep. */
+  private[queries] def pqAdcServe(coded: DataFrame, probes: DataFrame,
+      cb: PqCodebook): DataFrame =
+    fullScanAdc(coded, probes, cb)(
+      PqExprs.pqAdcNum(_, col("q_id"), col("codes")))
+
+  /** The 1-based PQ code array of vector column `v` under `cb`. */
+  private def pqCodes(cb: Broadcast[PqCodebook], v: Column): Column =
+    transform(PqExprs.pqEncode(cb, v), s => s.getField("code"))
+
+  /** The inline-encoded code relation (vec_id, nrm, codes) of normed `n`
+    * under `cb` — what [[pqAdcServe]] scores. */
+  private def inlineCodes(n: DataFrame, cb: PqCodebook): DataFrame =
+    n.select(col("vec_id"), col("nrm"),
+      pqCodes(n.sparkSession.sparkContext.broadcast(cb), col("v")).as("codes"))
 
   /** The width-`ksub` PREFIX of the full md5-order codebook (width-w
     * sub-centroids ARE the first w rows — the q138 prefix property), as
     * a servable [[PqCodebook]]. ksub = [[PQ_KSUB]] returns the full
     * codebook unchanged. */
-  private[queries] def prefixCodebook(n: DataFrame, ksub: Int): PqCodebook = {
-    val full = pqCodebook(n)
+  private[queries] def prefixCodebook(n: DataFrame, ksub: Int): PqCodebook =
+    prefix(pqCodebook(n), ksub)
+
+  /** The width-`ksub` prefix of a full-width codebook; the full width is
+    * returned as is. */
+  private def prefix(full: PqCodebook, ksub: Int): PqCodebook =
     if (ksub == full.ksub) full
     else PqCodebook(PQ_M, ksub, PQ_SUB, full.cents.take(ksub))
+
+  /** The one stored-codebook layout: a single-file (c_id BIGINT,
+    * cv ARRAY<DOUBLE>) relation, c_id the 1-based code. The md5-prefix PQ
+    * codebook, the residual codebook and the trained sub-codebooks are
+    * all written here and read back through [[readCodebook]] (the
+    * trained-family oracles read the same file). */
+  private def writeCodebook(spark: SparkSession, cents: Array[Array[Double]],
+      path: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(
+      cents.zipWithIndex.map { case (cv, i) => Row((i + 1).toLong, cv.toSeq) }
+        .toSeq.asJava,
+      StructType(Seq(
+        StructField("c_id", LongType, nullable = false),
+        StructField("cv", ArrayType(DoubleType, containsNull = false),
+          nullable = false))))
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  /** A stored codebook (see [[writeCodebook]]) as a full-width
+    * [[PqCodebook]] in code order; the 16-row collect is memoized per
+    * session under `tag`. */
+  private def readCodebook(spark: SparkSession, tag: String)(
+      stored: => DataFrame): PqCodebook =
+    graft.exec.ArtifactStore.memoScalar(spark, tag) {
+      PqCodebook(PQ_M, PQ_KSUB, PQ_SUB, stored.orderBy(col("c_id")).collect()
+        .map(_.getSeq[Double](1).toArray))
+    }
+
+  /** The packed-index writer behind ivfpq_index, ivfpq_resid_index and
+    * ivfpq_trained_index: encodes `vecCol` of an assigned relation
+    * (vec_id, nrm, c_id, `vecCol`) against `cb`, packs the codes
+    * ([[packCodes]]) and writes the (vec_id, nrm, c_id, packed) rows. */
+  private def writePackedIndex(assigned: DataFrame, vecCol: String,
+      cb: PqCodebook, path: String): Unit = {
+    val bcCb = assigned.sparkSession.sparkContext.broadcast(cb)
+    assigned.select(col("vec_id"), col("nrm"), col("c_id"),
+        packCodes(pqCodes(bcCb, col(vecCol))).as("packed"))
+      .write.mode("overwrite").parquet(path)
   }
 
   /** DURABLE quantizer pair for the md5-prefix IVF-PQ family — the
@@ -303,18 +384,7 @@ object Similarity {
       graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
         + s"-m$PQ_M-k$PQ_KSUB-s$PQ_SUB-b$CENTROID_BUDGET-v1") { p =>
       val n = normed(spark, dir)
-      val full = pqCodebook(n)
-      import scala.jdk.CollectionConverters._
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        full.cents.zipWithIndex.map { case (cv, i) =>
-          org.apache.spark.sql.Row((i + 1).toLong, cv.toSeq)
-        }.toSeq.asJava,
-        StructType(Seq(
-          StructField("c_id", LongType, nullable = false),
-          StructField("cv", ArrayType(DoubleType, containsNull = false),
-            nullable = false))))
-        .coalesce(1).write.mode("overwrite").parquet(s"$p/cb")
+      writeCodebook(spark, pqCodebook(n).cents, s"$p/cb")
       boundedCents(n).coalesce(1).write.mode("overwrite")
         .parquet(s"$p/cents")
     }
@@ -325,14 +395,8 @@ object Similarity {
   private[queries] def storedPqCodebook(spark: SparkSession, dir: String,
       ksub: Int = PQ_KSUB): PqCodebook = {
     val root = pqQuantizerRoot(spark, dir)
-    val full = graft.exec.ArtifactStore.memoScalar(spark, s"pqcb|$root") {
-      PqCodebook(PQ_M, PQ_KSUB, PQ_SUB,
-        graft.exec.ArtifactStore.readPublished(spark, s"$root/cb")
-          .orderBy(col("c_id")).collect()
-          .map(_.getSeq[Double](1).toArray))
-    }
-    if (ksub == full.ksub) full
-    else PqCodebook(PQ_M, ksub, PQ_SUB, full.cents.take(ksub))
+    prefix(readCodebook(spark, s"pqcb|$root")(
+      graft.exec.ArtifactStore.readPublished(spark, s"$root/cb")), ksub)
   }
 
   /** The stored bounded coarse centroids (see [[pqQuantizerRoot]]) —
@@ -347,16 +411,14 @@ object Similarity {
     * 16^M − 1 < 2^32 at M = 8. The inverse is [[unpackCodes]]; the
     * native [[org.apache.spark.sql.graft.PqAdcNumPacked]] scores the
     * packed word directly (no unpack in the hot path). */
-  private[queries] def packCodes(codes: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
+  private[queries] def packCodes(codes: Column): Column =
     (0 until PQ_M).map { j =>
       (element_at(codes, j + 1) - lit(1L)) * lit(1L << (4 * j))
     }.reduce(_ + _).cast("long")
 
   /** [[packCodes]]'s inverse: the packed BIGINT back to the 1-based
     * array<bigint> code form [[pqAdcServe]] / the oracles consume. */
-  private[queries] def unpackCodes(packed: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
+  private[queries] def unpackCodes(packed: Column): Column =
     array((0 until PQ_M).map { j =>
       shiftright(packed, 4 * j).bitwiseAND(lit(15L)) + lit(1L)
     }: _*)
@@ -365,11 +427,12 @@ object Similarity {
     * serves from: one row per vector, (vec_id, nrm, c_id coarse cell,
     * packed BIGINT code word). 24 data bytes a row versus the 512-byte
     * float64 embedding — the q134-header 128×-class memory-traffic cut
-    * as a MATERIALIZED number (AnnScaleProbe's pq metric records the
-    * artifact-vs-embeddings bytes), not prose: through round 15 codes
-    * only ever existed as long-typed (vec_id, subspace, code) rows, so
-    * serving scans still read unpacked relations. Built at most once
-    * per corpus source identity ([[graft.exec.ArtifactStore.ensure]];
+    * as a MATERIALIZED number, not prose (the retired AnnScaleProbe's
+    * pq metric recorded the artifact-vs-embeddings bytes — see README,
+    * "Retired probes"): through round 15 codes only ever existed as
+    * long-typed (vec_id, subspace, code) rows, so serving scans still
+    * read unpacked relations. Built at most once per corpus source
+    * identity ([[graft.exec.ArtifactStore.ensure]];
     * geometry in the key), consumed by q135 (full-scan ADC ignores
     * c_id), q136 (cell-restricted ADC), and q151 (elected-depth
     * serve). `ksub` parameterizes the codebook WIDTH (round 17): the
@@ -387,12 +450,8 @@ object Similarity {
         + s"-m$PQ_M-k$ksub-s$PQ_SUB-v1") { p =>
       val n = normed(spark, dir)
       val cents = boundedCents(n)
-      val bcCb = spark.sparkContext.broadcast(prefixCodebook(n, ksub))
-      assignCells(n, cents)
-        .select(col("vec_id"), col("nrm"), col("c_id"),
-          packCodes(transform(PqExprs.pqEncode(bcCb, col("v")),
-            s => s.getField("code"))).as("packed"))
-        .write.mode("overwrite").parquet(p)
+      val cb = prefixCodebook(n, ksub)
+      writePackedIndex(VectorSearch.assignCells(n, cents), "v", cb, p)
     }
     graft.exec.ArtifactStore.readPublished(spark, path)
   }
@@ -404,24 +463,18 @@ object Similarity {
     * Summation order matches [[pqAdcServe]] exactly, so both forms rank
     * bitwise-identically (PqSpec pins it). */
   private[queries] def pqAdcServePacked(idx: DataFrame, probes: DataFrame,
-      cb: PqCodebook): DataFrame = {
-    val bcLut = pqLutBroadcast(probes, cb)
-    val qsLite = probes.select(col("q_id"), col("qn"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_mu").desc, col("neighbor").asc)
-    idx
-      .crossJoin(broadcast(qsLite))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("num",
-        PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")))
-      .withColumn("adc_mu",
-        floor(col("num") / (col("qn") * col("nrm")) * lit(1000000.0)
-          + lit(0.5)).cast("long"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("adc_mu"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("adc_mu"))
-      .orderBy(col("q_id"), col("rank"))
+      cb: PqCodebook): DataFrame =
+    fullScanAdc(idx, probes, cb)(
+      PqExprs.pqAdcNumPacked(_, col("q_id"), col("packed")))
+
+  /** q135's serve (q137's served side; q155's at its elected width):
+    * full-scan packed ADC over the width-`ksub` ivfpq_index entry and
+    * the stored codebook's prefix. */
+  private def pqAdcFullScan(spark: SparkSession, dir: String,
+      ksub: Int = PQ_KSUB): DataFrame = {
+    val n = normed(spark, dir)
+    pqAdcServePacked(ivfPqIndex(spark, dir, ksub), pqProbes(n),
+      storedPqCodebook(spark, dir, ksub))
   }
 
   /** Cell-restricted packed-ADC serve shared by q136 (nprobe = 1),
@@ -444,6 +497,14 @@ object Similarity {
       pqProbes(n), nprobe, topk)
   }
 
+  /** The `nprobe` nearest cells of `cents` per probe of `probes`
+    * (q_id, qv, qn) — [[VectorSearch.probeCells]] — as (q_id, qv, qn,
+    * qcell) rows. */
+  private def probedCells(probes: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    VectorSearch.probeCells(probes.select(col("q_id").as("vec_id"),
+      col("qv").as("v"), col("qn").as("nrm")), cents, nprobe)
+
   /** The cell-restricted packed-ADC serve body, parameterized by WHICH
     * packed index / coarse codebook / PQ codebook serve (md5-prefix
     * quantizers for q136/q151/q153/q157, the TRAINED pair for q158):
@@ -454,25 +515,10 @@ object Similarity {
       cb: PqCodebook, probes: DataFrame, nprobe: Int, topk: Int)
       : DataFrame = {
     val bcLut = pqLutBroadcast(probes, cb)
-    val qs = graft.similarity.VectorSearch.probeCells(
-        probes.select(col("q_id").as("vec_id"), col("qv").as("v"),
-          col("qn").as("nrm")), cents, nprobe)
+    val qs = probedCells(probes, cents, nprobe)
       .select(col("q_id"), col("qn"), col("qcell"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_mu").desc, col("neighbor").asc)
-    idx
-      .join(broadcast(qs), col("c_id") === col("qcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("num",
-        PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")))
-      .withColumn("adc_mu",
-        floor(col("num") / (col("qn") * col("nrm")) * lit(1000000.0)
-          + lit(0.5)).cast("long"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("adc_mu"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= topk)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("adc_mu"))
-      .orderBy(col("q_id"), col("rank"))
+    adcTopK(idx.join(broadcast(qs), col("c_id") === col("qcell")),
+      PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")), topk)
   }
 
   /** q153's two-stage serve: the elected-depth packed-ADC shortlist
@@ -490,33 +536,24 @@ object Similarity {
   private[queries] def ivfPqRerank(spark: SparkSession, dir: String,
       r: Int, ksub: Int = PQ_KSUB): DataFrame =
     exactRerank(spark, dir,
-      ivfPqServe(spark, dir, electedNprobe(spark, dir),
-          topk = r, ksub = ksub)
-        .select(col("q_id"), col("neighbor")))
+      ivfPqServe(spark, dir, electedNprobe(spark, dir), topk = r, ksub = ksub))
 
   /** The exact re-rank stage shared by q153/q157 (raw shortlists) and
-    * q164 (the trained shortlist): fetch full vectors for the shortlist
-    * ids (one broadcast join of the constant probes×R shortlist against
-    * the corpus — the scan never expands), score the exact 4dp cosine,
-    * top-[[TOPK]] per probe with q20's tie-breaks over a probes×R-
-    * bounded window. */
+    * q164 (the trained shortlist): fetch full vectors for the
+    * `shortlist` serve's (q_id, neighbor) pairs (one broadcast join of
+    * the constant probes×R shortlist against the corpus — the scan
+    * never expands), score the exact 4dp cosine, top-[[TOPK]] per probe
+    * with q20's tie-breaks over a probes×R-bounded window. */
   private[queries] def exactRerank(spark: SparkSession, dir: String,
       shortlist: DataFrame): DataFrame = {
     val n = normed(spark, dir)
     val probes = pqProbes(n)
-    val fetched = n.join(broadcast(shortlist),
+    val fetched = n
+      .join(broadcast(shortlist.select(col("q_id"), col("neighbor"))),
         col("vec_id") === col("neighbor"))
       .select(col("q_id"), col("neighbor"), col("v"), col("nrm"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    fetched.join(broadcast(probes), Seq("q_id"))
-      .select(col("q_id"), col("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("cosine"))
-      .orderBy(col("q_id"), col("rank"))
+    servedTopK(fetched.join(broadcast(probes), Seq("q_id"))
+      .select(col("q_id"), col("neighbor"), cosine4), "cosine")
   }
 
   /** The residual relation under the bounded coarse codebook: each
@@ -527,7 +564,7 @@ object Similarity {
     * explain; q160/q161 measure what that buys in recall at IDENTICAL
     * index bytes vs the raw-vector codes (q136/q151). */
   private[queries] def residuals(n: DataFrame, cents: DataFrame): DataFrame =
-    assignCells(n, cents)
+    VectorSearch.assignCells(n, cents)
       .join(broadcast(cents), Seq("c_id"))
       .select(col("vec_id"), col("nrm"), col("c_id"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("rv"))
@@ -549,27 +586,9 @@ object Similarity {
       val n = normed(spark, dir)
       val cents = boundedCents(n)
       val resid = residuals(n, cents).persist(MEMORY_AND_DISK)
-      val cbRows = resid
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(PQ_KSUB).select(col("rv")).collect()
-        .map(_.getSeq[Double](0).toArray)
-      import scala.jdk.CollectionConverters._
-      import org.apache.spark.sql.types._
-      val cbDf = spark.createDataFrame(
-        cbRows.zipWithIndex.map { case (cv, i) =>
-          org.apache.spark.sql.Row((i + 1).toLong, cv.toSeq)
-        }.toSeq.asJava,
-        StructType(Seq(
-          StructField("c_id", LongType, nullable = false),
-          StructField("cv", ArrayType(DoubleType, containsNull = false),
-            nullable = false))))
-      cbDf.coalesce(1).write.mode("overwrite").parquet(s"$p/cb")
-      val bcCb = spark.sparkContext.broadcast(
-        PqCodebook(PQ_M, PQ_KSUB, PQ_SUB, cbRows))
-      resid.select(col("vec_id"), col("nrm"), col("c_id"),
-          packCodes(transform(PqExprs.pqEncode(bcCb, col("rv")),
-            s => s.getField("code"))).as("packed"))
-        .write.mode("overwrite").parquet(s"$p/idx")
+      val cb = pqCodebook(resid, "rv")
+      writeCodebook(spark, cb.cents, s"$p/cb")
+      writePackedIndex(resid, "rv", cb, s"$p/idx")
       resid.unpersist(blocking = false)
       ()
     }
@@ -577,12 +596,8 @@ object Similarity {
   private[queries] def loadResidCb(spark: SparkSession, root: String): PqCodebook =
     // root is a content-keyed ensure path — immutable; memoize the
     // 16-row collect per (session, root)
-    graft.exec.ArtifactStore.memoScalar(spark, s"residcb|$root") {
-      PqCodebook(PQ_M, PQ_KSUB, PQ_SUB,
-        graft.exec.ArtifactStore.readPublished(spark, s"$root/cb")
-          .orderBy(col("c_id")).collect()
-          .map(_.getSeq[Double](1).toArray))
-    }
+    readCodebook(spark, s"residcb|$root")(
+      graft.exec.ArtifactStore.readPublished(spark, s"$root/cb"))
 
   /** q160's serve: cell-restricted packed ADC over the RESIDUAL index
     * at the elected nprobe. The inner-product decomposition keeps the
@@ -598,32 +613,16 @@ object Similarity {
     val root = ivfPqResidArtifact(spark, dir)
     val idx = graft.exec.ArtifactStore.readPublished(spark, s"$root/idx")
     val cb = loadResidCb(spark, root)
-    val n = normed(spark, dir)
     val cents = storedCents(spark, dir)
-    val probes = pqProbes(n)
+    val probes = pqProbes(normed(spark, dir))
     val bcLut = pqLutBroadcast(probes, cb)
-    import graft.functions.VectorFns.dot
-    val qs = graft.similarity.VectorSearch.probeCells(
-        probes.select(col("q_id").as("vec_id"), col("qv").as("v"),
-          col("qn").as("nrm")), cents, nprobe)
+    val qs = probedCells(probes, cents, nprobe)
       .join(broadcast(cents), col("qcell") === col("c_id"))
       .select(col("q_id"), col("qn"), col("qcell"),
         dot(col("qv"), col("cv")).as("qdotc"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_mu").desc, col("neighbor").asc)
-    idx
-      .join(broadcast(qs), col("c_id") === col("qcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("num", col("qdotc")
-        + PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")))
-      .withColumn("adc_mu",
-        floor(col("num") / (col("qn") * col("nrm")) * lit(1000000.0)
-          + lit(0.5)).cast("long"))
-      .select(col("q_id"), col("vec_id").as("neighbor"), col("adc_mu"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= topk)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("adc_mu"))
-      .orderBy(col("q_id"), col("rank"))
+    adcTopK(idx.join(broadcast(qs), col("c_id") === col("qcell")),
+      col("qdotc") + PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")),
+      topk)
   }
 
   /** q140/q141's quantized relation: q64's symmetric per-vector int8
@@ -664,6 +663,25 @@ object Similarity {
       .select(col("vec_id"), col("nrm"), col("amax"),
         expr("transform(sv8, x -> CAST(x AS DOUBLE))").as("sv"))
   }
+
+  /** q140/q141's probes: the md5-prefix sample of the sq8 relation `s`
+    * as (q_id, qsv, qn, qa). */
+  private def sq8Probes(s: DataFrame): DataFrame =
+    md5Prefix(s, QUERY_N).select(col("vec_id").as("q_id"), col("sv").as("qsv"),
+      col("nrm").as("qn"), col("amax").as("qa"))
+
+  /** q140's serve (q141's served side) over the sq8 relation `s`: the
+    * exact integer dot rescaled by both quantization steps over the true
+    * norms, idot·qa·xa / (127²·qn·xn), snapped to micro-units (sq_mu)
+    * and served top-[[TOPK]] per probe. */
+  private def sq8Serve(s: DataFrame, probes: DataFrame): DataFrame =
+    servedTopK(s.crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("idot", dot(col("sv"), col("qsv")))
+      .withColumn("sq_mu", VectorSearch.scoreMu(col("idot") * col("qa")
+        * col("amax") / (lit(16129.0) * (col("qn") * col("nrm")))))
+      .select(col("q_id"), col("vec_id").as("neighbor"), col("sq_mu")),
+      "sq_mu")
 
   /** SQL twin of [[sq8]] + the md5-prefix probe slice over the
     * SURVIVING relation (both engines filter before sampling). */
@@ -1572,18 +1590,8 @@ object Similarity {
           .orderBy(col("c_id")).collect()
           .map(_.getSeq[Double](1).toArray)
       }
-      import scala.jdk.CollectionConverters._
-      import org.apache.spark.sql.types._
-      val rows = (0 until PQ_KSUB).map { c =>
-        org.apache.spark.sql.Row((c + 1).toLong,
-          (0 until PQ_M).flatMap(j => subCenters(j)(c).toSeq))
-      }.asJava
-      val schema = StructType(Seq(
-        StructField("c_id", LongType, nullable = false),
-        StructField("cv", ArrayType(DoubleType, containsNull = false),
-          nullable = false)))
-      spark.createDataFrame(rows, schema)
-        .coalesce(1).write.mode("overwrite").parquet(buildPath)
+      writeCodebook(spark, Array.tabulate(PQ_KSUB)(c =>
+        (0 until PQ_M).flatMap(j => subCenters(j)(c).toSeq).toArray), buildPath)
     }
   }
 
@@ -1635,13 +1643,18 @@ object Similarity {
     // memoized by CONTENT identity (the fixed path rebuilds in place on
     // a retrain — the key the r17 q158 lesson mandates), so steady-state
     // serves skip the per-call 16-row collect job
-    graft.exec.ArtifactStore.memoScalar(spark, "trainedPq|"
-        + graft.exec.ArtifactStore.contentKey(spark, TrainedPqPath)) {
-      PqCodebook(PQ_M, PQ_KSUB, PQ_SUB,
-        graft.exec.ArtifactStore.readFixed(spark, TrainedPqPath)
-          .orderBy(col("c_id")).collect()
-          .map(_.getSeq[Double](1).toArray))
-    }
+    readCodebook(spark, "trainedPq|"
+        + graft.exec.ArtifactStore.contentKey(spark, TrainedPqPath))(
+      graft.exec.ArtifactStore.readFixed(spark, TrainedPqPath))
+
+  /** q142's serve (q143's served side): full-scan ADC of the corpus
+    * encoded inline against the persisted trained sub-codebooks. */
+  private def trainedPqServe(spark: SparkSession, dir: String): DataFrame = {
+    ensurePqCodebook(spark, dir)
+    val cb = loadTrainedPq(spark)
+    val n = normed(spark, dir)
+    pqAdcServe(inlineCodes(n, cb), pqProbes(n), cb)
+  }
 
   /** q54's trained coarse codebook read back from the persisted
     * artifact (the exact doubles the oracle reads), with norms. */
@@ -1678,12 +1691,9 @@ object Similarity {
         + s"-f$COARSE_SAMPLE-sd$COARSE_SEED"
         + s"-q${trainedQuantizerIdentity(spark)}-v2") { p =>
       val n = normed(spark, dir)
-      val bcCb = spark.sparkContext.broadcast(loadTrainedPq(spark))
-      assignCells(n, trainedCents(spark))
-        .select(col("vec_id"), col("nrm"), col("c_id"),
-          packCodes(transform(PqExprs.pqEncode(bcCb, col("v")),
-            s => s.getField("code"))).as("packed"))
-        .write.mode("overwrite").parquet(p)
+      val cb = loadTrainedPq(spark)
+      writePackedIndex(VectorSearch.assignCells(n, trainedCents(spark)), "v",
+        cb, p)
     }
     graft.exec.ArtifactStore.readPublished(spark, path)
   }
@@ -1716,48 +1726,28 @@ object Similarity {
       dir: String): DataFrame =
     exactRerank(spark, dir,
       trainedPackedServe(spark, dir, electedTrainedNprobe(spark, dir),
-          topk = electedTrainedRerankR(spark, dir))
-        .select(col("q_id"), col("neighbor")))
-
-  /** Nearest-cell argmax assignment and per-query nprobe cells — the
-    * partial-aggregate shapes shared with the library API (one
-    * implementation, every call site benefits): see
-    * [[graft.similarity.VectorSearch.assignCells]] /
-    * [[graft.similarity.VectorSearch.probeCells]] for the
-    * exchange-bounding argument. */
-  private def assignCells(n: DataFrame, cents: DataFrame): DataFrame =
-    graft.similarity.VectorSearch.assignCells(n, cents)
-
-  private def probeCells(queries: DataFrame, cents: DataFrame,
-      nprobe: Int): DataFrame =
-    graft.similarity.VectorSearch.probeCells(queries, cents, nprobe)
+        topk = electedTrainedRerankR(spark, dir)))
 
   /** Shared IVF search plan over a normed corpus `n` (vec_id, v, nrm) and
     * broadcast centroids `cents` (c_id, cv, cn): nearest-cell assignment
-    * via [[assignCells]], queries = corpus rows with vec_id % QUERY_MOD
-    * = 0 probing their `nprobe` nearest cells via [[probeCells]], exact
-    * top-k within probed cells (4dp-rounded cosine, neighbor tie-break).
+    * via [[VectorSearch.assignCells]], queries = corpus rows with vec_id
+    * % QUERY_MOD = 0 probing their `nprobe` nearest cells via
+    * [[VectorSearch.probeCells]] (see both for the exchange-bounding
+    * argument), exact top-k within probed cells (4dp-rounded cosine,
+    * neighbor tie-break).
     * Cells partition the corpus, so multi-cell probes union disjoint
     * candidate sets — no dedup needed. The corpus never shuffles its n×k
     * scoring expansion (see assignCells) and never shuffles for the
     * probe either; only (q_id, neighbor, cosine) triples move for the
     * final ranking. */
   private[queries] def ivfSearch(n: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
-    val assigned = assignCells(n, cents)
-    val qs = probeCells(n.filter(col("vec_id") % QUERY_MOD === 0), cents, nprobe)
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
+    val assigned = VectorSearch.assignCells(n, cents)
+    val qs = VectorSearch.probeCells(
+      n.filter(col("vec_id") % QUERY_MOD === 0), cents, nprobe)
     // probe: queries are broadcast per cell; the corpus side stays
     // partitioned — the join key is the cell id
-    Q.localized(assigned
-      .join(broadcast(qs), col("c_id") === col("qcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4).as("cosine"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("cosine"))
-      .orderBy(col("q_id"), col("rank")))
+    Q.localized(servedTopK(exactScored(
+      assigned.join(broadcast(qs), col("c_id") === col("qcell"))), "cosine"))
   }
 
   val defs: Seq[Q] = Seq(
@@ -1795,20 +1785,7 @@ object Similarity {
         ORDER BY q_id, rank"""),
       run = (spark, dir) => {
         val n = normed(spark, dir)
-        val qs = n
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(QUERY_N)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("neighbor").asc)
-        n.crossJoin(broadcast(qs))
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id").as("neighbor"),
-            round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4).as("cosine"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TOPK)
-          .select(col("q_id"), col("rank"), col("neighbor"), col("cosine"))
-          .orderBy(col("q_id"), col("rank"))
+        servedTopK(exactScored(n.crossJoin(broadcast(pqProbes(n)))), "cosine")
       }),
 
     // ------------------------------------------------------------------
@@ -1846,21 +1823,14 @@ object Similarity {
         ORDER BY q_id, rank"""),
       run = (spark, dir) => {
         val n = normed(spark, dir)
-        val qs = n
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(QUERY_N)
+        val qs = md5Prefix(n, QUERY_N)
           .select(col("vec_id").as("q_id"), col("label").as("q_label"),
             col("v").as("qv"), col("nrm").as("qn"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cosine").desc, col("neighbor").asc)
-        n.crossJoin(broadcast(qs))
-          .filter(col("label") =!= col("q_label"))
-          .select(col("q_id"), col("vec_id").as("neighbor"),
-            col("label").as("neg_label"),
-            round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-              .as("cosine"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= HARDNEG_K)
+        VectorSearch.topKPerProbe(n.crossJoin(broadcast(qs))
+            .filter(col("label") =!= col("q_label"))
+            .select(col("q_id"), col("vec_id").as("neighbor"),
+              col("label").as("neg_label"), cosine4),
+          "cosine", HARDNEG_K)
           .select(col("q_id"), col("rank"), col("neighbor"),
             col("neg_label"), col("cosine"))
           .orderBy(col("q_id"), col("rank"))
@@ -2339,16 +2309,13 @@ object Similarity {
         FROM scored
         QUALIFY rank <= $TOPK
         ORDER BY q_id, rank"""),
-      run = (spark, dir) => {
+      run = (spark, dir) =>
         // serves from the DURABLE bit-packed index (ivfPqIndex): the
         // scan reads (vec_id, nrm, packed) — 24 bytes a row — and the
         // native packed-ADC expression scores the code word in place;
         // the inline-encode form this replaces re-derived codes from
         // the 512-byte vectors on every invocation
-        val n = normed(spark, dir)
-        pqAdcServePacked(ivfPqIndex(spark, dir), pqProbes(n),
-          storedPqCodebook(spark, dir))
-      }),
+        pqAdcFullScan(spark, dir)),
 
     // ------------------------------------------------------------------
     // q136: IVF-PQ — the canonical composition (the FAISS IVFPQ shape):
@@ -2678,16 +2645,12 @@ object Similarity {
                round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
         FROM qsr q LEFT JOIN hits h ON q.q_id = h.q_id
         ORDER BY q.q_id"""),
-      run = (spark, dir) => {
-        // the ADC side serves from the packed ivfpq_index artifact (the
-        // thing under evaluation IS the materialized index); exact
-        // ground truth from the durable ann_gt_pq artifact
-        val n = normed(spark, dir)
-        val cb = storedPqCodebook(spark, dir)
-        val probes = pqProbes(n)
-        val adc = pqAdcServePacked(ivfPqIndex(spark, dir), probes, cb)
-        recallRows(adc, pqGroundTruth(spark, dir), probes)
-      }),
+      run = (spark, dir) =>
+        // the ADC side is q135's serve over the packed ivfpq_index
+        // artifact (the thing under evaluation IS the materialized
+        // index); exact ground truth from the durable ann_gt_pq artifact
+        recallRows(pqAdcFullScan(spark, dir), pqGroundTruth(spark, dir),
+          pqProbes(normed(spark, dir)))),
 
     // ------------------------------------------------------------------
     // q138: PQ WIDTH CURVE + ELECTION — q131's measure→decide
@@ -2769,10 +2732,7 @@ object Similarity {
         // full ADC scan over it ignores c_id, exactly q135's shape at
         // the narrower codebook. Bitwise ≡ the retired inline row-form
         // serve (PqSpec's packed-vs-row pin), so the oracle stands.
-        val w = electedWidth(spark, dir)
-        val n = normed(spark, dir)
-        pqAdcServePacked(ivfPqIndex(spark, dir, w), pqProbes(n),
-          storedPqCodebook(spark, dir, w))
+        pqAdcFullScan(spark, dir, electedWidth(spark, dir))
       }),
 
     // ------------------------------------------------------------------
@@ -2822,25 +2782,7 @@ object Similarity {
         // the r16 residue was a per-invocation re-derivation from the
         // float vectors here
         val s = sq8Index(spark, dir)
-        val probes = s
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(QUERY_N)
-          .select(col("vec_id").as("q_id"), col("sv").as("qsv"),
-            col("nrm").as("qn"), col("amax").as("qa"))
-        val wRank = Window.partitionBy(col("q_id"))
-          .orderBy(col("sq_mu").desc, col("neighbor").asc)
-        s.crossJoin(broadcast(probes))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("idot", dot(col("sv"), col("qsv")))
-          .withColumn("sq_mu",
-            floor(col("idot") * col("qa") * col("amax")
-              / (lit(16129.0) * (col("qn") * col("nrm")))
-              * lit(1000000.0) + lit(0.5)).cast("long"))
-          .select(col("q_id"), col("vec_id").as("neighbor"), col("sq_mu"))
-          .withColumn("rank", row_number().over(wRank).cast("long"))
-          .filter(col("rank") <= TOPK)
-          .select(col("q_id"), col("rank"), col("neighbor"), col("sq_mu"))
-          .orderBy(col("q_id"), col("rank"))
+        sq8Serve(s, sq8Probes(s))
       }),
 
     // ------------------------------------------------------------------
@@ -2886,29 +2828,12 @@ object Similarity {
         FROM qsq q LEFT JOIN hits h ON q.q_id = h.q_id
         ORDER BY q.q_id"""),
       run = (spark, dir) => {
-        // quantized side reads the durable sq8_index (the q140 shape);
-        // the persist the inline derivation needed goes away — the
-        // index scan is already the cheap pass
-        val s = sq8Index(spark, dir)
-        val probes = s
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(QUERY_N)
-          .select(col("vec_id").as("q_id"),
-            col("sv").as("qsv"), col("nrm").as("qn"), col("amax").as("qa"))
-        val wSq = Window.partitionBy(col("q_id"))
-          .orderBy(col("sq_mu").desc, col("neighbor").asc)
-        val sqTop = s.crossJoin(broadcast(probes))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("idot", dot(col("sv"), col("qsv")))
-          .select(col("q_id"), col("vec_id").as("neighbor"),
-            floor(col("idot") * col("qa") * col("amax")
-              / (lit(16129.0) * (col("qn") * col("nrm")))
-              * lit(1000000.0) + lit(0.5)).cast("long").as("sq_mu"))
-          .withColumn("rank", row_number().over(wSq).cast("long"))
-          .filter(col("rank") <= TOPK)
-        // exact ground truth: the durable ann_gt_sq8 artifact (probes +
+        // the quantized side is q140's serve over the durable sq8_index;
+        // exact ground truth is the durable ann_gt_sq8 artifact (probes +
         // corpus drawn from the same zero-vector-excluded SQ8 relation)
-        recallRows(sqTop, sq8GroundTruth(spark, dir), probes)
+        val s = sq8Index(spark, dir)
+        val probes = sq8Probes(s)
+        recallRows(sq8Serve(s, probes), sq8GroundTruth(spark, dir), probes)
       }),
 
     // ------------------------------------------------------------------
@@ -2966,16 +2891,7 @@ object Similarity {
         FROM scored
         QUALIFY rank <= $TOPK
         ORDER BY q_id, rank"""),
-      run = (spark, dir) => {
-        ensurePqCodebook(spark, dir)
-        val cb = loadTrainedPq(spark)
-        val bcCb = spark.sparkContext.broadcast(cb)
-        val n = normed(spark, dir)
-        val coded = n.select(col("vec_id"), col("nrm"),
-          transform(PqExprs.pqEncode(bcCb, col("v")),
-            s => s.getField("code")).as("codes"))
-        pqAdcServe(coded, pqProbes(n), cb)
-      }),
+      run = (spark, dir) => trainedPqServe(spark, dir)),
 
     // ------------------------------------------------------------------
     // q143: TRAINED-PQ RECALL — the number that justifies the fit:
@@ -3037,21 +2953,13 @@ object Similarity {
                round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
         FROM qsr q LEFT JOIN hits h ON q.q_id = h.q_id
         ORDER BY q.q_id"""),
-      run = (spark, dir) => {
-        ensurePqCodebook(spark, dir)
-        val cb = loadTrainedPq(spark)
-        val bcCb = spark.sparkContext.broadcast(cb)
-        val n = normed(spark, dir)
-        val coded = n.select(col("vec_id"), col("nrm"),
-          transform(PqExprs.pqEncode(bcCb, col("v")),
-            s => s.getField("code")).as("codes"))
-        val probes = pqProbes(n)
-        // exact ground truth: the durable ann_gt_pq artifact (the same
-        // probes evaluate the random-codebook q137, so the training
-        // payoff is a like-for-like delta off ONE stored ground truth)
-        recallRows(pqAdcServe(coded, probes, cb), pqGroundTruth(spark, dir),
-          probes)
-      }),
+      run = (spark, dir) =>
+        // q142's serve; exact ground truth: the durable ann_gt_pq artifact
+        // (the same probes evaluate the random-codebook q137, so the
+        // training payoff is a like-for-like delta off ONE stored ground
+        // truth)
+        recallRows(trainedPqServe(spark, dir), pqGroundTruth(spark, dir),
+          pqProbes(normed(spark, dir)))),
 
     // ------------------------------------------------------------------
     // q158: TRAINED IVF-PQ — the index a deployment actually BUILDS
@@ -3631,9 +3539,10 @@ object Similarity {
     // c_id and is quadratic only WITHIN a cell. Cell size averages N/k
     // ≈ √N below the cap — the within-cell cost is the declared
     // SemDeDup trade (the paper's construction is per-cell quadratic
-    // too); AnnScaleProbe measures the realized cell-size distribution
-    // and implied pair counts on scale replicas (PERF.md) rather than
-    // asserting boundedness the construction doesn't provide.
+    // too); the retired AnnScaleProbe measured the realized cell-size
+    // distribution and implied pair counts on scale replicas (PERF.md;
+    // README, "Retired probes") rather than asserting boundedness the
+    // construction doesn't provide.
     // No driver-side anything; summary rows = k.
     Q("q100_semantic_dedup",
       oracle = Some(s"""
@@ -3811,10 +3720,8 @@ object Similarity {
       run = (spark, dir) => {
         import spark.implicits._
         val n = normed(spark, dir)
-        val q = n
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(1)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"),
-            col("nrm").as("qn"))
+        val q = md5Prefix(n, 1).select(col("vec_id").as("q_id"),
+          col("v").as("qv"), col("nrm").as("qn"))
         // distributed half: relevance scan + fixed-size pool
         val pool = n.crossJoin(broadcast(q))
           .filter(col("vec_id") =!= col("q_id"))
@@ -3896,7 +3803,6 @@ object Similarity {
     * CodebookSpec can force the s = k ≡ flat identity. */
   private[queries] def twoLevelAssignCol(n: DataFrame,
       sOverride: Option[Int] = None): org.apache.spark.sql.Column = {
-    import graft.similarity.VectorSearch
     val k = VectorSearch.derivedK(n.count())
     val s = sOverride.getOrElse(math.ceil(math.sqrt(k.toDouble)).toInt)
     val centRows = centsPrefix(n, k).collect()
@@ -3918,18 +3824,8 @@ object Similarity {
     val qs = assigned.filter(col("vec_id") % QUERY_MOD === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("c_id").as("qcell"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    Q.localized(assigned
-      .join(broadcast(qs), col("c_id") === col("qcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= TOPK)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("cosine"))
-      .orderBy(col("q_id"), col("rank")))
+    Q.localized(servedTopK(exactScored(
+      assigned.join(broadcast(qs), col("c_id") === col("qcell"))), "cosine"))
   }
 
   /** The shared exact-ground-truth plan every ANN recall evaluation
@@ -3937,29 +3833,17 @@ object Similarity {
     * (4dp-rounded, neighbor tie-break — the q20 rules verbatim) as
     * (q_id, neighbor) pairs. One linear corpus scan against the
     * broadcast probe set; output is probes × k rows. */
-  private def exactTopKPlan(corpus: DataFrame, probes: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    corpus.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TOPK)
+  private def exactTopKPlan(corpus: DataFrame, probes: DataFrame): DataFrame =
+    VectorSearch.topKPerProbe(
+      exactScored(corpus.crossJoin(broadcast(probes))), "cosine", TOPK)
       .select(col("q_id"), col("neighbor"))
-  }
 
   /** q130/q131's evaluated probe set: the fixed-count md5-order sample
     * drawn FROM the modulus probe universe q36 serves — a subset of the
     * index's own queries, so recall evaluates the index under test while
     * ground truth stays n × QUERY_N at any corpus size. */
   private def ivfEvalProbes(n: DataFrame): DataFrame =
-    n.filter(col("vec_id") % QUERY_MOD === 0)
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(QUERY_N)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    pqProbes(n.filter(col("vec_id") % QUERY_MOD === 0))
 
   /** DURABLE exact ANN ground truth — the derivation every recall row
     * (q130/q131/q132 via the curve, q137/q138, q141, q143) shares and,
@@ -4006,11 +3890,7 @@ object Similarity {
     groundTruthArtifact(spark, dir, "ann_gt_pq", identity, pqProbes)
 
   private[queries] def sq8GroundTruth(spark: SparkSession, dir: String): DataFrame =
-    groundTruthArtifact(spark, dir, "ann_gt_sq8", sq8,
-      s => s.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(QUERY_N)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"),
-          col("nrm").as("qn")))
+    groundTruthArtifact(spark, dir, "ann_gt_sq8", sq8, pqProbes)
 
   // ---------------------------------------------------------------------
   // Recall measurement and dial election — the one path behind the six
@@ -4183,14 +4063,9 @@ object Similarity {
       val n = normed(spark, dir).persist(MEMORY_AND_DISK)
       val cbFull = pqCodebook(n)
       val probes = pqProbes(n)
-      // width-w sub-centroids are the first w rows of the full codebook
       val served = PQ_WIDTHS.map { wk =>
-        val cbW = PqCodebook(PQ_M, wk, PQ_SUB, cbFull.cents.take(wk))
-        val bcW = spark.sparkContext.broadcast(cbW)
-        val coded = n.select(col("vec_id"), col("nrm"),
-          transform(PqExprs.pqEncode(bcW, col("v")),
-            s => s.getField("code")).as("codes"))
-        pqAdcServe(coded, probes, cbW)
+        val cbW = prefix(cbFull, wk)
+        pqAdcServe(inlineCodes(n, cbW), probes, cbW)
           .select(lit(wk.toLong).as("ksub"), col("q_id"), col("neighbor"))
       }.reduce(_ unionByName _)
       val curve = electCurve(WidthDial, recallCurve(WidthDial, served, gt, probes))
@@ -4313,8 +4188,7 @@ object Similarity {
     if (geom == "resid")
       exactRerank(spark, dir,
         ivfPqResidServe(spark, dir, electedNprobe(spark, dir),
-            topk = electedRerankR(spark, dir))
-          .select(col("q_id"), col("neighbor")))
+          topk = electedRerankR(spark, dir)))
     else
       ivfPqRerank(spark, dir, electedRerankR(spark, dir),
         ksub = electedWidth(spark, dir))
@@ -4329,14 +4203,14 @@ object Similarity {
     * count. */
   private def nprobeSweep(n: DataFrame, cents: DataFrame, probes: DataFrame,
       groundTruth: DataFrame): DataFrame = {
-    val assigned = assignCells(n, cents)
+    val assigned = VectorSearch.assignCells(n, cents)
     // per-query cell ranking to depth NPROBE_MAX (a window over the
     // QUERY_N × k expansion — probe-set-sized, never corpus-sized)
     val wCell = Window.partitionBy(col("q_id"))
       .orderBy(col("cscore").desc, col("c_id").asc)
     val qcells = probes.crossJoin(broadcast(cents))
       .select(col("q_id"), col("qv"), col("qn"), col("c_id"),
-        graft.similarity.VectorSearch.scoreMu(
+        VectorSearch.scoreMu(
           cosine(col("qv"), col("cv"), col("qn"), col("cn"))).as("cscore"))
       .withColumn("crank", row_number().over(wCell).cast("long"))
       .filter(col("crank") <= NPROBE_MAX)
@@ -4345,14 +4219,11 @@ object Similarity {
     val cand = assigned.join(broadcast(qcells), col("c_id") === col("qcell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("crank"), col("vec_id").as("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-          .as("cosine"))
+        cosine4)
     val candP = cand.join(broadcast(NprobeDial.gridDf(n.sparkSession)),
       col("crank") <= col("nprobe"))
-    val wIvf = Window.partitionBy(col("nprobe"), col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    val ivfTop = candP.withColumn("rk", row_number().over(wIvf))
-      .filter(col("rk") <= TOPK)
+    val ivfTop = VectorSearch
+      .topKPerProbe(candP, "cosine", TOPK, Seq(NprobeDial.name))
       .select(col("nprobe"), col("q_id"), col("neighbor"))
     val candCount = candP.groupBy(col("nprobe"))
       .agg(count(lit(1)).as("total_candidates"))
@@ -4378,15 +4249,10 @@ object Similarity {
     val scored = n
       .join(broadcast(shortlist), col("vec_id") === col("neighbor"))
       .join(broadcast(probes), Seq("q_id"))
-      .select(col("q_id"), col("adc_rank"), col("neighbor"),
-        round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4)
-          .as("cosine"))
-    val wR = Window.partitionBy(col("r"), col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    val topR = scored
-      .join(broadcast(RerankDial.gridDf(spark)), col("adc_rank") <= col("r"))
-      .withColumn("rk", row_number().over(wR))
-      .filter(col("rk") <= TOPK)
+      .select(col("q_id"), col("adc_rank"), col("neighbor"), cosine4)
+    val topR = VectorSearch.topKPerProbe(scored
+        .join(broadcast(RerankDial.gridDf(spark)), col("adc_rank") <= col("r")),
+      "cosine", TOPK, Seq(RerankDial.name))
       .select(col("r"), col("q_id"), col("neighbor"))
     electCurve(RerankDial, recallCurve(RerankDial, topR, groundTruth, probes))
   }
@@ -4397,14 +4263,15 @@ object Similarity {
     * then within each cell drop every vector that has a lower-vec_id
     * cell-mate at cosine >= `cut`. Returns the per-cell census
     * (c_id, n_vectors, n_dropped, n_survivors) ordered by c_id.
-    * The centroid set broadcasts; assignment is the [[assignCells]]
-    * partial-agg argmax (the n×k expansion never reaches an exchange,
+    * The centroid set broadcasts; assignment is the
+    * [[VectorSearch.assignCells]] partial-agg argmax (the n×k expansion
+    * never reaches an exchange,
     * and the old assignment→corpus join-back disappears — assignCells
     * already carries v/nrm through); the pairwise stage shuffles on
     * c_id and is quadratic only within a cell. */
   private[queries] def semanticDedupCensus(n: DataFrame, cents: DataFrame,
       cut: Double): DataFrame = {
-    val m = assignCells(n, cents)
+    val m = VectorSearch.assignCells(n, cents)
     val dom = m.as("a")
       .join(m.as("b"),
         col("a.c_id") === col("b.c_id") &&

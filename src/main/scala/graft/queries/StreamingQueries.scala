@@ -218,6 +218,16 @@ object StreamingQueries {
     finally spark.catalog.dropTempView(sink)
   }
 
+  /** The streaming ANN serves' sink (q144, q159): per-probe TopKAgg
+    * rows (key = zero-padded q_id, entries) read back in the batch
+    * serves' (q_id, rank, neighbor, `score`) shape, (q_id, rank) order. */
+  private def probeTopKRows(sink: DataFrame,
+      score: org.apache.spark.sql.Column): DataFrame =
+    sink.select(col("key").cast("long").as("q_id"), posexplode(col("entries")))
+      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
+        col("col.payload").cast("long").as("neighbor"), score)
+      .orderBy(col("q_id"), col("rank"))
+
   private def windowAgg(stream: DataFrame, w: org.apache.spark.sql.Column) =
     stream.groupBy(w.as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -977,14 +987,8 @@ object StreamingQueries {
           .groupByKey(_.key).agg(TopKAgg.topK(Similarity.TOPK))
           .toDF("key", "entries")
         try runToMemorySink(spark, dir, "stream_ann_", "update", scored,
-          noDataBatch = false) {
-          _.select(col("key").cast("long").as("q_id"),
-              posexplode(col("entries")))
-            .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-              col("col.payload").cast("long").as("neighbor"),
-              col("col.score").as("cosine"))
-            .orderBy(col("q_id"), col("rank"))
-        } finally assigned.unpersist(blocking = false)
+          noDataBatch = false)(probeTopKRows(_, col("col.score").as("cosine")))
+        finally assigned.unpersist(blocking = false)
       }),
 
     // ------------------------------------------------------------------
@@ -1062,13 +1066,7 @@ object StreamingQueries {
         val bcLut = Similarity.pqLutBroadcast(probesStatic, cb)
         val probeIds = probesStatic.select(col("q_id")).collect()
           .map(_.getLong(0)).toSeq
-        val centRows = cents
-          .select(col("c_id").cast("long"), col("cv"), col("cn"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
-            r.getDouble(2)))
-        val bcCents = spark.sparkContext.broadcast(
-          CentroidExprs.centroidSet(centRows.toSeq))
+        val bcCents = graft.similarity.VectorSearch.broadcastCentroids(cents)
         val probes = embeddingsStream(spark, dir)
           .filter(col("vec_id").isin(probeIds: _*))
           .select(col("vec_id").as("q_id"),
@@ -1084,21 +1082,16 @@ object StreamingQueries {
             PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")))
           .select(
             format_string("%019d", col("q_id")).as("key"),
-            floor(col("num") / (col("qn") * col("nrm")) * lit(1000000.0)
-              + lit(0.5)).cast("double").as("score"),
+            graft.similarity.VectorSearch.scoreMu(col("num")
+              / (col("qn") * col("nrm"))).cast("double").as("score"),
             format_string("%019d", col("vec_id")).as("payload"))
           .as[TopKAgg.ScoredRow]
           .groupByKey(_.key).agg(TopKAgg.topK(Similarity.TOPK))
           .toDF("key", "entries")
         try runToMemorySink(spark, dir, "stream_ivfpq_", "update", scored,
-          noDataBatch = false) {
-          _.select(col("key").cast("long").as("q_id"),
-              posexplode(col("entries")))
-            .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-              col("col.payload").cast("long").as("neighbor"),
-              col("col.score").cast("long").as("adc_mu"))
-            .orderBy(col("q_id"), col("rank"))
-        } finally idx.unpersist(blocking = false)
+          noDataBatch = false)(
+          probeTopKRows(_, col("col.score").cast("long").as("adc_mu")))
+        finally idx.unpersist(blocking = false)
       })
   )
 }

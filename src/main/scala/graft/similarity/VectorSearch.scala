@@ -1,8 +1,10 @@
 package graft.similarity
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{CentroidExprs, CentroidSet}
 
 import graft.functions.VectorFns._
 
@@ -27,15 +29,29 @@ object VectorSearch {
     val n = normed(corpus, idCol, vecCol)
     val qs = normed(queries, idCol, vecCol)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    n.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor"),
-        cosine(col("v"), col("qv"), col("nrm"), col("qn")).as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    exactTopK(n.crossJoin(broadcast(qs)), k)
+  }
+
+  /** Exact cosine top-k over candidate pairs (vec_id, v, nrm) ×
+    * (q_id, qv, qn), self excluded: (q_id, rank, neighbor, cosine). */
+  private def exactTopK(cand: DataFrame, k: Int): DataFrame =
+    topKPerProbe(cand.filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("neighbor"),
+          cosine(col("v"), col("qv"), col("nrm"), col("qn")).as("cosine")),
+      "cosine", k)
       .select(col("q_id"), col("rank"), col("neighbor"), col("cosine"))
+
+  /** The per-probe top-k ranking rule every search, serve, ground truth
+    * and sweep shares: within each (`keys`…, q_id) partition, `score`
+    * descending with the smaller `neighbor` first on ties, numbered as
+    * a BIGINT `rank` (row_number: 1..n, no gaps) and kept while
+    * rank <= k. Returns `scored` with `rank` appended. */
+  private[graft] def topKPerProbe(scored: DataFrame, score: String, k: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy((keys :+ "q_id").map(col): _*)
+      .orderBy(col(score).desc, col("neighbor").asc)
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
   }
 
   /** IVF-style approximate top-k: assign corpus vectors to a broadcast
@@ -50,13 +66,8 @@ object VectorSearch {
     * on a cluster so the cut survives executor loss. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 1,
-      mat: graft.exec.Materializer = graft.exec.Materializer.Local): DataFrame = {
-    val (result, cached) =
-      ivfTopKPlan(corpus, queries, centroids, idCol, vecCol, k, nprobe)
-    val out = mat(result)
-    cached.foreach(_.unpersist(blocking = false))
-    out
-  }
+      mat: graft.exec.Materializer = graft.exec.Materializer.Local): DataFrame =
+    mat(ivfTopKPlan(corpus, queries, centroids, idCol, vecCol, k, nprobe))
 
   /** The assignment/probe ranking score in integer MICRO-units:
     * floor(cos·10⁶ + 0.5) — the Q.cents construction (pure IEEE double
@@ -79,15 +90,20 @@ object VectorSearch {
     * carrying the vectors (AnnScaleProbe: 124.8 s for 200k × 448; this
     * path does the same 89.6 M dot products map-side in seconds).
     * Returns (vec_id, v, nrm, c_id). */
-  private[graft] def assignCells(n: DataFrame, cents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.CentroidExprs
+  private[graft] def assignCells(n: DataFrame, cents: DataFrame): DataFrame =
+    n.select(col("vec_id"), col("v"), col("nrm"), CentroidExprs.nearestCentroid(
+      broadcastCentroids(cents), col("v"), col("nrm")).as("c_id"))
+
+  /** Collects a centroid relation (c_id, cv, cn) — bounded by
+    * [[CentroidBudget]] — and broadcasts it as the native expressions'
+    * centroid set. */
+  private[graft] def broadcastCentroids(cents: DataFrame)
+      : Broadcast[CentroidSet] = {
     val rows = cents.select(col("c_id").cast("long"), col("cv"), col("cn"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    val bc = n.sparkSession.sparkContext.broadcast(
+    cents.sparkSession.sparkContext.broadcast(
       CentroidExprs.centroidSet(rows.toSeq))
-    n.select(col("vec_id"), col("v"), col("nrm"),
-      CentroidExprs.nearestCentroid(bc, col("v"), col("nrm")).as("c_id"))
   }
 
   /** The `nprobe` nearest cells per QUERY vector in normed `queries`
@@ -113,14 +129,13 @@ object VectorSearch {
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"), explode(col("cells.c_id")).as("qcell"))
 
-  /** The un-materialized plan behind [[ivfTopK]], plus any persisted
-    * intermediates (caller unpersists after acting on the result; empty
-    * since the partial-agg assignment made the plan single-consumer
-    * throughout). Exposed so PlanSpec can assert the broadcast-codebook
-    * shape, which the localCheckpoint in the public API hides. */
+  /** The un-materialized plan behind [[ivfTopK]] (single-consumer
+    * throughout, so nothing is persisted). Exposed so PlanSpec can
+    * assert the broadcast-codebook shape, which the localCheckpoint in
+    * the public API hides. */
   private[graft] def ivfTopKPlan(corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int = 1): (DataFrame, Seq[DataFrame]) = {
+      k: Int, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
     val n = normed(corpus, idCol, vecCol)
     val cents = normed(centroids, idCol, vecCol)
@@ -132,17 +147,7 @@ object VectorSearch {
     // probed cell: cells partition the corpus, so probing more cells
     // unions disjoint candidate sets — no neighbor dedup needed.
     val qs = probeCells(normed(queries, idCol, vecCol), cents, nprobe)
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("neighbor").asc)
-    val out = assigned
-      .join(broadcast(qs), col("c_id") === col("qcell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor"),
-        cosine(col("v"), col("qv"), col("nrm"), col("qn")).as("cosine"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("neighbor"), col("cosine"))
-    (out, Seq.empty)
+    exactTopK(assigned.join(broadcast(qs), col("c_id") === col("qcell")), k)
   }
 
   /** Convenience: deterministic id-ring codebook for corpora without a
@@ -267,7 +272,7 @@ object VectorSearch {
   def groupedCodebook(cents: Seq[(Long, Array[Double], Double)],
       supers: Seq[(Long, Array[Double], Double)])
       : org.apache.spark.sql.graft.GroupedCentroidSet = {
-    import org.apache.spark.sql.graft.{CentroidExprs, GroupedCentroidSet}
+    import org.apache.spark.sql.graft.GroupedCentroidSet
     val sSorted = supers.sortBy(_._1).toArray
     val superIdSet = sSorted.map(_._1).toSet
     val sIdx = sSorted.map(_._1).zipWithIndex.toMap

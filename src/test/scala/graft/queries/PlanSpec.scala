@@ -445,28 +445,26 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val emb = graft.io.Tables.table(spark, sf0001, "embeddings")
     val queries = emb.filter(col("vec_id") % 53 === 0)
     val cents = graft.similarity.VectorSearch.ringCentroids(emb, "vec_id", 101)
-    val (planned, cached) = graft.similarity.VectorSearch
+    val planned = graft.similarity.VectorSearch
       .ivfTopKPlan(emb, queries, cents, "vec_id", "embedding", 10)
-    try {
-      val p = planned.queryExecution
-        .explainString(ExplainMode.fromString("simple"))
-      p should include("BroadcastHashJoin") // cell-probe join
-      p should not include "SortMergeJoin"
-      p should not include "CartesianProduct"
-      // cell assignment is the NATIVE map-side expression: one fused
-      // k×dim loop per row inside the scan stage — no n×k expansion,
-      // no aggregate, no sort, no vec_id exchange at all (the retired
-      // max_by shape sorted the expansion carrying the vectors:
-      // AnnScaleProbe measured 124.8 s at 200k×448)
-      p should include("graft_nearest_centroid")
-      p should not include "partial_max_by"
-      // no SortAggregate anywhere: the corpus-side assignment is
-      // aggregate-free, and the probe-side nprobe ranking (the one
-      // remaining vec_id aggregate — QUERY-set-sized by construction)
-      // hash-aggregates its collect_list
-      p should not include "SortAggregate"
-      p should include regex "hashpartitioning\\(q_id" // final ranking window
-    } finally cached.foreach(_.unpersist(blocking = false))
+    val p = planned.queryExecution
+      .explainString(ExplainMode.fromString("simple"))
+    p should include("BroadcastHashJoin") // cell-probe join
+    p should not include "SortMergeJoin"
+    p should not include "CartesianProduct"
+    // cell assignment is the NATIVE map-side expression: one fused
+    // k×dim loop per row inside the scan stage — no n×k expansion,
+    // no aggregate, no sort, no vec_id exchange at all (the retired
+    // max_by shape sorted the expansion carrying the vectors:
+    // AnnScaleProbe measured 124.8 s at 200k×448)
+    p should include("graft_nearest_centroid")
+    p should not include "partial_max_by"
+    // no SortAggregate anywhere: the corpus-side assignment is
+    // aggregate-free, and the probe-side nprobe ranking (the one
+    // remaining vec_id aggregate — QUERY-set-sized by construction)
+    // hash-aggregates its collect_list
+    p should not include "SortAggregate"
+    p should include regex "hashpartitioning\\(q_id" // final ranking window
   }
 
   test("trained-codebook IVF with nprobe=2 (q54's shape) keeps the broadcast probe") {
@@ -475,18 +473,16 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val queries = emb.filter(col("vec_id") % 53 === 0)
     val cents = graft.similarity.VectorSearch
       .trainCodebook(emb.sample(0.5, 42L), "vec_id", "embedding", k = 4, maxIter = 2)
-    val (planned, cached) = graft.similarity.VectorSearch
+    val planned = graft.similarity.VectorSearch
       .ivfTopKPlan(emb, queries, cents, "vec_id", "embedding", 10, nprobe = 2)
-    try {
-      val p = planned.queryExecution
-        .explainString(ExplainMode.fromString("simple"))
-      p should include("BroadcastHashJoin")
-      p should not include "SortMergeJoin"
-      p should not include "CartesianProduct"
-      // nprobe=2 cells come from a partial collect+sort+slice aggregate
-      // over the query subset, not a window rank over the expansion
-      p should include("partial_collect_list")
-    } finally cached.foreach(_.unpersist(blocking = false))
+    val p = planned.queryExecution
+      .explainString(ExplainMode.fromString("simple"))
+    p should include("BroadcastHashJoin")
+    p should not include "SortMergeJoin"
+    p should not include "CartesianProduct"
+    // nprobe=2 cells come from a partial collect+sort+slice aggregate
+    // over the query subset, not a window rank over the expansion
+    p should include("partial_collect_list")
   }
 
   test("q102: spans cross every exchange as 56-bit longs, never strings — " +

@@ -25,6 +25,37 @@ class VectorSearchSpec extends AnyFunSuite with Matchers with SparkTestSession {
     }
   }
 
+  test("topKPerProbe: k per probe by score desc, ties to the smaller neighbor, " +
+    "gap-free BIGINT ranks; an extra key ranks each (key, q_id) on its own") {
+    import spark.implicits._
+    // probe 1 has six candidates, two of them (7 and 3) tied at 0.5 for
+    // the last of k = 3 places; probe 2 has two, fewer than k, also tied
+    val scored = Seq(
+      (1L, 10L, 0.9), (1L, 4L, 0.7), (1L, 7L, 0.5), (1L, 3L, 0.5),
+      (1L, 5L, 0.2), (1L, 1L, 0.1), (2L, 8L, 0.4), (2L, 6L, 0.4)
+    ).toDF("q_id", "neighbor", "score")
+    def ranked(df: org.apache.spark.sql.DataFrame, keys: Seq[String]) = {
+      val out = VectorSearch.topKPerProbe(df, "score", 3, keys)
+      out.schema("rank").dataType shouldBe org.apache.spark.sql.types.LongType
+      out.collect().toSeq
+        .groupBy(r => (keys :+ "q_id").map(r.getAs[Long](_)))
+        .map { case (g, rows) => g -> rows.sortBy(_.getAs[Long]("rank"))
+          .map(r => r.getAs[Long]("rank") -> r.getAs[Long]("neighbor")) }
+    }
+    ranked(scored, Nil) shouldBe Map(
+      Seq(1L) -> Seq(1L -> 10L, 2L -> 4L, 3L -> 3L),
+      Seq(2L) -> Seq(1L -> 6L, 2L -> 8L))
+    // the sweep shape: dial 2 drops neighbor 10, so its probe 1 ranks
+    // 4, 3, 7 — ranked apart from dial 1's copy of the same probe
+    val swept = scored.withColumn("dial", lit(1L)).unionByName(
+      scored.filter(col("neighbor") =!= 10L).withColumn("dial", lit(2L)))
+    ranked(swept, Seq("dial")) shouldBe Map(
+      Seq(1L, 1L) -> Seq(1L -> 10L, 2L -> 4L, 3L -> 3L),
+      Seq(2L, 1L) -> Seq(1L -> 4L, 2L -> 3L, 3L -> 7L),
+      Seq(1L, 2L) -> Seq(1L -> 6L, 2L -> 8L),
+      Seq(2L, 2L) -> Seq(1L -> 6L, 2L -> 8L))
+  }
+
   test("ivfTopK: rank-1 within the probed cell agrees with brute force when the cell holds it") {
     val queries = emb.filter(col("vec_id") % 53 === 0)
     val cents = VectorSearch.ringCentroids(emb, "vec_id", 101)
