@@ -70,34 +70,60 @@ object TextDedup {
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val ha = hashArrays(sh.join(candDocs, Seq("doc_id"), "left_semi"))
       .persist(MEMORY_AND_DISK)
-    // ONE broadcast serves both attach joins (ReuseExchange — the q118
-    // discipline); past the gate the arrays no longer fit an executor
-    // and the shuffle join IS the right plan
-    val h = if (ha.count() <= broadcastLimit) broadcast(ha) else ha
-    val attachA = h.select(col("doc_id").as("doc_a"),
-      col("harr").as("__ha"), col("nsh").as("na"))
-    val attachB = h.select(col("doc_id").as("doc_b"),
-      col("harr").as("__hb"), col("nsh").as("nb"))
-    val result = pairs
-      .join(attachA, "doc_a")
-      .join(attachB, "doc_b")
+    val h = broadcastUnder(ha, broadcastLimit)
+    (overlapStats(pairs, h, h), Seq(ha))
+  }
+
+  /** The array-attach size gate (~0.5KB per doc ⇒ ~500MB at 2²⁰ docs);
+    * past it the shuffle join IS the right plan. Passed as BOTH
+    * [[overlapStats]] sides, ONE broadcast serves both (ReuseExchange). */
+  private[graft] def broadcastUnder(arr: DataFrame, limit: Long): DataFrame =
+    if (arr.count() <= limit) broadcast(arr) else arr
+
+  /** The attach + intersect kernel: pairs (doc_a, doc_b) join each
+    * side's [[hashArrays]]; the native IntersectCount merge yields (doc_a,
+    * doc_b, n_inter, na, nb). A filter on na/nb is pushed below it. */
+  private[graft] def overlapStats(pairs: DataFrame, arrA: DataFrame,
+      arrB: DataFrame): DataFrame =
+    pairs
+      .join(arrA.select(col("doc_id").as("doc_a"),
+        col("harr").as("__ha"), col("nsh").as("na")), "doc_a")
+      .join(arrB.select(col("doc_id").as("doc_b"),
+        col("harr").as("__hb"), col("nsh").as("nb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         org.apache.spark.sql.graft.SetExprs
           .intersectCount(col("__ha"), col("__hb")).as("n_inter"),
         col("na"), col("nb"))
-    (result, Seq(ha))
-  }
 
-  private[graft] def verifiedJaccardPlan(sh: DataFrame, pairs: DataFrame,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val (overlap, cached) = pairOverlapPlan(sh, pairs)
+  /** (doc_a, doc_b, jaccard) of an [[overlapStats]] relation, RAW, kept
+    * at jaccard >= `threshold`. */
+  private[graft] def jaccardAtLeast(overlap: DataFrame,
+      threshold: Double): DataFrame = {
     val j = col("n_inter").cast("double") /
       (col("na") + col("nb") - col("n_inter")).cast("double")
-    val result = overlap
+    overlap
       .withColumn("jaccard", j)
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    (result, cached)
+  }
+
+  /** (doc_a, doc_b, cont_a = |A∩B|/|A|, cont_b = |A∩B|/|B|) of an
+    * [[overlapStats]] relation, RAW, kept when either reaches
+    * `threshold`. */
+  private[graft] def containmentAtLeast(overlap: DataFrame,
+      threshold: Double): DataFrame = {
+    val ca = col("n_inter").cast("double") / col("na").cast("double")
+    val cb = col("n_inter").cast("double") / col("nb").cast("double")
+    overlap
+      .filter(greatest(ca, cb) >= threshold)
+      .select(col("doc_a"), col("doc_b"), ca.as("cont_a"), cb.as("cont_b"))
+  }
+
+  /** Materialize a (plan, persisted intermediates) pair, then release. */
+  private def cut(mat: Materializer, plan: (DataFrame, Seq[DataFrame])): DataFrame = {
+    val out = mat(plan._1)
+    plan._2.foreach(_.unpersist(blocking = false))
+    out
   }
 
   /** Verified near-duplicate pairs (id_a < id_b, jaccard >= threshold):
@@ -112,13 +138,8 @@ object TextDedup {
     * exponentially. */
   def nearDuplicatePairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, numHashes: Int = 8,
-      mat: Materializer = Materializer.Local): DataFrame = {
-    val (result, cached) =
-      nearDuplicatePairsPlan(df, idCol, textCol, threshold, numHashes)
-    val out = mat(result)
-    cached.foreach(_.unpersist(blocking = false))
-    out
-  }
+      mat: Materializer = Materializer.Local): DataFrame =
+    cut(mat, nearDuplicatePairsPlan(df, idCol, textCol, threshold, numHashes))
 
   /** Containment pairs (id_a < id_b): asymmetric shingle overlap —
     * cont_a = |A∩B|/|A|, cont_b = |A∩B|/|B| — kept when EITHER direction
@@ -132,21 +153,9 @@ object TextDedup {
     * or a smaller band width is the production knob. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, numHashes: Int = 8,
-      mat: Materializer = Materializer.Local): DataFrame = {
-    require(numHashes % 2 == 0, "numHashes must be even (r=2 banding)")
-    val sh = shingleRows(df, idCol, textCol).persist(MEMORY_AND_DISK)
-    val cand = lshCandidates(sh, numHashes).persist(MEMORY_AND_DISK)
-    val (overlap, cached) = pairOverlapPlan(sh, cand)
-    val ca = col("n_inter").cast("double") / col("na").cast("double")
-    val cb = col("n_inter").cast("double") / col("nb").cast("double")
-    val result = overlap
-      .filter(greatest(ca, cb) >= threshold)
-      .select(col("doc_a"), col("doc_b"),
-        ca.as("cont_a"), cb.as("cont_b"))
-    val out = mat(result)
-    (Seq(sh, cand) ++ cached).foreach(_.unpersist(blocking = false))
-    out
-  }
+      mat: Materializer = Materializer.Local): DataFrame =
+    cut(mat, lshScoredPlan(df, idCol, textCol, numHashes)(
+      containmentAtLeast(_, threshold)))
 
   /** The un-materialized plan behind [[nearDuplicatePairs]], plus the
     * intermediates it persisted (caller must unpersist after acting on
@@ -154,12 +163,28 @@ object TextDedup {
     * which the mat() cut in the public API hides. */
   private[graft] def nearDuplicatePairsPlan(df: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.5,
-      numHashes: Int = 8): (DataFrame, Seq[DataFrame]) = {
+      numHashes: Int = 8): (DataFrame, Seq[DataFrame]) =
+    lshScoredPlan(df, idCol, textCol, numHashes)(jaccardAtLeast(_, threshold))
+
+  /** Shingles → LSH candidates → overlap stats → `score`, plus what it
+    * persisted. */
+  private def lshScoredPlan(df: DataFrame, idCol: String, textCol: String,
+      numHashes: Int)(score: DataFrame => DataFrame)
+      : (DataFrame, Seq[DataFrame]) = {
     require(numHashes % 2 == 0, "numHashes must be even (r=2 banding)")
-    val sh = shingleRows(df, idCol, textCol).persist(MEMORY_AND_DISK)
-    val cand = lshCandidates(sh, numHashes).persist(MEMORY_AND_DISK)
-    val (result, verifyCached) = verifiedJaccardPlan(sh, cand, threshold)
-    (result, Seq(sh, cand) ++ verifyCached)
+    val (overlap, cached) = candidateOverlapPlan(
+      shingleRows(df, idCol, textCol))(lshCandidates(_, numHashes))
+    (score(overlap), cached)
+  }
+
+  /** Persist `shingles` and their `candidates` (LSH, or q35/q69's rare
+    * blocking), then [[pairOverlapPlan]]; plus every persisted frame. */
+  private[graft] def candidateOverlapPlan(shingles: DataFrame)(
+      candidates: DataFrame => DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val sh = shingles.persist(MEMORY_AND_DISK)
+    val cand = candidates(sh).persist(MEMORY_AND_DISK)
+    val (overlap, cached) = pairOverlapPlan(sh, cand)
+    (overlap, Seq(sh, cand) ++ cached)
   }
 
   /** MinHash r=2-band LSH candidate pairs (doc_a < doc_b, distinct) from
@@ -207,8 +232,8 @@ object TextDedup {
       col(s"mh${2 * b}").cast("string")))
 
   /** (doc_id, band, bk) band-key rows of a shingle relation.
-    * Shared by the self-join ([[lshCandidates]]) and cross-relation
-    * ([[crossLshCandidates]]) bucket joins. */
+    * Shared by the self-join ([[lshCandidates]]) and the incremental
+    * cross-relation bucket join. */
   private[graft] def bandedSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
     val sig = minhashSignatures(sh, numHashes)
     sig.select(col("doc_id"),
@@ -225,10 +250,17 @@ object TextDedup {
     * candidates that swap measured 9.9s → sub-second. Strings leave the
     * plan at the md5 — every downstream exchange carries longs. */
   private[graft] def hashArrays(sh: DataFrame): DataFrame =
+    sortedArrays(hashedShingles(sh))
+
+  /** Distinct (doc_id, h = 56-bit md5 half) of a shingle relation. */
+  private[graft] def hashedShingles(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"),
       graft.functions.TextFns.hash56(md5(col("s")), 1).as("h"))
       .distinct()
-      .groupBy(col("doc_id"))
+
+  /** (doc_id, harr, nsh) of a [[hashedShingles]] relation. */
+  private[graft] def sortedArrays(hs: DataFrame): DataFrame =
+    hs.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("h"))).as("harr"),
         count(lit(1)).as("nsh"))
 
@@ -252,13 +284,9 @@ object TextDedup {
     * ingest can near-duplicate itself. */
   def incrementalDeduplicate(corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.5,
-      numHashes: Int = 8, mat: Materializer = Materializer.Local): DataFrame = {
-    val (result, cached) =
-      incrementalDeduplicatePlan(corpus, batch, idCol, textCol, threshold, numHashes)
-    val out = mat(result)
-    cached.foreach(_.unpersist(blocking = false))
-    out
-  }
+      numHashes: Int = 8, mat: Materializer = Materializer.Local): DataFrame =
+    cut(mat, incrementalDeduplicatePlan(corpus, batch, idCol, textCol,
+      threshold, numHashes))
 
   /** The un-materialized plan behind [[incrementalDeduplicate]], plus its
     * persisted intermediates (caller unpersists after acting on the
@@ -268,15 +296,24 @@ object TextDedup {
       batch: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5,
       numHashes: Int = 8): (DataFrame, Seq[DataFrame]) = {
-    require(numHashes % 2 == 0, "numHashes must be even (r=2 banding)")
-    val shC = shingleRows(corpus, idCol, textCol).persist(MEMORY_AND_DISK)
+    val (tables, shC) = corpusTables(corpus, idCol, textCol, numHashes)
     val (result, cached) = incrementalCore(batch, idCol, textCol, threshold,
-      numHashes,
-      corpusHashes = corpus.filter(col(textCol).isNotNull)
-        .select(md5(col(textCol)).as("__ch")).distinct(),
-      harrC = hashArrays(shC),
-      bandsC = bandedSignatures(shC, numHashes))
+      numHashes, tables.toMap)
     (result, shC +: cached)
+  }
+
+  /** The corpus side of the incremental cascade — `hashes` (distinct
+    * content md5s), `bands` (doc_id, band, bk), `harr` ([[hashArrays]])
+    * — plus the persisted shingles they share (caller unpersists). One
+    * derivation for the in-query corpus side and [[buildDedupIndex]]. */
+  private def corpusTables(docs: DataFrame, idCol: String, textCol: String,
+      numHashes: Int): (Seq[(String, DataFrame)], DataFrame) = {
+    require(numHashes % 2 == 0, "numHashes must be even (r=2 banding)")
+    val sh = shingleRows(docs, idCol, textCol).persist(MEMORY_AND_DISK)
+    (Seq("hashes" -> docs.filter(col(textCol).isNotNull)
+        .select(md5(col(textCol)).as("__ch")).distinct(),
+      "bands" -> bandedSignatures(sh, numHashes),
+      "harr" -> hashArrays(sh)), sh)
   }
 
   /** The shared incremental cascade against ANY corpus-side
@@ -295,8 +332,7 @@ object TextDedup {
     * wall time (measured 9.9s → sub-second at 525k candidates). */
   private def incrementalCore(batch: DataFrame, idCol: String,
       textCol: String, threshold: Double, numHashes: Int,
-      corpusHashes: DataFrame, harrC: DataFrame,
-      bandsC: DataFrame): (DataFrame, Seq[DataFrame]) = {
+      corpus: String => DataFrame): (DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.sql.expressions.Window
     // (1) exact within batch: min-id survivor per content hash
     val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))
@@ -305,31 +341,22 @@ object TextDedup {
       .filter(col("__rn") === 1).drop("__rn")
       .unionByName(batch.filter(col(textCol).isNull))
     // (2) exact vs corpus: hash-only anti-join
-    val bxx = bx.join(corpusHashes, md5(bx(textCol)) === col("__ch"), "left_anti")
+    val bxx = bx.join(corpus("hashes"), md5(bx(textCol)) === col("__ch"), "left_anti")
       .persist(MEMORY_AND_DISK)
     // (3) near vs corpus: cross-banded candidates, array-intersect verify
     val shB = shingleRows(bxx, idCol, textCol).persist(MEMORY_AND_DISK)
     val pairs = bandedSignatures(shB, numHashes).as("a")
-      .join(bandsC.as("b"),
+      .join(corpus("bands").as("b"),
         col("a.band") === col("b.band") && col("a.bk") === col("b.bk"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
       .persist(MEMORY_AND_DISK)
-    val t = threshold
-    val ni = org.apache.spark.sql.graft.SetExprs
-      .intersectCount(col("ha"), col("hb"))
-    val dupIds = pairs
-      .join(hashArrays(shB).select(col("doc_id").as("doc_a"),
-        col("harr").as("ha"), col("nsh").as("na")), "doc_a")
-      .join(harrC.select(col("doc_id").as("doc_b"),
-        col("harr").as("hb"), col("nsh").as("nb")), "doc_b")
+    val overlap = overlapStats(pairs, hashArrays(shB), corpus("harr"))
       // PPJoin length filter BEFORE the merge: J ≥ t forces
       // min(na,nb) ≥ t·max(na,nb)
-      .filter(col("na") >= ceil(lit(t) * col("nb")) &&
-        col("nb") >= ceil(lit(t) * col("na")))
-      .select(col("doc_a"), ni.as("ni"), col("na"), col("nb"))
-      .filter(col("ni").cast("double") /
-        (col("na") + col("nb") - col("ni")).cast("double") >= t)
+      .filter(col("na") >= ceil(lit(threshold) * col("nb")) &&
+        col("nb") >= ceil(lit(threshold) * col("na")))
+    val dupIds = jaccardAtLeast(overlap, threshold)
       .select(col("doc_a").as(idCol)).distinct()
     val result = bxx.join(dupIds, Seq(idCol), "left_anti")
     (result, Seq(bxx, shB, pairs))
@@ -337,25 +364,14 @@ object TextDedup {
 
   /** Materialize the corpus-side dedup index under `dir` as three parquet
     * tables — `hashes` (distinct content md5s), `bands` (doc_id, band,
-    * bk), `shingles` (doc_id, s) — the artifact a production ingest
-    * keeps BETWEEN batches so each increment pays only batch-side
-    * derivation ([[incrementalDeduplicate]] re-derives all three per
-    * call). Rebuilding after corpus growth is the corpus owner's
-    * compaction job; single-writer per dir. */
+    * bk), `harr` (doc_id, harr, nsh — the verify-side [[hashArrays]]) —
+    * the artifact a production ingest keeps BETWEEN batches so each
+    * increment pays only batch-side derivation ([[incrementalDeduplicate]]
+    * re-derives all three per call). Rebuilding after corpus growth is
+    * the corpus owner's compaction job; single-writer per dir. */
   def buildDedupIndex(corpus: DataFrame, idCol: String, textCol: String,
-      dir: String, numHashes: Int = 8): Unit = {
-    require(numHashes % 2 == 0, "numHashes must be even (r=2 banding)")
-    corpus.filter(col(textCol).isNotNull)
-      .select(md5(col(textCol)).as("__ch")).distinct()
-      .write.mode("overwrite").parquet(s"$dir/hashes")
-    val sh = shingleRows(corpus, idCol, textCol).persist(MEMORY_AND_DISK)
-    sh.write.mode("overwrite").parquet(s"$dir/shingles")
-    bandedSignatures(sh, numHashes).write.mode("overwrite").parquet(s"$dir/bands")
-    // harr (since round 12): the verify-side representation — probing
-    // reads these arrays instead of re-aggregating `shingles`
-    hashArrays(sh).write.mode("overwrite").parquet(s"$dir/harr")
-    sh.unpersist(blocking = false)
-  }
+      dir: String, numHashes: Int = 8): Unit =
+    writeDedupIndex(corpus, idCol, textCol, dir, numHashes, "overwrite")
 
   /** Append `docs` (typically a batch's dedup SURVIVORS) to a
     * [[buildDedupIndex]] artifact, so the NEXT increment also dedups
@@ -363,22 +379,13 @@ object TextDedup {
     * (StreamingIncrementalDedupSpec drives it from foreachBatch).
     * Parquet append only; same single-writer-per-dir contract. */
   def appendToDedupIndex(docs: DataFrame, idCol: String, textCol: String,
-      dir: String, numHashes: Int = 8): Unit = {
-    require(numHashes % 2 == 0, "numHashes must be even (r=2 banding)")
-    docs.filter(col(textCol).isNotNull)
-      .select(md5(col(textCol)).as("__ch")).distinct()
-      .write.mode("append").parquet(s"$dir/hashes")
-    val sh = shingleRows(docs, idCol, textCol).persist(MEMORY_AND_DISK)
-    sh.write.mode("append").parquet(s"$dir/shingles")
-    bandedSignatures(sh, numHashes).write.mode("append").parquet(s"$dir/bands")
-    // only extend harr when the index already carries it — appending the
-    // batch's arrays to a pre-harr (v1) index would leave harr PARTIAL
-    // (probes would silently miss the older corpus); a v1 index keeps
-    // its shingles-fallback until rebuilt
-    val harrPath = new org.apache.hadoop.fs.Path(s"$dir/harr")
-    if (harrPath.getFileSystem(
-        docs.sparkSession.sparkContext.hadoopConfiguration).exists(harrPath))
-      hashArrays(sh).write.mode("append").parquet(s"$dir/harr")
+      dir: String, numHashes: Int = 8): Unit =
+    writeDedupIndex(docs, idCol, textCol, dir, numHashes, "append")
+
+  private def writeDedupIndex(docs: DataFrame, idCol: String, textCol: String,
+      dir: String, numHashes: Int, mode: String): Unit = {
+    val (tables, sh) = corpusTables(docs, idCol, textCol, numHashes)
+    tables.foreach { case (t, df) => df.write.mode(mode).parquet(s"$dir/$t") }
     sh.unpersist(blocking = false)
   }
 
@@ -396,22 +403,8 @@ object TextDedup {
       read: (org.apache.spark.sql.SparkSession, String) => DataFrame =
         (s, p) => s.read.parquet(p)): DataFrame = {
     require(numHashes % 2 == 0, "numHashes must be even (r=2 banding)")
-    val spark = batch.sparkSession
-    // harr ships with indexes built since round 12; a pre-harr index
-    // still probes correctly by re-aggregating its `shingles` table
-    // (one-time cost — rebuild or append once to upgrade in place)
-    val harrPath = new org.apache.hadoop.fs.Path(s"$indexDir/harr")
-    val hasHarr = harrPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(harrPath)
-    val (result, cached) = incrementalCore(batch, idCol, textCol, threshold,
-      numHashes,
-      corpusHashes = read(spark, s"$indexDir/hashes"),
-      harrC = if (hasHarr) read(spark, s"$indexDir/harr")
-        else hashArrays(read(spark, s"$indexDir/shingles")),
-      bandsC = read(spark, s"$indexDir/bands"))
-    val out = mat(result)
-    cached.foreach(_.unpersist(blocking = false))
-    out
+    cut(mat, incrementalCore(batch, idCol, textCol, threshold, numHashes,
+      t => read(batch.sparkSession, s"$indexDir/$t")))
   }
 
   /** Collapse near-duplicate pairs into clusters by iterative min-label
@@ -609,11 +602,19 @@ object TextDedup {
       .join(ids.withColumnRenamed(idCol, "doc_a"), Seq("doc_a"), "left_semi")
       .join(ids.withColumnRenamed(idCol, "doc_b"), Seq("doc_b"), "left_semi")
       .select(col("doc_a"), col("doc_b"))
-    val cl = clustersAuto(restricted, mat = mat)
+    val out = dropClusterLosers(exactKept, idCol, restricted, mat)
+    exactKept.unpersist(blocking = false)
+    out
+  }
+
+  /** Drop from `kept` every doc whose `pairs` cluster has a smaller id. */
+  private def dropClusterLosers(kept: DataFrame, idCol: String,
+      pairs: DataFrame, mat: Materializer): DataFrame = {
+    val cl = clustersAuto(pairs, mat = mat)
     val losers = cl.filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol))
-    val out = mat(exactKept.join(losers, Seq(idCol), "left_anti"))
-    Seq(cl, exactKept).foreach(_.unpersist(blocking = false))
+    val out = mat(kept.join(losers, Seq(idCol), "left_anti"))
+    cl.unpersist(blocking = false)
     out
   }
 
@@ -632,11 +633,8 @@ object TextDedup {
     val exactKept = exact(df, idCol, textCol)
       .persist(MEMORY_AND_DISK)
     val pairs = nearDuplicatePairs(exactKept, idCol, textCol, threshold, mat = mat)
-    val cl = clustersAuto(pairs, mat = mat)
-    val losers = cl.filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as(idCol))
-    val out = mat(exactKept.join(losers, Seq(idCol), "left_anti"))
-    Seq(pairs, cl, exactKept).foreach(_.unpersist(blocking = false))
+    val out = dropClusterLosers(exactKept, idCol, pairs, mat)
+    Seq(pairs, exactKept).foreach(_.unpersist(blocking = false))
     out
   }
 }

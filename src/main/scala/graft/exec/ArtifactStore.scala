@@ -185,14 +185,6 @@ object ArtifactStore {
       val base = new Path(dir)
       val fs = base.getFileSystem(conf)
       val sb = new StringBuilder(base.toUri.toString)
-      def walk(st: FileStatus): Unit =
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).sortBy(_.getPath.getName).foreach(walk)
-        else if (!st.getPath.getName.startsWith("_") &&
-                 !st.getPath.getName.startsWith("."))
-          sb.append('\n').append(st.getPath.toUri.toString)
-            .append('|').append(st.getLen)
-            .append('|').append(st.getModificationTime)
       for (t <- tables.sorted) {
         sb.append("\n#").append(t)
         val children =
@@ -200,7 +192,7 @@ object ArtifactStore {
             val n = st.getPath.getName
             n == t || n.startsWith(t + ".")
           } catch { case _: java.io.IOException => Array.empty[FileStatus] }
-        children.sortBy(_.getPath.getName).foreach(walk)
+        children.sortBy(_.getPath.getName).foreach(fileDigest(fs, _, sb))
       }
       md5hex(sb.toString).take(16)
     })
@@ -224,18 +216,24 @@ object ArtifactStore {
     val base = new Path(path)
     val fs = base.getFileSystem(conf)
     val sb = new StringBuilder(base.toUri.toString)
-    def walk(st: FileStatus): Unit =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).sortBy(_.getPath.getName).foreach(walk)
-      else if (!st.getPath.getName.startsWith("_") &&
-               !st.getPath.getName.startsWith("."))
-        sb.append('\n').append(st.getPath.toUri.toString)
-          .append('|').append(st.getLen)
-          .append('|').append(st.getModificationTime)
-    try { if (fs.exists(base)) walk(fs.getFileStatus(base)) }
+    try { if (fs.exists(base)) fileDigest(fs, fs.getFileStatus(base), sb) }
     catch { case _: java.io.IOException => () }
     md5hex(sb.toString).take(16)
   }
+
+  /** The file walk under [[sourceKey]] and [[contentKey]]: appends
+    * `\n<uri>|<length>|<mtime>` for every non-hidden file at or under
+    * `st` (names starting `_` or `.` skipped), in name order. */
+  private def fileDigest(fs: FileSystem, st: FileStatus,
+      sb: StringBuilder): Unit =
+    if (st.isDirectory)
+      fs.listStatus(st.getPath).sortBy(_.getPath.getName)
+        .foreach(fileDigest(fs, _, sb))
+    else if (!st.getPath.getName.startsWith("_") &&
+             !st.getPath.getName.startsWith("."))
+      sb.append('\n').append(st.getPath.toUri.toString)
+        .append('|').append(st.getLen)
+        .append('|').append(st.getModificationTime)
 
   /** Drop every memoized [[sourceKey]] so the next resolve re-lists the
     * source files — the escape hatch for the one case the per-process
@@ -599,24 +597,5 @@ object ArtifactStore {
                       catch { case _: java.io.IOException => Array.empty[FileStatus] })
           sweep(entry)
     }
-    // legacy sweep: rounds before the store kept per-process
-    // `target/<family>-<uuid>` dirs (hardcoded local paths, so this
-    // half is java.io regardless of the store root); the class-load
-    // sweep that reaped them lived in Similarity and left with the
-    // migration — without this, a pre-store checkout's stale gigabytes
-    // persist forever
-    val cutoffMs = System.currentTimeMillis() - MaxAgeMillis
-    def rmLocal(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmLocal)
-      f.delete(): Unit
-    }
-    for (prefix <- Seq("q54_centroids", "q71_lsh_index", "q78_dedup_index",
-           "neardup_pair_index", "bigram_lm_scores", "rare_overlap_stats",
-           "copurchase_edges", "ppjoin_index", "q92_lake");
-         dir <- Option(new java.io.File("target").listFiles())
-           .getOrElse(Array.empty[java.io.File])
-         if dir.getName.startsWith(prefix + "-") &&
-           dir.lastModified() < cutoffMs)
-      try rmLocal(dir) catch { case _: Exception => () }
   }
 }

@@ -2,7 +2,7 @@ package graft.gdelt
 
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, StringIndexer, StringIndexerModel, VectorAssembler}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,14 +18,23 @@ object GdeltMl {
   case class WeekModel(auc: Double, coefficients: Map[String, Double],
       intercept: Double, labels: Seq[String])
 
+  /** `label_week` indexed into `label` over the rows of the two labelled
+    * weeks, the only rows the three models fit on. Days outside both
+    * windows carry `label_week = other` (GdeltExprs.weekLabel); with them
+    * the label is 3-class, which BinaryClassificationEvaluator rejects
+    * and whose multinomial model has no `coefficients`. */
+  private def indexedWeeks(df: DataFrame): (StringIndexerModel, DataFrame) = {
+    val labelled = df.filter(col("label_week").isin("week_feb", "week_may"))
+    val indexer = new StringIndexer()
+      .setInputCol("label_week").setOutputCol("label").fit(labelled)
+    (indexer, indexer.transform(labelled))
+  }
+
   val weekFeatures: Seq[String] =
     Seq("k_openai", "k_google", "k_anthropic", "v2tone_1", "v2tone_3", "v2tone_6")
 
   def weekClassifier(features: DataFrame): WeekModel = {
-    val indexer = new StringIndexer()
-      .setInputCol("label_week").setOutputCol("label")
-    val indexerModel = indexer.fit(features)
-    val indexed = indexerModel.transform(features)
+    val (indexerModel, indexed) = indexedWeeks(features)
     val assembled = new VectorAssembler()
       .setInputCols(weekFeatures.toArray).setOutputCol("features")
       .transform(indexed.na.fill(0, weekFeatures))
@@ -55,9 +64,7 @@ object GdeltMl {
       "k_openai", "k_google", "k_anthropic") ++ (1 to 7).map(i => s"v2tone_$i")
 
   def firstTryClassifier(features: DataFrame): FirstTryResult = {
-    val indexed = new StringIndexer()
-      .setInputCol("label_week").setOutputCol("label")
-      .fit(features).transform(features)
+    val indexed = indexedWeeks(features)._2
     val assembled = new VectorAssembler()
       .setInputCols(firstTryFeatures.toArray).setOutputCol("features")
       .transform(indexed.na.fill(0, firstTryFeatures))
@@ -80,16 +87,13 @@ object GdeltMl {
     * ranked — positive ⇒ predicts the less-frequent label
     * (theme_ml_job.py:57-79). Returns (theme, score) ranked desc. */
   def themeModel(core: DataFrame): DataFrame = {
-    val dfMl = core.select(col("label_week"), col("themes_arr"))
-      .filter(col("themes_arr").isNotNull)
+    val dfMl = indexedWeeks(core.select(col("label_week"), col("themes_arr"))
+      .filter(col("themes_arr").isNotNull))._2
     val cvModel: CountVectorizerModel = new CountVectorizer()
       .setInputCol("themes_arr").setOutputCol("features")
       .setVocabSize(1000).setMinDF(5.0)
       .fit(dfMl)
-    val vectorized = cvModel.transform(dfMl)
-    val indexed = new StringIndexer()
-      .setInputCol("label_week").setOutputCol("label")
-      .fit(vectorized).transform(vectorized)
+    val indexed = cvModel.transform(dfMl)
     val lr = new LogisticRegression()
       .setFeaturesCol("features").setLabelCol("label").setRegParam(0.1)
     val weights = lr.fit(indexed).coefficients.toArray

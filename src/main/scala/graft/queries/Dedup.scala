@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.TextDedup
+import graft.exec.ArtifactStore
 import graft.functions.TextFns
 import graft.io.Tables.table
 
@@ -113,9 +115,9 @@ object Dedup {
     * array — no window (r1 used lead() over a per-doc window, which cost a
     * full shuffle+sort of every token row), and no higher-order lambdas
     * (interpreted, ~40µs/element — measured 3× the rest of the pipeline).
-    * Shared construction: graft.dedup.TextDedup.shingleRows. */
+    * Shared construction: TextDedup.shingleRows. */
   private def shingleRows(spark: SparkSession, dir: String): DataFrame =
-    graft.dedup.TextDedup.shingleRows(
+    TextDedup.shingleRows(
       table(spark, dir, "documents"), "doc_id", "text")
 
   /** Oracle CTE prefix producing the same distinct shingle relation. */
@@ -148,13 +150,10 @@ object Dedup {
   /** MinHash signature: 8 double-hashed mins via one partial-agg groupBy
     * (min over the distinct set == min over the multiset, so no dedup is
     * needed on this path). Single definition with the library banding
-    * path: graft.dedup.TextDedup.minhashSignatures — ONE md5 per shingle
+    * path: TextDedup.minhashSignatures — ONE md5 per shingle
     * row, g_k = h1 + k·h2 (see TextFns.hash56). */
-  private def minhashSigFrom(sh: DataFrame): DataFrame =
-    graft.dedup.TextDedup.minhashSignatures(sh, NUM_HASHES)
-
   private def minhashSig(spark: SparkSession, dir: String): DataFrame =
-    minhashSigFrom(shingleRows(spark, dir))
+    TextDedup.minhashSignatures(shingleRows(spark, dir), NUM_HASHES)
 
   /** Oracle CTE: per-doc md5 list of the shingle-list relation `src` —
     * hashes each shingle ONCE, shared by all 8 minhash columns (the
@@ -195,6 +194,12 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
   }
+
+  /** q17/q35/q69's output: pairs with 4-digit `scores`, localized, sorted. */
+  private def pairRows(pairs: DataFrame, scores: String*): DataFrame =
+    Q.localized(pairs.select(col("doc_a") +: col("doc_b") +:
+        scores.map(c => round(col(c), 4).as(c)): _*)
+      .orderBy(col("doc_a"), col("doc_b")))
 
   /** Oracle fragment: Jaccard + threshold over `pairs(doc_a, doc_b)` and
     * the shingle-list relation `sh` from [[shinglesCte]]. */
@@ -439,10 +444,7 @@ object Dedup {
         // verifiedPairsIndexed) — the first consumer in the process pays
         // the full TextDedup.nearDuplicatePairsPlan derivation, every
         // later q17/q52/q73 invocation is a parquet scan + round/sort
-        Q.localized(verifiedPairsIndexed(spark, dir)
-          .select(col("doc_a"), col("doc_b"),
-            round(col("jaccard"), 4).as("jaccard"))
-          .orderBy(col("doc_a"), col("doc_b")))
+        pairRows(verifiedPairsIndexed(spark, dir), "jaccard")
       }),
 
     // ------------------------------------------------------------------
@@ -505,17 +507,9 @@ object Dedup {
         ${jaccardSelectSql(NGRAM_JACCARD_MIN)}"""),
       run = (spark, dir) => {
         // scores the shared rare-blocked overlap artifact (see
-        // rareOverlapIndexed; q69 reads the same one) — identical math
-        // and filter order to TextDedup.verifiedJaccardPlan
-        val ov = rareOverlapIndexed(spark, dir)
-        val j = col("n_inter").cast("double") /
-          (col("na") + col("nb") - col("n_inter")).cast("double")
-        Q.localized(ov
-          .withColumn("jaccard", j)
-          .filter(col("jaccard") >= NGRAM_JACCARD_MIN)
-          .select(col("doc_a"), col("doc_b"),
-            round(col("jaccard"), 4).as("jaccard"))
-          .orderBy(col("doc_a"), col("doc_b")))
+        // rareOverlapIndexed; q69 reads the same one)
+        pairRows(TextDedup.jaccardAtLeast(
+          rareOverlapIndexed(spark, dir), NGRAM_JACCARD_MIN), "jaccard")
       }),
 
     // ------------------------------------------------------------------
@@ -547,14 +541,8 @@ object Dedup {
       run = (spark, dir) => {
         // same shared overlap artifact as q35 — only the scoring rule
         // (asymmetric containment) differs
-        val ov = rareOverlapIndexed(spark, dir)
-        val ca = col("n_inter").cast("double") / col("na").cast("double")
-        val cb = col("n_inter").cast("double") / col("nb").cast("double")
-        Q.localized(ov
-          .filter(greatest(ca, cb) >= CONTAIN_MIN)
-          .select(col("doc_a"), col("doc_b"),
-            round(ca, 4).as("cont_a"), round(cb, 4).as("cont_b"))
-          .orderBy(col("doc_a"), col("doc_b")))
+        pairRows(TextDedup.containmentAtLeast(
+          rareOverlapIndexed(spark, dir), CONTAIN_MIN), "cont_a", "cont_b")
       }),
 
     // ------------------------------------------------------------------
@@ -563,7 +551,7 @@ object Dedup {
     // candidates over the survivors, hash-array Jaccard verify ≥ 0.5,
     // connected-components clustering (min-label propagation), drop every
     // doc whose cluster has a smaller id. The Spark side runs the
-    // graft.dedup.TextDedup.deduplicate library API verbatim; the oracle
+    // TextDedup.deduplicate library API verbatim; the oracle
     // replays the identical construction in SQL, with the clustering step
     // as a RECURSIVE CTE computing each node's min reachable id — so the
     // distributed label-propagation loop (previously spec-only) is now
@@ -609,7 +597,7 @@ object Dedup {
         // usual; the LSH derivation comes from the shared pair artifact
         // restricted to the exact survivors (pairs(S) = pairs(full)∩S×S —
         // TextDedupSpec pins the equality with the derive-inline path)
-        val survivors = graft.dedup.TextDedup.deduplicateWithPairs(
+        val survivors = TextDedup.deduplicateWithPairs(
           table(spark, dir, "documents"), "doc_id", "text",
           verifiedPairsIndexed(spark, dir))
         val result = Q.localized(
@@ -692,7 +680,7 @@ object Dedup {
     // the batch's candidates no matter how large (or internally
     // duplicated) the historical corpus is. The engine runs the PRODUCTION shape: the corpus side
     // is a MATERIALIZED index (TextDedup.buildDedupIndex — hashes,
-    // bands, shingles as parquet; built once per process, the q71/q54
+    // bands, harr as parquet; built once per process, the q71/q54
     // artifact discipline) probed by
     // TextDedup.incrementalDeduplicateIndexed, so steady state pays only
     // batch-side derivation. The corpus/batch split derives
@@ -762,10 +750,10 @@ object Dedup {
         WHERE doc_id NOT IN (SELECT doc_id FROM dup)
         ORDER BY doc_id"""),
       run = (spark, dir) => {
-        val surv = graft.dedup.TextDedup.incrementalDeduplicateIndexed(
+        val surv = TextDedup.incrementalDeduplicateIndexed(
           q78Index(spark, dir), q78Split(spark, dir)._2,
           "doc_id", "text", JACCARD_MIN,
-          read = graft.exec.ArtifactStore.readPublished)
+          read = ArtifactStore.readPublished)
         val result = Q.localized(surv.select(col("doc_id")).orderBy(col("doc_id")))
         surv.unpersist(blocking = false)
         result
@@ -902,24 +890,14 @@ object Dedup {
         FROM base b LEFT JOIN r USING (doc_id)
         ORDER BY b.doc_id"""),
       run = (spark, dir) => {
-        val tk = table(spark, dir, "documents")
-          .filter(col("text").isNotNull)
-          .select(col("doc_id"), TextFns.tokens(col("text")).as("tk"))
-          .filter(size(col("tk")) >= 8)
-        val occ = tk.select(col("doc_id"),
-          explode(transform(
-            sequence(lit(1), size(col("tk")) - 7),
-            i => TextFns.hash56(
-              md5(array_join(slice(col("tk"), i, lit(8)), " ")), 1))).as("h"))
+        val tk = spanBase(table(spark, dir, "documents"), 8)
+        val occ = tk.select(col("doc_id"), explode(spanHashes(8)).as("h"))
         val ds = occ.groupBy(col("h"), col("doc_id"))
           .agg(count(lit(1)).as("occn"))
-        val rep = ds.groupBy(col("h")).agg(count(lit(1)).as("n_docs"))
-          .filter(col("n_docs") >= 2)
-          .select(col("h"))
         // flagged rollup: semi-filter FIRST so the doc aggregation only
         // touches occurrences of cross-doc-repeated spans (see header
         // for the measured A/B against the flag-join alternative)
-        val r = ds.join(rep, Seq("h"), "left_semi")
+        val r = onRepeatedSpans(ds, "h")
           .groupBy(col("doc_id")).agg(sum(col("occn")).as("n_rep"))
         // totals: tokenize-only arithmetic, no explode — the cheap pass
         tk.select(col("doc_id"),
@@ -1341,10 +1319,9 @@ object Dedup {
     * code under test. */
   private[queries] def q118PairsPlan(spark: SparkSession, dir: String,
       broadcastLimit: Long = 1L << 20): DataFrame = {
-    val t = NGRAM_JACCARD_MIN
     val idx = q118Index(spark, dir)
-    val pref = graft.exec.ArtifactStore.readPublished(spark, s"$idx/pref")
-    val shArr = graft.exec.ArtifactStore.readPublished(spark, s"$idx/sharr")
+    val pref = ArtifactStore.readPublished(spark, s"$idx/pref")
+    val shArr = ArtifactStore.readPublished(spark, s"$idx/sharr")
     // candidate join with the PPJoin length + positional filters (see
     // q118Candidates) — recall stays perfect while the measured sf0.1
     // candidate count drops 522k -> 205k
@@ -1359,46 +1336,19 @@ object Dedup {
     // same md5 half, so the hashed Jaccard is IDENTICAL across
     // engines even in the (astronomically unlikely) collision
     // case - the gate compares the same quantity.
-    // BROADCAST the per-doc array side when it fits (size gate on the
-    // doc count — a footer-cheap parquet count; ~0.5KB of sorted hash
-    // array per doc ⇒ the 2²⁰-doc gate is ~500MB, the same order as
-    // the pageRank/clustersAuto local gates). The candidate relation is
-    // quadratic-ish in planted duplication (19.9M rows at the 10×
-    // replica for 250.6k true pairs) while the array side is corpus-
-    // doc-bounded — shuffling and twice-sorting the 19.9M side through
-    // a SortMergeJoin to attach 1KB of arrays per row measured 32.2s;
-    // the broadcast form is 3.2s (identical output). ONE broadcast
-    // serves BOTH attach joins: the hint sits on the shared shArr scan
-    // and the A/B projections canonicalize identically above it, so
-    // ReuseExchange ships the ~500MB once, not twice (PlanSpec pins
-    // the ReusedExchange — the round-12 advice priced the old
-    // two-broadcast form at double the gate's comment). Past the gate
-    // the join falls back to shuffle — at that corpus size the arrays
-    // no longer fit an executor, and the sort-merge IS the right plan
+    // BROADCAST the per-doc array side when it fits (the family's
+    // doc-count gate, TextDedup.broadcastUnder — a footer-cheap parquet
+    // count here). The candidate relation is quadratic-ish in planted
+    // duplication (19.9M rows at the 10× replica for 250.6k true pairs)
+    // while the array side is corpus-doc-bounded — shuffling and
+    // twice-sorting the 19.9M side through a SortMergeJoin to attach
+    // 1KB of arrays per row measured 32.2s; the broadcast form is 3.2s
+    // (identical output). Past the gate the join falls back to shuffle
     // (Q118GateSpec forces this branch and pins identical output).
-    val broadcastable = shArr.count() <= broadcastLimit
-    val sh = if (broadcastable) broadcast(shArr) else shArr
-    val attachA = sh.select(col("doc_id").as("doc_a"),
-      col("harr").as("ha"), col("nsh").as("na"))
-    val attachB = sh.select(col("doc_id").as("doc_b"),
-      col("harr").as("hb"), col("nsh").as("nb"))
-    val jac = pairs
-      .join(attachA, "doc_a")
-      .join(attachB, "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        // native codegen sort+merge count — semantically
-        // size(array_intersect) but allocation-free per row
-        // (org.apache.spark.sql.graft.IntersectCount)
-        org.apache.spark.sql.graft.SetExprs
-          .intersectCount(col("ha"), col("hb")).as("ni"),
-        col("na"), col("nb"))
-      .filter(col("ni").cast("double") /
-        (col("na") + col("nb") - col("ni")).cast("double") >= t)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("ni").cast("double") /
-          (col("na") + col("nb") - col("ni")).cast("double"), 4)
-          .as("jaccard"))
-    jac
+    val sh = TextDedup.broadcastUnder(shArr, broadcastLimit)
+    TextDedup.jaccardAtLeast(TextDedup.overlapStats(pairs, sh, sh),
+        NGRAM_JACCARD_MIN)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
   /** q118's durable PPJoin index (ArtifactStore, keyed by the documents
@@ -1409,17 +1359,13 @@ object Dedup {
     * processes, parquet after. The oracle re-derives both inline in
     * SQL, so the gate value-checks the derivation itself. */
   private def q118Index(spark: SparkSession, dir: String): String =
-    graft.exec.ArtifactStore.ensure(spark, "ppjoin_index",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "documents")) { p =>
+    docsArtifact(spark, dir, "ppjoin_index") { p =>
       val t = NGRAM_JACCARD_MIN
       // distinct shingle sets, hashed to 56-bit longs IMMEDIATELY -
       // prefix theory is over SETS, and every downstream stage (order,
       // join, verify) runs in the hash domain so strings never leave
       // this projection
-      val ex = graft.dedup.TextDedup.shingleRows(
-          table(spark, dir, "documents"), "doc_id", "text")
-        .select(col("doc_id"), TextFns.hash56(md5(col("s")), 1).as("h"))
-        .distinct().persist()
+      val ex = TextDedup.hashedShingles(shingleRows(spark, dir)).persist()
       val dfq = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("df"), col("h"))
@@ -1435,10 +1381,7 @@ object Dedup {
       // one linear pass, so the per-candidate-pair verify is a pure
       // merge — the sort is paid once per doc at build time, not once
       // per candidate pair at query time
-      ex.groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(col("h"))).as("harr"),
-          count(lit(1)).as("nsh"))
-        .write.mode("overwrite").parquet(s"$p/sharr")
+      TextDedup.sortedArrays(ex).write.mode("overwrite").parquet(s"$p/sharr")
       ex.unpersist(blocking = false)
       ()
     }
@@ -1515,10 +1458,7 @@ object Dedup {
     // different plans, so the decision cannot defer); callers holding a
     // filtered/derived frame — where counting would be a full scan —
     // pass `docCount` to skip it.
-    val base = docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("tk"))
-      .filter(size(col("tk")) >= RUN_LENGTHS.min)
+    val base = spanBase(docs, RUN_LENGTHS.min)
     if (docCount.getOrElse(docs.count()) > cascadeLimit)
       cascadeLSR(base, cut)
     else singlePassLSR(base)
@@ -1543,78 +1483,73 @@ object Dedup {
         case Some(f) => base.join(f, Seq("doc_id"), "left_semi")
       }
       val ds = scanned.filter(size(col("tk")) >= len)
-        .select(col("doc_id"),
-          explode(transform(
-            sequence(lit(1), size(col("tk")) - (len - 1)),
-            i => TextFns.hash56(
-              md5(array_join(slice(col("tk"), i, lit(len)), " ")), 1)))
-            .as("h"))
+        .select(col("doc_id"), explode(spanHashes(len)).as("h"))
         .distinct()
-      val rep = ds.groupBy(col("h")).agg(count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2).select(col("h"))
-      val flagged = cut(ds.join(rep, Seq("h"), "left_semi")
+      val flagged = cut(onRepeatedSpans(ds, "h")
         .select(col("doc_id")).distinct())
       val lvl = flagged.select(col("doc_id"), lit(len.toLong).as("ms"))
       acc = Some(acc.fold(lvl)(_.unionByName(lvl)))
       flaggedPrev = Some(flagged)
     }
-    val fl = acc.get.groupBy(col("doc_id")).agg(max(col("ms")).as("ms"))
-    base.select(col("doc_id"))
-      .join(fl, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("ms"), lit(0L)).as("max_shared_len"))
-      .orderBy(col("doc_id"))
+    maxSharedLen(base,
+      acc.get.groupBy(col("doc_id")).agg(max(col("ms")).as("ms")))
   }
 
   private def singlePassLSR(base: DataFrame): DataFrame = {
     val emptySpans = array().cast("array<struct<l:bigint,h:bigint>>")
     val spanArrs = RUN_LENGTHS.map { len =>
       when(size(col("tk")) >= len,
-        transform(
-          sequence(lit(1), size(col("tk")) - (len - 1)),
-          i => struct(lit(len.toLong).as("l"),
-            TextFns.hash56(
-              md5(array_join(slice(col("tk"), i, lit(len)), " ")), 1)
-              .as("h"))))
+        spanHashes(len, h => struct(lit(len.toLong).as("l"), h.as("h"))))
         .otherwise(emptySpans)
     }
     val ds = base
       .select(col("doc_id"), explode(flatten(array(spanArrs: _*))).as("s"))
       .select(col("doc_id"), col("s.l").as("l"), col("s.h").as("h"))
       .distinct()
-    val rep = ds.groupBy(col("l"), col("h"))
-      .agg(count(lit(1)).as("nd"))
-      .filter(col("nd") >= 2)
-      .select(col("l"), col("h"))
-    val fl = ds.join(rep, Seq("l", "h"), "left_semi")
-      .groupBy(col("doc_id")).agg(max(col("l")).as("ms"))
+    maxSharedLen(base, onRepeatedSpans(ds, "l", "h")
+      .groupBy(col("doc_id")).agg(max(col("l")).as("ms")))
+  }
+
+  /** q152's tail: each base doc's flagged `ms`, 0 when none. */
+  private def maxSharedLen(base: DataFrame, fl: DataFrame): DataFrame =
     base.select(col("doc_id"))
       .join(fl, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("ms"), lit(0L)).as("max_shared_len"))
       .orderBy(col("doc_id"))
-  }
+
+  /** q102/q152's span base: (doc_id, tk) of texts of >= `minLen` tokens. */
+  private def spanBase(docs: DataFrame, minLen: Int): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("tk"))
+      .filter(size(col("tk")) >= minLen)
+
+  /** The rows of a one-row-per-(doc, span key) relation whose key is held
+    * by >= 2 distinct docs. */
+  private def onRepeatedSpans(ds: DataFrame, keys: String*): DataFrame =
+    ds.join(ds.groupBy(keys.map(col): _*).agg(count(lit(1)).as("nd"))
+      .filter(col("nd") >= 2).select(keys.map(col): _*), keys, "left_semi")
+
+  /** q102/q152's span fingerprint: hash56(md5) of every sliding
+    * `len`-token span of `tk`, each through `wrap`. */
+  private def spanHashes(len: Int,
+      wrap: Column => Column = identity): Column =
+    transform(sequence(lit(1), size(col("tk")) - (len - 1)),
+      i => wrap(TextFns.hash56(
+        md5(array_join(slice(col("tk"), i, lit(len)), " ")), 1)))
 
   /** The materialized verified-pair relation for `dir` (built at most
     * once per corpus across processes; a plain parquet read afterwards
     * — PlanSpec pins that the steady-state q17 plan is a scan of this
     * artifact, not a re-derivation). */
   private[queries] def verifiedPairsIndexed(spark: SparkSession,
-      dir: String): DataFrame = {
+      dir: String): DataFrame =
     // "-mkm1" versions the DERIVATION (round 14's modular-KM minhash):
     // a formula change must change the artifact key, or a store shared
     // across engine versions serves pairs computed with the old hashes
-    val path = graft.exec.ArtifactStore.ensure(spark, "neardup_pair_index",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "documents")
-        + "-mkm1") { p =>
-      val (pairs, cached) = graft.dedup.TextDedup.nearDuplicatePairsPlan(
-        table(spark, dir, "documents"), "doc_id", "text",
-        JACCARD_MIN, NUM_HASHES)
-      pairs.write.mode("overwrite").parquet(p)
-      cached.foreach(_.unpersist(blocking = false))
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-  }
+    publishedPlan(spark, dir, "neardup_pair_index", "-mkm1")(
+      TextDedup.nearDuplicatePairsPlan(table(spark, dir, "documents"),
+        "doc_id", "text", JACCARD_MIN, NUM_HASHES))
 
   // The q35/q69 twin of the artifact above: both queries derive the SAME
   // rare-shingle-blocked pair-overlap relation (doc_a, doc_b, na, nb,
@@ -1624,18 +1559,25 @@ object Dedup {
   // query is a scan + arithmetic + its own filter. Same soundness story:
   // the oracles re-derive everything inline in SQL.
   private[queries] def rareOverlapIndexed(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = graft.exec.ArtifactStore.ensure(spark, "rare_overlap_stats",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "documents")) { p =>
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val sh = shingleRows(spark, dir).persist(MEMORY_AND_DISK)
-      val pairs = rareBlockedPairs(sh).persist(MEMORY_AND_DISK)
-      val (overlap, cached) = graft.dedup.TextDedup.pairOverlapPlan(sh, pairs)
-      overlap.write.mode("overwrite").parquet(p)
-      (Seq(sh, pairs) ++ cached).foreach(_.unpersist(blocking = false))
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-  }
+      dir: String): DataFrame =
+    publishedPlan(spark, dir, "rare_overlap_stats")(
+      TextDedup.candidateOverlapPlan(shingleRows(spark, dir))(rareBlockedPairs))
+
+  /** ArtifactStore `family` entry keyed by `dir`'s documents + `version`. */
+  private def docsArtifact(spark: SparkSession, dir: String, family: String,
+      version: String = "")(build: String => Unit): String =
+    ArtifactStore.ensure(spark, family,
+      ArtifactStore.sourceKey(spark, dir, "documents") + version)(build)
+
+  /** A [[docsArtifact]] of one (plan, persisted) relation, read back. */
+  private def publishedPlan(spark: SparkSession, dir: String, family: String,
+      version: String = "")(plan: => (DataFrame, Seq[DataFrame])): DataFrame =
+    ArtifactStore.readPublished(spark,
+      docsArtifact(spark, dir, family, version) { p =>
+        val (df, cached) = plan
+        df.write.mode("overwrite").parquet(p)
+        cached.foreach(_.unpersist(blocking = false))
+      })
 
   // q78's durable materialized dedup index (ArtifactStore: built at
   // most once per corpus across processes, read-only afterwards — the
@@ -1647,9 +1589,8 @@ object Dedup {
   // shared across engine versions would serve stale bytes to the new
   // reader.
   private def q78Index(spark: SparkSession, dir: String): String =
-    graft.exec.ArtifactStore.ensure(spark, "q78_dedup_index",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "documents") + "-v3") { path =>
-      graft.dedup.TextDedup.buildDedupIndex(
+    docsArtifact(spark, dir, "q78_dedup_index", "-v3") { path =>
+      TextDedup.buildDedupIndex(
         q78Split(spark, dir)._1, "doc_id", "text", path)
     }
 

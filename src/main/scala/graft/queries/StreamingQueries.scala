@@ -35,38 +35,35 @@ object StreamingQueries {
     * rule ceil(bytes / 6 MiB) clamped to [1, 8] reproduces both measured
     * optima and grows smoothly between them; on a real deployment the
     * state-volume estimate would come from the source (Kafka lag / file
-    * manifest) the same way. GRAFT_STREAM_PARTITIONS still overrides
-    * (explicit deployment knob), but no capture needs it any more. */
+    * manifest) the same way. */
   private val streamPartitionsCache =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 
-  private def streamPartitions(spark: SparkSession, dir: String): Int =
-    sys.env.get("GRAFT_STREAM_PARTITIONS").flatMap(_.toIntOption)
-      .getOrElse {
-        val sized = streamPartitionsCache.getOrElseUpdate(dir, {
-          // events may ship as a single file OR a directory of part
-          // files (a Spark-written replica) — recurse, File.length() of
-          // a directory is the dirent size, not the content
-          def sizeOf(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty).map(sizeOf).sum
-            else f.length()
-          val bytes = Option(new java.io.File(dir).listFiles())
-            .getOrElse(Array.empty)
-            .filter(_.getName.startsWith("events.parquet"))
-            .map(sizeOf).sum
-          math.min(8, math.ceil(bytes / (6.0 * 1024 * 1024)).toInt)
-        })
-        // floor at min(4, cores): the r9 "1 beats 4 at sf0.1" result no
-        // longer holds on the current code — re-measured r19 back-to-back
-        // at BOTH 32 and 8 cores over the seven heaviest stateful
-        // streams, 4 partitions beat 1 by ~0.6 s aggregate each time
-        // (state-store commit cost shrank across rounds while the
-        // per-batch compute parallelism gain stayed). Cores-adaptive, so
-        // a 2-core host still gets 2, and the bytes rule keeps growing
-        // it toward 8 at replica scale.
-        math.max(math.min(4, spark.sparkContext.defaultParallelism), sized)
-      }
+  private def streamPartitions(spark: SparkSession, dir: String): Int = {
+    val sized = streamPartitionsCache.getOrElseUpdate(dir, {
+      // events may ship as a single file OR a directory of part
+      // files (a Spark-written replica) — recurse, File.length() of
+      // a directory is the dirent size, not the content
+      def sizeOf(f: java.io.File): Long =
+        if (f.isDirectory)
+          Option(f.listFiles()).getOrElse(Array.empty).map(sizeOf).sum
+        else f.length()
+      val bytes = Option(new java.io.File(dir).listFiles())
+        .getOrElse(Array.empty)
+        .filter(_.getName.startsWith("events.parquet"))
+        .map(sizeOf).sum
+      math.min(8, math.ceil(bytes / (6.0 * 1024 * 1024)).toInt)
+    })
+    // floor at min(4, cores): the r9 "1 beats 4 at sf0.1" result no
+    // longer holds on the current code — re-measured r19 back-to-back
+    // at BOTH 32 and 8 cores over the seven heaviest stateful
+    // streams, 4 partitions beat 1 by ~0.6 s aggregate each time
+    // (state-store commit cost shrank across rounds while the
+    // per-batch compute parallelism gain stayed). Cores-adaptive, so
+    // a 2-core host still gets 2, and the bytes rule keeps growing
+    // it toward 8 at replica scale.
+    math.max(math.min(4, spark.sparkContext.defaultParallelism), sized)
+  }
 
   /** Run `body` with streaming-sized shuffle partitions for `dir`,
     * restoring the session value after (queries run sequentially in

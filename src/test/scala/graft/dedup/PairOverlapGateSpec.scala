@@ -63,4 +63,23 @@ class PairOverlapGateSpec extends AnyFunSuite with Matchers
       viaShuffle shouldBe viaBroadcast
     } finally spark.conf.set(thresholdKey, prev)
   }
+
+  test("scorers keep a pair exactly at the threshold and drop it just above") {
+    val (sh, pairs) = fixture
+    val (ov, cached) = TextDedup.pairOverlapPlan(sh, pairs)
+    def kept(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    try {
+      // doc1/doc2: 2 shared of 4 + 4 shingles -> Jaccard 2/6, containment
+      // 2/4 both ways; doc1/doc3 shares nothing and survives neither
+      val jac = 1.0 / 3
+      kept(TextDedup.jaccardAtLeast(ov, jac)) shouldBe Seq((1L, 2L))
+      kept(TextDedup.jaccardAtLeast(ov, Math.nextUp(jac))) shouldBe empty
+      val cont = TextDedup.containmentAtLeast(ov, 0.5)
+      kept(cont) shouldBe Seq((1L, 2L))
+      cont.select("cont_a", "cont_b").collect().map(r =>
+        (r.getDouble(0), r.getDouble(1))).toSeq shouldBe Seq((0.5, 0.5))
+      kept(TextDedup.containmentAtLeast(ov, Math.nextUp(0.5))) shouldBe empty
+    } finally cached.foreach(_.unpersist(blocking = false))
+  }
 }

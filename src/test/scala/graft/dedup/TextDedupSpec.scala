@@ -68,7 +68,7 @@ class TextDedupSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val idx = java.nio.file.Files.createTempDirectory("dedup_idx").toString + "/ix"
     TextDedup.buildDedupIndex(hist, "doc_id", "text", idx)
     // the artifact holds the three corpus-side tables
-    Seq("hashes", "bands", "shingles").foreach { t =>
+    Seq("hashes", "bands", "harr").foreach { t =>
       spark.read.parquet(s"$idx/$t").count() should be > 0L
     }
     def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =

@@ -19,8 +19,10 @@ class GdeltPipelineSpec extends AnyFunSuite with Matchers with SparkTestSession 
     * reference windows, with enough theme support (>= minDF 5 per theme)
     * for the CountVectorizer stage and both keyword-flag classes
     * populated for the LR stages. One duplicate URL row on top proves
-    * the dedup stage runs inside the composed pipeline too. */
-  private def writeRawJsonl(path: java.nio.file.Path): Unit = {
+    * the dedup stage runs inside the composed pipeline too. `extra` rows
+    * are appended verbatim. */
+  private def writeRawJsonl(path: java.nio.file.Path,
+      extra: Seq[String] = Nil): Unit = {
     val themes = Seq("TAX_FNCACT", "ECON_STOCKMARKET", "SCIENCE", "GENERAL_GOVERNMENT")
     val rows = (0 until 80).map { i =>
       val feb = i % 2 == 0
@@ -39,7 +41,7 @@ class GdeltPipelineSpec extends AnyFunSuite with Matchers with SparkTestSession 
       s"""{"GKGRECORDID":"2024-dup","DATE":"20240212090000","URL":"https://site0.example.com/openai-news-0",""" +
       s""""Themes":"TAX_FNCACT;AI_TOPIC","Organizations":"microsoft;nvidia","V2Tone":"1.5,3.0,2.5,0.5,0.1,1.0,0.2"}"""
     java.nio.file.Files.write(path,
-      rows.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (rows ++ extra).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     ()
   }
 
@@ -97,6 +99,33 @@ class GdeltPipelineSpec extends AnyFunSuite with Matchers with SparkTestSession 
         img.getWidth should be > 100
         img.getHeight should be > 100
       }
+    }
+  }
+
+  test("days outside both labelled weeks stay in core as `other`, and the " +
+    "models fit on the two weeks only") {
+    val dir = java.nio.file.Files.createTempDirectory("gdelt_other")
+    val raw = dir.resolve("raw.jsonl")
+    // five March articles: inside neither window
+    val march = (0 until 5).map { i =>
+      s"""{"GKGRECORDID":"2024-m$i","DATE":"202403${10 + i}090000",""" +
+        s""""URL":"https://march$i.example.com/google-news-$i",""" +
+        s""""Themes":"SCIENCE;AI_TOPIC","Organizations":"microsoft",""" +
+        s""""V2Tone":"2.0,3.5,2.0,0.5,0.1,1.5,0.2"}"""
+    }
+    writeRawJsonl(raw, march)
+    val out = dir.resolve("out").toString
+
+    val (core, ml) = GdeltPipeline.run(spark,
+      graft.io.Tables.jsonLines(spark, raw.toString), out)
+
+    core.count() shouldBe 85L
+    core.filter(org.apache.spark.sql.functions.col("label_week") === "other")
+      .count() shouldBe 5L
+    GdeltMl.weekClassifier(ml).labels.sorted shouldBe Seq("week_feb", "week_may")
+    Seq("summary_report.md", "theme_report.md",
+      "graph_feature_importance.png").foreach { n =>
+      new java.io.File(out, n).exists() shouldBe true
     }
   }
 }
