@@ -103,6 +103,39 @@ object Similarity {
   private[queries] val COARSE_SAMPLE = 0.2
   private[queries] val COARSE_SEED = 42L
 
+  /** A serving dial a curve sweeps: the curve's key column, its grid in
+    * declared order (ascending wherever there is a target) and the
+    * recall target its election uses — none means the highest recall
+    * wins. The dials are declared before [[defs]]: the oracle strings
+    * its initializer builds read them. */
+  private[queries] final case class Dial[D](name: String, grid: Seq[D],
+      targetBp: Option[Long] = Some(RECALL_TARGET_BP))(
+      implicit val enc: Encoder[D]) {
+    def gridDf(spark: SparkSession): DataFrame =
+      spark.createDataset(grid).toDF(name)
+  }
+
+  private[queries] val NprobeDial = Dial("nprobe", NPROBES)(Encoders.scalaLong)
+  private[queries] val WidthDial =
+    Dial("ksub", PQ_WIDTHS.map(_.toLong))(Encoders.scalaLong)
+  private[queries] val RerankDial = Dial("r", RERANK_RS)(Encoders.scalaLong)
+  // raw is declared first: it wins a recall tie, being the cheaper serve
+  // (no per-(probe, cell) qdotc term)
+  private[queries] val GeometryDial =
+    Dial("geom", Seq("raw", "resid"), targetBp = None)(Encoders.STRING)
+
+  /** SQL twin of [[Dial.gridDf]]: the grid as an inline VALUES relation,
+    * `SELECT * FROM (VALUES (CAST(g1 AS BIGINT)), (g2), …) AS t(name)`, or
+    * with `alias` `SELECT CAST(alias AS BIGINT) AS name FROM (VALUES (g1),
+    * …) AS t(alias)`. */
+  private def gridSql(dial: Dial[_], alias: String = ""): String =
+    if (alias.isEmpty)
+      s"SELECT * FROM (VALUES (CAST(${dial.grid.head} AS BIGINT)), " +
+        dial.grid.tail.map(g => s"($g)").mkString(", ") + s")\n AS t(${dial.name})"
+    else
+      s"SELECT CAST($alias AS BIGINT) AS ${dial.name}\n FROM (VALUES " +
+        dial.grid.map(g => s"($g)").mkString(", ") + s")\n AS t($alias)"
+
   private[queries] def normed(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
@@ -141,10 +174,24 @@ object Similarity {
 
   /** The first `k` rows of `rel` in md5(vec_id) order, ties to vec_id —
     * the engine-independent fixed-count sample every md5-prefix
-    * construction draws (oracle twin: `ORDER BY md5(CAST(vec_id AS
-    * VARCHAR)), vec_id LIMIT k`). */
+    * construction draws (oracle twin: [[md5SampleSql]]). */
   private def md5Prefix(rel: DataFrame, k: Int): DataFrame =
     rel.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
+
+  /** SQL twin of [[md5Prefix]]'s order, over id column `id`. */
+  private def md5OrderSql(id: String = "vec_id"): String =
+    s"md5(CAST($id AS VARCHAR)), $id"
+
+  /** SQL twin of [[md5Prefix]] (of [[pqProbes]] with the default
+    * columns): the first `k` rows of `from`, filtered by `where`, in
+    * md5(`id`) order. */
+  private def md5SampleSql(cols: String = "vec_id AS q_id, v AS qv, nrm AS qn",
+      from: String = "n", where: String = "", id: String = "vec_id",
+      k: Int = QUERY_N): String =
+    s"""SELECT $cols
+          FROM $from${if (where.isEmpty) "" else s"\n          WHERE $where"}
+          ORDER BY ${md5OrderSql(id)}
+          LIMIT $k"""
 
   /** SQL twin of [[boundedCents]] (consumes normedCte's `n`, emits
     * `cents(c_id, cv, cn)`): row_number over the same md5 order, kept
@@ -154,8 +201,7 @@ object Similarity {
         cents AS (
           SELECT c_id, cv, cn FROM (
             SELECT vec_id AS c_id, v AS cv, nrm AS cn,
-                   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                      vec_id) AS crn
+                   row_number() OVER (ORDER BY ${md5OrderSql()}) AS crn
             FROM n) c, cnt
           WHERE crn <= least($CENTROID_BUDGET,
                              CAST(ceil(sqrt(n_rows)) AS BIGINT)))"""
@@ -182,18 +228,13 @@ object Similarity {
     "(VALUES (CAST(1 AS BIGINT)), " +
       (2 to PQ_M).map(j => s"($j)").mkString(", ") + ") AS r(j)"
 
-  /** Shared q134/q135 oracle CTEs (consume normedCte's `n`): md5-prefix
-    * codebook `sel(cv, c)`, per-(vector, subspace, sub-centroid) squared
-    * L2 distance in integer micro-units `subd`, and the per-(vector,
-    * subspace) argmin `best` (min d2_mu, ties to min c — the strict-<
-    * code-ascending scan PqEncode runs). Subspace slices are absolute
-    * offsets into the full vectors — no list-slice semantics in play,
-    * the identical index arithmetic the expression's fused loop uses. */
-  private def pqCtes: String = pqDistCtes(s"""sel AS (
-          SELECT v AS cv,
-                 row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                    vec_id) AS c
-          FROM n QUALIFY c <= $PQ_KSUB)""")
+  /** SQL twin of [[pqCodebook]] over `from`'s vector column `vec`: the
+    * [[PQ_KSUB]] md5-first rows as `name(cv, c)`, c the 1-based code. */
+  private def pqSelSql(name: String = "sel", from: String = "n",
+      vec: String = "v", cv: String = "cv"): String = s"""$name AS (
+          SELECT $vec AS $cv,
+                 row_number() OVER (ORDER BY ${md5OrderSql()}) AS c
+          FROM $from QUALIFY c <= $PQ_KSUB)"""
 
   /** q142/q143's `sel`: the TRAINED sub-codebooks read back from the
     * materialized artifact in their assembled 64-dim layout (c_id is
@@ -205,31 +246,63 @@ object Similarity {
                  c_id AS c
           FROM read_parquet('$TrainedPqPath/*.parquet'))"""
 
-  /** The per-(vector, subspace, sub-centroid) distance + argmin chain
-    * over whatever `sel(cv, c)` codebook is plugged in (md5-prefix for
-    * q134–q139, the trained artifact for q142/q143). The argmin is a
-    * GROUPED `min(row(d2_mu, c))` — lexicographic struct min IS the
-    * (min d2_mu, ties to min c) rule — rather than a row_number
-    * window: a hash aggregate over n×m groups instead of a full sort
-    * of the n×m×ksub distance relation, which is what let the
-    * four-election q157 replay fit a single node at the 10× replica
-    * (the window form's sorts summed past 120 GB there). `rn = 1` is
-    * kept as a constant so every consumer's `WHERE rn = 1` text is
-    * unchanged. */
-  private def pqDistCtes(selCte: String): String = s"""
+  /** Dim i of subspace j of vector column `x`: absolute offsets into the
+    * full vector, the index arithmetic the native expressions use. */
+  private def subSql(x: String): String = s"$x[(j-1)*$PQ_SUB + i]"
+
+  /** The left-to-right sum of `term` over the dims i of subspace j. */
+  private def subSumSql(term: String): String =
+    s"list_sum(list_transform(range(1, $PQ_SUB + 1),\n i -> $term))"
+
+  /** SQL twin of [[PqExprs.pqEncode]] over the codebook `selCte` defines
+    * as `sel(cv, c)`: the per-(vector, subspace, sub-centroid) squared L2
+    * distance in integer micro-units `subd` over the `v` column of `rel`,
+    * the per-(vector, subspace) argmin `best` ([[pqArgminSql]]) and, when
+    * `codes` is named, each vector's code array. The relation names are
+    * parameters so that two code chains can share one oracle. */
+  private def pqCodeCtes(selCte: String, sel: String = "sel",
+      subd: String = "subd", best: String = "best", codes: String = "",
+      rel: String = "n", v: String = "v", cv: String = "cv"): String = {
+    val diff = s"(${subSql(v)} - ${subSql(cv)})"
+    s"""
         $selCte,
-        subd AS (
-          SELECT n.vec_id, j, s.c,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_SUB + 1),
-                        i -> (v[(j-1)*$PQ_SUB + i] - cv[(j-1)*$PQ_SUB + i])
-                           * (v[(j-1)*$PQ_SUB + i] - cv[(j-1)*$PQ_SUB + i])))
-                      * 1000000.0 + 0.5) AS BIGINT) AS d2_mu
-          FROM n, sel s, $pqJs),
-        best AS (
-          SELECT vec_id, j, mdc[2] AS c, mdc[1] AS d2_mu,
+        $subd AS (
+          SELECT ${rel.split(' ').last}.vec_id, j, s.c,
+                 ${scoreMuSql(subSumSql(s"$diff\n * $diff"))} AS d2_mu
+          FROM $rel, $sel s, $pqJs),
+        ${pqArgminSql(best, subd)}""" + (if (codes.isEmpty) "" else s""",
+        $codes AS (
+          ${codeListSql(best)})""")
+  }
+
+  /** The per-(vector, subspace) argmin of `subd` as `best` (min d2_mu,
+    * ties to min c — the strict-< code-ascending scan PqEncode runs). It
+    * is a GROUPED `min(row(d2_mu, c))` — lexicographic struct min IS that
+    * rule — rather than a row_number window: a hash aggregate over n×m
+    * groups instead of a full sort of the n×m×ksub distance relation,
+    * which is what let the four-election q157 replay fit a single node at
+    * the 10× replica. `rn = 1` is kept as a constant so every consumer's
+    * `WHERE rn = 1` text is unchanged. With `widths` (a ksub relation),
+    * one argmin per narrower width over the prefix c ≤ ksub. */
+  private def pqArgminSql(best: String, subd: String,
+      widths: String = ""): String = {
+    val (k, wk, w) = if (widths.isEmpty) ("", "", "")
+      else ("ksub, ", "w.ksub, ",
+        s", $widths w WHERE c <= w.ksub AND w.ksub < $PQ_KSUB")
+    s"""$best AS (
+          SELECT ${k}vec_id, j, mdc[2] AS c, mdc[1] AS d2_mu,
                  CAST(1 AS BIGINT) AS rn
-          FROM (SELECT vec_id, j, min(row(d2_mu, c)) AS mdc
-                FROM subd GROUP BY vec_id, j))"""
+          FROM (SELECT ${wk}vec_id, j, min(row(d2_mu, c)) AS mdc
+                FROM $subd$w GROUP BY ${wk}vec_id, j))"""
+  }
+
+  /** SQL twin of [[pqCodes]]: each vector's code array in subspace order
+    * from argmin relation `best`, with `cols` prepended and `group`
+    * leading the grouping. */
+  private def codeListSql(best: String, cols: String = "",
+      group: String = ""): String =
+    s"""SELECT ${cols}vec_id, list(c ORDER BY j) AS code
+          FROM $best WHERE rn = 1 GROUP BY ${group}vec_id"""
 
   /** q135's probe set: the q20 fixed-count md5-order sample as
     * (q_id, qv, qn) — constant broadcast/LUT size at any corpus. */
@@ -251,6 +324,19 @@ object Similarity {
         PqExprs.buildLut(cb, r.getSeq[Double](1).toArray)).toMap))
   }
 
+  /** SQL twin of [[pqLutBroadcast]]: each probe of `probes`' m×ksub LUT
+    * over codebook `sel` (vector column `cv`) — the per-(j, c) subspace
+    * dot products `lut`, flattened j-major into one list `lutl(q_id, lt)`. */
+  private def lutSql(lut: String = "lut", lutl: String = "lutl",
+      probes: String = "qsr", sel: String = "sel", cv: String = "cv"): String =
+    s"""$lut AS (
+          SELECT q_id, j, s.c,
+                 ${subSumSql(s"${subSql("qv")} * ${subSql(cv)}")} AS lv
+          FROM $probes, $sel s, $pqJs),
+        $lutl AS (
+          SELECT q_id, list(lv ORDER BY j, c) AS lt
+          FROM $lut GROUP BY q_id)"""
+
   /** A served top-k: [[VectorSearch.topKPerProbe]] over `scored`
     * (q_id, neighbor, `score`), emitted as (q_id, rank, neighbor,
     * `score`) in (q_id, rank) order. */
@@ -260,9 +346,58 @@ object Similarity {
       .select(col("q_id"), col("rank"), col("neighbor"), col(score))
       .orderBy(col("q_id"), col("rank"))
 
+  /** SQL twin of [[servedTopK]]: `from`'s top-`k` per probe by `score`,
+    * neighbor tie-break, as (q_id, rank, `cols`, `score`) in (q_id, rank)
+    * order — an oracle's final SELECT. */
+  private def rankedTopKSql(score: String, from: String,
+      cols: String = "neighbor", k: Int = TOPK): String =
+    s"""SELECT q_id,
+               CAST(row_number() OVER (PARTITION BY q_id
+                                       ORDER BY $score DESC, neighbor)
+                    AS BIGINT) AS rank,
+               $cols, $score
+        FROM $from
+        QUALIFY rank <= $k
+        ORDER BY q_id, rank"""
+
+  /** SQL twin of [[VectorSearch.topKPerProbe]] as a relation: the `inner`
+    * rows of `from` ranked per `part` by `order`, kept to rank `k` and
+    * projected to `cols`. */
+  private def windowTopKSql(cols: String, inner: String, part: String,
+      order: String, from: String, k: String = s"$TOPK"): String =
+    s"""SELECT $cols FROM (
+            SELECT $inner,
+                   row_number() OVER (PARTITION BY $part
+                     ORDER BY $order) AS rk
+            $from)
+          WHERE rk <= $k"""
+
+  /** [[windowTopKSql]] over a served ADC relation (q_id, neighbor,
+    * adc_mu): its (q_id, neighbor) top-`k`. */
+  private def servedTopKSql(served: String, k: String = s"$TOPK"): String =
+    windowTopKSql("q_id, neighbor", "q_id, neighbor", "q_id",
+      "adc_mu DESC, neighbor", s"FROM $served", k)
+
   /** The exact 4dp cosine of a (v, nrm) × (qv, qn) pair — q20's score. */
   private def cosine4: Column =
     round(cosine(col("v"), col("qv"), col("nrm"), col("qn")), 4).as("cosine")
+
+  /** SQL twin of [[graft.functions.VectorFns.dot]]: the left-to-right
+    * list_sum the native expression also runs. */
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(range(1, len($a) + 1),\n i -> $a[i] * $b[i]))"
+
+  /** SQL twin of [[graft.functions.VectorFns.cosine]]. */
+  private def cosineSql(a: String, b: String, an: String, bn: String): String =
+    s"${dotSql(a, b)} / ($an * $bn)"
+
+  /** SQL twin of [[cosine4]] (defaults: the (v, nrm) × (qv, qn) pair). */
+  private def cosine4Sql(a: String = "v", b: String = "qv", an: String = "nrm",
+      bn: String = "qn"): String = s"round(${cosineSql(a, b, an, bn)}, 4)"
+
+  /** SQL twin of [[VectorSearch.scoreMu]]: `x` in integer micro-units. */
+  private def scoreMuSql(x: String): String =
+    s"CAST(floor($x * 1000000.0 + 0.5) AS BIGINT)"
 
   /** Candidate pairs (vec_id, v, nrm) × (q_id, qv, qn), self excluded,
     * as (q_id, neighbor, cosine) — what an exact serve ranks. */
@@ -285,6 +420,60 @@ object Similarity {
         VectorSearch.scoreMu(col("num") / (col("qn") * col("nrm"))))
       .select(col("q_id"), col("vec_id").as("neighbor"), col("adc_mu")),
       "adc_mu", topk)
+
+  /** SQL twin of [[PqExprs.pqAdcNum]]: a candidate's `code` looked up in
+    * its probe's flattened LUT `lt`, summed in subspace order. */
+  private def adcNumSql: String =
+    s"list_sum(list_transform(range(1, $PQ_M + 1),\n j -> lt[(j-1)*$PQ_KSUB + code[j]]))"
+
+  /** SQL twin of [[adcTopK]]'s adc_mu: `num` over the probe norm `qn` and
+    * the candidate norm n2.nrm. */
+  private def adcSql(qn: String, num: String = adcNumSql): String =
+    scoreMuSql(s"$num\n / ($qn * n2.nrm)")
+
+  /** SQL twin of [[fullScanAdc]]'s candidates: every row of `codes`
+    * against every probe LUT of `lutl` (norms from `probes`), self
+    * excluded. */
+  private def fullScanSql(codes: String, lutl: String = "lutl",
+      probes: String = "qsr"): String =
+    s"""FROM $codes cd
+          JOIN n n2 ON cd.vec_id = n2.vec_id
+          CROSS JOIN $lutl l
+          JOIN $probes q ON l.q_id = q.q_id
+          WHERE cd.vec_id <> l.q_id"""
+
+  /** The full-scan ADC relation (q_id, neighbor, adc_mu) over `codes`. */
+  private def fullScanAdcSql(codes: String): String =
+    s"""SELECT l.q_id, cd.vec_id AS neighbor,
+                 ${adcSql("q.qn")}
+                   AS adc_mu
+          ${fullScanSql(codes)}"""
+
+  /** The full-scan ADC top-[[TOPK]] per probe (and per `key` dial point
+    * of `codes`) as a (`key`, q_id, neighbor) relation. */
+  private def adcTopKSql(codes: String, lutl: String = "lutl",
+      probes: String = "qsr", key: String = ""): String = {
+    val (k, ck) = if (key.isEmpty) ("", "") else (s"$key, ", s"cd.$key, ")
+    windowTopKSql(s"${k}q_id, neighbor", s"${ck}l.q_id, cd.vec_id AS neighbor",
+      s"${ck}l.q_id", s"${adcSql("q.qn")} DESC,\n cd.vec_id",
+      fullScanSql(codes, lutl, probes))
+  }
+
+  /** SQL twin of [[cellRestrictedPackedServe]]'s scored relation: the
+    * ADC relation (q_id, neighbor, adc_mu) of `codes` restricted to each
+    * probe's probed cells `qcell(q_id, qn, qcell)`, LUTs from `lutl`;
+    * `num` is the inner product (q160 adds its qdotc term). */
+  private def cellAdcSql(codes: String, qcell: String, lutl: String,
+      num: String = adcNumSql): String =
+    s"""SELECT qc.q_id, cd.vec_id AS neighbor,
+                 ${adcSql("qc.qn", num)}
+                   AS adc_mu
+          FROM $codes cd
+          JOIN n n2 ON cd.vec_id = n2.vec_id
+          JOIN assigned a ON cd.vec_id = a.vec_id
+          JOIN $qcell qc ON a.c_id = qc.qcell
+          JOIN $lutl l ON l.q_id = qc.q_id
+          WHERE cd.vec_id <> qc.q_id"""
 
   /** Full-scan ADC: every row of `rel` against every probe (the bounded
     * (q_id, qn) pairs and their LUTs broadcast), top-[[TOPK]]. */
@@ -505,6 +694,60 @@ object Similarity {
     VectorSearch.probeCells(probes.select(col("q_id").as("vec_id"),
       col("qv").as("v"), col("qn").as("nrm")), cents, nprobe)
 
+  /** The micro-unit cosine of vector `v` (norm `nrm`) to a centroid
+    * (cv, cn): the score [[VectorSearch.assignCells]] and
+    * [[VectorSearch.probeCells]] rank cells by, c_id breaking ties. */
+  private def cellScoreSql(v: String, nrm: String): String =
+    scoreMuSql(cosineSql(v, "cv", nrm, "cn"))
+
+  /** SQL twin of [[VectorSearch.assignCells]]: every row of `n` (filtered
+    * by `where`) ranks the cells of `cents`, kept while `keep` holds. */
+  private def assignRankSql(cols: String = "vec_id, c_id",
+      inner: String = "n.vec_id, c_id", where: String = "",
+      keep: String = "rn = 1"): String =
+    s"""SELECT $cols FROM (
+            SELECT $inner,
+                   row_number() OVER (
+                     PARTITION BY n.vec_id
+                     ORDER BY ${cellScoreSql("v", "nrm")} DESC,
+                              c_id) AS rn
+            FROM n, cents$where)
+          WHERE $keep"""
+
+  /** Each corpus row's nearest cell, `assigned(vec_id, c_id)`. */
+  private def assignSql: String = s"""assigned AS (
+          ${assignRankSql()})"""
+
+  /** SQL twin of [[VectorSearch.probeCells]]: each probe of `from`
+    * (partitioned by `part`, vector `v` of norm `nrm`) ranks the cells of
+    * `cents` as `crank`, kept to `depth`. */
+  private def cellRankSql(cols: String, inner: String, from: String,
+      depth: String, part: String = "q_id", v: String = "qv",
+      nrm: String = "qn"): String =
+    s"""SELECT $cols FROM (
+            SELECT $inner,
+                   row_number() OVER (PARTITION BY $part
+                     ORDER BY ${cellScoreSql(v, nrm)} DESC,
+                              c_id) AS crank
+            FROM $from)
+          WHERE crank <= $depth"""
+
+  /** SQL twin of [[ivfSearch]]'s scoring: the exact 4dp cosine of every
+    * corpus row in a probe's cell, `probes` carrying (q_id, qv, qn,
+    * qcell), self excluded; `extra` columns lead the neighbor. */
+  private def inCellScoredSql(probes: String, extra: String = ""): String =
+    s"""SELECT q_id, ${extra}n.vec_id AS neighbor,
+                 ${cosine4Sql()} AS cosine
+          FROM n JOIN assigned a ON n.vec_id = a.vec_id
+          JOIN $probes ON a.c_id = ${probes.split(' ').last}.qcell
+          WHERE n.vec_id <> q_id"""
+
+  /** The in-cell exact serve: [[inCellScoredSql]] as `served`, ranked. */
+  private def inCellServeSql(probes: String, served: String = "scored"): String =
+    s"""$served AS (
+          ${inCellScoredSql(probes)})
+        ${rankedTopKSql("cosine", served)}"""
+
   /** The cell-restricted packed-ADC serve body, parameterized by WHICH
     * packed index / coarse codebook / PQ codebook serve (md5-prefix
     * quantizers for q136/q151/q153/q157, the TRAINED pair for q158):
@@ -694,20 +937,28 @@ object Similarity {
                 FROM n) m
           WHERE amax > 0),
         qsq AS (
-          SELECT vec_id AS q_id, v AS qv, sv AS qsv, nrm AS qn,
-                 amax AS qa
-          FROM sq ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N)"""
+          ${md5SampleSql("vec_id AS q_id, v AS qv, sv AS qsv, nrm AS qn,\n amax AS qa", "sq")})"""
+
+  /** SQL twin of [[sq8Serve]]'s sq_mu over the sq × qsq pairs. */
+  private def sqMuSql: String = scoreMuSql(
+    s"${dotSql("s.sv", "qsv")}\n * qa * s.amax / (16129.0 * (qn * s.nrm))")
 
   /** q134's complete oracle — shared verbatim by q139, the streaming
     * encode twin (one replay gates both, the q119/q125 discipline). */
   private[queries] def pqCodesOracleSql: String = s"""
         $normedCte,
-        $pqCtes
+        ${pqCodeCtes(pqSelSql())}
         SELECT vec_id, CAST(j AS BIGINT) AS j, CAST(c AS BIGINT) AS code,
                d2_mu
         FROM best WHERE rn = 1
         ORDER BY vec_id, j"""
+
+  /** q36/q133's probes: the corpus rows with vec_id % QUERY_MOD = 0, each
+    * taking its own assigned cell. */
+  private def ownCellProbesSql: String =
+    s"""SELECT n.vec_id AS q_id, v AS qv, nrm AS qn, a.c_id AS qcell
+          FROM n JOIN assigned a ON n.vec_id = a.vec_id
+          WHERE n.vec_id % $QUERY_MOD = 0"""
 
   /** q36's complete oracle (bounded codebook → assignment → modulus
     * probe set taking its own cell → exact in-cell top-k). Shared
@@ -717,141 +968,28 @@ object Similarity {
   private[queries] def ivfServeOracleSql: String = s"""
         $normedCte,
         $centsCte,
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
+        $assignSql,
         qs AS (
-          SELECT n.vec_id AS q_id, v AS qv, nrm AS qn, a.c_id AS qcell
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          WHERE n.vec_id % $QUERY_MOD = 0),
-        scored AS (
-          SELECT q_id, n.vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4) AS cosine
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          JOIN qs ON a.c_id = qs.qcell
-          WHERE n.vec_id <> q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor) AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""
+          $ownCellProbesSql),
+        ${inCellServeSql("qs")}"""
 
   /** q151's complete oracle (q159's streaming twin moved to the
     * width-elected [[ivfPqWidthElectedOracleSql]] in round 18). */
   private[queries] def ivfPqElectedOracleSql: String = s"""
         $ivfPqElectedCtes
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM served
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""
+        ${rankedTopKSql("adc_mu", "served")}"""
 
   /** The q131 oracle's CTE chain (normed corpus → bounded codebook →
-    * assignment → evaluated probe sample → ranked probe cells →
-    * once-scored candidates → per-nprobe curve → election `sel`),
-    * shared with q132 which appends its serving CTEs after `sel`. */
+    * assignment → evaluated probe sample → [[nprobeSweepSql]]'s curve and
+    * election `sel`), shared with q132 which appends its serving CTEs
+    * after `sel`. */
   private def nprobeCurveCtes: String = s"""
         $normedCte,
         $centsCte,
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
+        $assignSql,
         qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n
-          WHERE vec_id % $QUERY_MOD = 0
-          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        qcells AS (
-          SELECT q_id, qv, qn, c_id AS qcell, crank FROM (
-            SELECT q_id, qv, qn, c_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(qv) + 1),
-                                    i -> qv[i] * cv[i])) / (qn * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS crank
-            FROM qsr, cents)
-          WHERE crank <= $NPROBE_MAX),
-        cand AS (
-          SELECT q_id, crank, n.vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4) AS cosine
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          JOIN qcells qc ON a.c_id = qc.qcell
-          WHERE n.vec_id <> q_id),
-        ps AS (SELECT * FROM (VALUES (CAST(1 AS BIGINT)), (2), (4), (8))
-               AS t(nprobe)),
-        candp AS (
-          SELECT nprobe, q_id, neighbor, cosine
-          FROM cand JOIN ps ON crank <= nprobe),
-        ivf_topk AS (
-          SELECT nprobe, q_id, neighbor FROM (
-            SELECT nprobe, q_id, neighbor,
-                   row_number() OVER (PARTITION BY nprobe, q_id
-                                      ORDER BY cosine DESC, neighbor) AS rk
-            FROM candp)
-          WHERE rk <= $TOPK),
-        ex_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits AS (
-          SELECT nprobe, q_id, count(*) AS n_hit
-          FROM ivf_topk JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY nprobe, q_id),
-        perq AS (
-          SELECT g.nprobe, g.q_id, coalesce(h.n_hit, 0) AS n_hit
-          FROM (SELECT nprobe, q_id FROM ps, qsr) g
-          LEFT JOIN hits h ON g.nprobe = h.nprobe AND g.q_id = h.q_id),
-        cc AS (SELECT nprobe, count(*) AS total_candidates
-               FROM candp GROUP BY nprobe),
-        curve AS (
-          SELECT p.nprobe,
-                 CAST(count(*) AS BIGINT) AS n_probes,
-                 CAST(sum(n_hit) AS BIGINT) AS sum_hits,
-                 CAST(min(n_hit) AS BIGINT) AS min_hits
-          FROM perq p GROUP BY p.nprobe),
-        curve2 AS (
-          SELECT c.nprobe, n_probes, sum_hits, min_hits,
-                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
-                      AS BIGINT) AS recall_bp,
-                 CAST(coalesce(cc.total_candidates, 0) AS BIGINT)
-                   AS total_candidates
-          FROM curve c LEFT JOIN cc ON c.nprobe = cc.nprobe),
-        curve3 AS (
-          SELECT *, CAST(CASE WHEN recall_bp >= $RECALL_TARGET_BP
-                              THEN 1 ELSE 0 END AS BIGINT) AS meets_target
-          FROM curve2),
-        sel AS (
-          SELECT CASE WHEN max(meets_target) = 1
-                      THEN min(CASE WHEN meets_target = 1 THEN nprobe END)
-                      ELSE max(nprobe) END AS chosen_p
-          FROM curve3)"""
+          ${md5SampleSql(where = s"vec_id % $QUERY_MOD = 0")}),
+        ${nprobeSweepSql(gridSql(NprobeDial), "sel")}"""
 
   /** The q151/q153/q154 oracle chain: [[nprobeCurveCtes]] (election →
     * `sel(chosen_p)`) + the PQ code chain under RENAMED relations
@@ -862,147 +1000,29 @@ object Similarity {
     * q154 shortlist to RERANK_R and re-rank exactly. */
   private def ivfPqElectedCtes: String = s"""
         $nprobeCurveCtes,
-        psel AS (
-          SELECT v AS cv,
-                 row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                    vec_id) AS c
-          FROM n QUALIFY c <= $PQ_KSUB),
-        subq AS (
-          SELECT n.vec_id, j, s.c,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_SUB + 1),
-                        i -> (v[(j-1)*$PQ_SUB + i] - cv[(j-1)*$PQ_SUB + i])
-                           * (v[(j-1)*$PQ_SUB + i] - cv[(j-1)*$PQ_SUB + i])))
-                      * 1000000.0 + 0.5) AS BIGINT) AS d2_mu
-          FROM n, psel s, $pqJs),
-        bestq AS (
-          SELECT vec_id, j, mdc[2] AS c, mdc[1] AS d2_mu,
-                 CAST(1 AS BIGINT) AS rn
-          FROM (SELECT vec_id, j, min(row(d2_mu, c)) AS mdc
-                FROM subq GROUP BY vec_id, j)),
-        pcodes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM bestq WHERE rn = 1 GROUP BY vec_id),
+        ${pqCodeCtes(pqSelSql("psel"), "psel", "subq", "bestq", "pcodes")},
         qsr2 AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
+          ${md5SampleSql()}),
         qcell2 AS (
-          SELECT q_id, qn, qcell FROM (
-            SELECT q_id, qn, c_id AS qcell,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(qv) + 1),
-                                    i -> qv[i] * cv[i])) / (qn * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS crank
-            FROM qsr2, cents)
-          WHERE crank <= (SELECT chosen_p FROM sel)),
-        lut2 AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr2, psel s, $pqJs),
-        lutl2 AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut2 GROUP BY q_id),
+          ${cellRankSql("q_id, qn, qcell", "q_id, qn, c_id AS qcell",
+            "qsr2, cents", "(SELECT chosen_p FROM sel)")}),
+        ${lutSql("lut2", "lutl2", "qsr2", "psel")},
         served AS (
-          SELECT qc.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (qc.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM pcodes cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          JOIN assigned a ON cd.vec_id = a.vec_id
-          JOIN qcell2 qc ON a.c_id = qc.qcell
-          JOIN lutl2 l ON l.q_id = qc.q_id
-          WHERE cd.vec_id <> qc.q_id)"""
+          ${cellAdcSql("pcodes", "qcell2", "lutl2")})"""
 
   /** The q153/q154/q156 oracle chain: [[ivfPqElectedCtes]] (the
-    * elected-depth ADC relation `served`) + the R grid, the maximal
-    * rank-carrying shortlist `shortall`, ONE exact scoring of it
-    * (`rrscored` — probes × max(R) rows, never corpus-sized), the
-    * per-R re-ranked top-k `rr_topk_r`, exact ground truth `ex2_topk`
-    * (full-corpus probe universe), the per-R recall curve and the
-    * depth election `selr(chosen_r)`. q156 selects the curve; q153
-    * serves `rrscored` restricted to chosen_r; q154 measures the
-    * chosen-R row's per-probe hits. */
+    * elected-depth ADC relation `served`) + [[rerankSweepSql]] against
+    * the exact ground truth `ex2_topk` (full-corpus probe universe):
+    * q156 selects the R curve; q153 serves `rrscored` restricted to
+    * chosen_r; q154 measures the chosen-R row's per-probe hits. */
   private def rerankElectedCtes: String = s"""
         $ivfPqElectedCtes,
-        rsgrid AS (
-          SELECT CAST(r AS BIGINT) AS r
-          FROM (VALUES ${RERANK_RS.map(r => s"($r)").mkString(", ")})
-            AS t(r)),
-        shortall AS (
-          SELECT q_id, neighbor,
-                 row_number() OVER (PARTITION BY q_id
-                                    ORDER BY adc_mu DESC, neighbor)
-                   AS adc_rank
-          FROM served),
-        rrscored AS (
-          SELECT s.q_id, s.adc_rank, s.neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4)
-                   AS cosine
-          FROM shortall s
-          JOIN n ON n.vec_id = s.neighbor
-          JOIN qsr2 q2 ON q2.q_id = s.q_id
-          WHERE s.adc_rank <= ${RERANK_RS.max}),
-        rr_topk_r AS (
-          SELECT r, q_id, neighbor FROM (
-            SELECT g.r, sc.q_id, sc.neighbor,
-                   row_number() OVER (PARTITION BY g.r, sc.q_id
-                                      ORDER BY sc.cosine DESC, sc.neighbor)
-                     AS rk
-            FROM rrscored sc JOIN rsgrid g ON sc.adc_rank <= g.r)
-          WHERE rk <= $TOPK),
-        ex2_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr2
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hitsr AS (
-          SELECT r, q_id, count(*) AS n_hit
-          FROM rr_topk_r JOIN ex2_topk USING (q_id, neighbor)
-          GROUP BY r, q_id),
-        perqr AS (
-          SELECT g.r, g.q_id, coalesce(h.n_hit, 0) AS n_hit
-          FROM (SELECT r, q_id FROM rsgrid, qsr2) g
-          LEFT JOIN hitsr h ON g.r = h.r AND g.q_id = h.q_id),
-        curver AS (
-          SELECT r,
-                 CAST(count(*) AS BIGINT) AS n_probes,
-                 CAST(sum(n_hit) AS BIGINT) AS sum_hits,
-                 CAST(min(n_hit) AS BIGINT) AS min_hits
-          FROM perqr GROUP BY r),
-        curver2 AS (
-          SELECT r, n_probes, sum_hits, min_hits,
-                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
-                      AS BIGINT) AS recall_bp
-          FROM curver),
-        curver3 AS (
-          SELECT *, CAST(CASE WHEN recall_bp >= $RECALL_TARGET_BP
-                              THEN 1 ELSE 0 END AS BIGINT) AS meets_target
-          FROM curver2),
-        selr AS (
-          SELECT CASE WHEN max(meets_target) = 1
-                      THEN min(CASE WHEN meets_target = 1 THEN r END)
-                      ELSE max(r) END AS chosen_r
-          FROM curver3)"""
+        ${rerankSweepSql("", "served", "qsr2", "ex2_topk",
+          exactTopKSql("ex2_topk", "n, qsr2"))}"""
 
   /** The q160/q161 oracle chain: [[nprobeCurveCtes]] (bounded codebook,
-    * assignment, the depth election `sel`) + the RESIDUAL relation
-    * (each vector minus its assigned centroid), the md5-prefix residual
-    * codebook `rsel`, the per-(vector, subspace) argmin code chain over
-    * residuals, the serving probe set `qsr3`, its elected-depth cell
-    * ranking WITH the per-(probe, cell) scalar `qdotc` (the
-    * inner-product decomposition <q,x> ≈ <q,c> + <q,r̂>), per-probe
-    * LUTs over the residual codebook, and the cell-restricted relation
-    * `servedres(q_id, neighbor, adc_mu)`. The residual block is
-    * factored ([[residServeCtes]]) so q157's geometry-elected oracle —
+    * assignment, the depth election `sel`) + the residual serve block
+    * ([[residServeCtes]]), factored so q157's geometry-elected oracle —
     * which already carries [[nprobeCurveCtes]] through its rerank chain
     * — can splice the residual serve in without duplicate CTE names. */
   private def residElectedCtes: String = s"""
@@ -1010,70 +1030,31 @@ object Similarity {
         $residServeCtes"""
 
   /** The residual-serve CTE block (consumes `n`, `cents`, `assigned`
-    * and the depth election `sel(chosen_p)` from [[nprobeCurveCtes]];
-    * emits `servedres`). */
+    * and the depth election `sel(chosen_p)` from [[nprobeCurveCtes]]):
+    * the RESIDUAL relation (each vector minus its assigned centroid), the
+    * residual PQ code chain (`rsel`/`rsubd`/`rbest`/`rcodes`), the
+    * serving probe set `qsr3`, its elected-depth cell ranking WITH the
+    * per-(probe, cell) scalar `qdotc` (the inner-product decomposition
+    * <q,x> ≈ <q,c> + <q,r̂>), per-probe LUTs over the residual codebook,
+    * and the cell-restricted relation `servedres(q_id, neighbor,
+    * adc_mu)`. */
   private def residServeCtes: String = s"""residq AS (
           SELECT n.vec_id, nrm, a.c_id,
                  list_transform(range(1, len(v) + 1), i -> v[i] - cv[i])
                    AS rv
           FROM n JOIN assigned a ON n.vec_id = a.vec_id
           JOIN cents c ON a.c_id = c.c_id),
-        rsel AS (
-          SELECT rv AS cvr,
-                 row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                    vec_id) AS c
-          FROM residq QUALIFY c <= $PQ_KSUB),
-        rsubd AS (
-          SELECT rq.vec_id, j, s.c,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_SUB + 1),
-                        i -> (rv[(j-1)*$PQ_SUB + i] - cvr[(j-1)*$PQ_SUB + i])
-                           * (rv[(j-1)*$PQ_SUB + i] - cvr[(j-1)*$PQ_SUB + i])))
-                      * 1000000.0 + 0.5) AS BIGINT) AS d2_mu
-          FROM residq rq, rsel s, $pqJs),
-        rbest AS (
-          SELECT vec_id, j, mdc[2] AS c, mdc[1] AS d2_mu,
-                 CAST(1 AS BIGINT) AS rn
-          FROM (SELECT vec_id, j, min(row(d2_mu, c)) AS mdc
-                FROM rsubd GROUP BY vec_id, j)),
-        rcodes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM rbest WHERE rn = 1 GROUP BY vec_id),
+        ${pqCodeCtes(pqSelSql("rsel", "residq", "rv", "cvr"), "rsel", "rsubd",
+          "rbest", "rcodes", "residq rq", "rv", "cvr")},
         qsr3 AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
+          ${md5SampleSql()}),
         qcellr AS (
-          SELECT q_id, qn, qcell, qdotc FROM (
-            SELECT q_id, qn, c_id AS qcell,
-                   list_sum(list_transform(range(1, len(qv) + 1),
-                     i -> qv[i] * cv[i])) AS qdotc,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(qv) + 1),
-                                    i -> qv[i] * cv[i])) / (qn * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS crank
-            FROM qsr3, cents)
-          WHERE crank <= (SELECT chosen_p FROM sel)),
-        rlut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cvr[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr3, rsel s, $pqJs),
-        rlutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM rlut GROUP BY q_id),
+          ${cellRankSql("q_id, qn, qcell, qdotc",
+            s"q_id, qn, c_id AS qcell,\n ${dotSql("qv", "cv")} AS qdotc",
+            "qsr3, cents", "(SELECT chosen_p FROM sel)")}),
+        ${lutSql("rlut", "rlutl", "qsr3", "rsel", "cvr")},
         servedres AS (
-          SELECT qc.q_id, cd.vec_id AS neighbor,
-                 CAST(floor((qc.qdotc
-                        + list_sum(list_transform(range(1, $PQ_M + 1),
-                            j -> lt[(j-1)*$PQ_KSUB + code[j]])))
-                      / (qc.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM rcodes cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          JOIN assigned a ON cd.vec_id = a.vec_id
-          JOIN qcellr qc ON a.c_id = qc.qcell
-          JOIN rlutl l ON l.q_id = qc.q_id
-          WHERE cd.vec_id <> qc.q_id)"""
+          ${cellAdcSql("rcodes", "qcellr", "rlutl", s"(qc.qdotc\n + $adcNumSql)")})"""
 
   /** The width-election + width-elected-serve CTE block shared by q157
     * (which shortlists and re-ranks `served_prod`) and q159's oracle
@@ -1091,46 +1072,21 @@ object Similarity {
     * its fallback point): at the 10× replica the per-width argmin
     * grid was the single largest relation in the q157 replay, and
     * recomputing its full-width third doubled work DuckDB had
-    * already done. */
+    * already done. The curve keeps only what the election reads, so
+    * it is [[recallCurveSql]]'s election without the reported columns. */
   private def widthElectedServeCtes(exTopk: String): String = s"""
         wsq AS (
-          SELECT CAST(k AS BIGINT) AS ksub
-          FROM (VALUES ${PQ_WIDTHS.map(w => s"($w)").mkString(", ")})
-            AS t(k)),
-        bestwq AS (
-          SELECT ksub, vec_id, j, mdc[2] AS c, mdc[1] AS d2_mu,
-                 CAST(1 AS BIGINT) AS rn
-          FROM (SELECT w.ksub, vec_id, j, min(row(d2_mu, c)) AS mdc
-                FROM subq, wsq w WHERE c <= w.ksub AND w.ksub < $PQ_KSUB
-                GROUP BY w.ksub, vec_id, j)),
+          ${gridSql(WidthDial, "k")}),
+        ${pqArgminSql("bestwq", "subq", "wsq")},
         codeswq AS (
-          SELECT ksub, vec_id, list(c ORDER BY j) AS code
-          FROM bestwq WHERE rn = 1 GROUP BY ksub, vec_id
+          ${codeListSql("bestwq", "ksub, ", "ksub, ")}
           UNION ALL
           SELECT CAST($PQ_KSUB AS BIGINT) AS ksub, vec_id, code
           FROM pcodes),
         adcw_topk AS (
-          SELECT ksub, q_id, neighbor FROM (
-            SELECT cd.ksub, l.q_id, cd.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY cd.ksub, l.q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                                    j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                                  / (q.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              cd.vec_id) AS rk
-            FROM codeswq cd
-            JOIN n n2 ON cd.vec_id = n2.vec_id
-            CROSS JOIN lutl2 l
-            JOIN qsr2 q ON l.q_id = q.q_id
-            WHERE cd.vec_id <> l.q_id)
-          WHERE rk <= $TOPK),
-        hitsw AS (
-          SELECT ksub, q_id, count(*) AS n_hit
-          FROM adcw_topk JOIN $exTopk USING (q_id, neighbor)
-          GROUP BY ksub, q_id),
-        perqw AS (
-          SELECT g.ksub, g.q_id, coalesce(h.n_hit, 0) AS n_hit
-          FROM (SELECT ksub, q_id FROM wsq, qsr2) g
-          LEFT JOIN hitsw h ON g.ksub = h.ksub AND g.q_id = h.q_id),
+          ${adcTopKSql("codeswq", "lutl2", "qsr2", "ksub")}),
+        ${probeHitsSql("ksub", hitsSql("adcw_topk", exTopk, "ksub"), "wsq",
+          "qsr2", "hitsw", "perqw")},
         curvew AS (
           SELECT ksub, count(*) AS n_probes, sum(n_hit) AS sum_hits
           FROM perqw GROUP BY ksub),
@@ -1150,17 +1106,7 @@ object Similarity {
           SELECT vec_id, code FROM codeswq
           WHERE ksub = (SELECT chosen_w FROM selw2)),
         served_prod AS (
-          SELECT qc.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (qc.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM codes_prod cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          JOIN assigned a ON cd.vec_id = a.vec_id
-          JOIN qcell2 qc ON a.c_id = qc.qcell
-          JOIN lutl2 l ON l.q_id = qc.q_id
-          WHERE cd.vec_id <> qc.q_id)"""
+          ${cellAdcSql("codes_prod", "qcell2", "lutl2")})"""
 
   /** q159's oracle — the WIDTH-ELECTED elected-depth packed serve the
     * streaming twin runs (round 18; through r17 q159 served the
@@ -1175,25 +1121,9 @@ object Similarity {
     * bitwise). */
   private[queries] def ivfPqWidthElectedOracleSql: String = s"""
         $ivfPqElectedCtes,
-        exw_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr2
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
+        ${exactTopKSql("exw_topk", "n, qsr2")},
         ${widthElectedServeCtes("exw_topk")}
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM served_prod
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""
+        ${rankedTopKSql("adc_mu", "served_prod")}"""
 
   /** The encoding-GEOMETRY election CTE block shared by q165 (which
     * selects the 2-row curve) and q157 (whose production serve branches
@@ -1210,135 +1140,43 @@ object Similarity {
     * at the 10× replica the duplicate serve materialization was part
     * of what pushed the single-statement replay past single-node
     * memory. */
-  private def geometryElectionCtes(exTopk: String, rawTopk: String): String = s"""
+  private def geometryElectionCtes(exTopk: String, rawTopk: String): String = {
+    val hits = GeometryDial.grid.zip(Seq("raw_topkg", "res_topkg")).map {
+      case (g, topk) => hitsSql(topk, exTopk, tag = s"'$g' AS geom, ")
+    }.mkString("\n          UNION ALL\n          ")
+    val grid = GeometryDial.grid.map(g => s"('$g')").mkString(", ")
+    s"""
         raw_topkg AS (
           $rawTopk),
         res_topkg AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY adc_mu DESC, neighbor) AS rk
-            FROM servedres)
-          WHERE rk <= $TOPK),
-        hits_geo AS (
-          SELECT 'raw' AS geom, q_id, count(*) AS n_hit
-          FROM raw_topkg JOIN $exTopk USING (q_id, neighbor)
-          GROUP BY q_id
-          UNION ALL
-          SELECT 'resid' AS geom, q_id, count(*) AS n_hit
-          FROM res_topkg JOIN $exTopk USING (q_id, neighbor)
-          GROUP BY q_id),
-        perqg AS (
-          SELECT g.geom, g.q_id, coalesce(h.n_hit, 0) AS n_hit
-          FROM (SELECT geom, q_id
-                FROM (VALUES ('raw'), ('resid')) AS t(geom), qsr2) g
-          LEFT JOIN hits_geo h ON g.geom = h.geom AND g.q_id = h.q_id),
-        curveg AS (
-          SELECT geom,
-                 CAST(count(*) AS BIGINT) AS n_probes,
-                 CAST(sum(n_hit) AS BIGINT) AS sum_hits,
-                 CAST(min(n_hit) AS BIGINT) AS min_hits
-          FROM perqg GROUP BY geom),
-        curveg2 AS (
-          SELECT geom, n_probes, sum_hits, min_hits,
-                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
-                      AS BIGINT) AS recall_bp
-          FROM curveg),
-        selg AS (
-          SELECT CASE WHEN (SELECT recall_bp FROM curveg2
-                            WHERE geom = 'resid')
-                         > (SELECT recall_bp FROM curveg2
-                            WHERE geom = 'raw')
-                      THEN 'resid' ELSE 'raw' END AS chosen_g)"""
+          ${servedTopKSql("servedres")}),
+        ${recallCurveSql(GeometryDial, hits, s"(VALUES $grid) AS t(geom)",
+          "qsr2", "selg", "chosen_g", sfx = "g", hitsName = "hits_geo")}"""
+  }
 
-  /** The q138/q155 oracle chain: normed corpus + the full-width PQ
-    * distance relation ([[pqCtes]] — `sel`/`subd`/`best`), per-width
-    * prefix argmins (`bestw`/`codesw` — the prefix property: one
-    * distance relation serves every width), probe LUTs, the per-width
-    * recall curve `curve3` and width election `selw(chosen_w)`. q138
-    * selects the curve; q155 appends its serve at the chosen width. */
+  /** The q138/q155 oracle chain: normed corpus + the full-width PQ code
+    * chain (`sel`/`subd`/`best`), per-width prefix argmins (`bestw`/
+    * `codesw` — the prefix property: one distance relation serves every
+    * width), probe LUTs, the per-width recall curve `curve3` and width
+    * election `selw(chosen_w)`. q138 selects the curve; q155 appends
+    * its serve at the chosen width. */
   private def pqWidthCurveCtes: String = s"""
         $normedCte,
-        $pqCtes,
-        ws AS (SELECT * FROM (VALUES (CAST(4 AS BIGINT)), (8), (16))
-               AS t(ksub)),
-        bestw AS (
-          SELECT ksub, vec_id, j, mdc[2] AS c, mdc[1] AS d2_mu,
-                 CAST(1 AS BIGINT) AS rn
-          FROM (SELECT w.ksub, vec_id, j, min(row(d2_mu, c)) AS mdc
-                FROM subd, ws w WHERE c <= w.ksub AND w.ksub < $PQ_KSUB
-                GROUP BY w.ksub, vec_id, j)),
+        ${pqCodeCtes(pqSelSql())},
+        ws AS (${gridSql(WidthDial)}),
+        ${pqArgminSql("bestw", "subd", "ws")},
         codesw AS (
-          SELECT ksub, vec_id, list(c ORDER BY j) AS code
-          FROM bestw WHERE rn = 1 GROUP BY ksub, vec_id
+          ${codeListSql("bestw", "ksub, ", "ksub, ")}
           UNION ALL
-          SELECT CAST($PQ_KSUB AS BIGINT) AS ksub, vec_id,
-                 list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
+          ${codeListSql("best", s"CAST($PQ_KSUB AS BIGINT) AS ksub, ")}),
         qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
+          ${md5SampleSql()}),
+        ${lutSql()},
         adc_topk AS (
-          SELECT ksub, q_id, neighbor FROM (
-            SELECT cd.ksub, l.q_id, cd.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY cd.ksub, l.q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                                    j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                                  / (q.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              cd.vec_id) AS rk
-            FROM codesw cd
-            JOIN n n2 ON cd.vec_id = n2.vec_id
-            CROSS JOIN lutl l
-            JOIN qsr q ON l.q_id = q.q_id
-            WHERE cd.vec_id <> l.q_id)
-          WHERE rk <= $TOPK),
-        ex_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits AS (
-          SELECT ksub, q_id, count(*) AS n_hit
-          FROM adc_topk JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY ksub, q_id),
-        perq AS (
-          SELECT g.ksub, g.q_id, coalesce(h.n_hit, 0) AS n_hit
-          FROM (SELECT ksub, q_id FROM ws, qsr) g
-          LEFT JOIN hits h ON g.ksub = h.ksub AND g.q_id = h.q_id),
-        curve AS (
-          SELECT ksub,
-                 CAST(count(*) AS BIGINT) AS n_probes,
-                 CAST(sum(n_hit) AS BIGINT) AS sum_hits,
-                 CAST(min(n_hit) AS BIGINT) AS min_hits
-          FROM perq GROUP BY ksub),
-        curve2 AS (
-          SELECT ksub, n_probes, sum_hits, min_hits,
-                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
-                      AS BIGINT) AS recall_bp
-          FROM curve),
-        curve3 AS (
-          SELECT *, CAST(CASE WHEN recall_bp >= $RECALL_TARGET_BP
-                              THEN 1 ELSE 0 END AS BIGINT) AS meets_target
-          FROM curve2),
-        selw AS (
-          SELECT CASE WHEN max(meets_target) = 1
-                      THEN min(CASE WHEN meets_target = 1 THEN ksub END)
-                      ELSE max(ksub) END AS chosen_w
-          FROM curve3)"""
+          ${adcTopKSql("codesw", key = "ksub")}),
+        ${exactTopKSql("ex_topk", "n, qsr")},
+        ${recallCurveSql(WidthDial, hitsSql("adc_topk", "ex_topk", "ksub"),
+          "ws", "qsr", "selw", "chosen_w")}"""
 
   /** The TRAINED-family oracle chain (q162/q163/q164): the md5-family's
     * curve→elect→serve CTEs re-expressed over the trained quantizers
@@ -1348,192 +1186,70 @@ object Similarity {
     * trained bytes, the elections and the serve every round). Chain:
     * normed corpus → trained centers (+ norms) → assignment →
     * full-corpus md5 probe sample `qsr` (the trained serve's own probe
-    * universe) → probe cell ranking to NPROBE_MAX → exact in-cell
-    * candidates → per-nprobe recall curve vs the inline exact ground
-    * truth `ex_topk` → depth election `selpt(chosen_p)` → trained PQ
-    * codes ([[pqDistCtes]] over the persisted sub-codebooks) →
-    * per-probe LUTs → the cell-restricted ADC relation `servedt` at
-    * the elected depth → the maximal rank-carrying shortlist, ONE
-    * exact scoring `rrscoredt`, per-R re-ranked top-k, the R curve and
-    * its election `selrt(chosen_r)`. q162 selects the nprobe curve,
-    * q163 the R curve, q164 the production serve at both elections. */
+    * universe) → [[nprobeSweepSql]]'s depth election `selpt(chosen_p)`
+    * → trained PQ codes over the persisted sub-codebooks → per-probe
+    * LUTs → the cell-restricted ADC relation `servedt` at the elected
+    * depth → [[rerankSweepSql]]'s R curve and election
+    * `selrt(chosen_r)`. q162 selects the nprobe curve, q163 the R
+    * curve, q164 the production serve at both elections. */
   private def trainedElectedCtes: String = s"""
         $normedCte,
-        rawc AS (
-          SELECT c_id, list_transform(cv, x -> CAST(x AS DOUBLE)) AS cv
-          FROM read_parquet('$TrainedCentroidsPath/*.parquet')),
-        cents AS (
-          SELECT c_id, cv,
-                 sqrt(list_sum(list_transform(cv, x -> x * x))) AS cn
-          FROM rawc),
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
+        $trainedCentsCte,
+        $assignSql,
         qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        qcells AS (
-          SELECT q_id, qv, qn, c_id AS qcell, crank FROM (
-            SELECT q_id, qv, qn, c_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(qv) + 1),
-                                    i -> qv[i] * cv[i])) / (qn * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS crank
-            FROM qsr, cents)
-          WHERE crank <= $NPROBE_MAX),
-        cand AS (
-          SELECT q_id, crank, n.vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4) AS cosine
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          JOIN qcells qc ON a.c_id = qc.qcell
-          WHERE n.vec_id <> q_id),
-        ps AS (
-          SELECT CAST(p AS BIGINT) AS nprobe
-          FROM (VALUES ${NPROBES.map(p => s"($p)").mkString(", ")})
-            AS t(p)),
-        candp AS (
-          SELECT nprobe, q_id, neighbor, cosine
-          FROM cand JOIN ps ON crank <= nprobe),
-        ivf_topk AS (
-          SELECT nprobe, q_id, neighbor FROM (
-            SELECT nprobe, q_id, neighbor,
-                   row_number() OVER (PARTITION BY nprobe, q_id
-                                      ORDER BY cosine DESC, neighbor) AS rk
-            FROM candp)
-          WHERE rk <= $TOPK),
-        ex_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits AS (
-          SELECT nprobe, q_id, count(*) AS n_hit
-          FROM ivf_topk JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY nprobe, q_id),
-        perq AS (
-          SELECT g.nprobe, g.q_id, coalesce(h.n_hit, 0) AS n_hit
-          FROM (SELECT nprobe, q_id FROM ps, qsr) g
-          LEFT JOIN hits h ON g.nprobe = h.nprobe AND g.q_id = h.q_id),
-        cc AS (SELECT nprobe, count(*) AS total_candidates
-               FROM candp GROUP BY nprobe),
-        curve AS (
-          SELECT p.nprobe,
-                 CAST(count(*) AS BIGINT) AS n_probes,
-                 CAST(sum(n_hit) AS BIGINT) AS sum_hits,
-                 CAST(min(n_hit) AS BIGINT) AS min_hits
-          FROM perq p GROUP BY p.nprobe),
-        curve2 AS (
-          SELECT c.nprobe, n_probes, sum_hits, min_hits,
-                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
-                      AS BIGINT) AS recall_bp,
-                 CAST(coalesce(cc.total_candidates, 0) AS BIGINT)
-                   AS total_candidates
-          FROM curve c LEFT JOIN cc ON c.nprobe = cc.nprobe),
-        curve3 AS (
-          SELECT *, CAST(CASE WHEN recall_bp >= $RECALL_TARGET_BP
-                              THEN 1 ELSE 0 END AS BIGINT) AS meets_target
-          FROM curve2),
-        selpt AS (
-          SELECT CASE WHEN max(meets_target) = 1
-                      THEN min(CASE WHEN meets_target = 1 THEN nprobe END)
-                      ELSE max(nprobe) END AS chosen_p
-          FROM curve3),
-        ${pqDistCtes(pqTrainedSelCte)},
-        pcodes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
+          ${md5SampleSql()}),
+        ${nprobeSweepSql("\n          " + gridSql(NprobeDial, "p"), "selpt")},
+        ${pqCodeCtes(pqTrainedSelCte, codes = "pcodes")},
         qcellp AS (
           SELECT q_id, qn, qcell FROM qcells
           WHERE crank <= (SELECT chosen_p FROM selpt)),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
+        ${lutSql()},
         servedt AS (
-          SELECT qc.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (qc.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM pcodes cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          JOIN assigned a ON cd.vec_id = a.vec_id
-          JOIN qcellp qc ON a.c_id = qc.qcell
-          JOIN lutl l ON l.q_id = qc.q_id
-          WHERE cd.vec_id <> qc.q_id),
-        rsgridt AS (
-          SELECT CAST(r AS BIGINT) AS r
-          FROM (VALUES ${RERANK_RS.map(r => s"($r)").mkString(", ")})
-            AS t(r)),
-        shortallt AS (
-          SELECT q_id, neighbor,
-                 row_number() OVER (PARTITION BY q_id
-                                    ORDER BY adc_mu DESC, neighbor)
-                   AS adc_rank
-          FROM servedt),
-        rrscoredt AS (
-          SELECT s.q_id, s.adc_rank, s.neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4)
-                   AS cosine
-          FROM shortallt s
-          JOIN n ON n.vec_id = s.neighbor
-          JOIN qsr q2 ON q2.q_id = s.q_id
-          WHERE s.adc_rank <= ${RERANK_RS.max}),
-        rr_topk_rt AS (
-          SELECT r, q_id, neighbor FROM (
-            SELECT g.r, sc.q_id, sc.neighbor,
-                   row_number() OVER (PARTITION BY g.r, sc.q_id
-                                      ORDER BY sc.cosine DESC, sc.neighbor)
-                     AS rk
-            FROM rrscoredt sc JOIN rsgridt g ON sc.adc_rank <= g.r)
-          WHERE rk <= $TOPK),
-        hitsrt AS (
-          SELECT r, q_id, count(*) AS n_hit
-          FROM rr_topk_rt JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY r, q_id),
-        perqrt AS (
-          SELECT g.r, g.q_id, coalesce(h.n_hit, 0) AS n_hit
-          FROM (SELECT r, q_id FROM rsgridt, qsr) g
-          LEFT JOIN hitsrt h ON g.r = h.r AND g.q_id = h.q_id),
-        curvert AS (
-          SELECT r,
-                 CAST(count(*) AS BIGINT) AS n_probes,
-                 CAST(sum(n_hit) AS BIGINT) AS sum_hits,
-                 CAST(min(n_hit) AS BIGINT) AS min_hits
-          FROM perqrt GROUP BY r),
-        curvert2 AS (
-          SELECT r, n_probes, sum_hits, min_hits,
-                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
-                      AS BIGINT) AS recall_bp
-          FROM curvert),
-        curvert3 AS (
-          SELECT *, CAST(CASE WHEN recall_bp >= $RECALL_TARGET_BP
-                              THEN 1 ELSE 0 END AS BIGINT) AS meets_target
-          FROM curvert2),
-        selrt AS (
-          SELECT CASE WHEN max(meets_target) = 1
-                      THEN min(CASE WHEN meets_target = 1 THEN r END)
-                      ELSE max(r) END AS chosen_r
-          FROM curvert3)"""
+          ${cellAdcSql("pcodes", "qcellp", "lutl")}),
+        ${rerankSweepSql("t", "servedt", "qsr", "ex_topk")}"""
+
+  /** q135/q142's oracle over the codebook `selCte` defines: full-scan
+    * ADC of every code row against the md5 probes' LUTs, top-[[TOPK]]. */
+  private def fullScanAdcOracleSql(selCte: String): String = s"""
+        $normedCte,
+        ${pqCodeCtes(selCte, codes = "codes")},
+        qsr AS (
+          ${md5SampleSql()}),
+        ${lutSql()},
+        scored AS (
+          ${fullScanAdcSql("codes")})
+        ${rankedTopKSql("adc_mu", "scored")}"""
+
+  /** q137/q143's oracle over the codebook `selCte` defines: recall@[[TOPK]]
+    * of the full-scan ADC top-k against the exact top-k. */
+  private def adcRecallOracleSql(selCte: String): String = s"""
+        $normedCte,
+        ${pqCodeCtes(selCte, codes = "pcodes")},
+        qsr AS (
+          ${md5SampleSql()}),
+        ${lutSql()},
+        adc_topk AS (
+          ${adcTopKSql("pcodes")}),
+        ${exactTopKSql("ex_topk", "n, qsr")},
+        ${recallRowsSql("adc_topk", "ex_topk", "qsr")}"""
+
+  /** q136/q158's oracle: coarse cells from `centsCtes`, PQ codes over the
+    * codebook `selCte` defines, each md5 probe's cells `qcell`, and the
+    * cell-restricted ADC top-[[TOPK]]. */
+  private def cellAdcOracleSql(centsCtes: String, selCte: String,
+      qcell: String): String = s"""
+        $normedCte,
+        $centsCtes,
+        $assignSql,
+        ${pqCodeCtes(selCte, codes = "pcodes")},
+        qsr AS (
+          ${md5SampleSql()}),
+        qcell AS (
+          $qcell),
+        ${lutSql()},
+        scored AS (
+          ${cellAdcSql("pcodes", "qcell", "lutl")})
+        ${rankedTopKSql("adc_mu", "scored")}"""
 
   /** Where q54 materializes its trained codebook so the DuckDB oracle can
     * replay the identical search over the identical centroids (KMeans
@@ -1663,6 +1379,15 @@ object Similarity {
       .select(col("c_id"), col("cv"))
       .withColumn("cn", l2norm(col("cv")))
 
+  /** SQL twin of [[trainedCents]] as `cents(c_id, cv, cn)`. */
+  private def trainedCentsCte: String = s"""rawc AS (
+          SELECT c_id, list_transform(cv, x -> CAST(x AS DOUBLE)) AS cv
+          FROM read_parquet('$TrainedCentroidsPath/*.parquet')),
+        cents AS (
+          SELECT c_id, cv,
+                 sqrt(list_sum(list_transform(cv, x -> x * x))) AS cn
+          FROM rawc)"""
+
   /** q158's DURABLE packed index over the TRAINED quantizer pair — the
     * FAISS `IVFPQ` a deployment actually TRAINS (q54's KMeans coarse
     * codebook + q142's per-subspace KMeans PQ sub-codebooks), stored
@@ -1767,22 +1492,13 @@ object Similarity {
       oracle = Some(s"""
         $normedCte,
         qs AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
+          ${md5SampleSql()}),
         scored AS (
           SELECT q_id, vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                               i -> v[i] * qv[i])) / (nrm * qn), 4)
+                 ${cosine4Sql()}
                    AS cosine
           FROM n, qs WHERE vec_id <> q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor) AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+        ${rankedTopKSql("cosine", "scored")}"""),
       run = (spark, dir) => {
         val n = normed(spark, dir)
         servedTopK(exactScored(n.crossJoin(broadcast(pqProbes(n)))), "cosine")
@@ -1805,22 +1521,13 @@ object Similarity {
       oracle = Some(s"""
         $normedCte,
         qs AS (
-          SELECT vec_id AS q_id, label AS q_label, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
+          ${md5SampleSql("vec_id AS q_id, label AS q_label, v AS qv, nrm AS qn")}),
         scored AS (
           SELECT q_id, vec_id AS neighbor, label AS neg_label,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                               i -> v[i] * qv[i])) / (nrm * qn), 4)
+                 ${cosine4Sql()}
                    AS cosine
           FROM n, qs WHERE label <> q_label)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor) AS BIGINT) AS rank,
-               neighbor, neg_label, cosine
-        FROM scored
-        QUALIFY rank <= $HARDNEG_K
-        ORDER BY q_id, rank"""),
+        ${rankedTopKSql("cosine", "scored", "neighbor, neg_label", HARDNEG_K)}"""),
       run = (spark, dir) => {
         val n = normed(spark, dir)
         val qs = md5Prefix(n, QUERY_N)
@@ -1849,12 +1556,10 @@ object Similarity {
       oracle = Some(s"""
         $normedCte
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               round(list_sum(list_transform(range(1, len(a.v) + 1),
-                                             i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm), 4)
+               ${cosine4Sql("a.v", "b.v", "a.nrm", "b.nrm")}
                  AS cosine
         FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE list_sum(list_transform(range(1, len(a.v) + 1),
-                                      i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm)
+        WHERE ${cosineSql("a.v", "b.v", "a.nrm", "b.nrm")}
               >= $NEARDUP_COS
         ORDER BY vec_a, vec_b"""),
       run = (spark, dir) => q21Plan(normed(spark, dir))),
@@ -1892,48 +1597,13 @@ object Similarity {
     Q("q54_ann_ivf_trained",
       oracle = Some(s"""
         $normedCte,
-        rawc AS (
-          SELECT c_id, list_transform(cv, x -> CAST(x AS DOUBLE)) AS cv
-          FROM read_parquet('$TrainedCentroidsPath/*.parquet')),
-        cents AS (
-          SELECT c_id, cv,
-                 sqrt(list_sum(list_transform(cv, x -> x * x))) AS cn
-          FROM rawc),
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
+        $trainedCentsCte,
+        $assignSql,
         qs AS (
-          SELECT q_id, qv, qn, qcell FROM (
-            SELECT n.vec_id AS q_id, v AS qv, nrm AS qn, c_id AS qcell,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents
-            WHERE n.vec_id % $QUERY_MOD = 0)
-          WHERE rn <= 2),
-        scored AS (
-          SELECT q_id, n.vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4) AS cosine
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          JOIN qs ON a.c_id = qs.qcell
-          WHERE n.vec_id <> q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor) AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+          ${assignRankSql("q_id, qv, qn, qcell",
+            "n.vec_id AS q_id, v AS qv, nrm AS qn, c_id AS qcell",
+            s"\n WHERE n.vec_id % $QUERY_MOD = 0", "rn <= 2")}),
+        ${inCellServeSql("qs")}"""),
       run = (spark, dir) => {
         // fit-on-miss / reuse-on-hit: the fit runs only when the fixed
         // path holds no codebook for this corpus's SOURCE-FILE identity
@@ -1978,52 +1648,15 @@ object Similarity {
       oracle = Some(s"""
         $normedCte,
         $centsCte,
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
+        $assignSql,
         qsr AS (
-          SELECT n.vec_id AS q_id, v AS qv, nrm AS qn, a.c_id AS qcell
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          WHERE n.vec_id % $QUERY_MOD = 0
-          ORDER BY md5(CAST(n.vec_id AS VARCHAR)), n.vec_id
-          LIMIT $QUERY_N),
-        ivf_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n JOIN assigned a ON n.vec_id = a.vec_id
-            JOIN qsr ON a.c_id = qsr.qcell
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        ex_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits AS (
-          SELECT q_id, count(*) AS n_hit
-          FROM ivf_topk JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY q_id)
-        SELECT q.q_id,
-               CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-               round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
-        FROM qsr q LEFT JOIN hits h ON q.q_id = h.q_id
-        ORDER BY q.q_id"""),
+          ${md5SampleSql("n.vec_id AS q_id, v AS qv, nrm AS qn, a.c_id AS qcell",
+            "n JOIN assigned a ON n.vec_id = a.vec_id",
+            s"n.vec_id % $QUERY_MOD = 0", "n.vec_id")}),
+        ${exactTopKSql("ivf_topk",
+          "n JOIN assigned a ON n.vec_id = a.vec_id\n JOIN qsr ON a.c_id = qsr.qcell")},
+        ${exactTopKSql("ex_topk", "n, qsr")},
+        ${recallRowsSql("ivf_topk", "ex_topk", "qsr")}"""),
       run = (spark, dir) => {
         // exact ground truth comes from the durable ann_gt_ivf artifact
         // (one build per corpus identity across processes; a 320-row
@@ -2089,30 +1722,11 @@ object Similarity {
       oracle = Some(s"""
         $nprobeCurveCtes,
         qall AS (
-          SELECT q_id, qv, qn, qcell, crank FROM (
-            SELECT n.vec_id AS q_id, v AS qv, nrm AS qn, c_id AS qcell,
-                   row_number() OVER (PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS crank
-            FROM n, cents
-            WHERE n.vec_id % $QUERY_MOD = 0)
-          WHERE crank <= (SELECT chosen_p FROM sel)),
-        served AS (
-          SELECT q_id, n.vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4) AS cosine
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          JOIN qall ON a.c_id = qall.qcell
-          WHERE n.vec_id <> q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM served
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+          ${cellRankSql("q_id, qv, qn, qcell, crank",
+            "n.vec_id AS q_id, v AS qv, nrm AS qn, c_id AS qcell",
+            s"n, cents\n WHERE n.vec_id % $QUERY_MOD = 0",
+            "(SELECT chosen_p FROM sel)", "n.vec_id", "v", "nrm")}),
+        ${inCellServeSql("qall", "served")}"""),
       run = (spark, dir) => {
         val n = normed(spark, dir)
         ivfSearch(n, storedCents(spark, dir), nprobe = electedNprobe(spark, dir))
@@ -2151,8 +1765,7 @@ object Similarity {
         ss AS (SELECT CAST(ceil(sqrt(k)) AS BIGINT) AS s FROM kk),
         ranked AS (
           SELECT vec_id AS c_id, v AS cv, nrm AS cn,
-                 row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                    vec_id) AS crn
+                 row_number() OVER (ORDER BY ${md5OrderSql()}) AS crn
           FROM n),
         cents AS (SELECT c_id, cv, cn FROM ranked, kk WHERE crn <= k),
         supers AS (SELECT c_id AS s_id, cv AS sv, cn AS sn
@@ -2196,23 +1809,8 @@ object Similarity {
             JOIN cents c ON c.c_id = g.c_id)
           WHERE rn = 1),
         qs AS (
-          SELECT n.vec_id AS q_id, v AS qv, nrm AS qn, a.c_id AS qcell
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          WHERE n.vec_id % $QUERY_MOD = 0),
-        scored AS (
-          SELECT q_id, n.vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4) AS cosine
-          FROM n JOIN assigned a ON n.vec_id = a.vec_id
-          JOIN qs ON a.c_id = qs.qcell
-          WHERE n.vec_id <> q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor) AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+          $ownCellProbesSql),
+        ${inCellServeSql("qs")}"""),
       run = (spark, dir) => twoLevelSearch(spark, dir)),
 
     // ------------------------------------------------------------------
@@ -2272,43 +1870,7 @@ object Similarity {
     // codes + LUTs inline in SQL, so the gate value-checks the stored
     // bytes every round (the q17/q78 discipline).
     Q("q135_pq_adc_topk",
-      oracle = Some(s"""
-        $normedCte,
-        $pqCtes,
-        codes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
-        qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
-        scored AS (
-          SELECT l.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (q.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM codes cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          CROSS JOIN lutl l
-          JOIN qsr q ON l.q_id = q.q_id
-          WHERE cd.vec_id <> l.q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+      oracle = Some(fullScanAdcOracleSql(pqSelSql())),
       run = (spark, dir) =>
         // serves from the DURABLE bit-packed index (ivfPqIndex): the
         // scan reads (vec_id, nrm, packed) — 24 bytes a row — and the
@@ -2340,58 +1902,8 @@ object Similarity {
     // scan, q136 = packed-ADC cell scan, q151 = the same at elected
     // depth.
     Q("q136_ivfpq_topk",
-      oracle = Some(s"""
-        $normedCte,
-        $centsCte,
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
-        $pqCtes,
-        pcodes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
-        qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        qcell AS (
-          SELECT q_id, qn, a.c_id AS qcell
-          FROM qsr JOIN assigned a ON qsr.q_id = a.vec_id),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
-        scored AS (
-          SELECT qc.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (qc.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM pcodes cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          JOIN assigned a ON cd.vec_id = a.vec_id
-          JOIN qcell qc ON a.c_id = qc.qcell
-          JOIN lutl l ON l.q_id = qc.q_id
-          WHERE cd.vec_id <> qc.q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+      oracle = Some(cellAdcOracleSql(centsCte, pqSelSql(),
+        "SELECT q_id, qn, a.c_id AS qcell\n FROM qsr JOIN assigned a ON qsr.q_id = a.vec_id")),
       run = (spark, dir) =>
         // cell-restricted packed-ADC serve from the durable index at
         // nprobe = 1 (a probe's rank-1 cell IS its assigned cell — the
@@ -2442,15 +1954,8 @@ object Similarity {
     Q("q153_ivfpq_rerank",
       oracle = Some(s"""
         $rerankElectedCtes
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM rrscored
-        WHERE adc_rank <= (SELECT chosen_r FROM selr)
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+        ${rankedTopKSql("cosine",
+          "rrscored\n WHERE adc_rank <= (SELECT chosen_r FROM selr)")}"""),
       run = (spark, dir) =>
         ivfPqRerank(spark, dir, electedRerankR(spark, dir))),
 
@@ -2470,17 +1975,9 @@ object Similarity {
     Q("q154_rerank_recall",
       oracle = Some(s"""
         $rerankElectedCtes,
-        hits2 AS (
-          SELECT q_id, count(*) AS n_hit
-          FROM (SELECT q_id, neighbor FROM rr_topk_r
-                WHERE r = (SELECT chosen_r FROM selr)) tq154
-          JOIN ex2_topk USING (q_id, neighbor)
-          GROUP BY q_id)
-        SELECT q.q_id,
-               CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-               round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
-        FROM qsr2 q LEFT JOIN hits2 h ON q.q_id = h.q_id
-        ORDER BY q.q_id"""),
+        ${recallRowsSql("(SELECT q_id, neighbor FROM rr_topk_r\n" +
+          " WHERE r = (SELECT chosen_r FROM selr)) tq154", "ex2_topk", "qsr2",
+          "hits2")}"""),
       run = (spark, dir) =>
         recallRows(ivfPqRerank(spark, dir, electedRerankR(spark, dir)),
           pqGroundTruth(spark, dir), pqProbes(normed(spark, dir)))),
@@ -2546,37 +2043,19 @@ object Similarity {
         ${geometryElectionCtes("ex2_topk",
           s"SELECT q_id, neighbor FROM shortall WHERE adc_rank <= $TOPK")},
         short_prod AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY adc_mu DESC, neighbor) AS rk
-            FROM served_prod)
-          WHERE rk <= (SELECT chosen_r FROM selr)
-            AND (SELECT chosen_g FROM selg) = 'raw'
+          ${servedTopKSql("served_prod", "(SELECT chosen_r FROM selr)\n" +
+            " AND (SELECT chosen_g FROM selg) = 'raw'")}
           UNION ALL
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY adc_mu DESC, neighbor) AS rk
-            FROM servedres)
-          WHERE rk <= (SELECT chosen_r FROM selr)
-            AND (SELECT chosen_g FROM selg) = 'resid'),
+          ${servedTopKSql("servedres", "(SELECT chosen_r FROM selr)\n" +
+            " AND (SELECT chosen_g FROM selg) = 'resid'")}),
         rr_prod AS (
           SELECT s.q_id, s.neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                                i -> v[i] * qv[i])) / (nrm * qn), 4)
+                 ${cosine4Sql()}
                    AS cosine
           FROM short_prod s
           JOIN n ON n.vec_id = s.neighbor
           JOIN qsr2 q2 ON q2.q_id = s.q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM rr_prod
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+        ${rankedTopKSql("cosine", "rr_prod")}"""),
       run = (spark, dir) =>
         productionServeAt(spark, dir, electedGeometry(spark, dir))),
 
@@ -2594,57 +2073,7 @@ object Similarity {
     // PQ codebook. Same scale shape as q130: one linear ADC pass + one
     // linear exact pass, everything after is (probes × k)-bounded.
     Q("q137_pq_recall",
-      oracle = Some(s"""
-        $normedCte,
-        $pqCtes,
-        pcodes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
-        qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
-        adc_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT l.q_id, cd.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY l.q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                                    j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                                  / (q.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              cd.vec_id) AS rk
-            FROM pcodes cd
-            JOIN n n2 ON cd.vec_id = n2.vec_id
-            CROSS JOIN lutl l
-            JOIN qsr q ON l.q_id = q.q_id
-            WHERE cd.vec_id <> l.q_id)
-          WHERE rk <= $TOPK),
-        ex_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits AS (
-          SELECT q_id, count(*) AS n_hit
-          FROM adc_topk JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY q_id)
-        SELECT q.q_id,
-               CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-               round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
-        FROM qsr q LEFT JOIN hits h ON q.q_id = h.q_id
-        ORDER BY q.q_id"""),
+      oracle = Some(adcRecallOracleSql(pqSelSql())),
       run = (spark, dir) =>
         // the ADC side is q135's serve over the packed ivfpq_index
         // artifact (the thing under evaluation IS the materialized
@@ -2707,24 +2136,8 @@ object Similarity {
           SELECT vec_id, code FROM codesw
           WHERE ksub = (SELECT chosen_w FROM selw)),
         scored AS (
-          SELECT l.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (q.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM codes_at cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          CROSS JOIN lutl l
-          JOIN qsr q ON l.q_id = q.q_id
-          WHERE cd.vec_id <> l.q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+          ${fullScanAdcSql("codes_at")})
+        ${rankedTopKSql("adc_mu", "scored")}"""),
       run = (spark, dir) => {
         // serve from the WIDTH-ELECTED packed index artifact (built at
         // most once per corpus at the elected ksub — the r16 residue
@@ -2761,20 +2174,10 @@ object Similarity {
         $sqCtes,
         scored AS (
           SELECT q_id, s.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, len(s.sv) + 1),
-                        i -> s.sv[i] * qsv[i]))
-                      * qa * s.amax / (16129.0 * (qn * s.nrm))
-                      * 1000000.0 + 0.5) AS BIGINT) AS sq_mu
+                 $sqMuSql AS sq_mu
           FROM sq s, qsq
           WHERE s.vec_id <> q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY sq_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, sq_mu
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+        ${rankedTopKSql("sq_mu", "scored")}"""),
       run = (spark, dir) => {
         // serve from the DURABLE sq8_index artifact (1-byte code lanes
         // on disk, rehydrated to integer-valued doubles — an exact
@@ -2797,36 +2200,10 @@ object Similarity {
         $normedCte,
         $sqCtes,
         sq_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, s.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(s.sv) + 1),
-                                    i -> s.sv[i] * qsv[i]))
-                                  * qa * s.amax / (16129.0 * (qn * s.nrm))
-                                  * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              s.vec_id) AS rk
-            FROM sq s, qsq
-            WHERE s.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        ex_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, s.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(s.v) + 1),
-                                    i -> s.v[i] * qv[i])) / (s.nrm * qn), 4) DESC,
-                              s.vec_id) AS rk
-            FROM sq s, qsq
-            WHERE s.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits AS (
-          SELECT q_id, count(*) AS n_hit
-          FROM sq_topk JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY q_id)
-        SELECT q.q_id,
-               CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-               round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
-        FROM qsq q LEFT JOIN hits h ON q.q_id = h.q_id
-        ORDER BY q.q_id"""),
+          ${windowTopKSql("q_id, neighbor", "q_id, s.vec_id AS neighbor", "q_id",
+            s"$sqMuSql DESC,\n s.vec_id", "FROM sq s, qsq\n WHERE s.vec_id <> q_id")}),
+        ${exactTopKSql("ex_topk", "sq s, qsq", "s")},
+        ${recallRowsSql("sq_topk", "ex_topk", "qsq")}"""),
       run = (spark, dir) => {
         // the quantized side is q140's serve over the durable sq8_index;
         // exact ground truth is the durable ann_gt_sq8 artifact (probes +
@@ -2854,43 +2231,7 @@ object Similarity {
     // 100 TB is a SAMPLE fit (k-means is per-iteration linear); the
     // artifact is 16 rows.
     Q("q142_pq_trained_topk",
-      oracle = Some(s"""
-        $normedCte,
-        ${pqDistCtes(pqTrainedSelCte)},
-        codes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
-        qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
-        scored AS (
-          SELECT l.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (q.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM codes cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          CROSS JOIN lutl l
-          JOIN qsr q ON l.q_id = q.q_id
-          WHERE cd.vec_id <> l.q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+      oracle = Some(fullScanAdcOracleSql(pqTrainedSelCte)),
       run = (spark, dir) => trainedPqServe(spark, dir)),
 
     // ------------------------------------------------------------------
@@ -2902,57 +2243,7 @@ object Similarity {
     // exact ground truth, same intersection arithmetic — only `sel`
     // differs.
     Q("q143_pq_trained_recall",
-      oracle = Some(s"""
-        $normedCte,
-        ${pqDistCtes(pqTrainedSelCte)},
-        pcodes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
-        qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
-        adc_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT l.q_id, cd.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY l.q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                                    j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                                  / (q.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              cd.vec_id) AS rk
-            FROM pcodes cd
-            JOIN n n2 ON cd.vec_id = n2.vec_id
-            CROSS JOIN lutl l
-            JOIN qsr q ON l.q_id = q.q_id
-            WHERE cd.vec_id <> l.q_id)
-          WHERE rk <= $TOPK),
-        ex_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits AS (
-          SELECT q_id, count(*) AS n_hit
-          FROM adc_topk JOIN ex_topk USING (q_id, neighbor)
-          GROUP BY q_id)
-        SELECT q.q_id,
-               CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-               round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
-        FROM qsr q LEFT JOIN hits h ON q.q_id = h.q_id
-        ORDER BY q.q_id"""),
+      oracle = Some(adcRecallOracleSql(pqTrainedSelCte)),
       run = (spark, dir) =>
         // q142's serve; exact ground truth: the durable ann_gt_pq artifact
         // (the same probes evaluate the random-codebook q137, so the
@@ -2977,70 +2268,9 @@ object Similarity {
     // q54/q142 discipline), so the driver's gate value-checks both
     // the trained bytes and the packed index bytes every round.
     Q("q158_ivfpq_trained",
-      oracle = Some(s"""
-        $normedCte,
-        rawc AS (
-          SELECT c_id, list_transform(cv, x -> CAST(x AS DOUBLE)) AS cv
-          FROM read_parquet('$TrainedCentroidsPath/*.parquet')),
-        cents AS (
-          SELECT c_id, cv,
-                 sqrt(list_sum(list_transform(cv, x -> x * x))) AS cn
-          FROM rawc),
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
-        ${pqDistCtes(pqTrainedSelCte)},
-        pcodes AS (
-          SELECT vec_id, list(c ORDER BY j) AS code
-          FROM best WHERE rn = 1 GROUP BY vec_id),
-        qsr AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn
-          FROM n ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-          LIMIT $QUERY_N),
-        qcell AS (
-          SELECT q_id, qn, qcell FROM (
-            SELECT q_id, qn, c_id AS qcell,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(qv) + 1),
-                                    i -> qv[i] * cv[i])) / (qn * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS crank
-            FROM qsr, cents)
-          WHERE crank <= 2),
-        lut AS (
-          SELECT q_id, j, s.c,
-                 list_sum(list_transform(range(1, $PQ_SUB + 1),
-                   i -> qv[(j-1)*$PQ_SUB + i] * cv[(j-1)*$PQ_SUB + i])) AS lv
-          FROM qsr, sel s, $pqJs),
-        lutl AS (
-          SELECT q_id, list(lv ORDER BY j, c) AS lt
-          FROM lut GROUP BY q_id),
-        scored AS (
-          SELECT qc.q_id, cd.vec_id AS neighbor,
-                 CAST(floor(list_sum(list_transform(range(1, $PQ_M + 1),
-                        j -> lt[(j-1)*$PQ_KSUB + code[j]]))
-                      / (qc.qn * n2.nrm) * 1000000.0 + 0.5) AS BIGINT)
-                   AS adc_mu
-          FROM pcodes cd
-          JOIN n n2 ON cd.vec_id = n2.vec_id
-          JOIN assigned a ON cd.vec_id = a.vec_id
-          JOIN qcell qc ON a.c_id = qc.qcell
-          JOIN lutl l ON l.q_id = qc.q_id
-          WHERE cd.vec_id <> qc.q_id)
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM scored
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+      oracle = Some(cellAdcOracleSql(trainedCentsCte, pqTrainedSelCte,
+        cellRankSql("q_id, qn, qcell", "q_id, qn, c_id AS qcell", "qsr, cents",
+          "2"))),
       run = (spark, dir) =>
         trainedPackedServe(spark, dir, nprobe = 2, topk = TOPK)),
 
@@ -3071,14 +2301,7 @@ object Similarity {
     Q("q160_ivfpq_residual",
       oracle = Some(s"""
         $residElectedCtes
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY adc_mu DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, adc_mu
-        FROM servedres
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+        ${rankedTopKSql("adc_mu", "servedres")}"""),
       run = (spark, dir) =>
         ivfPqResidServe(spark, dir, electedNprobe(spark, dir))),
 
@@ -3098,31 +2321,9 @@ object Similarity {
       oracle = Some(s"""
         $residElectedCtes,
         res_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY adc_mu DESC, neighbor) AS rk
-            FROM servedres)
-          WHERE rk <= $TOPK),
-        ex3_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr3
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        hits3 AS (
-          SELECT q_id, count(*) AS n_hit
-          FROM res_topk JOIN ex3_topk USING (q_id, neighbor)
-          GROUP BY q_id)
-        SELECT q.q_id,
-               CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-               round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
-        FROM qsr3 q LEFT JOIN hits3 h ON q.q_id = h.q_id
-        ORDER BY q.q_id"""),
+          ${servedTopKSql("servedres")}),
+        ${exactTopKSql("ex3_topk", "n, qsr3")},
+        ${recallRowsSql("res_topk", "ex3_topk", "qsr3", "hits3")}"""),
       run = (spark, dir) =>
         recallRows(ivfPqResidServe(spark, dir, electedNprobe(spark, dir)),
           pqGroundTruth(spark, dir), pqProbes(normed(spark, dir)))),
@@ -3197,15 +2398,8 @@ object Similarity {
     Q("q164_trained_production",
       oracle = Some(s"""
         $trainedElectedCtes
-        SELECT q_id,
-               CAST(row_number() OVER (PARTITION BY q_id
-                                       ORDER BY cosine DESC, neighbor)
-                    AS BIGINT) AS rank,
-               neighbor, cosine
-        FROM rrscoredt
-        WHERE adc_rank <= (SELECT chosen_r FROM selrt)
-        QUALIFY rank <= $TOPK
-        ORDER BY q_id, rank"""),
+        ${rankedTopKSql("cosine",
+          "rrscoredt\n WHERE adc_rank <= (SELECT chosen_r FROM selrt)")}"""),
       run = (spark, dir) => trainedProductionServe(spark, dir)),
 
     // ------------------------------------------------------------------
@@ -3227,22 +2421,8 @@ object Similarity {
       oracle = Some(s"""
         $ivfPqElectedCtes,
         $residServeCtes,
-        exg_topk AS (
-          SELECT q_id, neighbor FROM (
-            SELECT q_id, n.vec_id AS neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY round(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * qv[i])) / (nrm * qn), 4) DESC,
-                              n.vec_id) AS rk
-            FROM n, qsr2
-            WHERE n.vec_id <> q_id)
-          WHERE rk <= $TOPK),
-        ${geometryElectionCtes("exg_topk", s"""SELECT q_id, neighbor FROM (
-            SELECT q_id, neighbor,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY adc_mu DESC, neighbor) AS rk
-            FROM served)
-          WHERE rk <= $TOPK""")}
+        ${exactTopKSql("exg_topk", "n, qsr2")},
+        ${geometryElectionCtes("exg_topk", servedTopKSql("served"))}
         SELECT c.geom, n_probes, sum_hits, min_hits, recall_bp,
                CAST(CASE WHEN c.geom = s.chosen_g THEN 1 ELSE 0 END
                     AS BIGINT) AS chosen
@@ -3353,8 +2533,7 @@ object Similarity {
             ON a.signature = b.signature AND a.vec_id < b.vec_id),
         scored AS (
           SELECT id_a, id_b,
-                 round(list_sum(list_transform(range(1, len(na.v) + 1),
-                        i -> na.v[i] * nb.v[i])) / (na.nrm * nb.nrm), 4) AS cosine
+                 ${cosine4Sql("na.v", "nb.v", "na.nrm", "nb.nrm")} AS cosine
           FROM cand
           JOIN n na ON id_a = na.vec_id
           JOIN n nb ON id_b = nb.vec_id)
@@ -3402,8 +2581,7 @@ object Similarity {
           WHERE n.vec_id = 0),
         scored AS (
           SELECT n.vec_id AS neighbor,
-                 round(list_sum(list_transform(range(1, len(v) + 1),
-                        i -> v[i] * pv[i])) / (nrm * pn), 4) AS cosine
+                 ${cosine4Sql("v", "pv", "nrm", "pn")} AS cosine
           FROM n JOIN sig s ON n.vec_id = s.vec_id CROSS JOIN probe
           WHERE (s.signature >> 4) = ph AND n.vec_id <> 0)
         SELECT CAST(row_number() OVER (ORDER BY cosine DESC, neighbor)
@@ -3490,8 +2668,7 @@ object Similarity {
           FROM cand
           JOIN n na ON id_a = na.vec_id
           JOIN n nb ON id_b = nb.vec_id
-          WHERE round(list_sum(list_transform(range(1, len(na.v) + 1),
-                  i -> na.v[i] * nb.v[i])) / (na.nrm * nb.nrm), 4)
+          WHERE ${cosine4Sql("na.v", "nb.v", "na.nrm", "nb.nrm")}
                 >= $EMBED_DEDUP_COS),
         nodes AS (SELECT id_a AS id FROM vp UNION SELECT id_b FROM vp),
         edges AS (
@@ -3548,23 +2725,13 @@ object Similarity {
       oracle = Some(s"""
         $normedCte,
         $centsCte,
-        assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, c_id,
-                   row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(range(1, len(v) + 1),
-                                    i -> v[i] * cv[i])) / (nrm * cn) * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              c_id) AS rn
-            FROM n, cents)
-          WHERE rn = 1),
+        $assignSql,
         m AS (
           SELECT n.vec_id, v, nrm, c_id FROM n JOIN assigned USING (vec_id)),
         dom AS (
           SELECT DISTINCT b.vec_id
           FROM m a JOIN m b ON a.c_id = b.c_id AND a.vec_id < b.vec_id
-          WHERE list_sum(list_transform(range(1, len(a.v) + 1),
-                  i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm) >= $NEARDUP_COS)
+          WHERE ${cosineSql("a.v", "b.v", "a.nrm", "b.nrm")} >= $NEARDUP_COS)
         SELECT c_id,
                count(*) AS n_vectors,
                CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -3613,8 +2780,7 @@ object Similarity {
           FROM n JOIN sig USING (vec_id) JOIN split USING (vec_id)),
         hits AS (
           SELECT c.vec_id, b.vec_id AS bench_id,
-                 round(list_sum(list_transform(range(1, len(c.v) + 1),
-                        i -> c.v[i] * b.v[i])) / (c.nrm * b.nrm), 4) AS cosine
+                 ${cosine4Sql("c.v", "b.v", "c.nrm", "b.nrm")} AS cosine
           FROM m c JOIN m b
             ON c.signature = b.signature AND c.dec < 9 AND b.dec >= 9),
         flagged AS (SELECT * FROM hits WHERE cosine >= $CONTAM_COS),
@@ -3681,13 +2847,10 @@ object Similarity {
     // (the q110 construction).
     Q("q116_mmr_diverse",
       oracle = Some {
-        def cosSql(aV: String, aN: String, bV: String, bN: String) =
-          s"round(list_sum(list_transform(range(1, len($aV) + 1), " +
-            s"i -> $aV[i] * $bV[i])) / ($aN * $bN), 4)"
         val steps = (2 to MMR_K).map { k =>
           s"""m$k AS (
             SELECT c.vec_id, c.v, c.nrm, c.rel,
-                   max(${cosSql("c.v", "c.nrm", "s.v", "s.nrm")}) AS msim
+                   max(${cosine4Sql("c.v", "s.v", "c.nrm", "s.nrm")}) AS msim
             FROM pool c, sel${k - 1} s
             WHERE c.vec_id NOT IN (SELECT vec_id FROM sel${k - 1})
             GROUP BY c.vec_id, c.v, c.nrm, c.rel),
@@ -3699,10 +2862,9 @@ object Similarity {
         s"""
         $normedCte,
         q AS (
-          SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n
-          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1),
+          ${md5SampleSql(k = 1)}),
         cand AS (
-          SELECT vec_id, v, nrm, ${cosSql("v", "nrm", "qv", "qn")} AS rel
+          SELECT vec_id, v, nrm, ${cosine4Sql()} AS rel
           FROM n, q WHERE vec_id <> q_id),
         pool AS (
           SELECT * FROM cand ORDER BY rel DESC, vec_id LIMIT $MMR_POOL),
@@ -3838,6 +3000,17 @@ object Similarity {
       exactScored(corpus.crossJoin(broadcast(probes))), "cosine", TOPK)
       .select(col("q_id"), col("neighbor"))
 
+  /** SQL twin of [[exactTopKPlan]]: `name(q_id, neighbor)`, the exact
+    * 4dp-cosine top-[[TOPK]] per probe over the (corpus alias `a`,
+    * probe) pairs of `from`, self excluded. */
+  private def exactTopKSql(name: String, from: String, a: String = "n"): String = {
+    val p = if (a == "n") "" else s"$a."
+    s"""$name AS (
+          ${windowTopKSql("q_id, neighbor", s"q_id, $a.vec_id AS neighbor",
+            "q_id", s"${cosine4Sql(s"${p}v", "qv", s"${p}nrm", "qn")} DESC,\n $a.vec_id",
+            s"FROM $from\n WHERE $a.vec_id <> q_id")})"""
+  }
+
   /** q130/q131's evaluated probe set: the fixed-count md5-order sample
     * drawn FROM the modulus probe universe q36 serves — a subset of the
     * index's own queries, so recall evaluates the index under test while
@@ -3916,26 +3089,6 @@ object Similarity {
   // ReservationNode and throws "Recursive update". The oracles stay
   // artifact-free: each re-derives its curve and election inline.
 
-  /** A serving dial a curve sweeps: the curve's key column, its grid in
-    * declared order (ascending wherever there is a target) and the
-    * recall target its election uses — none means the highest recall
-    * wins. */
-  private[queries] final case class Dial[D](name: String, grid: Seq[D],
-      targetBp: Option[Long] = Some(RECALL_TARGET_BP))(
-      implicit val enc: Encoder[D]) {
-    def gridDf(spark: SparkSession): DataFrame =
-      spark.createDataset(grid).toDF(name)
-  }
-
-  private[queries] val NprobeDial = Dial("nprobe", NPROBES)(Encoders.scalaLong)
-  private[queries] val WidthDial =
-    Dial("ksub", PQ_WIDTHS.map(_.toLong))(Encoders.scalaLong)
-  private[queries] val RerankDial = Dial("r", RERANK_RS)(Encoders.scalaLong)
-  // raw is declared first: it wins a recall tie, being the cheaper serve
-  // (no per-(probe, cell) qdotc term)
-  private[queries] val GeometryDial =
-    Dial("geom", Seq("raw", "resid"), targetBp = None)(Encoders.STRING)
-
   /** The per-probe hits kernel: how many of each probe's served
     * neighbors are in its exact ground truth, zero-filled so that a
     * probe with no hits still counts — (dial, q_id, n_hit) with one row
@@ -3952,6 +3105,29 @@ object Similarity {
       .select(keys.map(col) :+ coalesce(col("n_hit"), lit(0L)).as("n_hit"): _*)
   }
 
+  /** SQL twin of [[probeHits]]' join: the hits of `served` in `exact` per
+    * probe (and per `key` dial point); `tag` is a constant column to
+    * lead with instead. */
+  private def hitsSql(served: String, exact: String, key: String = "",
+      tag: String = ""): String = {
+    val k = if (key.isEmpty) "" else s"$key, "
+    s"""SELECT $k${tag}q_id, count(*) AS n_hit
+          FROM $served JOIN $exact USING (q_id, neighbor)
+          GROUP BY ${k}q_id"""
+  }
+
+  /** SQL twin of [[probeHits]] over dial column `d`: `hitsName` (body
+    * `hits`) zero-filled over every (point of `grid`, probe of `probes`)
+    * as `perq`. */
+  private def probeHitsSql(d: String, hits: String, grid: String,
+      probes: String, hitsName: String, perq: String): String =
+    s"""$hitsName AS (
+          $hits),
+        $perq AS (
+          SELECT g.$d, g.q_id, coalesce(h.n_hit, 0) AS n_hit
+          FROM (SELECT $d, q_id FROM $grid, $probes) g
+          LEFT JOIN $hitsName h ON g.$d = h.$d AND g.q_id = h.q_id)"""
+
   /** A recall row's result: per-probe hits of one served top-k and its
     * recall@[[TOPK]]. */
   private def recallRows(served: DataFrame, groundTruth: DataFrame,
@@ -3959,6 +3135,19 @@ object Similarity {
     Q.localized(probeHits(served, groundTruth, probes)
         .withColumn("recall_at_k", round(col("n_hit") / (TOPK * 1.0), 4)))
       .orderBy(col("q_id"))
+
+  /** SQL twin of [[recallRows]]: `hits` of `served` in `exact`, then per
+    * probe of `probes` the zero-filled hit count and recall@[[TOPK]] — an
+    * oracle's final SELECT. */
+  private def recallRowsSql(served: String, exact: String, probes: String,
+      hits: String = "hits"): String =
+    s"""$hits AS (
+          ${hitsSql(served, exact)})
+        SELECT q.q_id,
+               CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
+               round(coalesce(h.n_hit, 0) / ($TOPK * 1.0), 4) AS recall_at_k
+        FROM $probes q LEFT JOIN $hits h ON q.q_id = h.q_id
+        ORDER BY q.q_id"""
 
   /** The curve aggregate: per dial point, the probe count, total and
     * worst per-probe hits, recall in integer basis points
@@ -4006,6 +3195,60 @@ object Similarity {
       rows.zip(flags).map { case (r, f) => Row.fromSeq(r.toSeq :+ f) }
         .toSeq.asJava,
       curve.schema.add("chosen", LongType))
+  }
+
+  /** SQL twin of [[recallCurve]] and [[electCurve]] for `dial`: the hits
+    * CTE (body `hits`) zero-filled over `grid` × `probes`, the curve
+    * `curve<sfx>` → `curve<sfx>2` (→ `curve<sfx>3` with meets_target when
+    * the dial has a target) and the election `sel(chosen)` — the same
+    * rule as [[chosenFlags]]: the smallest point meeting the target, else
+    * the largest; without a target, the higher recall of the two grid
+    * points, ties to the first. `counted` names the candidate relation
+    * whose per-point row count the curve carries as total_candidates. */
+  private def recallCurveSql(dial: Dial[_], hits: String, grid: String,
+      probes: String, sel: String, chosen: String, sfx: String = "",
+      hitsName: String = "", counted: String = ""): String = {
+    val d = dial.name
+    val c = s"curve$sfx"
+    def counting(sql: => String) = if (counted.isEmpty) "" else sql
+    val curves = s"""${probeHitsSql(d, hits, grid, probes,
+          if (hitsName.isEmpty) s"hits$sfx" else hitsName, s"perq$sfx")}${
+          counting(s""",
+        cc AS (SELECT $d, count(*) AS total_candidates
+               FROM $counted GROUP BY $d)""")},
+        $c AS (
+          SELECT ${counting("p.")}$d,
+                 CAST(count(*) AS BIGINT) AS n_probes,
+                 CAST(sum(n_hit) AS BIGINT) AS sum_hits,
+                 CAST(min(n_hit) AS BIGINT) AS min_hits
+          FROM perq$sfx${counting(" p")} GROUP BY ${counting("p.")}$d),
+        ${c}2 AS (
+          SELECT ${counting("c.")}$d, n_probes, sum_hits, min_hits,
+                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
+                      AS BIGINT) AS recall_bp${counting(
+            ",\n CAST(coalesce(cc.total_candidates, 0) AS BIGINT) AS total_candidates")}
+          FROM $c${counting(s" c LEFT JOIN cc ON c.$d = cc.$d")})"""
+    dial.targetBp match {
+      case Some(t) => s"""$curves,
+        ${c}3 AS (
+          SELECT *, CAST(CASE WHEN recall_bp >= $t
+                              THEN 1 ELSE 0 END AS BIGINT) AS meets_target
+          FROM ${c}2),
+        $sel AS (
+          SELECT CASE WHEN max(meets_target) = 1
+                      THEN min(CASE WHEN meets_target = 1 THEN $d END)
+                      ELSE max($d) END AS $chosen
+          FROM ${c}3)"""
+      case None =>
+        val Seq(first, second) = dial.grid.map(g => s"'$g'")
+        s"""$curves,
+        $sel AS (
+          SELECT CASE WHEN (SELECT recall_bp FROM ${c}2
+                            WHERE $d = $second)
+                         > (SELECT recall_bp FROM ${c}2
+                            WHERE $d = $first)
+                      THEN $second ELSE $first END AS $chosen)"""
+    }
   }
 
   /** The artifact half of every curve: publishes the elected curve
@@ -4234,6 +3477,28 @@ object Similarity {
           coalesce(col("total_candidates"), lit(0L))))
   }
 
+  /** SQL twin of [[nprobeSweep]] (consumes `n`, `cents`, `assigned` and
+    * the probe sample `qsr`): the probes' [[NPROBE_MAX]] nearest cells
+    * `qcells`, their candidates scored once `cand`, the nprobe grid `ps`
+    * (body `ps`), the per-point exact top-k `ivf_topk`, the ground truth
+    * `ex_topk`, and [[recallCurveSql]]'s curve and election `sel`. */
+  private def nprobeSweepSql(ps: String, sel: String): String = s"""
+        qcells AS (
+          ${cellRankSql("q_id, qv, qn, c_id AS qcell, crank", "q_id, qv, qn, c_id",
+            "qsr, cents", s"$NPROBE_MAX")}),
+        cand AS (
+          ${inCellScoredSql("qcells qc", "crank, ")}),
+        ps AS ($ps),
+        candp AS (
+          SELECT nprobe, q_id, neighbor, cosine
+          FROM cand JOIN ps ON crank <= nprobe),
+        ivf_topk AS (
+          ${windowTopKSql("nprobe, q_id, neighbor", "nprobe, q_id, neighbor",
+            "nprobe, q_id", "cosine DESC, neighbor", "FROM candp")}),
+        ${exactTopKSql("ex_topk", "n, qsr")},
+        ${recallCurveSql(NprobeDial, hitsSql("ivf_topk", "ex_topk", "nprobe"),
+          "ps", "qsr", sel, "chosen_p", counted = "candp")}"""
+
   /** The shortlist-depth sweep behind q156 and q163: `serve` is an
     * elected-depth serve over-fetched to max([[RERANK_RS]]), carrying
     * its ADC rank; one exact pass scores that maximal shortlist
@@ -4256,6 +3521,39 @@ object Similarity {
       .select(col("r"), col("q_id"), col("neighbor"))
     electCurve(RerankDial, recallCurve(RerankDial, topR, groundTruth, probes))
   }
+
+  /** SQL twin of [[rerankSweep]] over the elected-depth ADC relation
+    * `served` (suffix `t` names the trained copy): the R grid, the
+    * maximal rank-carrying shortlist `shortall`, ONE exact scoring of it
+    * against `probes` (`rrscored` — probes × max(R) rows, never
+    * corpus-sized), the per-R re-ranked top-k `rr_topk_r`, then — against
+    * `exact`, defined first by `exactCte` when given — the R curve and
+    * election `selr(chosen_r)`. */
+  private def rerankSweepSql(t: String, served: String, probes: String,
+      exact: String, exactCte: String = ""): String = s"""
+        rsgrid$t AS (
+          ${gridSql(RerankDial, "r")}),
+        shortall$t AS (
+          SELECT q_id, neighbor,
+                 row_number() OVER (PARTITION BY q_id
+                                    ORDER BY adc_mu DESC, neighbor)
+                   AS adc_rank
+          FROM $served),
+        rrscored$t AS (
+          SELECT s.q_id, s.adc_rank, s.neighbor,
+                 ${cosine4Sql()}
+                   AS cosine
+          FROM shortall$t s
+          JOIN n ON n.vec_id = s.neighbor
+          JOIN $probes q2 ON q2.q_id = s.q_id
+          WHERE s.adc_rank <= ${RERANK_RS.max}),
+        rr_topk_r$t AS (
+          ${windowTopKSql("r, q_id, neighbor", "g.r, sc.q_id, sc.neighbor",
+            "g.r, sc.q_id", "sc.cosine DESC, sc.neighbor",
+            s"FROM rrscored$t sc JOIN rsgrid$t g ON sc.adc_rank <= g.r")}),${
+          if (exactCte.isEmpty) "" else s"\n        $exactCte,"}
+        ${recallCurveSql(RerankDial, hitsSql(s"rr_topk_r$t", exact, "r"),
+          s"rsgrid$t", probes, s"selr$t", "chosen_r", sfx = s"r$t")}"""
 
   /** q100's pipeline as a callable (the SemDeDup construction): assign
     * each vector of `n` (vec_id, v, nrm) to its nearest centroid of

@@ -65,16 +65,24 @@ object StreamingQueries {
     math.max(math.min(4, spark.sparkContext.defaultParallelism), sized)
   }
 
-  /** Run `body` with streaming-sized shuffle partitions for `dir`,
-    * restoring the session value after (queries run sequentially in
-    * Verify/Bench). */
-  private def withStreamPartitions[A](spark: SparkSession, dir: String)(
+  /** Run `body` with `settings` applied to the session conf, then leave
+    * the conf as it was: a key that was explicitly set before gets its
+    * old value back, every other key is unset. (Reading a registered key
+    * returns its default, so writing that read back would leave the key
+    * explicitly set.) Queries run sequentially in Verify/Bench. */
+  private def withConf[A](spark: SparkSession, settings: (String, String)*)(
       body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, streamPartitions(spark, dir).toString)
-    try body finally spark.conf.set(key, prev)
+    val before = spark.conf.getAll
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally settings.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
+
+  /** The streaming-sized shuffle partition count for `dir`, as a
+    * [[withConf]] setting. */
+  private def streamPartitionsConf(spark: SparkSession, dir: String) =
+    "spark.sql.shuffle.partitions" -> streamPartitions(spark, dir).toString
 
   /** Raw events schema per sfDir, probed once per JVM: every streaming
     * query needs it (readStream requires an explicit schema), and the
@@ -117,7 +125,7 @@ object StreamingQueries {
     * openCostInBytes floors the split at 4 MB), so a stateless
     * compute-heavy map (tokenize/shingle/encode — the scan-stage work)
     * serializes on one core per batch while the stateful exchange
-    * downstream is already scoped by [[withStreamPartitions]]. Measured
+    * downstream is already scoped by [[streamPartitionsConf]]. Measured
     * (r19, JobProbe): q128's single data micro-batch spent 1.87 s in
     * that one-task stage. Spread the raw rows across the session's
     * cores BEFORE the heavy map (§2.3: the exchange carries the narrow
@@ -170,36 +178,24 @@ object StreamingQueries {
     val ckpt = if (shm.isDirectory && shm.canWrite &&
         shm.getUsableSpace >= 4L * 1024 * 1024 * 1024)
       Some(s"/dev/shm/graft_ckpt/$sink") else None
-    val q = withStreamPartitions(spark, dir) {
-      val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNoData = spark.conf.get(noDataKey)
-      spark.conf.set(noDataKey, noDataBatch.toString)
-      // Spark 4's checkpoint-file checksums are OFF for these
-      // run-to-completion checkpoints: the checkpoint is ephemeral by
-      // construction (drained and deleted in this very call — see ckpt
-      // above), so integrity companions protect nothing, while their
-      // writer pays a second file per checkpoint file through Hadoop's
-      // LOCAL FS — whose permission/stat calls fork an external process
-      // each (measured r19, StreamStartProbe: Shell.runCommand under
-      // ChecksumCheckpointFileManager was the single hottest driver
-      // stack in q58, ~1.3 s of a 2.8 s run). A PRODUCTION stream
-      // (durable checkpoint outliving the process) keeps the default.
-      val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-      val prevCk = spark.conf.getOption(ckKey)
-      spark.conf.set(ckKey, "false")
-      try {
-        val w = streamed.writeStream.format("memory").queryName(sink)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .outputMode(mode)
-        ckpt.foreach(w.option("checkpointLocation", _))
-        w.start()
-      } finally {
-        spark.conf.set(noDataKey, prevNoData)
-        prevCk match {
-          case Some(v) => spark.conf.set(ckKey, v)
-          case None => spark.conf.unset(ckKey)
-        }
-      }
+    // Spark 4's checkpoint-file checksums are OFF for these
+    // run-to-completion checkpoints: the checkpoint is ephemeral by
+    // construction (drained and deleted in this very call — see ckpt
+    // above), so integrity companions protect nothing, while their
+    // writer pays a second file per checkpoint file through Hadoop's
+    // LOCAL FS — whose permission/stat calls fork an external process
+    // each (measured r19, StreamStartProbe: Shell.runCommand under
+    // ChecksumCheckpointFileManager was the single hottest driver
+    // stack in q58, ~1.3 s of a 2.8 s run). A PRODUCTION stream
+    // (durable checkpoint outliving the process) keeps the default.
+    val q = withConf(spark, streamPartitionsConf(spark, dir),
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") {
+      val w = streamed.writeStream.format("memory").queryName(sink)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .outputMode(mode)
+      ckpt.foreach(w.option("checkpointLocation", _))
+      w.start()
     }
     try q.awaitTermination() finally {
       q.stop()
@@ -210,7 +206,7 @@ object StreamingQueries {
     // the finish agg/sort runs over the (small, driver-local) sink table:
     // at session partitioning it pays 32 task launches per exchange for
     // a few thousand rows — scope it down with the same knob
-    try withStreamPartitions(spark, dir)(
+    try withConf(spark, streamPartitionsConf(spark, dir))(
       Q.localized(finish(spark.table(sink))))
     finally spark.catalog.dropTempView(sink)
   }
@@ -596,12 +592,9 @@ object StreamingQueries {
       run = (spark, dir) => {
         import spark.implicits._
         // transformWithState requires the RocksDB state store provider;
-        // scope it to this query and restore it afterwards
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = spark.conf.getOption(provKey)
-        spark.conf.set(provKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
+        // scope it to this query
+        withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           val docSchema = rawSchemaCache.getOrElseUpdate(s"$dir#documents",
             spark.read.parquet(s"$dir/documents.parquet").schema)
           // spread before the heavy tokenize explode (the q128 rule):
@@ -634,9 +627,6 @@ object StreamingQueries {
             // diverge in how candidates are recounted and ranked
             graft.queries.SketchVerify.exactTopK(occ, cands, "token", 20)
           }
-        } finally prevProv match {
-          case Some(v) => spark.conf.set(provKey, v)
-          case None => spark.conf.unset(provKey)
         }
       }),
 

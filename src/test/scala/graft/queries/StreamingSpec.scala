@@ -32,6 +32,18 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkTestSession {
       .map(_.name).count(_.startsWith("stream_tumbling_")) shouldBe 0
   }
 
+  test("q27 and q96 leave the session conf as they found it") {
+    // the keys the streams scope start unset, so a restore that writes
+    // back the registered default (leaving the key explicitly set) shows
+    Seq("spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      "spark.sql.streaming.stateStore.providerClass").foreach(spark.conf.unset)
+    val before = spark.conf.getAll
+    Seq("q27_stream_tumbling", "q96_stream_heavy_hitters")
+      .foreach(Registry.queries(_)(spark, sf0001).collect())
+    spark.conf.getAll shouldBe before
+  }
+
   test("q144: streaming ANN serve equals the batch IVF serve (q36) bitwise") {
     // the twin discipline made executable: the online serve and the batch
     // serve share one oracle, so they must agree row-for-row — any drift
