@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
 /** Durable, shared store for DERIVED artifacts — the materialized
   * indexes the engine builds once per corpus and probes afterwards
   * (verified near-dup pairs, PPJoin prefix index, co-purchase edges,
-  * bigram-LM scores, the q78 dedup index, rare-overlap stats, the q54
-  * codebook, the q71 LSH index).
+  * bigram-LM scores, the q78 dedup index, rare-overlap stats, the ANN
+  * indexes and curves, the q71 LSH index, and — at fixed paths — the
+  * q54 coarse codebook and the q142 PQ codebook).
   *
   * Why a store and not per-process temp dirs: through round 11 each
   * family kept its own `target/<family>-<uuid>` path keyed by an
@@ -337,9 +338,11 @@ object ArtifactStore {
 
   /** Fixed, process-independent location for [[ensureAt]] artifacts —
     * the ones whose absolute path must be known at CLASS LOAD because a
-    * static oracle SQL string bakes it in (the q54 codebook, the q71
-    * LSH index). Lives under the same configurable [[root]] so one env
-    * var relocates every artifact in production. */
+    * static oracle SQL string bakes it in (the trained q54 coarse
+    * codebook and q142 PQ codebook). Lives under the same configurable
+    * [[root]] so one env var relocates every artifact in production. An
+    * artifact no oracle reads belongs in [[ensure]]'s content-keyed
+    * layout instead. */
   def fixedPath(family: String): String = root + "/" + family
 
   /** Resolve-or-build: returns the published path of (family, key),
@@ -396,12 +399,15 @@ object ArtifactStore {
     * string bakes the path in): the content key lives in the
     * `_GRAFT_OK` marker instead of the path, so a key change rebuilds
     * IN PLACE and two corpora cannot silently share stale geometry.
-    * Returns true when a (re)build happened. Default location is
-    * [[fixedPath]](family); `at` overrides it (env-pinned deployments,
-    * tests). Unlike [[ensure]], every resolve reads the marker — one
-    * fixed path serves many keys over time, so the memo alone cannot
-    * prove freshness; the read is one small file, paid by queries that
-    * run once per suite. */
+    * Its callers are the two trained quantizers whose paths the oracles
+    * bake in (q54's coarse codebook through
+    * [[graft.similarity.VectorSearch.ensureCodebook]], q142's PQ
+    * codebook). Returns true when a (re)build happened. Default location
+    * is [[fixedPath]](family); `at` overrides it (a path resolved at
+    * class load, tests). Unlike [[ensure]], every resolve reads the
+    * marker — one fixed path serves many keys over time, so the memo
+    * alone cannot prove freshness; the read is one small file, paid by
+    * queries that run once per suite. */
   def ensureAt(spark: SparkSession, family: String, key: String,
       at: Option[String] = None)(build: String => Unit): Boolean = {
     val conf = hadoopConf(spark)

@@ -459,7 +459,7 @@ object Similarity {
       fullScanSql(codes, lutl, probes))
   }
 
-  /** SQL twin of [[cellRestrictedPackedServe]]'s scored relation: the
+  /** SQL twin of [[ivfPqServe]]'s scored relation: the
     * ADC relation (q_id, neighbor, adc_mu) of `codes` restricted to each
     * probe's probed cells `qcell(q_id, qn, qcell)`, LUTs from `lutl`;
     * `num` is the inner product (q160 adds its qdotc term). */
@@ -566,7 +566,9 @@ object Similarity {
     * relations are byte-identical to the inline derivations (a
     * deterministic md5-order top-k; parquet round-trips the doubles
     * exactly), so serve results are unchanged and the oracles keep
-    * re-deriving inline. Narrower widths are in-memory prefixes of the
+    * re-deriving inline. The packed index, residual index and q131
+    * curve builders read it too rather than re-derive the cells with
+    * their own count job. Narrower widths are in-memory prefixes of the
     * stored full-width codebook (the prefix property q138 elects on). */
   private[queries] def pqQuantizerRoot(spark: SparkSession, dir: String): String =
     graft.exec.ArtifactStore.ensure(spark, "pq_quantizer",
@@ -578,21 +580,67 @@ object Similarity {
         .parquet(s"$p/cents")
     }
 
-  /** The stored full-width PQ codebook (see [[pqQuantizerRoot]]),
-    * prefix-truncated to `ksub` in memory; the 16-row collect is
-    * memoized per (session, artifact). */
-  private[queries] def storedPqCodebook(spark: SparkSession, dir: String,
-      ksub: Int = PQ_KSUB): PqCodebook = {
-    val root = pqQuantizerRoot(spark, dir)
-    prefix(readCodebook(spark, s"pqcb|$root")(
-      graft.exec.ArtifactStore.readPublished(spark, s"$root/cb")), ksub)
+  /** One IVF-PQ quantizer pair: the coarse cells and the PQ codebook a
+    * packed index is built from and served with, and the artifact keys
+    * of everything derived from them. Two instances: [[Md5Pair]] (the
+    * deterministic md5-prefix constructions) and [[TrainedPair]] (the
+    * KMeans quantizers a deployment fits). Each of the index build
+    * ([[ivfPqIndex]]), the cell-restricted serve ([[ivfPqServe]]), the
+    * nprobe and rerank curves with their elected dials ([[nprobeCurve]],
+    * [[rerankDepthCurve]]) and the exact-rerank production serve
+    * ([[ivfPqRerank]]) is one path that takes a pair; a pair supplies
+    * only what differs between them. */
+  private[queries] sealed abstract class QuantizerPair(
+      val indexFamily: String, val nprobeFamily: String,
+      val rerankFamily: String) {
+    /** Resolves (fits or builds on a miss) the coarse cells only. */
+    def resolveCells(spark: SparkSession, dir: String): Unit
+    /** Resolves both quantizers: every derivative resolves this before
+      * its own `ensure` (a nested absent-key ensure fails with
+      * "Recursive update"). One artifact holds both by default. */
+    def resolve(spark: SparkSession, dir: String): Unit =
+      resolveCells(spark, dir)
+    /** The coarse cells (c_id, cv, cn) as stored. */
+    def cents(spark: SparkSession, dir: String): DataFrame
+    /** The full-width PQ codebook as stored. */
+    def fullCodebook(spark: SparkSession, dir: String): PqCodebook
+    /** The packed index's key after its geometry. */
+    def indexKey(spark: SparkSession): String
+    /** The nprobe curve's probe universe, its ground truth and its key
+      * part; the rerank curve's key part. */
+    def curveProbes(n: DataFrame): DataFrame
+    def curveTruth(spark: SparkSession, dir: String): DataFrame
+    def nprobeKey(spark: SparkSession): String
+    def rerankKey(spark: SparkSession): String
+    /** The width-`ksub` prefix of [[fullCodebook]]. */
+    def codebook(spark: SparkSession, dir: String,
+        ksub: Int = PQ_KSUB): PqCodebook =
+      prefix(fullCodebook(spark, dir), ksub)
   }
 
-  /** The stored bounded coarse centroids (see [[pqQuantizerRoot]]) —
-    * [[boundedCents]] without the per-serve corpus scan + count job. */
-  private[queries] def storedCents(spark: SparkSession, dir: String): DataFrame =
-    graft.exec.ArtifactStore.readPublished(spark,
-      s"${pqQuantizerRoot(spark, dir)}/cents")
+  /** The md5-prefix pair: both quantizers live in the one
+    * [[pqQuantizerRoot]] artifact; its nprobe curve evaluates the
+    * modulus probe universe (ann_gt_ivf). */
+  private[queries] object Md5Pair extends QuantizerPair("ivfpq_index",
+      "ann_nprobe_curve", "rerank_depth_curve") {
+    def resolveCells(spark: SparkSession, dir: String): Unit =
+      pqQuantizerRoot(spark, dir)
+    def cents(spark: SparkSession, dir: String): DataFrame =
+      graft.exec.ArtifactStore.readPublished(spark,
+        s"${pqQuantizerRoot(spark, dir)}/cents")
+    // the 16-row collect is memoized per (session, artifact)
+    def fullCodebook(spark: SparkSession, dir: String): PqCodebook = {
+      val root = pqQuantizerRoot(spark, dir)
+      readCodebook(spark, s"pqcb|$root")(
+        graft.exec.ArtifactStore.readPublished(spark, s"$root/cb"))
+    }
+    def indexKey(spark: SparkSession): String = "-v1"
+    def curveProbes(n: DataFrame): DataFrame = ivfEvalProbes(n)
+    def curveTruth(spark: SparkSession, dir: String): DataFrame =
+      ivfGroundTruth(spark, dir)
+    def nprobeKey(spark: SparkSession): String = s"-m$QUERY_MOD"
+    def rerankKey(spark: SparkSession): String = ""
+  }
 
   /** Pack the [[PQ_M]] 1-based 4-bit codes (ksub ≤ 16) of a code ARRAY
     * into one BIGINT — bits [4(j−1), 4j) hold code_j − 1. M static
@@ -618,29 +666,29 @@ object Similarity {
     * float64 embedding — the q134-header 128×-class memory-traffic cut
     * as a MATERIALIZED number, not prose (the retired AnnScaleProbe's
     * pq metric recorded the artifact-vs-embeddings bytes — see README,
-    * "Retired probes"): through round 15 codes only ever existed as
-    * long-typed (vec_id, subspace, code) rows, so serving scans still
-    * read unpacked relations. Built at most once per corpus source
-    * identity ([[graft.exec.ArtifactStore.ensure]];
-    * geometry in the key), consumed by q135 (full-scan ADC ignores
-    * c_id), q136 (cell-restricted ADC), and q151 (elected-depth
-    * serve). `ksub` parameterizes the codebook WIDTH (round 17): the
-    * width election (q138) now reaches the production index — q155
-    * serves from the entry built at the ELECTED ksub (`-k$ksub` keeps
-    * width-w and full-width artifacts distinct; prefix property means
-    * the full-width entry is byte-identical to the pre-parameterization
-    * construction). Oracles stay artifact-free — they re-derive codes +
-    * assignment inline in SQL, so the gate value-checks these stored
-    * bytes every round. */
+    * "Retired probes"). Every corpus row is assigned to its nearest of
+    * the pair's stored cells and encoded with the width-`ksub` prefix of
+    * its stored codebook. Built at most once per corpus source identity
+    * ([[graft.exec.ArtifactStore.ensure]]) under the pair's family, the
+    * key carrying the geometry (`-k$ksub` keeps width-w and full-width
+    * entries distinct — q155 serves the ELECTED width) and the pair's
+    * part: for [[TrainedPair]] the training params and the trained
+    * files' CONTENT identity, since the fixed-path trained artifacts
+    * rebuild IN PLACE when another corpus runs, and a cached index
+    * generation must never serve codes from different center bytes
+    * than the oracle replays (the r17 q158 gate failure). The pair's
+    * quantizers are resolved before the index's own ensure. Oracles
+    * stay artifact-free (or replay the trained files) and re-derive
+    * codes + assignment inline in SQL, so the gate value-checks these
+    * stored bytes every round. */
   private[queries] def ivfPqIndex(spark: SparkSession, dir: String,
-      ksub: Int = PQ_KSUB): DataFrame = {
-    val path = graft.exec.ArtifactStore.ensure(spark, "ivfpq_index",
+      ksub: Int = PQ_KSUB, q: QuantizerPair = Md5Pair): DataFrame = {
+    q.resolve(spark, dir)
+    val path = graft.exec.ArtifactStore.ensure(spark, q.indexFamily,
       graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-m$PQ_M-k$ksub-s$PQ_SUB-v1") { p =>
-      val n = normed(spark, dir)
-      val cents = boundedCents(n)
-      val cb = prefixCodebook(n, ksub)
-      writePackedIndex(VectorSearch.assignCells(n, cents), "v", cb, p)
+        + s"-m$PQ_M-k$ksub-s$PQ_SUB${q.indexKey(spark)}") { p =>
+      writePackedIndex(VectorSearch.assignCells(normed(spark, dir),
+        q.cents(spark, dir)), "v", q.codebook(spark, dir, ksub), p)
     }
     graft.exec.ArtifactStore.readPublished(spark, path)
   }
@@ -663,27 +711,30 @@ object Similarity {
       ksub: Int = PQ_KSUB): DataFrame = {
     val n = normed(spark, dir)
     pqAdcServePacked(ivfPqIndex(spark, dir, ksub), pqProbes(n),
-      storedPqCodebook(spark, dir, ksub))
+      Md5Pair.codebook(spark, dir, ksub))
   }
 
-  /** Cell-restricted packed-ADC serve shared by q136 (nprobe = 1),
-    * q151 (elected depth) and q153 (elected depth, shortlist depth R):
-    * probes rank their `nprobe` nearest coarse cells (the probeCells
-    * micro-unit rule — identical to assignment at rank 1), then
-    * ADC-score only the probed cells' packed rows, keeping the top
-    * `topk` per probe. Cells partition the corpus, so multi-cell
-    * candidate unions are disjoint — no dedup. The scan side reads the
-    * 24-byte index rows; only (q_id, neighbor, adc_mu) triples reach
-    * the ranking exchange. */
+  /** The cell-restricted packed-ADC serve over pair `q`'s index, shared
+    * by q136 (nprobe = 1), q151 (elected depth), q153/q157 (elected
+    * depth, shortlist depth R), q158 (trained, nprobe = 2) and the
+    * q162–q164 trained arc: probes rank their `nprobe` nearest coarse
+    * cells (the probeCells micro-unit rule — identical to assignment at
+    * rank 1), then ADC-score only the probed cells' packed rows via the
+    * native packed-ADC expression, keeping the top `topk` per probe.
+    * Cells partition the corpus, so multi-cell candidate unions are
+    * disjoint — no dedup. The index resolves the quantizers first, so
+    * the cells and codebook read here are the generation it was keyed
+    * on; the serve's only corpus scan is the probe sample. */
   private[queries] def ivfPqServe(spark: SparkSession, dir: String,
-      nprobe: Int, topk: Int = TOPK, ksub: Int = PQ_KSUB): DataFrame = {
-    // quantizers come from the durable pq_quantizer artifact (byte-equal
-    // to the inline derivations) — the serve's corpus scans are the
-    // probe sample and nothing else; see pqQuantizerRoot
-    val n = normed(spark, dir)
-    cellRestrictedPackedServe(ivfPqIndex(spark, dir, ksub),
-      storedCents(spark, dir), storedPqCodebook(spark, dir, ksub),
-      pqProbes(n), nprobe, topk)
+      nprobe: Int, topk: Int = TOPK, ksub: Int = PQ_KSUB,
+      q: QuantizerPair = Md5Pair): DataFrame = {
+    val idx = ivfPqIndex(spark, dir, ksub, q)
+    val probes = pqProbes(normed(spark, dir))
+    val bcLut = pqLutBroadcast(probes, q.codebook(spark, dir, ksub))
+    val qs = probedCells(probes, q.cents(spark, dir), nprobe)
+      .select(col("q_id"), col("qn"), col("qcell"))
+    adcTopK(idx.join(broadcast(qs), col("c_id") === col("qcell")),
+      PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")), topk)
   }
 
   /** The `nprobe` nearest cells of `cents` per probe of `probes`
@@ -695,23 +746,29 @@ object Similarity {
       col("qv").as("v"), col("qn").as("nrm")), cents, nprobe)
 
   /** The micro-unit cosine of vector `v` (norm `nrm`) to a centroid
-    * (cv, cn): the score [[VectorSearch.assignCells]] and
+    * (`cv`, `cn`): the score [[VectorSearch.assignCells]] and
     * [[VectorSearch.probeCells]] rank cells by, c_id breaking ties. */
-  private def cellScoreSql(v: String, nrm: String): String =
-    scoreMuSql(cosineSql(v, "cv", nrm, "cn"))
+  private def cellScoreSql(v: String, nrm: String, cv: String = "cv",
+      cn: String = "cn"): String =
+    scoreMuSql(cosineSql(v, cv, nrm, cn))
 
-  /** SQL twin of [[VectorSearch.assignCells]]: every row of `n` (filtered
-    * by `where`) ranks the cells of `cents`, kept while `keep` holds. */
+  /** SQL twin of [[VectorSearch.assignCells]]: every row of `from`
+    * (filtered by `where`) ranks, per `part`, its candidate cells by
+    * `score` with `tie` breaking ties, kept while `keep` holds. The
+    * defaults rank the cells of `cents` for each row of `n`; q133's
+    * two-level assignment ranks supers and grouped cells the same way. */
   private def assignRankSql(cols: String = "vec_id, c_id",
       inner: String = "n.vec_id, c_id", where: String = "",
-      keep: String = "rn = 1"): String =
+      keep: String = "rn = 1", part: String = "n.vec_id",
+      score: String = cellScoreSql("v", "nrm"), tie: String = "c_id",
+      from: String = "n, cents"): String =
     s"""SELECT $cols FROM (
             SELECT $inner,
                    row_number() OVER (
-                     PARTITION BY n.vec_id
-                     ORDER BY ${cellScoreSql("v", "nrm")} DESC,
-                              c_id) AS rn
-            FROM n, cents$where)
+                     PARTITION BY $part
+                     ORDER BY $score DESC,
+                              $tie) AS rn
+            FROM $from$where)
           WHERE $keep"""
 
   /** Each corpus row's nearest cell, `assigned(vec_id, c_id)`. */
@@ -748,26 +805,11 @@ object Similarity {
           ${inCellScoredSql(probes)})
         ${rankedTopKSql("cosine", served)}"""
 
-  /** The cell-restricted packed-ADC serve body, parameterized by WHICH
-    * packed index / coarse codebook / PQ codebook serve (md5-prefix
-    * quantizers for q136/q151/q153/q157, the TRAINED pair for q158):
-    * probes rank their `nprobe` nearest cells of `cents`, the scan
-    * scores only probed cells' packed rows via the native packed-ADC
-    * expression, top-`topk` per probe. */
-  private def cellRestrictedPackedServe(idx: DataFrame, cents: DataFrame,
-      cb: PqCodebook, probes: DataFrame, nprobe: Int, topk: Int)
-      : DataFrame = {
-    val bcLut = pqLutBroadcast(probes, cb)
-    val qs = probedCells(probes, cents, nprobe)
-      .select(col("q_id"), col("qn"), col("qcell"))
-    adcTopK(idx.join(broadcast(qs), col("c_id") === col("qcell")),
-      PqExprs.pqAdcNumPacked(bcLut, col("q_id"), col("packed")), topk)
-  }
-
-  /** q153's two-stage serve: the elected-depth packed-ADC shortlist
-    * (top-`r` per probe — q151's serve, deeper; q153 passes the
-    * q156-ELECTED depth) RE-RANKED by exact cosine over the full
-    * vectors, emitting the top-[[TOPK]].
+  /** The two-stage production serve over pair `q` (q153, q157's raw
+    * branch, q164): the elected-depth packed-ADC shortlist (top-`r` per
+    * probe — q151's serve, deeper; the callers pass the pair's ELECTED
+    * R) RE-RANKED by exact cosine over the full vectors, emitting the
+    * top-[[TOPK]].
     * The standard production recall-recovery pattern (FAISS's
     * IndexRefine): the corpus-sized scan still touches only 24-byte
     * packed rows; the exact stage fetches full vectors for probes×R
@@ -777,15 +819,14 @@ object Similarity {
     * directly diffable against q132 (exact serve at the same elected
     * depth) and q151 (the unrefined ADC ranking). */
   private[queries] def ivfPqRerank(spark: SparkSession, dir: String,
-      r: Int, ksub: Int = PQ_KSUB): DataFrame =
-    exactRerank(spark, dir,
-      ivfPqServe(spark, dir, electedNprobe(spark, dir), topk = r, ksub = ksub))
+      r: Int, ksub: Int = PQ_KSUB, q: QuantizerPair = Md5Pair): DataFrame =
+    exactRerank(spark, dir, ivfPqServe(spark, dir,
+      electedNprobe(spark, dir, q), topk = r, ksub = ksub, q = q))
 
-  /** The exact re-rank stage shared by q153/q157 (raw shortlists) and
-    * q164 (the trained shortlist): fetch full vectors for the
-    * `shortlist` serve's (q_id, neighbor) pairs (one broadcast join of
-    * the constant probes×R shortlist against the corpus — the scan
-    * never expands), score the exact 4dp cosine, top-[[TOPK]] per probe
+  /** The exact re-rank stage of [[ivfPqRerank]] and of q157's residual
+    * branch: fetch full vectors for the `shortlist` serve's (q_id,
+    * neighbor) pairs (one broadcast join of the constant probes×R
+    * shortlist against the corpus — the scan never expands), score the exact 4dp cosine, top-[[TOPK]] per probe
     * with q20's tie-breaks over a probes×R-bounded window. */
   private[queries] def exactRerank(spark: SparkSession, dir: String,
       shortlist: DataFrame): DataFrame = {
@@ -820,21 +861,24 @@ object Similarity {
     * because the serve needs the exact trained bytes for its LUTs and
     * re-deriving them would cost a corpus assignment pass per
     * invocation (the r16/r17 lesson). Built once per corpus source
-    * identity; oracles re-derive residuals + codes inline. */
+    * identity over the stored md5-prefix cells (resolved before the
+    * artifact's own ensure); oracles re-derive residuals + codes
+    * inline. */
   private[queries] def ivfPqResidArtifact(spark: SparkSession,
-      dir: String): String =
+      dir: String): String = {
+    Md5Pair.resolve(spark, dir)
     graft.exec.ArtifactStore.ensure(spark, "ivfpq_resid_index",
       graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
         + s"-m$PQ_M-k$PQ_KSUB-s$PQ_SUB-v1") { p =>
-      val n = normed(spark, dir)
-      val cents = boundedCents(n)
-      val resid = residuals(n, cents).persist(MEMORY_AND_DISK)
+      val resid = residuals(normed(spark, dir), Md5Pair.cents(spark, dir))
+        .persist(MEMORY_AND_DISK)
       val cb = pqCodebook(resid, "rv")
       writeCodebook(spark, cb.cents, s"$p/cb")
       writePackedIndex(resid, "rv", cb, s"$p/idx")
       resid.unpersist(blocking = false)
       ()
     }
+  }
 
   private[queries] def loadResidCb(spark: SparkSession, root: String): PqCodebook =
     // root is a content-keyed ensure path — immutable; memoize the
@@ -856,7 +900,7 @@ object Similarity {
     val root = ivfPqResidArtifact(spark, dir)
     val idx = graft.exec.ArtifactStore.readPublished(spark, s"$root/idx")
     val cb = loadResidCb(spark, root)
-    val cents = storedCents(spark, dir)
+    val cents = Md5Pair.cents(spark, dir)
     val probes = pqProbes(normed(spark, dir))
     val bcLut = pqLutBroadcast(probes, cb)
     val qs = probedCells(probes, cents, nprobe)
@@ -1072,8 +1116,7 @@ object Similarity {
     * its fallback point): at the 10× replica the per-width argmin
     * grid was the single largest relation in the q157 replay, and
     * recomputing its full-width third doubled work DuckDB had
-    * already done. The curve keeps only what the election reads, so
-    * it is [[recallCurveSql]]'s election without the reported columns. */
+    * already done. The curve and election are [[recallCurveSql]]'s. */
   private def widthElectedServeCtes(exTopk: String): String = s"""
         wsq AS (
           ${gridSql(WidthDial, "k")}),
@@ -1085,23 +1128,8 @@ object Similarity {
           FROM pcodes),
         adcw_topk AS (
           ${adcTopKSql("codeswq", "lutl2", "qsr2", "ksub")}),
-        ${probeHitsSql("ksub", hitsSql("adcw_topk", exTopk, "ksub"), "wsq",
-          "qsr2", "hitsw", "perqw")},
-        curvew AS (
-          SELECT ksub, count(*) AS n_probes, sum(n_hit) AS sum_hits
-          FROM perqw GROUP BY ksub),
-        curvew2 AS (
-          SELECT ksub,
-                 CAST(floor((sum_hits * 10000.0) / (n_probes * $TOPK))
-                      AS BIGINT) AS recall_bp
-          FROM curvew),
-        selw2 AS (
-          SELECT CASE WHEN max(CASE WHEN recall_bp >= $RECALL_TARGET_BP
-                                    THEN 1 ELSE 0 END) = 1
-                      THEN min(CASE WHEN recall_bp >= $RECALL_TARGET_BP
-                                    THEN ksub END)
-                      ELSE max(ksub) END AS chosen_w
-          FROM curvew2),
+        ${recallCurveSql(WidthDial, hitsSql("adcw_topk", exTopk, "ksub"),
+          "wsq", "qsr2", "selw2", "chosen_w", sfx = "w", hitsName = "hitsw")},
         codes_prod AS (
           SELECT vec_id, code FROM codeswq
           WHERE ksub = (SELECT chosen_w FROM selw2)),
@@ -1257,29 +1285,20 @@ object Similarity {
     * The oracle is a static SQL string interpolated at class-load, so the
     * path must be process-independent AND known before any query runs —
     * hence [[graft.exec.ArtifactStore.fixedPath]] (one stable dir under
-    * the store's configurable root, relocatable to a cluster FS with one
-    * env var) rather than a content-ADDRESSED `ensure` entry. The
-    * contract is still the store's: `ensureCodebook` resolves through
-    * [[graft.exec.ArtifactStore.ensureAt]], which records the content
-    * key (corpus source-file identity + training params) in the
+    * the store's configurable root, relocated with the rest of the store
+    * by GRAFT_ARTIFACT_ROOT) rather than a content-ADDRESSED `ensure`
+    * entry. The contract is still the store's: `ensureCodebook` resolves
+    * through [[graft.exec.ArtifactStore.ensureAt]], which records the
+    * content key (corpus source-file identity + training params) in the
     * `_GRAFT_OK` marker at this fixed path — staleness, atomic /
     * marker-last publish, GC liveness and race repair all come from
-    * the store, with no caller-managed sidecar. GRAFT_Q54_CENTROIDS_DIR
-    * still pins an explicit path when a deployment wants one. */
+    * the store, with no caller-managed sidecar. */
   private[queries] val TrainedCentroidsPath: String =
-    sys.env.getOrElse("GRAFT_Q54_CENTROIDS_DIR",
-      graft.exec.ArtifactStore.fixedPath("q54_centroids"))
-
-  /** q71's materialized LSH index location (same static-oracle /
-    * fixed-path-ensureAt discipline as [[TrainedCentroidsPath]]). */
-  private[queries] val LshIndexPath: String =
-    sys.env.getOrElse("GRAFT_Q71_INDEX_DIR",
-      graft.exec.ArtifactStore.fixedPath("q71_lsh_index"))
+    graft.exec.ArtifactStore.fixedPath("q54_centroids")
 
   /** q142/q143's trained PQ codebook location (same discipline). */
   private[queries] val TrainedPqPath: String =
-    sys.env.getOrElse("GRAFT_Q142_PQ_DIR",
-      graft.exec.ArtifactStore.fixedPath("q142_pq_codebook"))
+    graft.exec.ArtifactStore.fixedPath("q142_pq_codebook")
 
   /** Train + materialize the per-subspace KMeans sub-codebooks (q142/
     * q143): one RAW-euclidean fit per subspace over the corpus's 8-dim
@@ -1321,65 +1340,68 @@ object Similarity {
     graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings") +
       s"|sample=$COARSE_SAMPLE,seed=$COARSE_SEED"
 
-  /** Fit-on-miss / reuse-on-hit for the trained COARSE codebook (q54's
-    * KMeans over a seeded [[COARSE_SAMPLE]] sample — see the q54 header
-    * for why a coarse quantizer trains on a sample at 5 iterations). */
-  private[queries] def ensureTrainedCoarse(spark: SparkSession,
-      dir: String): Unit = {
-    graft.similarity.VectorSearch.ensureCodebook(
-      table(spark, dir, "embeddings").sample(COARSE_SAMPLE, COARSE_SEED),
-      "vec_id", "embedding", k = COARSE_K, maxIter = COARSE_ITER,
-      path = TrainedCentroidsPath, cacheKey = coarseCacheKey(spark, dir))
-    ()
+  /** The TRAINED pair — the quantizers FAISS `IVFPQ` actually fits:
+    * q54's KMeans coarse codebook (fit on a seeded [[COARSE_SAMPLE]]
+    * sample — see the q54 header for why a coarse quantizer trains on a
+    * sample at 5 iterations) and q142's per-subspace KMeans PQ
+    * sub-codebooks, both fit-on-miss / reuse-on-hit at their fixed
+    * paths and read back as PERSISTED (the exact doubles the oracles
+    * read). Every content-keyed derivative carries the trained files'
+    * CONTENT identity (file uri, length, mtime of every parquet part —
+    * re-listed per call, never memoized) in its key: the fixed paths
+    * rebuild IN PLACE when a different corpus runs, so any retrain
+    * re-keys the derivative. Its nprobe curve evaluates the full-corpus
+    * md5 probe sample (ann_gt_pq — the trained serve's own probe
+    * universe) and keys on the coarse centers' identity only. Width is
+    * the full [[PQ_KSUB]] by construction: a KMeans sub-codebook has no
+    * prefix property (its first w centers are not a trained width-w
+    * codebook) — a deployment retrains, it does not truncate. */
+  private[queries] object TrainedPair extends QuantizerPair(
+      "ivfpq_trained_index", "trained_nprobe_curve", "trained_rerank_curve") {
+    def resolveCells(spark: SparkSession, dir: String): Unit =
+      graft.similarity.VectorSearch.ensureCodebook(
+        table(spark, dir, "embeddings").sample(COARSE_SAMPLE, COARSE_SEED),
+        "vec_id", "embedding", k = COARSE_K, maxIter = COARSE_ITER,
+        path = TrainedCentroidsPath, cacheKey = coarseCacheKey(spark, dir))
+    override def resolve(spark: SparkSession, dir: String): Unit = {
+      resolveCells(spark, dir)
+      ensurePqCodebook(spark, dir)
+    }
+    def cents(spark: SparkSession, dir: String): DataFrame =
+      graft.exec.ArtifactStore.readFixed(spark, TrainedCentroidsPath)
+        .select(col("c_id"), col("cv"))
+        .withColumn("cn", l2norm(col("cv")))
+    // memoized by CONTENT identity, so steady-state serves skip the
+    // per-call 16-row collect job
+    def fullCodebook(spark: SparkSession, dir: String): PqCodebook =
+      readCodebook(spark, "trainedPq|"
+          + graft.exec.ArtifactStore.contentKey(spark, TrainedPqPath))(
+        graft.exec.ArtifactStore.readFixed(spark, TrainedPqPath))
+    private def centsKey(spark: SparkSession): String =
+      graft.exec.ArtifactStore.contentKey(spark, TrainedCentroidsPath)
+    private def pairKey(spark: SparkSession): String =
+      s"-q${centsKey(spark)}" +
+        graft.exec.ArtifactStore.contentKey(spark, TrainedPqPath)
+    def indexKey(spark: SparkSession): String =
+      s"-coarse-k$COARSE_K-i$COARSE_ITER-f$COARSE_SAMPLE-sd$COARSE_SEED" +
+        s"${pairKey(spark)}-v2"
+    def curveProbes(n: DataFrame): DataFrame = pqProbes(n)
+    def curveTruth(spark: SparkSession, dir: String): DataFrame =
+      pqGroundTruth(spark, dir)
+    def nprobeKey(spark: SparkSession): String = s"-cc${centsKey(spark)}"
+    def rerankKey(spark: SparkSession): String = pairKey(spark)
   }
-
-  /** Resolve BOTH trained quantizer artifacts (coarse cells + PQ
-    * sub-codebooks) — the precondition of every trained-family query. */
-  private[queries] def ensureTrainedQuantizers(spark: SparkSession,
-      dir: String): Unit = {
-    ensureTrainedCoarse(spark, dir)
-    ensurePqCodebook(spark, dir)
-  }
-
-  /** The CONTENT identity of both persisted trained quantizers (file
-    * uri, length, mtime of every parquet part — re-listed per call,
-    * never memoized). Every content-keyed `ensure` derivative of the
-    * fixed-path trained artifacts carries this in its key: the fixed
-    * paths rebuild IN PLACE when a different corpus runs, so any
-    * retrain must re-key the derivative (the r17 q158 gate failure —
-    * a cached index generation served codes from different center
-    * bytes than the oracle replayed). */
-  private def trainedQuantizerIdentity(spark: SparkSession): String =
-    graft.exec.ArtifactStore.contentKey(spark, TrainedCentroidsPath) +
-      graft.exec.ArtifactStore.contentKey(spark, TrainedPqPath)
-
-  /** The trained codebook read back from the PERSISTED artifact (the
-    * exact doubles the oracle reads), in code order. */
-  private def loadTrainedPq(spark: SparkSession): PqCodebook =
-    // memoized by CONTENT identity (the fixed path rebuilds in place on
-    // a retrain — the key the r17 q158 lesson mandates), so steady-state
-    // serves skip the per-call 16-row collect job
-    readCodebook(spark, "trainedPq|"
-        + graft.exec.ArtifactStore.contentKey(spark, TrainedPqPath))(
-      graft.exec.ArtifactStore.readFixed(spark, TrainedPqPath))
 
   /** q142's serve (q143's served side): full-scan ADC of the corpus
     * encoded inline against the persisted trained sub-codebooks. */
   private def trainedPqServe(spark: SparkSession, dir: String): DataFrame = {
     ensurePqCodebook(spark, dir)
-    val cb = loadTrainedPq(spark)
+    val cb = TrainedPair.codebook(spark, dir)
     val n = normed(spark, dir)
     pqAdcServe(inlineCodes(n, cb), pqProbes(n), cb)
   }
 
-  /** q54's trained coarse codebook read back from the persisted
-    * artifact (the exact doubles the oracle reads), with norms. */
-  private def trainedCents(spark: SparkSession): DataFrame =
-    graft.exec.ArtifactStore.readFixed(spark, TrainedCentroidsPath)
-      .select(col("c_id"), col("cv"))
-      .withColumn("cn", l2norm(col("cv")))
-
-  /** SQL twin of [[trainedCents]] as `cents(c_id, cv, cn)`. */
+  /** SQL twin of [[TrainedPair]]'s cells as `cents(c_id, cv, cn)`. */
   private def trainedCentsCte: String = s"""rawc AS (
           SELECT c_id, list_transform(cv, x -> CAST(x AS DOUBLE)) AS cv
           FROM read_parquet('$TrainedCentroidsPath/*.parquet')),
@@ -1387,71 +1409,6 @@ object Similarity {
           SELECT c_id, cv,
                  sqrt(list_sum(list_transform(cv, x -> x * x))) AS cn
           FROM rawc)"""
-
-  /** q158's DURABLE packed index over the TRAINED quantizer pair — the
-    * FAISS `IVFPQ` a deployment actually TRAINS (q54's KMeans coarse
-    * codebook + q142's per-subspace KMeans PQ sub-codebooks), stored
-    * with the [[ivfPqIndex]] discipline: one 24-data-byte row per
-    * vector (vec_id, nrm, trained coarse cell, the m trained-PQ codes
-    * packed into one BIGINT). Resolves BOTH trained artifacts first
-    * (fit-on-miss / reuse-on-hit — the q54/q142 ensure paths), then
-    * builds at most once per (corpus source identity × training params
-    * × QUANTIZER CONTENT identity): the fixed-path trained artifacts
-    * rebuild IN PLACE whenever a different corpus runs, so the key
-    * carries [[trainedQuantizerIdentity]] — any retrain re-keys this
-    * derivative, and a cached index generation can never serve codes
-    * from different center bytes than the oracle replays. (Round 17's
-    * key bound to corpus+params only, resting on an assumed
-    * cross-process KMeans byte-determinism the driver's gate falsified:
-    * rows matched, hashes didn't.) Training params ride the key from
-    * the SAME named constants the ensureCodebook call site uses.
-    * Oracles replay the MATERIALIZED centers (KMeans isn't
-    * SQL-reproducible; everything given the centers is), so the gate
-    * value-checks these bytes. */
-  private def ivfPqTrainedIndex(spark: SparkSession, dir: String): DataFrame = {
-    ensureTrainedQuantizers(spark, dir)
-    val path = graft.exec.ArtifactStore.ensure(spark, "ivfpq_trained_index",
-      graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")
-        + s"-m$PQ_M-k$PQ_KSUB-s$PQ_SUB-coarse-k$COARSE_K-i$COARSE_ITER"
-        + s"-f$COARSE_SAMPLE-sd$COARSE_SEED"
-        + s"-q${trainedQuantizerIdentity(spark)}-v2") { p =>
-      val n = normed(spark, dir)
-      val cb = loadTrainedPq(spark)
-      writePackedIndex(VectorSearch.assignCells(n, trainedCents(spark)), "v",
-        cb, p)
-    }
-    graft.exec.ArtifactStore.readPublished(spark, path)
-  }
-
-  /** The trained-quantizer cell-restricted packed serve (q158's scan
-    * shape, parameterized by the serving dials for the q162–q164
-    * election arc): [[cellRestrictedPackedServe]] over the trained
-    * index, the persisted trained centers and sub-codebooks. Resolves
-    * the quantizers first (via [[ivfPqTrainedIndex]] — left-to-right
-    * evaluation), so the centers/codebook reads see the same live
-    * generation the index was keyed on. */
-  private[queries] def trainedPackedServe(spark: SparkSession, dir: String,
-      nprobe: Int, topk: Int = TOPK): DataFrame = {
-    val idx = ivfPqTrainedIndex(spark, dir)
-    cellRestrictedPackedServe(idx, trainedCents(spark),
-      loadTrainedPq(spark), pqProbes(normed(spark, dir)), nprobe, topk)
-  }
-
-  /** q164's production serve — the q157 composition over the quantizers
-    * a deployment actually FITS: trained coarse cells + trained PQ
-    * codes, probed at the q162-ELECTED depth, shortlisted to the
-    * q163-ELECTED R, exact-re-ranked to the top-[[TOPK]]. Width stays
-    * the full [[PQ_KSUB]] BY CONSTRUCTION: the width election is a
-    * prefix property of the md5-order codebook; a KMeans sub-codebook
-    * has no meaningful prefix (its first w centers are not a trained
-    * width-w codebook), so electing width for the trained family would
-    * require training at every width — a deployment retrains, it does
-    * not truncate. */
-  private[queries] def trainedProductionServe(spark: SparkSession,
-      dir: String): DataFrame =
-    exactRerank(spark, dir,
-      trainedPackedServe(spark, dir, electedTrainedNprobe(spark, dir),
-        topk = electedTrainedRerankR(spark, dir)))
 
   /** Shared IVF search plan over a normed corpus `n` (vec_id, v, nrm) and
     * broadcast centroids `cents` (c_id, cv, cn): nearest-cell assignment
@@ -1465,15 +1422,18 @@ object Similarity {
     * scoring expansion (see assignCells) and never shuffles for the
     * probe either; only (q_id, neighbor, cosine) triples move for the
     * final ranking. */
-  private[queries] def ivfSearch(n: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
-    val assigned = VectorSearch.assignCells(n, cents)
-    val qs = VectorSearch.probeCells(
-      n.filter(col("vec_id") % QUERY_MOD === 0), cents, nprobe)
-    // probe: queries are broadcast per cell; the corpus side stays
-    // partitioned — the join key is the cell id
+  private[queries] def ivfSearch(n: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    inCellSearch(VectorSearch.assignCells(n, cents), VectorSearch.probeCells(
+      n.filter(col("vec_id") % QUERY_MOD === 0), cents, nprobe))
+
+  /** The in-cell exact serve [[ivfSearch]] and [[twoLevelSearch]] share:
+    * the `assigned` corpus rows (vec_id, v, nrm, c_id) of every probed
+    * cell of `qs` (q_id, qv, qn, qcell) scored by exact 4dp cosine, top-k
+    * per probe. Probes are broadcast per cell; the corpus side stays
+    * partitioned — the join key is the cell id. */
+  private def inCellSearch(assigned: DataFrame, qs: DataFrame): DataFrame =
     Q.localized(servedTopK(exactScored(
       assigned.join(broadcast(qs), col("c_id") === col("qcell"))), "cosine"))
-  }
 
   val defs: Seq[Q] = Seq(
 
@@ -1578,10 +1538,8 @@ object Similarity {
     // tie-break (engine-independent ordering).
     Q("q36_ann_ivf",
       oracle = Some(ivfServeOracleSql),
-      run = (spark, dir) => {
-        val n = normed(spark, dir)
-        ivfSearch(n, storedCents(spark, dir), nprobe = 1)
-      }),
+      run = (spark, dir) =>
+        ivfSearch(normed(spark, dir), Md5Pair.cents(spark, dir), nprobe = 1)),
 
     // ------------------------------------------------------------------
     // q54: IVF over a TRAINED codebook with nprobe=2 — the production IVF
@@ -1618,10 +1576,10 @@ object Similarity {
         // recall is nprobe's job). The oracle is immune to training
         // variation either way: it replays the MATERIALIZED centroids,
         // whatever they are.
-        ensureTrainedCoarse(spark, dir)
+        TrainedPair.resolveCells(spark, dir)
         // search over the PERSISTED centroids (the exact doubles the
         // oracle reads), not the in-memory ones
-        ivfSearch(normed(spark, dir), trainedCents(spark), nprobe = 2)
+        ivfSearch(normed(spark, dir), TrainedPair.cents(spark, dir), nprobe = 2)
       }),
 
     // ------------------------------------------------------------------
@@ -1663,7 +1621,7 @@ object Similarity {
         // parquet read afterwards); the IVF side still recomputes — it
         // is the thing under evaluation
         val n = normed(spark, dir).persist(MEMORY_AND_DISK)
-        val ivf = ivfSearch(n, storedCents(spark, dir), nprobe = 1)
+        val ivf = ivfSearch(n, Md5Pair.cents(spark, dir), nprobe = 1)
         val probes = ivfEvalProbes(n)
         val result = recallRows(ivf, ivfGroundTruth(spark, dir), probes)
         n.unpersist(blocking = false)
@@ -1727,10 +1685,8 @@ object Similarity {
             s"n, cents\n WHERE n.vec_id % $QUERY_MOD = 0",
             "(SELECT chosen_p FROM sel)", "n.vec_id", "v", "nrm")}),
         ${inCellServeSql("qall", "served")}"""),
-      run = (spark, dir) => {
-        val n = normed(spark, dir)
-        ivfSearch(n, storedCents(spark, dir), nprobe = electedNprobe(spark, dir))
-      }),
+      run = (spark, dir) => ivfSearch(normed(spark, dir),
+        Md5Pair.cents(spark, dir), nprobe = electedNprobe(spark, dir))),
 
     // ------------------------------------------------------------------
     // q133: TWO-LEVEL (hierarchical) IVF — the past-the-budget-cap
@@ -1773,41 +1729,18 @@ object Similarity {
         centgrp AS (
           SELECT s_id AS c_id, s_id FROM supers
           UNION ALL
-          SELECT c_id, s_id FROM (
-            SELECT c.c_id, s.s_id,
-                   row_number() OVER (PARTITION BY c.c_id
-                     ORDER BY CAST(floor(list_sum(list_transform(
-                                    range(1, len(c.cv) + 1),
-                                    i -> c.cv[i] * s.sv[i])) / (c.cn * s.sn)
-                                    * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              s.s_id) AS rn
-            FROM cents c, supers s
-            WHERE c.c_id NOT IN (SELECT s_id FROM supers))
-          WHERE rn = 1),
+          ${assignRankSql("c_id, s_id", "c.c_id, s.s_id",
+            "\n WHERE c.c_id NOT IN (SELECT s_id FROM supers)", part = "c.c_id",
+            score = cellScoreSql("c.cv", "c.cn", "s.sv", "s.sn"), tie = "s.s_id",
+            from = "cents c, supers s")}),
         rowsuper AS (
-          SELECT vec_id, s_id FROM (
-            SELECT n.vec_id, s.s_id,
-                   row_number() OVER (PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(
-                                    range(1, len(v) + 1),
-                                    i -> v[i] * s.sv[i])) / (nrm * s.sn)
-                                    * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              s.s_id) AS rn
-            FROM n, supers s)
-          WHERE rn = 1),
+          ${assignRankSql("vec_id, s_id", "n.vec_id, s.s_id",
+            score = cellScoreSql("v", "nrm", "s.sv", "s.sn"), tie = "s.s_id",
+            from = "n, supers s")}),
         assigned AS (
-          SELECT vec_id, c_id FROM (
-            SELECT n.vec_id, g.c_id,
-                   row_number() OVER (PARTITION BY n.vec_id
-                     ORDER BY CAST(floor(list_sum(list_transform(
-                                    range(1, len(v) + 1),
-                                    i -> v[i] * c.cv[i])) / (nrm * c.cn)
-                                    * 1000000.0 + 0.5) AS BIGINT) DESC,
-                              g.c_id) AS rn
-            FROM n JOIN rowsuper rs USING (vec_id)
-            JOIN centgrp g ON g.s_id = rs.s_id
-            JOIN cents c ON c.c_id = g.c_id)
-          WHERE rn = 1),
+          ${assignRankSql(inner = "n.vec_id, g.c_id",
+            score = cellScoreSql("v", "nrm", "c.cv", "c.cn"), tie = "g.c_id",
+            from = "n JOIN rowsuper rs USING (vec_id)\n JOIN centgrp g ON g.s_id = rs.s_id\n JOIN cents c ON c.c_id = g.c_id")}),
         qs AS (
           $ownCellProbesSql),
         ${inCellServeSql("qs")}"""),
@@ -2271,8 +2204,7 @@ object Similarity {
       oracle = Some(cellAdcOracleSql(trainedCentsCte, pqTrainedSelCte,
         cellRankSql("q_id, qn, qcell", "q_id, qn, c_id AS qcell", "qsr, cents",
           "2"))),
-      run = (spark, dir) =>
-        trainedPackedServe(spark, dir, nprobe = 2, topk = TOPK)),
+      run = (spark, dir) => ivfPqServe(spark, dir, nprobe = 2, q = TrainedPair)),
 
     // ------------------------------------------------------------------
     // q160: RESIDUAL-ENCODED IVF-PQ — the geometry FAISS's IVFPQ
@@ -2353,7 +2285,7 @@ object Similarity {
                     AS BIGINT) AS chosen
         FROM curve3 c, selpt s
         ORDER BY c.nprobe"""),
-      run = (spark, dir) => trainedNprobeCurve(spark, dir)),
+      run = (spark, dir) => nprobeCurve(spark, dir, TrainedPair)),
 
     // ------------------------------------------------------------------
     // q163: TRAINED RERANK-DEPTH CURVE + ELECTION — q156's discipline
@@ -2376,7 +2308,7 @@ object Similarity {
                     AS BIGINT) AS chosen
         FROM curvert3 c, selrt s
         ORDER BY c.r"""),
-      run = (spark, dir) => trainedRerankCurve(spark, dir)),
+      run = (spark, dir) => rerankDepthCurve(spark, dir, TrainedPair)),
 
     // ------------------------------------------------------------------
     // q164: TRAINED PRODUCTION ANN — the q157 composition over the
@@ -2400,7 +2332,8 @@ object Similarity {
         $trainedElectedCtes
         ${rankedTopKSql("cosine",
           "rrscoredt\n WHERE adc_rank <= (SELECT chosen_r FROM selrt)")}"""),
-      run = (spark, dir) => trainedProductionServe(spark, dir)),
+      run = (spark, dir) => ivfPqRerank(spark, dir,
+        electedRerankR(spark, dir, TrainedPair), q = TrainedPair)),
 
     // ------------------------------------------------------------------
     // q165: ENCODING-GEOMETRY CURVE + ELECTION — the fourth serving
@@ -2594,23 +2527,15 @@ object Similarity {
         val sigd = normed(spark, dir)
           .select(col("vec_id"), col("v"), col("nrm"),
             shiftright(signatureCol, 4).as("sig_hi"))
-        // built once per corpus identity at the fixed path (static
-        // oracle-free probe still wants a stable serving location):
-        // ensureAt's marker-carried key makes the rewrite happen ONLY
-        // when the embeddings source files change — pre-round-13 this
-        // rewrote the whole index on every invocation
-        graft.exec.ArtifactStore.ensureAt(spark, "q71_lsh_index",
-          graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings"),
-          at = Some(LshIndexPath)) { buildPath =>
-          sigd.write.mode("overwrite").partitionBy("sig_hi")
-            .parquet(buildPath)
-        }
-        // readFixed, not a bare spark.read.parquet: the fixed path
-        // rebuilds in place, and the content-keyed read memo both keeps
-        // staleness impossible and skips the per-invocation listing +
-        // footer-schema job (the r18 metadata-memo discipline — this
-        // was the one serve-path read left outside it)
-        val idx = graft.exec.ArtifactStore.readFixed(spark, LshIndexPath)
+        // built once per corpus source identity in the content-keyed
+        // store (the oracle never reads it, so it needs no fixed path);
+        // the memoized read skips the per-invocation listing +
+        // footer-schema job
+        val idx = graft.exec.ArtifactStore.readPublished(spark,
+          graft.exec.ArtifactStore.ensure(spark, "lsh_index",
+            graft.exec.ArtifactStore.sourceKey(spark, dir, "embeddings")) { p =>
+            sigd.write.mode("overwrite").partitionBy("sig_hi").parquet(p)
+          })
         // the probe: ONE row to the driver, shipped back as literals so
         // the bucket filter is a literal the planner can prune on
         val p = sigd.filter(col("vec_id") === 0)
@@ -2744,7 +2669,7 @@ object Similarity {
       run = (spark, dir) => {
         val n = normed(spark, dir)
         semanticDedupCensus(n.select(col("vec_id"), col("v"), col("nrm")),
-          storedCents(spark, dir), NEARDUP_COS)
+          Md5Pair.cents(spark, dir), NEARDUP_COS)
       }),
 
     // ------------------------------------------------------------------
@@ -2983,11 +2908,9 @@ object Similarity {
     val n = normed(spark, dir)
     val assigned = n.select(col("vec_id"), col("v"), col("nrm"),
       twoLevelAssignCol(n).as("c_id"))
-    val qs = assigned.filter(col("vec_id") % QUERY_MOD === 0)
+    inCellSearch(assigned, assigned.filter(col("vec_id") % QUERY_MOD === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("c_id").as("qcell"))
-    Q.localized(servedTopK(exactScored(
-      assigned.join(broadcast(qs), col("c_id") === col("qcell"))), "cosine"))
+        col("nrm").as("qn"), col("c_id").as("qcell")))
   }
 
   /** The shared exact-ground-truth plan every ANN recall evaluation
@@ -3277,24 +3200,30 @@ object Similarity {
         .as[D](dial.enc).head()
     }
 
-  /** q131: nprobe ∈ [[NPROBES]] of the md5-prefix IVF over the modulus
-    * probe sample (ann_gt_ivf); keyed by grid, target and k/n/mod. */
-  private[queries] def nprobeCurve(spark: SparkSession, dir: String): DataFrame = {
-    val gt = ivfGroundTruth(spark, dir)
-    durableCurve(spark, dir, "ann_nprobe_curve",
-      s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP" +
-        s"-k$TOPK-n$QUERY_N-m$QUERY_MOD-v1",
-      NprobeDial, Seq("total_candidates")) {
+  /** q131 (md5 pair) / q162 (trained pair): nprobe ∈ [[NPROBES]] of
+    * the exact in-cell search over pair `q`'s coarse cells, for its
+    * probe universe against its ground truth; keyed by grid, target, k/n
+    * and the pair's part (the probe modulus, or the trained centers'
+    * content identity — an in-place retrain re-keys it). Resolves the
+    * coarse cells only. */
+  private[queries] def nprobeCurve(spark: SparkSession, dir: String,
+      q: QuantizerPair = Md5Pair): DataFrame = {
+    q.resolveCells(spark, dir)
+    val gt = q.curveTruth(spark, dir)
+    durableCurve(spark, dir, q.nprobeFamily,
+      s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP-k$TOPK-n$QUERY_N" +
+        s"${q.nprobeKey(spark)}-v1", NprobeDial, Seq("total_candidates")) {
       val n = normed(spark, dir).persist(MEMORY_AND_DISK)
-      val curve = nprobeSweep(n, boundedCents(n), ivfEvalProbes(n), gt)
+      val curve = nprobeSweep(n, q.cents(spark, dir), q.curveProbes(n), gt)
       n.unpersist(blocking = false)
       curve
     }
   }
 
-  private[queries] def electedNprobe(spark: SparkSession, dir: String): Int =
-    electedDial(spark, s"electedNprobe|$dir", NprobeDial)(
-      nprobeCurve(spark, dir)).toInt
+  private[queries] def electedNprobe(spark: SparkSession, dir: String,
+      q: QuantizerPair = Md5Pair): Int =
+    electedDial(spark, s"electedNprobe|${q.nprobeFamily}|$dir", NprobeDial)(
+      nprobeCurve(spark, dir, q)).toInt
 
   /** q138: codebook width ksub ∈ [[PQ_WIDTHS]] of the full-scan ADC
     * (ann_gt_pq); keyed by grid, target and k/n. */
@@ -3321,69 +3250,30 @@ object Similarity {
     electedDial(spark, s"electedWidth|$dir", WidthDial)(
       pqWidthCurve(spark, dir)).toInt
 
-  /** q156: shortlist depth R ∈ [[RERANK_RS]] of the q131-elected-depth
-    * packed-ADC serve plus exact re-rank (ann_gt_pq); keyed by grid,
-    * target, k/n and the nprobe grid. */
-  private[queries] def rerankDepthCurve(spark: SparkSession, dir: String): DataFrame = {
+  /** q156 (md5 pair) / q163 (trained pair): shortlist depth R ∈
+    * [[RERANK_RS]] of pair `q`'s elected-depth packed-ADC serve plus
+    * exact re-rank (ann_gt_pq); keyed by grid, target, k/n, the nprobe
+    * grid and the pair's part (both trained quantizers' content
+    * identity). */
+  private[queries] def rerankDepthCurve(spark: SparkSession, dir: String,
+      q: QuantizerPair = Md5Pair): DataFrame = {
+    q.resolve(spark, dir)
     val gt = pqGroundTruth(spark, dir)
-    val np = electedNprobe(spark, dir)
-    ivfPqIndex(spark, dir)
-    pqQuantizerRoot(spark, dir)
-    durableCurve(spark, dir, "rerank_depth_curve",
+    val np = electedNprobe(spark, dir, q)
+    ivfPqIndex(spark, dir, q = q)
+    durableCurve(spark, dir, q.rerankFamily,
       s"-r${RERANK_RS.mkString("_")}-t$RECALL_TARGET_BP" +
-        s"-k$TOPK-n$QUERY_N-p${NPROBES.mkString("_")}-v1", RerankDial) {
+        s"-k$TOPK-n$QUERY_N-p${NPROBES.mkString("_")}${q.rerankKey(spark)}-v1",
+      RerankDial) {
       rerankSweep(spark, dir, gt,
-        ivfPqServe(spark, dir, np, topk = RERANK_RS.max.toInt))
+        ivfPqServe(spark, dir, np, topk = RERANK_RS.max.toInt, q = q))
     }
   }
 
-  private[queries] def electedRerankR(spark: SparkSession, dir: String): Int =
-    electedDial(spark, s"electedRerankR|$dir", RerankDial)(
-      rerankDepthCurve(spark, dir)).toInt
-
-  /** q162: nprobe ∈ [[NPROBES]] over the TRAINED coarse cells for the
-    * full-corpus md5 probe sample (ann_gt_pq — the trained serve's own
-    * probe universe); keyed by grid, target, k/n and the trained
-    * centers' content identity (an in-place retrain re-keys it). */
-  private[queries] def trainedNprobeCurve(spark: SparkSession, dir: String): DataFrame = {
-    ensureTrainedCoarse(spark, dir)
-    val gt = pqGroundTruth(spark, dir)
-    durableCurve(spark, dir, "trained_nprobe_curve",
-      s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP-k$TOPK-n$QUERY_N" +
-        s"-cc${graft.exec.ArtifactStore.contentKey(spark, TrainedCentroidsPath)}" +
-        "-v1", NprobeDial, Seq("total_candidates")) {
-      val n = normed(spark, dir).persist(MEMORY_AND_DISK)
-      val curve = nprobeSweep(n, trainedCents(spark), pqProbes(n), gt)
-      n.unpersist(blocking = false)
-      curve
-    }
-  }
-
-  private[queries] def electedTrainedNprobe(spark: SparkSession, dir: String): Int =
-    electedDial(spark, s"electedTrainedNprobe|$dir", NprobeDial)(
-      trainedNprobeCurve(spark, dir)).toInt
-
-  /** q163: shortlist depth R ∈ [[RERANK_RS]] of the q162-elected-depth
-    * TRAINED packed serve plus exact re-rank (ann_gt_pq); keyed by
-    * grid, target, k/n, the nprobe grid and both trained quantizers'
-    * content identity. */
-  private[queries] def trainedRerankCurve(spark: SparkSession, dir: String): DataFrame = {
-    ensureTrainedQuantizers(spark, dir)
-    val gt = pqGroundTruth(spark, dir)
-    val np = electedTrainedNprobe(spark, dir)
-    ivfPqTrainedIndex(spark, dir)
-    durableCurve(spark, dir, "trained_rerank_curve",
-      s"-r${RERANK_RS.mkString("_")}-t$RECALL_TARGET_BP" +
-        s"-k$TOPK-n$QUERY_N-p${NPROBES.mkString("_")}" +
-        s"-q${trainedQuantizerIdentity(spark)}-v1", RerankDial) {
-      rerankSweep(spark, dir, gt,
-        trainedPackedServe(spark, dir, np, topk = RERANK_RS.max.toInt))
-    }
-  }
-
-  private[queries] def electedTrainedRerankR(spark: SparkSession, dir: String): Int =
-    electedDial(spark, s"electedTrainedRerankR|$dir", RerankDial)(
-      trainedRerankCurve(spark, dir)).toInt
+  private[queries] def electedRerankR(spark: SparkSession, dir: String,
+      q: QuantizerPair = Md5Pair): Int =
+    electedDial(spark, s"electedRerankR|${q.rerankFamily}|$dir", RerankDial)(
+      rerankDepthCurve(spark, dir, q)).toInt
 
   /** q165: encoding geometry (raw vs residual codes, both at the
     * q131-elected depth over identical 24-byte index layouts,
@@ -3396,7 +3286,6 @@ object Similarity {
     val gt = pqGroundTruth(spark, dir)
     val np = electedNprobe(spark, dir)
     ivfPqIndex(spark, dir)
-    pqQuantizerRoot(spark, dir)
     ivfPqResidArtifact(spark, dir)
     durableCurve(spark, dir, "ann_geometry_curve",
       s"-p${NPROBES.mkString("_")}-t$RECALL_TARGET_BP" +

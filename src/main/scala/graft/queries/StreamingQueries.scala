@@ -949,7 +949,7 @@ object StreamingQueries {
         // the materialized assignment from the ArtifactStore instead,
         // the q54/q142 discipline)
         val n = Similarity.normed(spark, dir)
-        val cents = Similarity.storedCents(spark, dir)
+        val cents = Similarity.Md5Pair.cents(spark, dir)
         val assigned = graft.similarity.VectorSearch.assignCells(n, cents)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // probe stream: the q36 modulus probe set arriving live; per-row
@@ -1046,9 +1046,9 @@ object StreamingQueries {
         // isn't re-read per micro-batch
         val idx = Similarity.ivfPqIndex(spark, dir, w)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cents = Similarity.storedCents(spark, dir)
+        val cents = Similarity.Md5Pair.cents(spark, dir)
         val nprobe = Similarity.electedNprobe(spark, dir)
-        val cb = Similarity.storedPqCodebook(spark, dir, w)
+        val cb = Similarity.Md5Pair.codebook(spark, dir, w)
         val probesStatic = Similarity.pqProbes(n)
         val bcLut = Similarity.pqLutBroadcast(probesStatic, cb)
         val probeIds = probesStatic.select(col("q_id")).collect()

@@ -65,11 +65,14 @@ class MemoDisciplineSpec extends AnyFunSuite with Matchers
       // one-time CREATE TABLE DDL derivation, guarded by
       // catalog.tableExists — runs once per session, not per invocation
       "ScaleOps.scala" -> 2)
-    val qdir = Paths.get("src/main/scala/graft/queries")
-    // a relative path, so the spec must run from the repository root
-    assert(Files.isDirectory(qdir), s"$qdir not found under the working " +
-      s"directory ${Paths.get("").toAbsolutePath}; run the tests from " +
-      "the repository root (where build.sbt is)")
+    // the project root comes from the build (build.sbt passes sbt's
+    // baseDirectory to the forked test JVM), not the working directory
+    val base = Paths.get(sys.props.getOrElse("graft.baseDir", fail(
+      "system property graft.baseDir is unset; run the tests through sbt, " +
+        "whose build.sbt passes the project's baseDirectory")))
+    val qdir = base.resolve("src/main/scala/graft/queries")
+    assert(Files.isDirectory(qdir), s"$qdir not found under the project " +
+      s"root $base that graft.baseDir names")
     val counts = Files.list(qdir).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map { p =>
@@ -94,7 +97,7 @@ class MemoDisciplineSpec extends AnyFunSuite with Matchers
     // incremental-index default (must re-list per call — documented);
     // q78 overrides it with readPublished for its immutable index
     val td = new String(Files.readAllBytes(
-      Paths.get("src/main/scala/graft/dedup/TextDedup.scala")),
+      base.resolve("src/main/scala/graft/dedup/TextDedup.scala")),
       java.nio.charset.StandardCharsets.UTF_8)
     td.linesIterator.map(_.trim)
       .filterNot(l => l.startsWith("//") || l.startsWith("*"))

@@ -399,22 +399,23 @@ class AnnArtifactSpec extends AnyFunSuite with Matchers with SparkTestSession {
     "identity — the trained serve at q158's pinned nprobe=2 with R=TOPK " +
     "re-orders exactly q158's neighbor sets") {
     // fixed-path trained artifacts, so no root override (q158 pattern)
-    val curve = Similarity.trainedNprobeCurve(spark, sf0001).collect()
+    val trained = Similarity.TrainedPair
+    val curve = Similarity.nprobeCurve(spark, sf0001, trained).collect()
     curve.map(_.getAs[Long]("nprobe")).toSeq shouldBe Seq(1L, 2L, 4L, 8L)
     curve.count(_.getAs[Long]("chosen") == 1L) shouldBe 1
     Similarity.NPROBES should contain(
-      Similarity.electedTrainedNprobe(spark, sf0001).toLong)
+      Similarity.electedNprobe(spark, sf0001, trained).toLong)
     // recall must be monotone non-decreasing in nprobe (more probed
     // cells can only add candidates) — a cheap arithmetic sanity pin
     val bps = curve.sortBy(_.getAs[Long]("nprobe"))
       .map(_.getAs[Long]("recall_bp")).toSeq
     bps.zip(bps.tail).foreach { case (a, b) => b should be >= a }
 
-    val rcurve = Similarity.trainedRerankCurve(spark, sf0001).collect()
+    val rcurve = Similarity.rerankDepthCurve(spark, sf0001, trained).collect()
     rcurve.map(_.getAs[Long]("r")).toSeq shouldBe Seq(10L, 20L, 50L, 100L)
     rcurve.count(_.getAs[Long]("chosen") == 1L) shouldBe 1
     Similarity.RERANK_RS should contain(
-      Similarity.electedTrainedRerankR(spark, sf0001).toLong)
+      Similarity.electedRerankR(spark, sf0001, trained).toLong)
 
     // degenerate dials: exact re-rank of the nprobe=2, R=TOPK trained
     // shortlist permutes q158's per-probe top-10 — identical SETS
@@ -423,7 +424,7 @@ class AnnArtifactSpec extends AnyFunSuite with Matchers with SparkTestSession {
         .map { case (q, rs) => q -> rs.map(_.getAs[Long]("neighbor")).toSet }
     val q158 = Registry.queries("q158_ivfpq_trained")(spark, sf0001)
     val degen = Similarity.exactRerank(spark, sf0001,
-      Similarity.trainedPackedServe(spark, sf0001, nprobe = 2, topk = 10)
+      Similarity.ivfPqServe(spark, sf0001, nprobe = 2, topk = 10, q = trained)
         .select(col("q_id"), col("neighbor")))
     neighborSets(degen) shouldBe neighborSets(q158)
 
@@ -433,9 +434,9 @@ class AnnArtifactSpec extends AnyFunSuite with Matchers with SparkTestSession {
       .collect().toSeq
     prod should not be empty
     val inline = Similarity.exactRerank(spark, sf0001,
-      Similarity.trainedPackedServe(spark, sf0001,
-          Similarity.electedTrainedNprobe(spark, sf0001),
-          Similarity.electedTrainedRerankR(spark, sf0001))
+      Similarity.ivfPqServe(spark, sf0001,
+          Similarity.electedNprobe(spark, sf0001, trained),
+          Similarity.electedRerankR(spark, sf0001, trained), q = trained)
         .select(col("q_id"), col("neighbor"))).collect().toSeq
     prod shouldBe inline
   }
@@ -481,6 +482,26 @@ class AnnArtifactSpec extends AnyFunSuite with Matchers with SparkTestSession {
       val indexed = rows(Similarity.sq8Index(spark, sf))
       indexed should not be empty
       indexed shouldBe inline
+    }
+  }
+
+  test("q71's LSH index is a content-keyed store entry: two runs on a " +
+    "fresh root publish exactly one <root>/lsh_index/<key>/_GRAFT_OK, no " +
+    "fixed-path dir, and the same rows") {
+    withRoot { root =>
+      import scala.jdk.CollectionConverters._
+      val q71 = Registry.queries("q71_lsh_index_probe")
+      val first = q71(spark, sf).collect().toSeq
+      val second = q71(spark, sf).collect().toSeq
+      first should not be empty
+      second shouldBe first
+      val base = java.nio.file.Paths.get(root)
+      val markers = Files.walk(base).iterator().asScala
+        .filter(_.getFileName.toString == "_GRAFT_OK")
+        .map(p => base.relativize(p).toString).toSet
+      val key = ArtifactStore.sourceKey(spark, sf, "embeddings")
+      markers shouldBe Set(s"lsh_index/$key/_GRAFT_OK")
+      new java.io.File(root, "q71_lsh_index").exists() shouldBe false
     }
   }
 
