@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -39,17 +38,7 @@ object Bench {
     }
     val startedAtMs = System.currentTimeMillis()
     val loadavgStart = osBean.getSystemLoadAverage // -1.0 if unavailable
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(graft.io.Tables.NANOS_AS_LONG, "true")
-      // UTC pin matches Verify/ShowPlan/ScaleUp: with TIMESTAMP_NTZ
-      // events testdata the cast to TIMESTAMP is session-tz dependent, so
-      // an unpinned bench would time (and bucket) different semantics per
-      // host timezone.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // absorb session/codegen warmup so it isn't billed to the first query
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -9,13 +9,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, names) = (args(0), args(1), args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.io.Tables.NANOS_AS_LONG, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val failed = dump(spark, sfDir, outDir, names)
     spark.stop()

@@ -1,34 +1,27 @@
 package graft.gdelt
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import java.nio.file.{Files, Paths}
 
 import graft.report.Charts
+import graft.report.Markdown.Table
 
 /** The reference's two flagship PNG graphs, rendered by the engine's S8
-  * chart sink from the same aggregates the markdown report uses —
-  * closing the last reference output class (published under
-  * reference gdelt/graphs/). Chart inputs are tiny RESULT relations
-  * (per-week stats, six model coefficients); all heavy lifting happened
-  * in the distributed aggregation/fit that produced them. The
-  * precomputed-input overloads exist so a pipeline that already built
-  * the stats/model for its report doesn't aggregate or fit twice. */
+  * chart sink from the same collected tables the markdown reports use
+  * ([[GdeltReport.Tables]]) — closing the last reference output class
+  * (published under reference gdelt/graphs/). Chart inputs are tiny
+  * RESULT tables (per-week stats, six model coefficients); all heavy
+  * lifting happened in the distributed aggregation/fit that produced
+  * them, so neither writer runs a Spark job. */
 object GdeltGraphs {
 
   /** graph_share_of_voice.png: per-week grouped bars of the % of
-    * articles mentioning each company (reference
+    * articles mentioning each company, from the collected
+    * [[GdeltAnalysis.summaryStats]] (reference
     * general_ml_and_source_sentiment_analysis.py:196-230 — pandas
     * `.plot(kind='bar')` over the same pct columns). */
-  def writeShareOfVoice(core: DataFrame, path: String): Unit =
-    writeShareOfVoiceStats(GdeltAnalysis.summaryStats(core), path)
-
-  /** As [[writeShareOfVoice]], from an already-computed
-    * [[GdeltAnalysis.summaryStats]] relation. */
-  def writeShareOfVoiceStats(stats: DataFrame, path: String): Unit =
-    Charts.writeGroupedBarChartPng(
-      stats.select(col("label_week"), col("pct_google"), col("pct_openai"),
-        col("pct_anthropic")),
-      "label_week", Seq("pct_google", "pct_openai", "pct_anthropic"),
+  def writeShareOfVoiceStats(stats: Table, path: String): Unit =
+    Charts.writeGroupedBarChartPng(stats.rows, "label_week",
+      Seq("pct_google", "pct_openai", "pct_anthropic"),
       "Tech Giant Share of Voice", path)
 
   /** graph_feature_importance.png: horizontal diverging bars of the
@@ -37,16 +30,11 @@ object GdeltGraphs {
     * (reference :158-193 hardcodes a sign flip; StringIndexer's
     * frequency-based label order is data-dependent, so the sign here is
     * derived from the fitted model's label order instead). */
-  def writeFeatureImportance(features: DataFrame, path: String): Unit =
-    writeFeatureImportanceModel(GdeltMl.weekClassifier(features), path)
-
-  /** As [[writeFeatureImportance]], from an already-fitted model. */
   def writeFeatureImportanceModel(model: GdeltMl.WeekModel, path: String): Unit = {
     // coefficients point toward label 1
     val sign = if (model.labels.lift(1).contains("week_may")) 1.0 else -1.0
     val ordered = GdeltMl.weekFeatures.map(f => f -> sign * model.coefficients(f))
-    val bytes = Charts.hBarChart(ordered.map(_._1), ordered.map(_._2),
-      "What distinguishes the two periods? (Model Impact)")
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), bytes)
+    Files.write(Paths.get(path), Charts.hBarChart(ordered.map(_._1),
+      ordered.map(_._2), "What distinguishes the two periods? (Model Impact)"))
   }
 }

@@ -3,7 +3,7 @@ package graft.gdelt
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.io.Tables
-import graft.queries.Q
+import graft.report.Markdown
 
 /** The reference's whole batch flow as ONE runnable job (SURVEY §3):
   * raw GKG JSON export → core parquet → ml-features parquet → the four
@@ -26,34 +26,27 @@ object GdeltPipeline {
     val ml = GdeltEtl.mlFeatures(coreBack)
     Tables.writeParquet(ml, s"$outDir/gdelt_ml_features.parquet")
     val mlBack = spark.read.parquet(s"$outDir/gdelt_ml_features.parquet")
-    // stats + model computed ONCE, shared by the markdown report and
-    // both graphs (the fit is the pipeline's most expensive tail step)
-    val stats = Q.localized(GdeltAnalysis.summaryStats(coreBack))
+    // the model (the pipeline's most expensive tail step) is fitted once
+    // and every report table collected once, shared by the four markdown
+    // reports and both graphs
     val model = GdeltMl.weekClassifier(mlBack)
-    graft.report.Markdown.write(s"$outDir/summary_report.md",
-      GdeltReport.summary(coreBack, stats, model))
-    graft.report.Markdown.write(s"$outDir/network_report.md",
-      GdeltReport.network(coreBack))
-    graft.report.Markdown.write(s"$outDir/theme_report.md",
-      GdeltReport.themes(coreBack))
-    graft.report.Markdown.write(s"$outDir/entity_sentiment_report.md",
-      GdeltReport.entitySentiment(coreBack))
-    GdeltGraphs.writeShareOfVoiceStats(stats, s"$outDir/graph_share_of_voice.png")
-    GdeltGraphs.writeFeatureImportanceModel(model,
+    val tables = GdeltReport.tables(coreBack, model)
+    Markdown.write(s"$outDir/summary_report.md", GdeltReport.summary(tables))
+    Markdown.write(s"$outDir/network_report.md", GdeltReport.network(tables))
+    Markdown.write(s"$outDir/theme_report.md", GdeltReport.themes(tables))
+    Markdown.write(s"$outDir/entity_sentiment_report.md",
+      GdeltReport.entitySentiment(tables))
+    GdeltGraphs.writeShareOfVoiceStats(tables.stats,
+      s"$outDir/graph_share_of_voice.png")
+    GdeltGraphs.writeFeatureImportanceModel(tables.model,
       s"$outDir/graph_feature_importance.png")
     (coreBack, mlBack)
   }
 
   def main(args: Array[String]): Unit = {
     val Array(rawPath, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NANOS_AS_LONG, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      "spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[4]"))
     spark.sparkContext.setLogLevel("WARN")
     // the reference's export can be a JSON array or JSONL; multiLine
     // handles both shapes the pandas loader accepted (build_datasets.py:57-69)

@@ -1,8 +1,7 @@
 package graft.queries
 
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
-import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, IDF, NGram, StopWordsRemover, Tokenizer, VectorAssembler}
-import org.apache.spark.ml.linalg.{SparseVector, Vector}
+import org.apache.spark.ml.feature.{StopWordsRemover, VectorAssembler}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -170,69 +169,25 @@ object MlQueries {
   }
 
   /** The spark.ml TF-IDF pipeline's per-doc top-5 table (M6-M10 + UD4 —
-    * the direct analog of nlp_analysis.py:157-164) plus the fitted
-    * CountVectorizer vocabulary — q29's library surface, value-pinned by
-    * MlSpec's full local re-derivation at sf0.001. */
-  def tfidfTopTermsWithVocab(spark: SparkSession, dir: String)
-      : (DataFrame, Array[String]) =
-    tfidfTopTermsWithVocab(spark,
-      table(spark, dir, "documents").select(col("doc_id"), col("text")))
-
-  /** Overload over a caller-provided (doc_id, text) frame — q29 passes
-    * a PERSISTED projection shared with its relational twin, so the one
-    * genuinely common input (the raw documents scan, the heaviest cost
-    * both sides share) is paid once while every downstream step stays
-    * independently derived on each side. */
-  def tfidfTopTermsWithVocab(spark: SparkSession, docs: DataFrame)
-      : (DataFrame, Array[String]) = {
-    val tokenized = new Tokenizer()
-      .setInputCol("text").setOutputCol("raw_tokens").transform(docs)
-    val cleaned = new StopWordsRemover()
-      .setInputCol("raw_tokens").setOutputCol("tokens").transform(tokenized)
-      // UD3 filter_short: built-in array filter, no UDF needed
-      .withColumn("tokens", filter(col("tokens"), t => length(t) > 2))
-    // three separate actions read this (CV.fit, IDF.fit, the final
-    // query) — persist the tokenized relation so the scan + tokenize +
-    // n-gram work runs once, not three times
-    val bigrams = new NGram().setN(2)
-      .setInputCol("tokens").setOutputCol("bigrams").transform(cleaned)
-      .select(col("doc_id"), col("bigrams"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cvModel: CountVectorizerModel = new CountVectorizer()
-      .setInputCol("bigrams").setOutputCol("tf")
-      .setVocabSize(1500).setMinDF(1.0)
-      .fit(bigrams)
-    val tf = cvModel.transform(bigrams)
-    val idfModel = new IDF().setInputCol("tf").setOutputCol("tfidf").fit(tf)
-    val scored = idfModel.transform(tf)
-    val vocab = spark.sparkContext.broadcast(cvModel.vocabulary)
-    // pattern-match instead of an unchecked SparseVector cast: the
-    // CountVectorizer→IDF chain happens to preserve sparsity today, but
-    // a dense vector must not become a runtime ClassCastException.
-    // Ties break on the TERM STRING, not the vocabulary index:
-    // CountVectorizer's index order among equal-count terms depends on
-    // partition merge order and is not deterministic across runs.
-    val topK = udf { v: Vector =>
-      val (indices, values) = v match {
-        case sv: SparseVector => (sv.indices, sv.values)
-        case dv => (Array.range(0, dv.size), dv.toArray)
-      }
-      indices.zip(values)
-        .map { case (i, value) => (vocab.value(i), value) }
-        .sortBy { case (term, value) => (-value, term) }
-        .take(5)
-        .map(_._1)
-    }
-    val result = Q.localized(scored
-      .select(col("doc_id"),
-        array_join(topK(col("tfidf")), ", ").as("top_terms"))
-      .orderBy(col("doc_id")))
-    bigrams.unpersist(blocking = false)
-    (result, cvModel.vocabulary)
+    * the direct analog of nlp_analysis.py:157-164) over a (doc_id, text)
+    * frame, plus its vocabulary: the NLP job's kernel
+    * (NlpAnalysis.tfidfTopK) with the default English stopwords. q29
+    * passes a PERSISTED projection shared with its relational twin, so
+    * the one genuinely common input (the raw documents scan, the heaviest
+    * cost both sides share) is paid once while every downstream step
+    * stays independently derived on each side. */
+  def tfidfTopTermsWithVocab(docs: DataFrame): (DataFrame, Array[String]) = {
+    val (top, vocab) = graft.nlp.NlpAnalysis.tfidfTopK(docs,
+      StopWordsRemover.loadDefaultStopWords("english"), Seq("doc_id"))
+    (top.select(col("doc_id"), array_join(col("top_terms"), ", ").as("top_terms"))
+      .orderBy(col("doc_id")), vocab)
   }
 
+  /** q29's library surface, value-pinned by MlSpec's full local
+    * re-derivation at sf0.001. */
   def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame =
-    tfidfTopTermsWithVocab(spark, dir)._1
+    tfidfTopTermsWithVocab(
+      table(spark, dir, "documents").select(col("doc_id"), col("text")))._1
 
   val defs: Seq[Q] = Seq(
 
@@ -340,9 +295,8 @@ object MlQueries {
     // (M6-M10 + UD4) under the hash gate: the engine runs BOTH the ml
     // pipeline and an independent relational re-derivation of the same
     // math (the q48 formulation with the pipeline's tokenizer/stopword
-    // semantics, restricted to the fitted CountVectorizer vocabulary so
-    // vocab truncation — whose tie order at the cap is nondeterministic
-    // by construction — affects both sides identically) and emits ONE
+    // semantics, restricted to the pipeline's 1,500-bigram vocabulary so
+    // the vocabulary cut affects both sides identically) and emits ONE
     // row per document asserting the two top-5 lists are IDENTICAL.
     // Guaranteed, not statistical: both sides compute tf·ln((N+1)/(df+1))
     // from the same integer counts in the same JVM (bit-identical
@@ -370,11 +324,11 @@ object MlQueries {
         val docs = table(spark, dir, "documents")
           .select(col("doc_id"), col("text"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (mlTop, vocab) = tfidfTopTermsWithVocab(spark, docs)
+        val (mlTop, vocab) = tfidfTopTermsWithVocab(docs)
         // relational twin with the PIPELINE's token semantics: lowercase,
         // split on \s (Tokenizer), default-english stopword removal
         // (StopWordsRemover), len>2 — then the q48 tf·idf/top-5 shape,
-        // semi-joined to the fitted vocabulary (≤1500 terms, broadcast)
+        // semi-joined to the pipeline's vocabulary (≤1500 terms, broadcast)
         // stopword membership via isin (a >10-literal In optimizes to
         // InSet — one hash probe per token) rather than array_contains
         // over a 181-element literal array (a linear scan per token:

@@ -22,8 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object StreamingQueries {
 
-  /** Auto-sized streaming state partition count per sfDir, cached (one
-    * directory listing per JVM). Stateful streaming pins its shuffle
+  /** Auto-sized streaming state partition count per sfDir, memoized per
+    * session (one directory listing; cleared with every corpus memo by
+    * ArtifactStore.invalidateSourceKeys). Stateful streaming pins its shuffle
     * partitioning at first start (no AQE) and every micro-batch
     * opens+commits every state store instance (stream-stream joins keep
     * FOUR per partition), each commit a file write+fsync into the
@@ -36,11 +37,8 @@ object StreamingQueries {
     * optima and grows smoothly between them; on a real deployment the
     * state-volume estimate would come from the source (Kafka lag / file
     * manifest) the same way. */
-  private val streamPartitionsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
   private def streamPartitions(spark: SparkSession, dir: String): Int = {
-    val sized = streamPartitionsCache.getOrElseUpdate(dir, {
+    val sized = graft.exec.SessionMemo.getOrElseUpdate(spark, "streamParts|" + dir) {
       // events may ship as a single file OR a directory of part
       // files (a Spark-written replica) — recurse, File.length() of
       // a directory is the dirent size, not the content
@@ -53,7 +51,7 @@ object StreamingQueries {
         .filter(_.getName.startsWith("events.parquet"))
         .map(sizeOf).sum
       math.min(8, math.ceil(bytes / (6.0 * 1024 * 1024)).toInt)
-    })
+    }
     // floor at min(4, cores): the r9 "1 beats 4 at sf0.1" result no
     // longer holds on the current code — re-measured r19 back-to-back
     // at BOTH 32 and 8 cores over the seven heaviest stateful
@@ -84,12 +82,14 @@ object StreamingQueries {
   private def streamPartitionsConf(spark: SparkSession, dir: String) =
     "spark.sql.shuffle.partitions" -> streamPartitions(spark, dir).toString
 
-  /** Raw events schema per sfDir, probed once per JVM: every streaming
-    * query needs it (readStream requires an explicit schema), and the
-    * batch-side footer read it comes from is pure fixed overhead when
-    * repeated per query. */
-  private val rawSchemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  /** A stream source's raw schema, probed once per session: every
+    * streaming query needs it (readStream requires an explicit schema),
+    * and the batch-side footer read it comes from is pure fixed overhead
+    * when repeated per query. Memoized with the corpus reads, so
+    * ArtifactStore.invalidateSourceKeys re-probes a rewritten file. */
+  private def rawSchema(spark: SparkSession, key: String)(
+      probe: => org.apache.spark.sql.types.StructType) =
+    graft.exec.SessionMemo.getOrElseUpdate(spark, "rawSchema|" + key)(probe)
 
   /** The events file-stream source. Must use the *raw* schema (whatever
     * shape the file carries — nanos-long or TIMESTAMP_NTZ, see
@@ -98,25 +98,24 @@ object StreamingQueries {
     * directory basePath, so the single file is addressed through a
     * pattern under its parent dir. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = rawSchemaCache.getOrElseUpdate(dir,
-      graft.io.Tables.eventsRaw(spark, dir).schema)
+    val schema = rawSchema(spark, dir)(graft.io.Tables.eventsRaw(spark, dir).schema)
     graft.io.Tables.withEventTime(
-      spark.readStream.schema(rawSchema).parquet(s"$dir/events.parque*"))
+      spark.readStream.schema(schema).parquet(s"$dir/events.parque*"))
   }
 
   /** The embeddings file-stream source (q125) — same footer-probed
     * schema + glob-under-parent discipline as [[eventsStream]]. */
   private def embeddingsStream(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = rawSchemaCache.getOrElseUpdate(dir + "#embeddings",
+    val schema = rawSchema(spark, dir + "#embeddings")(
       spark.read.parquet(s"$dir/embeddings.parquet").schema)
-    spark.readStream.schema(rawSchema).parquet(s"$dir/embeddings.parque*")
+    spark.readStream.schema(schema).parquet(s"$dir/embeddings.parque*")
   }
 
   /** The documents file-stream source (q128) — same discipline. */
   private def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val rawSchema = rawSchemaCache.getOrElseUpdate(dir + "#documents",
+    val schema = rawSchema(spark, dir + "#documents")(
       spark.read.parquet(s"$dir/documents.parquet").schema)
-    spark.readStream.schema(rawSchema).parquet(s"$dir/documents.parque*")
+    spark.readStream.schema(schema).parquet(s"$dir/documents.parque*")
   }
 
   /** Stream-side twin of Tables.table's compute-heavy under-split rule:
@@ -595,7 +594,7 @@ object StreamingQueries {
         // scope it to this query
         withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          val docSchema = rawSchemaCache.getOrElseUpdate(s"$dir#documents",
+          val docSchema = rawSchema(spark, s"$dir#documents")(
             spark.read.parquet(s"$dir/documents.parquet").schema)
           // spread before the heavy tokenize explode (the q128 rule):
           // back-to-back isolated A/B (two alternations, min-of-5) has

@@ -3,7 +3,7 @@ package graft.report
 import java.awt.{BasicStroke, Color, Font, Graphics2D, RenderingHints}
 import java.awt.image.BufferedImage
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** S8: PNG chart sink — the one reference output class previously outside
   * the engine (reference gdelt/scripts/general_ml_and_source_sentiment_analysis.py:141-224
@@ -171,13 +171,19 @@ object Charts {
 
   /** DataFrame-facing sink: (categoryCol, seriesCols*) → grouped bar PNG. */
   def writeGroupedBarChartPng(df: DataFrame, categoryCol: String,
+      seriesCols: Seq[String], chartTitle: String, path: String): Unit =
+    writeGroupedBarChartPng(df.select((categoryCol +: seriesCols)
+        .map(org.apache.spark.sql.functions.col): _*).collect().toSeq,
+      categoryCol, seriesCols, chartTitle, path)
+
+  /** As above, from already-collected rows (named fields). */
+  def writeGroupedBarChartPng(rows: Seq[Row], categoryCol: String,
       seriesCols: Seq[String], chartTitle: String, path: String): Unit = {
-    val rows = df.select((categoryCol +: seriesCols).map(org.apache.spark.sql.functions.col): _*).collect()
     val bytes = groupedBarChart(
-      rows.map(r => String.valueOf(r.get(0))).toSeq, // null key → "null" bar
-      seriesCols.zipWithIndex.map { case (name, i) =>
-        name -> rows.map(r => asDouble(r.get(i + 1))).toSeq
-      }, chartTitle)
+      // null key → "null" bar
+      rows.map(r => String.valueOf(r.getAs[Any](categoryCol))),
+      seriesCols.map(name => name -> rows.map(r => asDouble(r.getAs[Any](name)))),
+      chartTitle)
     java.nio.file.Files.write(java.nio.file.Paths.get(path), bytes)
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds an N× scale-up of a testdata scale-factor directory for
@@ -25,13 +25,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.io.Tables.NANOS_AS_LONG, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(32)
     spark.sparkContext.setLogLevel("WARN")
 
     def rep(name: String, keyCols: Seq[String] = Seq.empty)(

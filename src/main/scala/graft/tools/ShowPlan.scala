@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Print registered queries' plans in any explain mode, each under a
@@ -14,13 +13,7 @@ object ShowPlan {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val mode = if (args.length > 1) args(1) else "formatted"
     val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.io.Tables.NANOS_AS_LONG, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4)
     spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {
       println(s"== $name")

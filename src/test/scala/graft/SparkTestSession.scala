@@ -9,14 +9,8 @@ import org.scalatest.Suite
   * construction — see graft.io.Tables.NANOS_AS_LONG). */
 trait SparkTestSession extends BeforeAndAfterAll { self: Suite =>
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config(graft.io.Tables.NANOS_AS_LONG, "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Session.local(4, "spark.app.name" -> "graft-test")
 
   val sf0001 = "/root/testdata/sf0.001"
 

@@ -58,8 +58,8 @@ class MemoDisciplineSpec extends AnyFunSuite with Matchers
     import scala.jdk.CollectionConverters._
     // file -> allowed count, with the reason a bare read is legitimate
     val allow = Map(
-      // readStream schema probes (footer read memoized in
-      // rawSchemaCache; a relation memo would be the wrong shape for a
+      // readStream schema probes (footer read memoized per session by
+      // rawSchema; a relation memo would be the wrong shape for a
       // streaming source definition)
       "StreamingQueries.scala" -> 3,
       // one-time CREATE TABLE DDL derivation, guarded by

@@ -23,7 +23,8 @@ class GdeltGraphsSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val core = spark.read
       .parquet("/root/reference/gdelt/data/gdelt_core_fixed.parquet")
     val dir = java.nio.file.Files.createTempDirectory("gdelt_graphs_").toString
-    GdeltGraphs.writeShareOfVoice(core, s"$dir/sov.png")
+    GdeltGraphs.writeShareOfVoiceStats(
+      GdeltReport.collect(GdeltAnalysis.summaryStats(core)), s"$dir/sov.png")
     val img = ImageIO.read(new java.io.File(s"$dir/sov.png"))
     img.getWidth shouldBe 800
     // published stats: google ≈ 68.5/79.1 %, openai ≈ 1.19/2.16 %,
@@ -42,7 +43,7 @@ class GdeltGraphsSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val ml = spark.read
       .parquet("/root/reference/gdelt/data/gdelt_ml_features.parquet")
     val dir = java.nio.file.Files.createTempDirectory("gdelt_graphs_").toString
-    GdeltGraphs.writeFeatureImportance(ml, s"$dir/fi.png")
+    GdeltGraphs.writeFeatureImportanceModel(GdeltMl.weekClassifier(ml), s"$dir/fi.png")
     val img = ImageIO.read(new java.io.File(s"$dir/fi.png"))
     img.getWidth shouldBe 880
     // the golden coefficients have both signs, so both diverging colors

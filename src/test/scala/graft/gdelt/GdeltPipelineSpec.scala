@@ -128,4 +128,160 @@ class GdeltPipelineSpec extends AnyFunSuite with Matchers with SparkTestSession 
       new java.io.File(out, n).exists() shouldBe true
     }
   }
+
+  /** The four reports of the 80-article fixture, full text. The tables
+    * follow from how [[writeRawJsonl]] builds the rows: even i are Feb
+    * days 12–18 (week_feb), odd i are May days 14–20 (week_may); the URL
+    * brand cycles openai, google, anthropic, tech with i % 4, so Feb
+    * holds the 20 openai and 20 anthropic articles and May the 20 google
+    * and 20 tech ones; every host's registrable domain is example.com;
+    * V2Tone gives tone 1.5 / negativity 2.5 in Feb and 2.5 / 1.5 in May;
+    * every row names microsoft and nvidia, and carries AI_TOPIC plus the
+    * i % 4 theme (TAX_FNCACT, ECON_STOCKMARKET, SCIENCE,
+    * GENERAL_GOVERNMENT); the duplicate of row 0 is dropped. Only the AUC
+    * and the coefficient lines come from the fitted models, as the
+    * engine printed them. */
+  private val summaryGolden =
+    """# ANALYTICAL SUMMARY
+
+      >## Share of voice by week
+
+      >| label_week | total | avg_tone | avg_neg | pct_google | pct_openai | pct_anthropic |
+      >| --- | --- | --- | --- | --- | --- | --- |
+      >| week_feb | 40 | 1.5 | 2.5 | 0.0 | 50.0 | 50.0 |
+      >| week_may | 40 | 2.5 | 1.5 | 50.0 | 0.0 | 0.0 |
+
+
+      >## Model
+
+      >Logistic Regression AUC: **1.00**
+
+      >| Feature | Coefficient |
+      >| --- | --- |
+      >| k_openai | -6.9585 |
+      >| k_google | +1.3850 |
+      >| k_anthropic | -6.9585 |
+      >| v2tone_1 | +10.4378 |
+      >| v2tone_3 | -10.4378 |
+      >| v2tone_6 | +10.4378 |
+
+      >## Entity sentiment
+
+      >| Company | label_week | avg_tone | count |
+      >| --- | --- | --- | --- |
+      >| Anthropic | week_feb | 1.5 | 20 |
+      >| Google | week_may | 2.5 | 20 |
+      >| OpenAI | week_feb | 1.5 | 20 |
+
+
+      >## Top Google sources
+
+      >| source | article_count | avg_sentiment | Company |
+      >| --- | --- | --- | --- |
+      >| example.com | 20 | 2.5 | Google |
+
+
+      >## Top OpenAI sources
+
+      >| source | article_count | avg_sentiment | Company |
+      >| --- | --- | --- | --- |
+      >| example.com | 20 | 1.5 | OpenAI |
+
+
+      >## QA invariants
+
+      >| rows | unique_urls | first_day | last_day | n_week_feb | n_week_may | pct_missing_themes | pct_missing_orgs |
+      >| --- | --- | --- | --- | --- | --- | --- | --- |
+      >| 80 | 80 | 2024-02-12 | 2024-05-20 | 40 | 40 | 0.0 | 0.0 |""".stripMargin('>') + "\n"
+
+  private val networkGolden =
+    """# NETWORK ANALYSIS
+
+      >## Top Google sources
+
+      >| source | article_count | avg_sentiment | Company |
+      >| --- | --- | --- | --- |
+      >| example.com | 20 | 2.5 | Google |
+
+
+      >## Top OpenAI sources
+
+      >| source | article_count | avg_sentiment | Company |
+      >| --- | --- | --- | --- |
+      >| example.com | 20 | 1.5 | OpenAI |
+
+
+      >## Top Google partners
+
+      >| partner | count | Main_Entity |
+      >| --- | --- | --- |
+      >| microsoft | 20 | Google |
+      >| nvidia | 20 | Google |
+
+
+      >## Top OpenAI partners
+
+      >| partner | count | Main_Entity |
+      >| --- | --- | --- |
+      >| microsoft | 20 | OpenAI |
+      >| nvidia | 20 | OpenAI |""".stripMargin('>') + "\n"
+
+  private val themeGolden =
+    """# THEME ANALYSIS
+
+      >## Top Google themes
+
+      >| theme | count | Company |
+      >| --- | --- | --- |
+      >| AI_TOPIC | 20 | Google |
+      >| ECON_STOCKMARKET | 20 | Google |
+
+
+      >## Top OpenAI themes
+
+      >| theme | count | Company |
+      >| --- | --- | --- |
+      >| AI_TOPIC | 20 | OpenAI |
+      >| TAX_FNCACT | 20 | OpenAI |
+
+
+      >## Most positive theme coefficients
+
+      >| theme | score |
+      >| --- | --- |
+      >| ECON_STOCKMARKET | +1.8262 |
+      >| GENERAL_GOVERNMENT | +1.8262 |
+
+      >## Most negative theme coefficients
+
+      >| theme | score |
+      >| --- | --- |
+      >| TAX_FNCACT | -1.8262 |
+      >| SCIENCE | -1.8262 |""".stripMargin('>')
+
+  private val sentimentGolden =
+    """# ENTITY SENTIMENT
+
+      >## Average tone by company and week
+
+      >| Company | label_week | avg_tone | count |
+      >| --- | --- | --- | --- |
+      >| Anthropic | week_feb | 1.5 | 20 |
+      >| Google | week_may | 2.5 | 20 |
+      >| OpenAI | week_feb | 1.5 | 20 |""".stripMargin('>') + "\n"
+
+  test("the fixture's four reports match their golden text") {
+    val dir = java.nio.file.Files.createTempDirectory("gdelt_golden")
+    val raw = dir.resolve("raw.jsonl")
+    writeRawJsonl(raw)
+    val out = dir.resolve("out").toString
+    GdeltPipeline.run(spark, graft.io.Tables.jsonLines(spark, raw.toString), out)
+    def text(n: String): String = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out, n)),
+      java.nio.charset.StandardCharsets.UTF_8)
+    text("summary_report.md") shouldBe summaryGolden
+    text("network_report.md") shouldBe networkGolden
+    text("theme_report.md") shouldBe themeGolden
+    text("entity_sentiment_report.md") shouldBe sentimentGolden
+  }
 }

@@ -15,7 +15,8 @@ class GdeltReportSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val core = spark.read.parquet("/root/reference/gdelt/data/gdelt_core_fixed.parquet")
     val feats = spark.read.parquet("/root/reference/gdelt/data/gdelt_ml_features.parquet")
     val out = Files.createTempDirectory("graft-report").resolve("summary.md")
-    GdeltReport.write(core, feats, out.toString)
+    graft.report.Markdown.write(out.toString, GdeltReport.summary(
+      GdeltReport.tables(core, GdeltMl.weekClassifier(feats))))
 
     val md = Files.readString(out)
     md should include("AUC: **0.72**")
