@@ -2,9 +2,11 @@ package graft.gdelt
 
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, StringIndexer, StringIndexerModel, VectorAssembler}
+import org.apache.spark.ml.feature.{CountVectorizerModel, StringIndexer, StringIndexerModel, VectorAssembler}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.ml.VocabularyCut
 
 /** The reference's two ML jobs (SURVEY.md §2.9) on org.apache.spark.ml —
   * the same JVM API the reference calls through PySpark, so results match
@@ -85,14 +87,16 @@ object GdeltMl {
   /** Theme bag-of-words classifier: CountVectorizer(1000, minDF=5) + LR
     * (regParam 0.1); coefficients read back against the CV vocabulary and
     * ranked — positive ⇒ predicts the less-frequent label
-    * (theme_ml_job.py:57-79). Returns (theme, score) ranked desc. */
+    * (theme_ml_job.py:57-79). Returns (theme, score) ranked desc. The
+    * 1,000-theme vocabulary is cut in a total order (VocabularyCut), not
+    * by CountVectorizer.fit, so real GKG exports — with more than 1,000
+    * themes past minDF — get the same model on every run. */
   def themeModel(core: DataFrame): DataFrame = {
     val dfMl = indexedWeeks(core.select(col("label_week"), col("themes_arr"))
       .filter(col("themes_arr").isNotNull))._2
-    val cvModel: CountVectorizerModel = new CountVectorizer()
+    val cvModel = new CountVectorizerModel(
+        VocabularyCut(dfMl, "themes_arr", vocabSize = 1000, minDF = 5))
       .setInputCol("themes_arr").setOutputCol("features")
-      .setVocabSize(1000).setMinDF(5.0)
-      .fit(dfMl)
     val indexed = cvModel.transform(dfMl)
     val lr = new LogisticRegression()
       .setFeaturesCol("features").setLabelCol("label").setRegParam(0.1)

@@ -26,11 +26,9 @@ object GdeltPipeline {
     val ml = GdeltEtl.mlFeatures(coreBack)
     Tables.writeParquet(ml, s"$outDir/gdelt_ml_features.parquet")
     val mlBack = spark.read.parquet(s"$outDir/gdelt_ml_features.parquet")
-    // the model (the pipeline's most expensive tail step) is fitted once
-    // and every report table collected once, shared by the four markdown
-    // reports and both graphs
-    val model = GdeltMl.weekClassifier(mlBack)
-    val tables = GdeltReport.tables(coreBack, model)
+    // both models fitted and every report table collected once, all at
+    // the same time, shared by the four markdown reports and both graphs
+    val tables = GdeltReport.tables(coreBack, mlBack)
     Markdown.write(s"$outDir/summary_report.md", GdeltReport.summary(tables))
     Markdown.write(s"$outDir/network_report.md", GdeltReport.network(tables))
     Markdown.write(s"$outDir/theme_report.md", GdeltReport.themes(tables))

@@ -2,6 +2,7 @@ package graft.gdelt
 
 import org.apache.spark.sql.DataFrame
 
+import graft.exec.FanOut
 import graft.report.Markdown
 import graft.report.Markdown.Table
 
@@ -10,8 +11,8 @@ import graft.report.Markdown.Table
   * (reference gdelt/scripts/general_ml_and_source_sentiment_analysis.py:75-136,
   * sentiment_analysis.py:48-62, network_analysis.py:82-127) — all tables
   * come from collected aggregate results, never raw rows. [[tables]]
-  * collects every table once per run; the four renderers and the two
-  * graphs (GdeltGraphs) read only that value.
+  * collects every table and fits both models once per run; the four
+  * renderers and the two graphs (GdeltGraphs) read only that value.
   */
 object GdeltReport {
 
@@ -28,24 +29,33 @@ object GdeltReport {
   def collect(df: DataFrame): Table =
     Table(df.columns.toSeq, df.limit(100).collect().toSeq)
 
-  /** Each report table evaluated exactly once, in report order; `model` is
-    * the already-fitted week classifier (the graphs read it too). */
-  def tables(core: DataFrame, model: GdeltMl.WeekModel): Tables = {
-    def company(name: String, flag: String, ignore: Seq[String]) =
-      Company(name,
-        collect(GdeltAnalysis.topSources(core, flag, name)),
-        collect(GdeltAnalysis.topPartners(core, flag, name, ignore)),
-        collect(GdeltAnalysis.topThemes(core, flag, name)))
-    Tables(
-      collect(GdeltAnalysis.summaryStats(core)),
-      collect(GdeltAnalysis.entitySentiment(core)),
-      Seq(company("Google", "k_google", GdeltAnalysis.ignoreGoogle),
-        company("OpenAI", "k_openai", GdeltAnalysis.ignoreOpenai)),
-      collect(GdeltAnalysis.qaSummary(core)),
-      // vocabulary-sized (≤1000 rows by construction)
-      GdeltMl.themeModel(core).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq,
-      model)
+  /** Every report table evaluated exactly once, and both models fitted
+    * (the week classifier on `features`, the theme model on `core`): the
+    * eleven branches are independent, so they run at the same time
+    * (FanOut) and come back in report order. */
+  def tables(core: DataFrame, features: DataFrame): Tables = {
+    def table(name: String)(df: => DataFrame) = new FanOut.Branch(name, collect(df))
+    val stats = table("stats")(GdeltAnalysis.summaryStats(core))
+    val sentiment = table("sentiment")(GdeltAnalysis.entitySentiment(core))
+    val companies = Seq(
+      ("Google", "k_google", GdeltAnalysis.ignoreGoogle),
+      ("OpenAI", "k_openai", GdeltAnalysis.ignoreOpenai)).map {
+      case (name, flag, ignore) => (name,
+        table(s"$name-sources")(GdeltAnalysis.topSources(core, flag, name)),
+        table(s"$name-partners")(GdeltAnalysis.topPartners(core, flag, name, ignore)),
+        table(s"$name-themes")(GdeltAnalysis.topThemes(core, flag, name)))
+    }
+    val qa = table("qa")(GdeltAnalysis.qaSummary(core))
+    // vocabulary-sized (≤1000 rows by construction)
+    val themeModel = new FanOut.Branch("theme-model", GdeltMl.themeModel(core)
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq)
+    val weekModel = new FanOut.Branch("week-model", GdeltMl.weekClassifier(features))
+    FanOut.run("gdelt-report", Seq(stats, sentiment) ++
+      companies.flatMap { case (_, s, p, t) => Seq(s, p, t) } ++
+      Seq(qa, themeModel, weekModel))
+    Tables(stats.get, sentiment.get,
+      companies.map { case (name, s, p, t) => Company(name, s.get, p.get, t.get) },
+      qa.get, themeModel.get, weekModel.get)
   }
 
   private def sections(t: Tables, title: String, table: Company => Table) =

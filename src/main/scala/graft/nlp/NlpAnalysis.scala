@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ml.VocabularyCut
 import graft.queries.Q
 
 /** The reference's Common Crawl NLP job end to end (reference
@@ -67,12 +68,10 @@ object NlpAnalysis {
     * carried through. Returns the collected (keep…, top_terms) rows and
     * the vocabulary.
     *
-    * The vocabulary cut is made here in a total order — the [[VocabSize]]
-    * bigrams with the highest total count, ties broken by term ascending —
-    * because CountVectorizer.fit keeps an arbitrary subset of the terms
-    * tied at the cut (its order among equal counts depends on partition
-    * merge order), which made the phrases differ between passes once a
-    * corpus has more than 1,500 distinct bigrams. */
+    * The vocabulary is cut in a total order ([[graft.ml.VocabularyCut]],
+    * `minDF` 1): CountVectorizer.fit's arbitrary cut made the phrases
+    * differ between passes once a corpus has more than 1,500 distinct
+    * bigrams. */
   def tfidfTopK(docs: DataFrame, stopWords: Array[String], keep: Seq[String])
       : (DataFrame, Array[String]) = {
     val tokens = new StopWordsRemover()
@@ -89,10 +88,7 @@ object NlpAnalysis {
       .select((keep :+ "bigrams").map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val vocab = bigrams.select(explode(col("bigrams")).as("term"))
-        .groupBy(col("term")).count()
-        .orderBy(col("count").desc, col("term").asc)
-        .limit(VocabSize).collect().map(_.getString(0))
+      val vocab = VocabularyCut(bigrams, "bigrams", VocabSize)
       val tf = new CountVectorizerModel(vocab)
         .setInputCol("bigrams").setOutputCol("tf").transform(bigrams)
       val scored = new IDF().setInputCol("tf").setOutputCol("tfidf")

@@ -1282,22 +1282,25 @@ object Similarity {
   /** Where q54 materializes its trained codebook so the DuckDB oracle can
     * replay the identical search over the identical centroids (KMeans
     * centers aren't SQL-reproducible; the search given a codebook is).
-    * The oracle is a static SQL string interpolated at class-load, so the
-    * path must be process-independent AND known before any query runs —
-    * hence [[graft.exec.ArtifactStore.fixedPath]] (one stable dir under
-    * the store's configurable root, relocated with the rest of the store
-    * by GRAFT_ARTIFACT_ROOT) rather than a content-ADDRESSED `ensure`
-    * entry. The contract is still the store's: `ensureCodebook` resolves
-    * through [[graft.exec.ArtifactStore.ensureAt]], which records the
+    * The oracle is a static SQL string interpolated when the registry
+    * loads, so the path must be process-independent AND known before any
+    * query runs — hence [[graft.exec.ArtifactStore.fixedPath]] (one
+    * stable dir under the store's configurable root, relocated with the
+    * rest of the store by GRAFT_ARTIFACT_ROOT) rather than a
+    * content-ADDRESSED `ensure` entry. The contract is still the
+    * store's: `ensureCodebook` resolves through
+    * [[graft.exec.ArtifactStore.ensureAt]], which records the
     * content key (corpus source-file identity + training params) in the
     * `_GRAFT_OK` marker at this fixed path — staleness, atomic /
     * marker-last publish, GC liveness and race repair all come from
-    * the store, with no caller-managed sidecar. */
-  private[queries] val TrainedCentroidsPath: String =
+    * the store, with no caller-managed sidecar. Resolved per call, so a
+    * store root set after this object loads
+    * (ArtifactStore.setRootForTest) is honoured. */
+  private[queries] def TrainedCentroidsPath: String =
     graft.exec.ArtifactStore.fixedPath("q54_centroids")
 
   /** q142/q143's trained PQ codebook location (same discipline). */
-  private[queries] val TrainedPqPath: String =
+  private[queries] def TrainedPqPath: String =
     graft.exec.ArtifactStore.fixedPath("q142_pq_codebook")
 
   /** Train + materialize the per-subspace KMeans sub-codebooks (q142/

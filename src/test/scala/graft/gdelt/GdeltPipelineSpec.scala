@@ -284,4 +284,71 @@ class GdeltPipelineSpec extends AnyFunSuite with Matchers with SparkTestSession 
     text("theme_report.md") shouldBe themeGolden
     text("entity_sentiment_report.md") shouldBe sentimentGolden
   }
+
+  /** The fixture through GdeltPipeline.run once: its output dir. */
+  private def fixtureRun(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val raw = dir.resolve("raw.jsonl")
+    writeRawJsonl(raw)
+    val out = dir.resolve("out").toString
+    GdeltPipeline.run(spark, graft.io.Tables.jsonLines(spark, raw.toString), out)
+    out
+  }
+
+  test("the fanned-out report set equals each table's own sequential " +
+    "collect, in report order, and two runs give byte-identical reports") {
+    val out = fixtureRun("gdelt_fanout")
+    val core = spark.read.parquet(s"$out/gdelt_core.parquet")
+    val ml = spark.read.parquet(s"$out/gdelt_ml_features.parquet")
+    val t = GdeltReport.tables(core, ml)
+    import GdeltReport.collect
+    t.stats shouldBe collect(GdeltAnalysis.summaryStats(core))
+    t.sentiment shouldBe collect(GdeltAnalysis.entitySentiment(core))
+    t.companies.map(_.name) shouldBe Seq("Google", "OpenAI")
+    Seq(("k_google", GdeltAnalysis.ignoreGoogle),
+      ("k_openai", GdeltAnalysis.ignoreOpenai)).zip(t.companies).foreach {
+      case ((flag, ignore), c) =>
+        c.sources shouldBe collect(GdeltAnalysis.topSources(core, flag, c.name))
+        c.partners shouldBe collect(
+          GdeltAnalysis.topPartners(core, flag, c.name, ignore))
+        c.themes shouldBe collect(GdeltAnalysis.topThemes(core, flag, c.name))
+    }
+    t.qa shouldBe collect(GdeltAnalysis.qaSummary(core))
+    t.themeCoefficients shouldBe GdeltMl.themeModel(core).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    t.model shouldBe GdeltMl.weekClassifier(ml)
+
+    val again = fixtureRun("gdelt_fanout_again")
+    Seq("summary_report.md", "network_report.md", "theme_report.md",
+      "entity_sentiment_report.md", "graph_share_of_voice.png",
+      "graph_feature_importance.png").foreach { n =>
+      def bytes(d: String) = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(d, n)).toSeq
+      withClue(s"$n: ") { bytes(again) shouldBe bytes(out) }
+    }
+  }
+
+  test("a failing report branch reaches the caller only after every " +
+    "branch has ended, and leaves no thread, job or session state behind") {
+    val out = fixtureRun("gdelt_fanout_fail")
+    val core = spark.read.parquet(s"$out/gdelt_core.parquet")
+    // the week classifier's branch fails in analysis; the other ten run
+    val broken = spark.read.parquet(s"$out/gdelt_ml_features.parquet")
+      .drop("v2tone_1")
+    val sc = spark.sparkContext
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    def state = (spark.conf.getAll, classic.sharedState.cacheManager.isEmpty,
+      sc.getPersistentRDDs.keySet,
+      org.apache.spark.GraftTestInternals.listenerCount(sc))
+    val before = state
+    val e = intercept[Exception] {
+      GdeltReport.tables(core, broken)
+    }
+    e.getMessage should include("v2tone_1")
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith("gdelt-report-"))
+      .map(_.getName) shouldBe empty
+    sc.statusTracker.getActiveJobIds() shouldBe empty
+    state shouldBe before
+  }
 }

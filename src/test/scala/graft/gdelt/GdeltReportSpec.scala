@@ -16,7 +16,7 @@ class GdeltReportSpec extends AnyFunSuite with Matchers with SparkTestSession {
     val feats = spark.read.parquet("/root/reference/gdelt/data/gdelt_ml_features.parquet")
     val out = Files.createTempDirectory("graft-report").resolve("summary.md")
     graft.report.Markdown.write(out.toString, GdeltReport.summary(
-      GdeltReport.tables(core, GdeltMl.weekClassifier(feats))))
+      GdeltReport.tables(core, feats)))
 
     val md = Files.readString(out)
     md should include("AUC: **0.72**")

@@ -340,10 +340,10 @@ class AnnArtifactSpec extends AnyFunSuite with Matchers with SparkTestSession {
     "independent inline row-form construction over the SAME persisted " +
     "trained quantizers (the AnnArtifact parity discipline on the " +
     "trained pair)") {
-    // trained artifacts live at class-load fixed paths under the
-    // default store root (their paths are baked into static oracle
-    // SQL), so this test runs without a root override — q158's own
-    // ensure calls resolve or build them
+    // trained artifacts live at fixed paths under the default store
+    // root (their paths are baked into the registry's oracle SQL), so
+    // this test runs without a root override — q158's own ensure calls
+    // resolve or build them
     val viaIndex = Registry.queries("q158_ivfpq_trained")(spark, sf0001)
       .collect().toSeq
     viaIndex should not be empty
@@ -552,5 +552,17 @@ class AnnArtifactSpec extends AnyFunSuite with Matchers with SparkTestSession {
       // if a future corpus makes ADC exact-faithful this pin can relax)
       hR.values.sum should be >= hU.values.sum
     }
+  }
+
+  test("the trained artifact paths follow the store root of the call, " +
+    "not the root active when Similarity first loaded") {
+    withRoot { root =>
+      Similarity.TrainedCentroidsPath shouldBe s"$root/q54_centroids"
+      Similarity.TrainedPqPath shouldBe s"$root/q142_pq_codebook"
+    }
+    Similarity.TrainedCentroidsPath shouldBe
+      ArtifactStore.fixedPath("q54_centroids")
+    Similarity.TrainedPqPath shouldBe
+      ArtifactStore.fixedPath("q142_pq_codebook")
   }
 }
